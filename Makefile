@@ -12,11 +12,17 @@ iceberg:
 	  https://repo1.maven.org/maven2/org/apache/iceberg/$(ICEBERG_ARTIFACT)/$(ICEBERG_VERSION)/$(ICEBERG_ARTIFACT)-$(ICEBERG_VERSION).jar
 	@echo "Iceberg runtime fetched; tests marked skip-without-jar now run."
 
+# the tier-1 test command
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
+# one perfbench run per workload (perfbench/README.md)
+SEED ?= 1
 bench:
-	python bench.py
+	for w in kg_build kg_delta nt_convert; do \
+	  python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds 12 --trace 0 || exit 1; \
+	done
 
 zip:
 	rm -f kgpipe.zip && zip -qr kgpipe.zip kgpipe -x '*__pycache__*'

@@ -22,6 +22,7 @@ from byte 0); this subsystem is what makes the same dataflow safe at
 
 from __future__ import annotations
 
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -63,30 +64,35 @@ class CheckpointLog:
     of one fixed-latency Spark job each — three scan jobs saved per
     pipeline run. mark_done appends to disk first (crash-safe: an
     unflushed cache is only ever MISSING completed work, never
-    inventing it), then to the cache."""
+    inventing it), then to the cache. A lock guards the cache: the
+    full pipeline's deferred extract-stats thread appends to it while
+    the main thread reads it."""
 
     def __init__(self, io: TableIO):
         self.io = io
         self._rows: list[tuple] | None = None  # ledger cache; None = not loaded
+        self._lock = threading.Lock()
 
     _COLS = ("stage", "part_id", "fingerprint", "n_in", "n_out", "n_err",
              "status", "ts")
 
     def _load(self) -> list[tuple]:
-        if self._rows is None:
-            fast = self.io.read_small_rows(CHECKPOINT_TABLE)
-            if fast is not None:
-                self._rows = [tuple(r[c] for c in self._COLS) for r in fast]
-            elif self.io.exists(CHECKPOINT_TABLE):
-                self._rows = [
-                    tuple(r)
-                    for r in self.io.read(CHECKPOINT_TABLE, CHECKPOINT_SCHEMA)
-                    .select(*self._COLS)
-                    .collect()
-                ]
-            else:
-                self._rows = []
-        return self._rows
+        """A snapshot of the ledger rows (read from disk once)."""
+        with self._lock:
+            if self._rows is None:
+                fast = self.io.read_small_rows(CHECKPOINT_TABLE)
+                if fast is not None:
+                    self._rows = [tuple(r[c] for c in self._COLS) for r in fast]
+                elif self.io.exists(CHECKPOINT_TABLE):
+                    self._rows = [
+                        tuple(r)
+                        for r in self.io.read(CHECKPOINT_TABLE, CHECKPOINT_SCHEMA)
+                        .select(*self._COLS)
+                        .collect()
+                    ]
+                else:
+                    self._rows = []
+            return list(self._rows)
 
     def read(self) -> DataFrame:
         return self.io.spark.createDataFrame(self._load(), CHECKPOINT_SCHEMA)
@@ -150,8 +156,9 @@ class CheckpointLog:
         ]
         self.io.write_small_rows(srows, CHECKPOINT_SCHEMA, CHECKPOINT_TABLE,
                                  mode="append")
-        if self._rows is not None:
-            self._rows.extend(srows)
+        with self._lock:
+            if self._rows is not None:
+                self._rows.extend(srows)
 
     def mark_done(self, stage: str, stats: DataFrame) -> None:
         """stats: (part_id, fingerprint, n_in, n_out, n_err)."""

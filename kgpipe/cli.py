@@ -90,10 +90,10 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--buckets", type=int, default=64)
     run.add_argument("--no-neardup", action="store_true")
     run.add_argument("--incremental-link", action="store_true",
-                     help="daily-delta mode: link only unseen urls, merge "
-                          "components incrementally (exact-normalized or, with "
-                          "--jaccard < 1, index-backed LSH), and patch only the "
-                          "edge partitions the delta touches")
+                     help="daily-delta mode: extract and link only unseen urls, "
+                          "merge components incrementally (exact-normalized or, "
+                          "with --jaccard < 1, index-backed LSH), and add the "
+                          "delta's edges as their own layer")
     run.add_argument("--jaccard", type=float, default=1.0,
                      help="near-dup link threshold; < 1.0 enables LSH linking "
                           "(default 1.0 = exact-normalized only)")

@@ -23,7 +23,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from kgpipe.nt.parser import parse_nt_frame
+from kgpipe.nt.parser import GO_SPACE, parse_nt_frame
 from kgpipe.nt.rules import NULL_SENTINEL, PrefixRewriter, Rule
 
 CONVERT_SCHEMA = "s string, p string, o string, error string"
@@ -70,7 +70,7 @@ def convert_nt_lines(
         rw = rewriter.value if rewriter is not None else None
         for pdf in batches:
             lines = pdf[line_col].fillna("")
-            lines = lines[lines.str.strip() != ""]  # empty file → zero rows
+            lines = lines[lines.str.strip(GO_SPACE) != ""]  # empty file → zero rows
             if rw is not None and rw.mode == "compat":
                 lines = rw.rewrite_series(lines)
             if fragment_bytes is not None and len(lines):

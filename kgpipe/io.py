@@ -189,6 +189,21 @@ class TableIO:
             "boolean": pa.bool_(),
         }.get(simple)
 
+    @staticmethod
+    def _flat_ddl(ddl: str) -> list[tuple[str, str]] | None:
+        """[(name, type)] of a DDL made of `name type` pairs only; None
+        for anything else (type parameters, nested types, quoted names,
+        constraints) — the caller then takes the Spark writer."""
+        if any(c in ddl for c in "(<`"):
+            return None
+        pairs = []
+        for col in ddl.split(","):
+            parts = col.split()
+            if len(parts) != 2:
+                return None
+            pairs.append((parts[0], parts[1]))
+        return pairs
+
     def write_small(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
         """Write a SMALL DataFrame (collected to the driver) as one
         parquet file. Semantics match write(): overwrite replaces the
@@ -213,13 +228,13 @@ class TableIO:
         kilobytes of data. Same on-disk bytes as write_small (same
         schema mapping, same atomic rename). Falls back to the Spark
         writer off the local filesystem / in catalog mode / for types
-        outside the fast-path map — semantics preserved everywhere."""
-        pairs = [
-            (c.rsplit(None, 1)[0], c.rsplit(None, 1)[1])
-            for c in (p.strip() for p in ddl.split(","))
-        ]
-        if self.catalog is not None or self._local_dir(name) is None or any(
-            self._pa_type(t) is None for _, t in pairs
+        outside the fast-path map or DDL the simple parser cannot read
+        (parameterized or nested types such as decimal(10,2) or
+        struct<a:int,b:int>) — semantics preserved everywhere."""
+        pairs = self._flat_ddl(ddl)
+        if (
+            self.catalog is not None or self._local_dir(name) is None or pairs is None
+            or any(self._pa_type(t) is None for _, t in pairs)
         ):
             self.write(self.spark.createDataFrame(rows, ddl), name, mode=mode)
             return

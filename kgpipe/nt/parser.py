@@ -10,6 +10,8 @@ path).
 Semantics (common.go:41-66):
   1. Trim surrounding whitespace; tokenize on any whitespace run
      (internal runs collapse on re-join — common_test.go:207-208).
+     Whitespace is Go's unicode.IsSpace set (GO_SPACE), which unlike
+     Python's excludes U+001C..U+001F.
   2. <3 tokens → error "broken input: [..]" (common.go:44-46).
   3. s = tok[0], p = tok[1].
   4. 3 or 4 tokens → o = tok[2] only (the 4th token is dropped even
@@ -26,10 +28,38 @@ Semantics (common.go:41-66):
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 
 _TRIM = '<>"'
+
+# Go's unicode.IsSpace set — what the reference's strings.Fields and
+# strings.TrimSpace split and trim on. Python's str.split()/strip()
+# use the same set plus U+001C..U+001F (the ASCII information
+# separators), so only a line holding one of those four needs the
+# explicit tokenizer; every other line stays on str.split().
+GO_SPACE = (
+    "\t\n\v\f\r \x85\xa0\u1680\u2000\u2001\u2002\u2003\u2004\u2005"
+    "\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+_SEPARATORS = "\x1c\x1d\x1e\x1f"
+_GO_SPACE_RUN = re.compile("[" + GO_SPACE + "]+")
+
+
+def _has_separator(text: str) -> bool:
+    # four substring scans beat one regex character class ~30×
+    return any(c in text for c in _SEPARATORS)
+
+
+def go_fields(line: str) -> tuple[str, list[str]]:
+    """(TrimSpace(line), Fields(line)) with Go's whitespace set."""
+    if not _has_separator(line):
+        trimmed = line.strip()
+        return trimmed, trimmed.split()
+    trimmed = line.strip(GO_SPACE)
+    return trimmed, [w for w in _GO_SPACE_RUN.split(trimmed) if w]
 
 
 class NTParseError(ValueError):
@@ -75,8 +105,7 @@ def parse_ntriple_framed(line: str) -> tuple[str, str, str, dict]:
     canonically-spaced lines (single-space separators, no surrounding
     whitespace); interior whitespace runs collapse — inherent to the
     parsed form (quirk Q1)."""
-    stripped = line.strip()
-    words = stripped.split()
+    stripped, words = go_fields(line)
     if len(words) < 3:
         raise NTParseError("broken input: [%s]" % " ".join(words))
     tail = None
@@ -107,8 +136,7 @@ def parse_ntriple(line: str) -> tuple[str, str, str]:
 
     Mirrors /root/reference/common.go:41-66 token-for-token.
     """
-    line = line.strip()
-    words = line.split()
+    line, words = go_fields(line)
     if len(words) < 3:
         # common.go:45 formats the token slice Go-style: [a b]
         raise NTParseError("broken input: [%s]" % " ".join(words))
@@ -160,6 +188,11 @@ def parse_nt_frame(lines: pd.Series, with_frames: bool = False) -> pd.DataFrame:
     lines = lines.astype("object").fillna("")
     norm = lines.str.strip()
     toks = norm.str.split()
+    # one C-level scan of the batch; only the rare lines holding a
+    # U+001C..U+001F separator are re-tokenized with Go's set
+    if _has_separator("".join(lines.tolist())):
+        for i in lines.index[lines.map(_has_separator)]:
+            norm.at[i], toks.at[i] = go_fields(lines.at[i])
     n = toks.str.len().fillna(0).astype(int)
     ok = n >= 3
 
@@ -234,6 +267,8 @@ def self_check() -> None:
         "a b",
         "",
         "<a> <b> <c d e>.",
+        "<a>\x1c<b> <c> .",
+        "\x1f",
     ]
     frame = parse_nt_frame(pd.Series(cases))
     framed = parse_nt_frame(pd.Series(cases), with_frames=True)
@@ -263,7 +298,7 @@ def self_check() -> None:
             ]
             if fr["tail"] is not None:
                 parts.append(fr["tail"])
-            assert " ".join(parts) == " ".join(line.split()), (line, parts)
+            assert " ".join(parts) == " ".join(go_fields(line)[1]), (line, parts)
         except NTParseError as e:
             assert frame.loc[i, "error"] == str(e), (line, frame.loc[i, "error"], str(e))
             assert framed.loc[i, "error"] == str(e)

@@ -325,7 +325,16 @@ def incremental_merge(
         .distinct()
     )
     affected = prev.join(touched, "uri", "left_semi").select("canon_id").distinct()
-    aff_rows = prev.join(affected, "canon_id", "left_semi").select("uri", "canon_id")
+    # the affected components' prev rows, pinned once: the CC edge set,
+    # the untouched remainder and the label changes all read them, and
+    # each reference would otherwise re-derive them from the map and
+    # the delta — several shuffles per consumer
+    aff_rows = (
+        prev.join(affected, "canon_id", "left_semi")
+        .select("uri", "canon_id")
+        .localCheckpoint(eager=True)
+    )
+    affected = aff_rows.select("canon_id").distinct()
     star_edges = aff_rows.where(F.col("uri") != F.col("canon_id")).select(
         F.col("uri").alias("src"), F.col("canon_id").alias("dst")
     )

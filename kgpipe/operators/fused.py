@@ -22,7 +22,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from kgpipe.nt.parser import parse_nt_frame
+from kgpipe.nt.parser import GO_SPACE, parse_nt_frame
 from kgpipe.nt.rules import NULL_SENTINEL, PrefixRewriter, Rule
 from kgpipe.operators.extract import extract_text_frame
 
@@ -59,7 +59,7 @@ def fused_extract_parse_abbrev(
             # ZERO rows (the reference's scanner yields no lines for
             # an empty file), not a spurious quarantine row
             lines = texts.fillna("").str.split("\n").map(
-                lambda ls: [ln for ln in ls if ln.strip()]
+                lambda ls: [ln for ln in ls if ln.strip(GO_SPACE)]
             )
             counts = lines.str.len().fillna(0).astype(int)
             urls = pdf["url"].repeat(counts).reset_index(drop=True)

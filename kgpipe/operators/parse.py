@@ -20,7 +20,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from kgpipe.nt.parser import parse_nt_frame
+from kgpipe.nt.parser import GO_SPACE, parse_nt_frame
 
 TRIPLES_SCHEMA = "s string, p string, o string, url string, error string"
 
@@ -39,7 +39,7 @@ def parse_pages_to_triples(pages_df, text_col: str = "text", url_col: str = "url
             # (matches the reference scanner; keeps n_err counters
             # comparable) — same rule as the fused operator
             lines = pdf[text_col].fillna("").str.split("\n").map(
-                lambda ls: [ln for ln in ls if ln.strip()]
+                lambda ls: [ln for ln in ls if ln.strip(GO_SPACE)]
             )
             counts = lines.str.len().fillna(0).astype(int)
             urls = pdf[url_col].repeat(counts).reset_index(drop=True)

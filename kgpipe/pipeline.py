@@ -16,10 +16,16 @@ fused stage's output partitions (part_id = pmod(xxhash64(url), n)).
 
 Shuffling stages (link, cc, materialize) run from the persisted
 triples table — re-runs after failure skip completed extract work.
+
+In the daily-delta mode (PipelineConfig.incremental_link) the unit of
+extraction is instead a batch of never-seen urls, found before any
+extraction and written as its own batch_fp= layer of triples_raw
+(_extract_delta); link and materialize then read that layer alone.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -53,6 +59,10 @@ LSH_STATS_DDL = (
     "ids_in_dropped long, max_bucket_size long"
 )
 TRIPLES_DDL = RAW_DDL  # clean rows = error IS NULL
+# the incremental warehouse lays triples_raw out by batch_fp: one
+# layer per extracted batch of urls (full mode lays it out by part_id)
+RAW_LAYER_DDL = RAW_DDL + ", batch_fp string"
+RAW_COLS = ["s", "p", "o", "url", "error", "part_id"]
 CMAP_DDL = "uri string, canon_id string"
 EDGES_DDL = "canon_s string, p string, canon_o string, part_id int"
 
@@ -85,17 +95,19 @@ class PipelineConfig:
     # table maintenance: query output is identical before and after a
     # fold, so this field is deliberately NOT part of _config_key.
     edges_fold_layers: int = 16
-    # True → the link stage processes only triples of urls it has
-    # never linked (url-level index), linking new URIs against a
-    # persisted norm→hub index (exact-normalized linking) and — with
-    # jaccard_threshold < 1.0 — against a persisted (uri, band, bh)
-    # LSH signature index, merging components with
-    # incremental_canonical_map — the daily-delta mode. A re-crawled
-    # or removed url (possible retraction) triggers a full relink
-    # fallback because merges cannot retract links; so does an LSH
-    # bucket that already emitted pairs crossing the size cap (a full
-    # recompute would drop the whole bucket). Result pinned equal to
-    # a full recompute (test_pipeline).
+    # True → the daily-delta mode. Before any extraction, one JVM-only
+    # pass joins the pages' (url, page fingerprint) with the persisted
+    # url index; only never-seen urls are extracted, into their own
+    # batch_fp= layer of triples_raw, and link, canonicalize and
+    # materialize read that layer alone: new URIs link against the
+    # persisted norm→hub index (and, with jaccard_threshold < 1.0, the
+    # LSH signature index), components merge via incremental_merge,
+    # and the edges gain one batch layer. A re-crawled url whose clean
+    # triples changed, a removed url (possible retraction), an LSH
+    # bucket crossing the cap, a link-config change or an old
+    # warehouse layout route to one full rebuild instead, because
+    # merges cannot retract links. Result pinned equal to a full
+    # recompute (test_pipeline).
     incremental_link: bool = False
 
 
@@ -218,6 +230,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
     log = CheckpointLog(io)
     rules = parse_rules(cfg.rules_text)
 
+    if cfg.incremental_link:
+        _recover_incremental(io)  # before any read of those tables
     manifest = _source_manifest(pages)
     ckey = _config_key(cfg)
     marker = io.read_json(RUN_MANIFEST)
@@ -232,9 +246,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
         # short-circuit the ENTIRE run if every output is in place —
         # zero jobs over table data (pinned in test_pipeline)
         io.recover_replace("canonical_map")
-        if cfg.incremental_link:
-            io.recover_patch("edges")
-            io.recover_replace("edges")
         if io.exists("triples_raw") and io.exists("canonical_map") and io.exists("edges"):
             triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
             return PipelineResult(
@@ -244,21 +255,24 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
                 counters=_collect_counters(io, log),
             )
 
-    stage_fp = _stage_extract_parse_abbrev(
-        spark, pages, cfg, io, log, rules,
-        async_stats=not cfg.incremental_link,
-    )
-    triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
-
     fp = None
+    stage_fp = None
     if cfg.incremental_link:
         # no whole-table fingerprint here: the incremental stages key
-        # their resume decisions on the url index and the applied-batch
-        # ledger, so a delta run never pays a full triples scan
-        _stage_link_incremental(spark, triples, cfg, io, log)
+        # their resume decisions on the url index, the triples_raw
+        # layers and the applied-batch ledger, so a delta run never
+        # pays a full triples scan
+        delta = _stage_extract_parse_abbrev(spark, pages, cfg, io, log, rules)
+        _stage_link_incremental(spark, delta, cfg, io, log)
+        # read after link: its LSH-cap rebuild may relayer triples_raw
+        triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
         cmap = io.read("canonical_map", CMAP_DDL)
         _stage_materialize_incremental(spark, triples, cmap, cfg, io, log)
     else:
+        stage_fp = _stage_extract_parse_abbrev(
+            spark, pages, cfg, io, log, rules, async_stats=True,
+        )
+        triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
         # ONE fingerprint of the triples table, shared by both
         # whole-stage checkpoints (link and materialize key their
         # resume decision on the same input identity — computing it
@@ -346,7 +360,13 @@ def _stage_extract_parse_abbrev(
     unchanged: the ledger append still happens only after the write
     succeeded, and a crash before the thread lands simply leaves the
     partitions unlogged → recomputed on resume (the write is an
-    idempotent dynamic-partition overwrite)."""
+    idempotent dynamic-partition overwrite).
+
+    With cfg.incremental_link the stage extracts only the run's new
+    urls into one batch layer and returns the _Delta the link stage
+    consumes (_extract_delta)."""
+    if cfg.incremental_link:
+        return _extract_delta(spark, pages, cfg, io, log, rules)
     stage = "extract_parse_abbrev"
     src = with_part_id(pages.select("url", "html"), "url", cfg.n_parts)
 
@@ -588,7 +608,10 @@ def _stage_link_canonicalize(spark, triples, cfg, io: TableIO, log: CheckpointLo
 
 
 NORM_HUBS_DDL = "norm string, hub string, batch_fp string"
-LINKED_URLS_DDL = "url string, ufp long, batch_fp string"
+# the url index: ufp fingerprints a url's clean triples, pfp its page
+# html — pfp is what lets a delta run find new and re-crawled urls
+# before extracting anything
+LINKED_URLS_DDL = "url string, ufp long, pfp long, batch_fp string"
 LINK_CONFIG = "link_config.json"
 
 
@@ -640,6 +663,326 @@ def _url_fingerprints(triples) -> DataFrame:
             F.count(F.lit(1)),
         ).alias("ufp")
     )
+
+
+# pages through one extract task on the delta path: a daily delta of a
+# few hundred pages is one task writing one triples_raw file
+LAYER_PAGES_PER_TASK = 1000
+MASK64 = (1 << 64) - 1
+
+
+def _ufp_or_empty():
+    """ufp, or for a url without clean triples (an empty or
+    all-malformed page) the _url_fingerprints formula over zero rows."""
+    return F.coalesce(
+        F.col("ufp"), F.xxhash64(F.lit(0).cast("long"), F.lit(0).cast("long"))
+    ).alias("ufp")
+
+
+def _signed(h: str) -> int:
+    """A 16-hex-digit batch id as the signed long the ledger stores."""
+    v = int(h[-16:], 16)
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+@dataclass
+class _Delta:
+    """What the incremental extract stage found, for the link stage.
+
+    batch: the triples_raw layer (and url-index batch) of this run's
+    new urls, or None when nothing is new. new_urls: their (url, pfp).
+    cosmetic: (url, ufp, pfp) of re-crawled urls whose clean triples
+    did not change — they join the url index with this batch.
+    rebuild: the trigger of a full relink (triples_raw is then already
+    one rebuild_id layer), or None. page_fps: (url, pfp) of every
+    page, lazily — the rebuild's url index."""
+
+    rebuild_id: str
+    page_fps: DataFrame
+    batch: str | None = None
+    n_new: int = 0
+    new_urls: DataFrame | None = None
+    cosmetic: DataFrame | None = None
+    rebuild: str | None = None
+
+
+def _recover_incremental(io: TableIO) -> None:
+    """Heal a crashed swap of every table the incremental path replaces
+    or patches — filesystem metadata only, and a no-op when nothing
+    crashed."""
+    for name in ("canonical_map", "triples_raw", "linked_urls"):
+        io.recover_replace(name)
+    io.recover_patch("edges")
+    io.recover_replace("edges")
+
+
+def _partition_values(io: TableIO, name: str, col: str) -> list[str]:
+    """Values of a table's top-level `col=` partition dirs — pure
+    filesystem metadata, no data read."""
+    fs, root = io._fs(io.path(name))
+    if not fs.exists(root):
+        return []
+    pre = col + "="
+    return [
+        st.getPath().getName()[len(pre):]
+        for st in fs.listStatus(root)
+        if st.isDirectory() and st.getPath().getName().startswith(pre)
+    ]
+
+
+def _page_fingerprints(pages: DataFrame) -> DataFrame:
+    """(url, pfp): fingerprint of each url's page html, computed in the
+    JVM — finding the delta starts no Python worker."""
+    return pages.groupBy("url").agg(
+        F.xxhash64(F.bit_xor(F.xxhash64("html")), F.count(F.lit(1))).alias("pfp")
+    )
+
+
+def _extract_pages(pages, urls, cfg, rules, n_pages: int) -> DataFrame:
+    """Fused extract/parse/abbreviate of the pages whose url is in
+    `urls` (every page when None), in ceil(n_pages /
+    LAYER_PAGES_PER_TASK) tasks — so a small delta is one task and
+    one output file, not one per scan split."""
+    src = pages.select("url", "html")
+    if urls is not None:
+        src = src.join(F.broadcast(urls), "url", "left_semi")
+    k = -(-n_pages // LAYER_PAGES_PER_TASK)
+    src = src.coalesce(1) if k <= 1 else src.repartition(k)
+    return fused_extract_parse_abbrev(
+        with_part_id(src, "url", cfg.n_parts), rules, mode=cfg.mode,
+        null=cfg.null_shortcut,
+    )
+
+
+def _write_layer(
+    rows: DataFrame, batch: str, io: TableIO, keep: DataFrame | None = None,
+    replace: bool = False,
+) -> tuple[int, int]:
+    """Write freshly extracted `rows`, plus already-extracted `keep`
+    rows, as the triples_raw layer batch_fp=<batch>: a dynamic
+    overwrite of that layer alone, or with `replace` a crash-safe swap
+    of the whole table (for kept rows read from the table itself).
+    Returns (n_out, n_err) of `rows`, counted by an Observation during
+    the write — no stats re-scan."""
+    obs = Observation()
+    out = rows.select(*RAW_COLS).observe(
+        obs,
+        F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_out"),
+        F.sum(F.when(F.col("error").isNull(), 0).otherwise(1)).alias("n_err"),
+    )
+    if keep is not None:
+        out = out.unionByName(keep.select(*RAW_COLS))
+    out = out.withColumn("batch_fp", F.lit(batch))
+    if replace:
+        io.replace(out, "triples_raw", partition_by=["batch_fp"])
+    else:
+        io.write(out, "triples_raw", mode="overwrite", partition_by=["batch_fp"])
+    m = obs.get
+    return int(m["n_out"] or 0), int(m["n_err"] or 0)
+
+
+def _warm_python_worker(spark):
+    """Start a Python worker — with the fused extractor's modules
+    imported — in a one-row background job while the JVM-only delta
+    pass runs. Workers are reused across tasks
+    (spark.python.worker.reuse), so the extract job then skips the
+    worker start-up instead of paying it after the delta pass. Returns
+    a join handle, which re-raises a failure of the job; the caller
+    joins it before leaving the stage."""
+    from pyspark import InheritableThread
+
+    def _import(batches):
+        import kgpipe.operators.fused  # noqa: F401
+
+        yield from batches
+
+    box: dict = {}
+
+    def _job():
+        try:
+            spark.range(1, numPartitions=1).mapInPandas(_import, "id long").collect()
+        except BaseException as e:  # re-raised on join
+            box["err"] = e
+
+    th = InheritableThread(target=_job)
+    th.start()
+
+    def join() -> None:
+        th.join()
+        if "err" in box:
+            raise box["err"]
+
+    return join
+
+
+def _extract_delta(spark, pages, cfg, io: TableIO, log: CheckpointLog, rules) -> _Delta:
+    """The incremental extract stage: find the delta first, then
+    extract only it.
+
+    One JVM-only job full-joins the pages' (url, page fingerprint) with
+    the persisted url index and pins the urls that are new, re-crawled
+    or removed — a delta-sized frame; the counts and batch ids come
+    from an Observation on that same job. Only the new urls go through
+    the Python extractor, into ONE triples_raw layer batch_fp=<b>,
+    where b hashes the delta's (url, pfp) — a retry rewrites its own
+    layer (dynamic overwrite) or, when the ledger already holds it,
+    skips the extraction. Row counts come from an Observation on the
+    layer write; the ledger gets one row per layer, n_in = pages
+    extracted.
+
+    Re-crawled urls (page fingerprint changed) are extracted too, but
+    only to compare their clean triples with the index: when none
+    changed the re-crawl is not a change, and the new page
+    fingerprints join the index with this batch. Everything merges
+    cannot express routes to one rebuild (_rebuild_triples, then the
+    link stage's _incremental_full_rebuild), named by its trigger:
+      - layout: triples_raw laid out by part_id or a url index
+        without page fingerprints (a warehouse written before the
+        layers) — every page is re-extracted once;
+      - removed: an indexed url is gone (a possible retraction);
+      - recrawl: a re-crawled url's clean triples changed;
+      - stale_layer: a layer no url-index batch names, left by a
+        crashed run over other input — its links may be in the map;
+      - index_gap / cfg_gap: the link indexes are missing or were
+        built under another link config."""
+    stage = "extract_parse_abbrev"
+    warm_join = _warm_python_worker(spark)
+    page_fps = _page_fingerprints(pages.select("url", "html"))
+    linked = io.exists("linked_urls")
+    if linked:
+        idx = io.read("linked_urls", LINKED_URLS_DDL).groupBy("url").agg(
+            F.min("ufp").alias("old_ufp"), F.collect_set("pfp").alias("old_pfps")
+        )
+    else:
+        idx = spark.createDataFrame([], "url string, old_ufp long, old_pfps array<long>")
+    kind = (
+        F.when(F.col("old_pfps").isNull(), "new")
+        .when(F.col("pfp").isNull(), "removed")
+        .when(F.array_contains("old_pfps", F.col("pfp")), "same")
+        .otherwise("changed")
+    )
+    joined = page_fps.join(idx, "url", "full").withColumn("kind", kind)
+
+    def n(cond):
+        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
+
+    def batch_hash(cond):
+        h = F.bit_xor(F.when(cond, F.xxhash64("url", "pfp")))
+        return F.xxhash64(F.coalesce(h, F.lit(0).cast("long")), n(cond))
+
+    moved = F.col("kind").isin("new", "changed")
+    paged = F.col("pfp").isNotNull()
+    obs = Observation()
+    delta = (
+        joined.observe(
+            obs,
+            n(F.col("kind") == "new").alias("new"),
+            n(F.col("kind") == "changed").alias("changed"),
+            n(F.col("kind") == "removed").alias("removed"),
+            n(F.size("old_pfps") == 0).alias("no_pfp"),
+            n(paged).alias("pages"),
+            batch_hash(moved).alias("batch"),
+            batch_hash(paged).alias("all"),
+        )
+        .where(F.col("kind") != "same")
+        .select("url", "pfp", "old_ufp", "kind")
+        .localCheckpoint(eager=True)
+    )
+    st = {k: int(v or 0) for k, v in obs.get.items()}
+    n_new, n_changed = st["new"], st["changed"]
+    batch = "%016x" % (st["batch"] & MASK64)
+    # the link config is part of a rebuild's identity: the same pages
+    # relinked under another config must not look already applied
+    rebuild_id = "rebuild_%016x" % (
+        (st["all"] ^ int(_link_config_key(cfg)[:16], 16)) & MASK64
+    )
+    conf = io.read_json(LINK_CONFIG) or {}
+    layers = _partition_values(io, "triples_raw", "batch_fp")
+    linked_batches = set(_partition_values(io, "linked_urls", "batch_fp"))
+    relayout = io.exists("triples_raw") and (
+        bool(_partition_values(io, "triples_raw", "part_id")) or st["no_pfp"] > 0
+    )
+    trigger = None
+    if relayout:
+        trigger = "layout"
+    elif st["removed"]:
+        trigger = "removed"
+    elif any(b not in linked_batches and b != batch for b in layers):
+        trigger = "stale_layer"
+    elif linked and cfg.neardup_link and (
+        not io.exists("norm_hubs")
+        or (cfg.jaccard_threshold < 1.0 and not io.exists("lsh_index"))
+    ):
+        trigger = "index_gap"
+    elif linked and conf.get("key") != _link_config_key(cfg):
+        trigger = "cfg_gap"
+
+    new_urls = delta.where(F.col("kind") == "new").select("url", "pfp")
+    extracted = cosmetic = None
+    if trigger is None and n_changed:
+        extracted = _extract_pages(
+            pages, delta.where(moved).select("url"), cfg, rules, n_new + n_changed
+        ).localCheckpoint(eager=True)
+        changed = delta.where(F.col("kind") == "changed")
+        now = _url_fingerprints(
+            extracted.where(F.col("error").isNull()).join(
+                F.broadcast(changed.select("url")), "url", "left_semi"
+            )
+        )
+        cmp = changed.join(now, "url", "left").select(
+            "url", "pfp", "old_ufp", _ufp_or_empty()
+        )
+        if cmp.where(F.col("ufp") != F.col("old_ufp")).limit(1).count():
+            trigger = "recrawl"
+        else:
+            cosmetic = cmp.select("url", "ufp", "pfp")
+
+    base = dict(rebuild_id=rebuild_id, page_fps=page_fps)
+    warm_join()
+    if trigger is not None:
+        _rebuild_triples(
+            pages, delta, extracted, relayout, st, rebuild_id,
+            linked_batches, cfg, io, log, rules,
+        )
+        return _Delta(rebuild=trigger, **base)
+    if not n_new:
+        # nothing to extract; cosmetic re-crawls still join the index
+        return _Delta(batch=batch if cosmetic is not None else None, cosmetic=cosmetic, **base)
+    if (0, _signed(batch), n_new) not in log.completed_set(stage) or batch not in layers:
+        if extracted is not None:
+            rows = extracted.join(F.broadcast(new_urls.select("url")), "url", "left_semi")
+        else:
+            rows = _extract_pages(pages, new_urls.select("url"), cfg, rules, n_new)
+        log.mark_done_rows(stage, [(0, _signed(batch), n_new, *_write_layer(rows, batch, io))])
+    return _Delta(batch=batch, n_new=n_new, new_urls=new_urls, cosmetic=cosmetic, **base)
+
+
+def _rebuild_triples(
+    pages, delta, extracted, relayout, st, rebuild_id, linked_batches,
+    cfg, io: TableIO, log: CheckpointLog, rules,
+) -> None:
+    """triples_raw as ONE layer batch_fp=<rebuild_id>: the rows of
+    unchanged urls, kept from the layers the url index names (and from
+    this rebuild's own layer, should a crashed attempt have swapped it
+    in), plus a fresh extraction of the new and re-crawled pages — of
+    every page after a layout change. Removed urls' rows are dropped.
+    TableIO.replace, not an overwrite: the kept rows are read from the
+    table being replaced."""
+    if relayout:
+        rows = _extract_pages(pages, None, cfg, rules, st["pages"])
+        n_in, keep = st["pages"], None
+    else:
+        moved = delta.where(F.col("kind").isin("new", "changed")).select("url")
+        if extracted is None:
+            extracted = _extract_pages(pages, moved, cfg, rules, st["new"] + st["changed"])
+        rows, n_in = extracted, st["new"] + st["changed"]
+        keep = (
+            io.read("triples_raw", RAW_LAYER_DDL)
+            .where(F.col("batch_fp").isin(sorted(linked_batches | {rebuild_id})))
+            .join(F.broadcast(delta.select("url")), "url", "left_anti")
+        )
+    counts = _write_layer(rows, rebuild_id, io, keep=keep, replace=True)
+    log.mark_done_rows("extract_parse_abbrev", [(0, _signed(rebuild_id), n_in, *counts)])
 
 
 LSH_INDEX_DDL = "uri string, band int, bh long, batch_fp string"
@@ -750,180 +1093,141 @@ def _incremental_lsh_delta(spark, delta, cfg, io: TableIO):
     return verified, banded_new
 
 
-def _stage_link_incremental(spark, triples, cfg, io: TableIO, log: CheckpointLog):
-    """Delta-only link + canonicalize, keyed at the URL level: link
-    ONLY triples whose url has never been linked. Delta detection by
-    url — not by storage partition — because hash partitioning
-    scatters any append across most partitions, while urls are the
-    actual unit of crawl identity: an appended page is a NEW url, a
-    re-crawl is an EXISTING url whose content fingerprint changed.
+def _commit_url_index(
+    rows: DataFrame, batch: str, cfg, io: TableIO, replace: bool = False
+) -> None:
+    """Write a batch of the url index — the link stage's commit point,
+    written after everything else the batch changes, so a crash before
+    it re-detects the same delta and re-runs idempotently — then record
+    the link config the indexes were built under. A delta
+    appends its own batch partition; a rebuild replaces the index."""
+    rows = rows.withColumn("batch_fp", F.lit(batch))
+    if replace:
+        io.replace(rows, "linked_urls", partition_by=["batch_fp"])
+    else:
+        io.write(rows, "linked_urls", mode="overwrite", partition_by=["batch_fp"])
+    io.write_json_atomic(LINK_CONFIG, {"key": _link_config_key(cfg)})
+
+
+def _uris(triples: DataFrame) -> DataFrame:
+    return (
+        triples.select(F.col("s").alias("uri"))
+        .union(triples.select(F.col("o").alias("uri")))
+        .distinct()
+    )
+
+
+def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
+    """Delta-only link + canonicalize over the batch layer the extract
+    stage wrote (delta.batch) — no scan of the other triples_raw
+    layers, no corpus-wide url fingerprints.
 
     Append path (the daily-delta case): new URIs link against the
-    persisted norm→hub index (a URI whose normal form was seen in
-    any earlier batch gets one edge to that form's existing hub —
-    edge choice only affects connectivity, and canon labels come
-    from CC's component-min, so hub staleness is label-irrelevant);
-    unseen normal forms elect a hub among the delta and enter the
-    index. Components merge via incremental_canonical_map — CC work
-    scales with the delta's neighborhood, not the corpus.
+    persisted norm→hub index — a URI whose normal form any earlier
+    batch saw gets one edge to that form's hub (edge choice only
+    affects connectivity, and canon labels come from CC's component
+    min, so hub staleness is label-irrelevant); unseen normal forms
+    elect the batch's min URI as hub. With jaccard_threshold < 1.0
+    the delta's new URIs are also banded against the persisted LSH
+    signature index (_incremental_lsh_delta). Components merge via
+    incremental_merge, so CC work scales with the delta's
+    neighborhood, not the corpus; its label changes drive the
+    materialize stage's relabel of old edges.
 
-    Re-crawl path: merge-only incrementality cannot RETRACT a link,
-    so when any already-linked url's content fingerprint changed the
-    stage falls back to a full relink + rebuild of the map, the hub
-    index, and the url index (_incremental_full_rebuild) instead of
-    silently diverging. Either way the result is pinned EQUAL to a
-    from-scratch recompute (test_pipeline).
-
-    Per-run metadata cost: one map-side-combined groupBy(url) over
-    the clean triples plus a join against the url index — linear
-    scans, the same order as the extract stage's own fingerprint
-    pass, and far below re-running link+CC over the corpus.
+    Rebuild path: the extract stage already named a trigger (a
+    re-crawl that changed clean triples, a removed url, a config or
+    layout gap), or an LSH bucket that already emitted pairs crosses
+    the size cap — merges cannot retract links, so the map and the
+    indexes are rebuilt from all current triples
+    (_incremental_full_rebuild). Either way the result is pinned EQUAL
+    to a from-scratch recompute (test_pipeline).
 
     Crash safety: canonical_map goes through TableIO.replace (it
-    derives from its own previous version); the hub and url deltas
-    land in per-batch `batch_fp=` partitions under dynamic
-    overwrite, so a retry replaces its own rows; the url index is
-    written LAST, so a crashed attempt re-detects its delta (or its
-    rebuild) and re-runs idempotently.
-
-    Requires exact-normalized linking (cfg.jaccard_threshold == 1.0):
-    LSH banding compares against the whole corpus by construction, so
-    an LSH delta link would need persisted bucket tables — refused
-    rather than silently under-linked. Materialize still rewrites
-    fully: merged components relabel OLD edges' canon ids, so the
-    edge table cannot be patched per-part without a canon-diff pass.
+    derives from its own previous version); the hub, label-change
+    and LSH deltas land in per-batch `batch_fp=` partitions under
+    dynamic overwrite, so a retry replaces its own rows; the
+    url index is written LAST, so a crashed attempt re-detects its
+    delta and re-runs idempotently (test_pipeline kills a delta run
+    after every write).
     """
     from kgpipe.operators.cc import incremental_merge
     from kgpipe.operators.link import normalize_uri
 
     stage = "link_urls"
-    # per-url content fingerprints of the CLEAN triples — one pass
-    cur = _url_fingerprints(triples).localCheckpoint(eager=True)
-    if io.exists("linked_urls"):
-        prev_urls = io.read("linked_urls", LINKED_URLS_DDL).select(
-            "url", F.col("ufp").alias("old_ufp")
-        )
-    else:
-        prev_urls = spark.createDataFrame([], "url string, old_ufp long")
-    # FULL join: a url present in the index but absent from the
-    # current triples is a RETRACTION (the crawl shrank) — merge-only
-    # incrementality cannot retract its links, so it must route to the
-    # rebuild exactly like a changed fingerprint. A left join would
-    # never surface such urls at all and their stale edges would stay
-    # merged forever.
-    joined = cur.join(prev_urls, "url", "full")
-    changed = (
-        joined.where(
-            F.col("old_ufp").isNotNull()
-            & (F.col("ufp").isNull() | (F.col("ufp") != F.col("old_ufp")))
-        ).limit(1).count()
-        > 0
-    )
-    # a corpus linked under a DIFFERENT config lacks the indexes this
-    # config's delta path needs (norm_hubs for exact-normalized
-    # linking, lsh_index for banded linking) — old URIs would silently
-    # never match. Rebuild once; subsequent deltas are incremental.
-    index_gap = io.exists("linked_urls") and cfg.neardup_link and (
-        not io.exists("norm_hubs")
-        or (cfg.jaccard_threshold < 1.0 and not io.exists("lsh_index"))
-    )
-    # indexes built under a different link config: the delta path
-    # would silently keep old-config merges (merges cannot retract) —
-    # one full rebuild realigns them; subsequent deltas are incremental
-    cfg_gap = io.exists("linked_urls") and (
-        (io.read_json(LINK_CONFIG) or {}).get("key") != _link_config_key(cfg)
-    )
-    if changed or index_gap or cfg_gap:
-        _incremental_full_rebuild(spark, triples, cur, cfg, io, log, stage)
+    if delta.rebuild is not None:
+        _incremental_full_rebuild(spark, delta, cfg, io, log)
         return
-    new_urls = (
-        joined.where(F.col("old_ufp").isNull())
-        .select("url", "ufp")
-        .localCheckpoint(eager=True)
-    )
-    n_new = new_urls.count()
-    if n_new == 0 and io.exists("canonical_map"):
+    b = delta.batch
+    if b is None:
         return
-    # the delta's triples, pinned once: every downstream consumer
-    # (edge builders, the persisted delta_triples/term_maps handoff to
-    # materialize) reuses this delta-sized frame instead of re-paying
-    # the triples scan
-    delta = triples.join(new_urls.select("url"), "url", "left_semi").localCheckpoint(
-        eager=True
+    if delta.new_urls is None:
+        # cosmetic re-crawls only: no triples to link
+        _commit_url_index(delta.cosmetic, b, cfg, io)
+        return
+    layer = (
+        io.read("triples_raw", RAW_LAYER_DDL)
+        .where(F.col("batch_fp") == b)
+        .where(F.col("error").isNull())
     )
 
-    explicit = sameas_edges_from_triples(delta, cfg.sameas_pred)
+    # no distinct here: the edge set is distinct-ed once, below
+    explicit = (
+        layer.where(F.col("p") == cfg.sameas_pred)
+        .select(F.col("s").alias("src"), F.col("o").alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    )
+    lsh_new_banded = None
     if cfg.neardup_link:
-        base = (
-            delta.select(F.col("s").alias("uri"))
-            .union(delta.select(F.col("o").alias("uri")))
-            .distinct()
-            .select("uri", normalize_uri(F.col("uri")).alias("norm"))
-        )
+        base = _uris(layer).select("uri", normalize_uri(F.col("uri")).alias("norm"))
         if io.exists("norm_hubs"):
             hubs = io.read("norm_hubs", NORM_HUBS_DDL).select("norm", "hub")
         else:
             hubs = spark.createDataFrame([], "norm string, hub string")
-        # seen normal forms: one edge to the existing hub suffices for
-        # connectivity (all earlier members already reach that hub)
-        matched = (
-            base.join(hubs, "norm")
-            .where(F.col("uri") != F.col("hub"))
-            .select(F.col("uri").alias("src"), F.col("hub").alias("dst"))
-        )
-        # unseen normal forms: elect the min URI as hub, star the rest.
-        # Eager: new_hubs feeds BOTH the star edges and the norm_hubs
-        # write — without the pin, the write re-runs the whole delta
-        # derivation (scan, normalize, anti-join, groupBy) a second time.
-        unmatched = base.join(hubs, "norm", "left_anti")
+        # unseen normal forms elect their min URI as hub. Written FIRST,
+        # so the edges read every hub — earlier batches' and this
+        # one's — through one join: each URI gets one edge to its
+        # form's hub. A retry finds its own hubs already there, writes
+        # none, and derives the same edges.
         new_hubs = (
-            unmatched.groupBy("norm")
+            base.join(hubs, "norm", "left_anti")
+            .groupBy("norm")
             .agg(F.min("uri").alias("hub"))
-            .localCheckpoint(eager=True)
         )
-        star_new = (
-            unmatched.join(new_hubs, "norm")
+        io.write(
+            new_hubs.withColumn("batch_fp", F.lit(b)),
+            "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
+        )
+        hub_edges = (
+            base.join(io.read("norm_hubs", NORM_HUBS_DDL).select("norm", "hub"), "norm")
             .where(F.col("uri") != F.col("hub"))
             .select(F.col("uri").alias("src"), F.col("hub").alias("dst"))
         )
-        delta_edges = explicit.union(matched).union(star_new)
+        delta_edges = explicit.union(hub_edges)
         if cfg.jaccard_threshold < 1.0:
-            lsh_res = _incremental_lsh_delta(spark, delta, cfg, io)
+            lsh_res = _incremental_lsh_delta(spark, layer, cfg, io)
             if lsh_res is None:
                 # a bucket that already emitted pairs crossed the cap:
                 # a full recompute would retract them — rebuild
-                _incremental_full_rebuild(spark, triples, cur, cfg, io, log, stage)
+                _incremental_full_rebuild(
+                    spark, dataclasses.replace(delta, rebuild="lsh_cap"), cfg, io, log
+                )
                 return
             lsh_edges, lsh_new_banded = lsh_res
             delta_edges = delta_edges.union(lsh_edges)
-        else:
-            lsh_new_banded = None
     else:
         # full-path parity: with the near-dup linker off, the full
         # stage links ONLY explicit sameAs edges — the incremental
         # mode must not invent norm→hub edges the full mode never made
-        new_hubs = None
-        lsh_new_banded = None
         delta_edges = explicit
-    delta_edges = delta_edges.distinct().localCheckpoint(eager=True)
-    n_edges = delta_edges.count()
 
-    # heal any half-finished swap from a crashed prior attempt BEFORE
-    # reading prev (a schema'd read of a missing live path returns
-    # empty — which would silently discard every earlier component)
-    io.recover_replace("canonical_map")
     if io.exists("canonical_map"):
         prev = io.read("canonical_map", CMAP_DDL)
     else:
         prev = spark.createDataFrame([], CMAP_DDL)
+    # pinned once: the merge reads the delta's edges three times (the
+    # touched components, the CC edge set, the label changes)
+    delta_edges = delta_edges.distinct().localCheckpoint(eager=True)
     cmap, label_changes = incremental_merge(prev, delta_edges, max_iter=cfg.cc_max_iter)
-
-    # deterministic batch id from the delta's url fingerprints —
-    # a retried batch overwrites exactly its own index partitions
-    fp_row = new_urls.agg(
-        F.coalesce(F.bit_xor(F.col("ufp")), F.lit(0)).alias("fp")
-    ).collect()[0]
-    batch_fp = "%016x" % (int(fp_row["fp"]) & ((1 << 64) - 1))
 
     # label changes BEFORE the map replace: they derive from prev, and
     # the materialize stage relabels the edge table from them (per-
@@ -933,47 +1237,19 @@ def _stage_link_incremental(spark, triples, cfg, io: TableIO, log: CheckpointLog
     # writes no partitions — the original rows survive; a retry before
     # it recomputes identical rows and replaces its own partition.
     io.write(
-        label_changes.withColumn("batch_fp", F.lit(batch_fp)),
+        label_changes.withColumn("batch_fp", F.lit(b)),
         "canon_changes", mode="overwrite", partition_by=["batch_fp"],
     )
     # crash-safe: the merged map derives from the live table, so it
     # must never be overwritten in place (delete-then-write would
     # destroy the retry's input) — replace() swaps via renames
-    io.replace(cmap, "canonical_map")
+    obs = Observation()
+    io.replace(cmap.observe(obs, F.count(F.lit(1)).alias("n")), "canonical_map")
+    n_cmap = obs.get["n"]
 
-    # hand the materialize stage everything it needs DELTA-SIZED: the
-    # delta's triples, and the map rows its terms resolve through
-    # (looked up here, where the freshly replaced map is a cheap table
-    # read — materialize then runs zero corpus-scale scans; an earlier
-    # design re-scanned triples AND the map per delta, and those scans
-    # dominated the stage). Both idempotent per-batch partitions,
-    # written before the url index.
-    io.write(
-        delta.select("s", "p", "o", "url").withColumn("batch_fp", F.lit(batch_fp)),
-        "delta_triples", mode="overwrite", partition_by=["batch_fp"],
-    )
-    terms = (
-        delta.select(F.col("s").alias("uri"))
-        .union(delta.select(F.col("o").alias("uri")))
-        .distinct()
-    )
-    term_map = (
-        io.read("canonical_map", CMAP_DDL)
-        .where(F.col("uri") != F.col("canon_id"))
-        .join(F.broadcast(terms), "uri", "left_semi")
-    )
-    io.write(
-        term_map.withColumn("batch_fp", F.lit(batch_fp)),
-        "term_maps", mode="overwrite", partition_by=["batch_fp"],
-    )
-    if new_hubs is not None:
-        io.write(
-            new_hubs.withColumn("batch_fp", F.lit(batch_fp)),
-            "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
-        )
     if lsh_new_banded is not None:
         io.write(
-            lsh_new_banded.withColumn("batch_fp", F.lit(batch_fp)),
+            lsh_new_banded.withColumn("batch_fp", F.lit(b)),
             "lsh_index", mode="overwrite", partition_by=["batch_fp"],
         )
         # recall budget over the WHOLE index (old + this delta): an
@@ -988,39 +1264,48 @@ def _stage_link_incremental(spark, triples, cfg, io: TableIO, log: CheckpointLog
     else:
         io.write_small_rows([(0, 0, 0, 0, 0)], LSH_STATS_DDL,
                             "link_bucket_stats")
-    # url index LAST: a crash anywhere above re-detects this delta
-    io.write(
-        new_urls.withColumn("batch_fp", F.lit(batch_fp)),
-        "linked_urls", mode="overwrite", partition_by=["batch_fp"],
+    # url index LAST: content fingerprints over the batch layer only
+    index_rows = delta.new_urls.join(_url_fingerprints(layer), "url", "left").select(
+        "url", _ufp_or_empty(), "pfp"
     )
-    io.write_json_atomic(LINK_CONFIG, {"key": _link_config_key(cfg)})
-    log.mark_done_rows(stage, [(0, int(fp_row["fp"]), n_new, n_edges, 0)])
+    if delta.cosmetic is not None:
+        index_rows = index_rows.unionByName(delta.cosmetic)
+    _commit_url_index(index_rows, b, cfg, io)
+    log.mark_done_rows(stage, [(0, _signed(b), delta.n_new, n_cmap, 0)])
 
 
-def _incremental_full_rebuild(spark, triples, cur_urls, cfg, io: TableIO, log: CheckpointLog, stage):
-    """Re-crawl fallback for incremental link: some already-linked
-    url's content changed, and a merge cannot retract links — so
-    rebuild the canonical map, the norm→hub index, and the url index
-    from ALL current triples (retractions included). Subsequent
-    append-only deltas resume incrementally. Hubs cover EVERY normal
-    form (singletons too) so future deltas can link against them.
+def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
+    """Rebuild fallback for incremental link: merges cannot retract
+    links, so rebuild the canonical map, the norm→hub index, the LSH
+    index and the url index from ALL current triples (retractions
+    included). Subsequent append-only deltas resume incrementally.
+    Hubs cover EVERY normal form (singletons too) so future deltas can
+    link against them. triples_raw is one layer named delta.rebuild_id
+    here (the extract stage rebuilt it, or the LSH-cap case folds the
+    layers first), and the url index names that one batch; the
+    `rebuild_` prefix routes materialize to its full path.
 
     Write order is load-bearing: canonical_map first (replace —
-    crash-safe), then hubs, then the url index LAST. A crash before
-    the url index rewrite leaves the old index in place, so the
-    retry still detects the changed urls and re-runs the rebuild; a
+    crash-safe), then hubs, then the url index LAST (replace too). A
+    crash before the url index swap leaves the old index in place, so
+    the retry detects the same trigger and re-runs the rebuild; a
     crash after it cannot strand a stale map (the map was written
     first)."""
     from kgpipe.operators.cc import canonical_map_for_nodes
     from kgpipe.operators.link import normalize_uri
 
+    batch_fp = delta.rebuild_id
+    if set(_partition_values(io, "triples_raw", "batch_fp")) != {batch_fp}:
+        io.replace(
+            io.read("triples_raw", RAW_LAYER_DDL).withColumn("batch_fp", F.lit(batch_fp)),
+            "triples_raw", partition_by=["batch_fp"],
+        )
+    triples = io.read("triples_raw", RAW_LAYER_DDL).where(F.col("error").isNull())
     explicit = sameas_edges_from_triples(triples, cfg.sameas_pred)
     lsh_mode = cfg.neardup_link and cfg.jaccard_threshold < 1.0
     if cfg.neardup_link:
         base = (
-            triples.select(F.col("s").alias("uri"))
-            .union(triples.select(F.col("o").alias("uri")))
-            .distinct()
+            _uris(triples)
             .select("uri", normalize_uri(F.col("uri")).alias("norm"))
             .localCheckpoint(eager=True)
         )
@@ -1044,35 +1329,27 @@ def _incremental_full_rebuild(spark, triples, cur_urls, cfg, io: TableIO, log: C
     else:
         hubs_all = None
         edges = explicit.distinct().localCheckpoint(eager=True)
-    n_edges = edges.count()
     nodes = (
         edges.select(F.col("src").alias("uri"))
         .union(edges.select(F.col("dst").alias("uri")))
         .distinct()
     )
     cmap = canonical_map_for_nodes(nodes, edges, max_iter=cfg.cc_max_iter)
-    io.replace(cmap, "canonical_map")
+    obs = Observation()
+    io.replace(cmap.observe(obs, F.count(F.lit(1)).alias("n")), "canonical_map")
+    n_cmap = obs.get["n"]
     io.drop("norm_hubs")
-    # unique-per-content rebuild id (prefix routes materialize to its
-    # own rebuild): a SECOND re-crawl would otherwise reuse the same
-    # batch id as the first, and the applied-batch ledger would see
-    # "nothing pending" and skip the edge rebuild
-    fp_row = cur_urls.agg(
-        F.coalesce(F.bit_xor(F.col("ufp")), F.lit(0)).alias("fp")
-    ).collect()[0]
-    batch_fp = "rebuild_%016x" % (int(fp_row["fp"]) & ((1 << 64) - 1))
     if hubs_all is not None:
         io.write(
             hubs_all.withColumn("batch_fp", F.lit(batch_fp)),
             "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
         )
-    # a rebuild invalidates every pending label-change and delta
-    # handoff (retractions) — materialize routes rebuild batches to
-    # its full path anyway
-    io.drop("canon_changes")
-    io.drop("delta_triples")
-    io.drop("term_maps")
-    io.drop("lsh_index")
+    # a rebuild invalidates every pending label change (retractions) —
+    # materialize routes rebuild batches to its full path anyway.
+    # delta_triples and term_maps are handoff tables that warehouses
+    # written before the triples_raw layers still carry.
+    for name in ("canon_changes", "lsh_index", "delta_triples", "term_maps"):
+        io.drop(name)
     if lsh_mode:
         from kgpipe.operators.link import (
             LSH_BANDS,
@@ -1098,14 +1375,17 @@ def _incremental_full_rebuild(spark, triples, cur_urls, cfg, io: TableIO, log: C
     else:
         io.write_small_rows([(0, 0, 0, 0, 0)], LSH_STATS_DDL,
                             "link_bucket_stats")
-    io.drop("linked_urls")
-    io.write(
-        cur_urls.withColumn("batch_fp", F.lit(batch_fp)),
-        "linked_urls", mode="overwrite", partition_by=["batch_fp"],
+    # every page is indexed — pages without clean triples too, or the
+    # next delta would see them as new again
+    cur_urls = delta.page_fps.join(_url_fingerprints(triples), "url", "left").select(
+        "url", _ufp_or_empty(), "pfp",
     )
-    io.write_json_atomic(LINK_CONFIG, {"key": _link_config_key(cfg)})
-    n_urls = cur_urls.count()
-    log.mark_done_rows(stage, [(0, 0, n_urls, n_edges, 0)])
+    uobs = Observation()
+    _commit_url_index(
+        cur_urls.observe(uobs, F.count(F.lit(1)).alias("n")), batch_fp, cfg, io,
+        replace=True,
+    )
+    log.mark_done_rows("link_urls", [(0, _signed(batch_fp), uobs.get["n"], n_cmap, 0)])
 
 
 EDGES_INC_DDL = "canon_s string, p string, canon_o string, b_fp string, part_id int"
@@ -1120,8 +1400,6 @@ CHANGED_BROADCAST_LIMIT = 1_000_000
 REWRITE_DIR_FRACTION = 0.6
 MAT_LAYOUT_VERSION = 3  # b_fp-layered hive layout + per-layer coverage markers
 CHANGES_DDL = "old_c string, new_c string, batch_fp string"
-DELTA_TRIPLES_DDL = "s string, p string, o string, url string, batch_fp string"
-TERM_MAPS_DDL = "uri string, canon_id string, batch_fp string"
 
 
 def _compose_changes(ch: DataFrame, n_batches: int) -> DataFrame:
@@ -1203,14 +1481,7 @@ def _edges_layer_dirs(io: TableIO) -> set[tuple[str, int]]:
 def _edges_layer_names(io: TableIO) -> list[str]:
     """b_fp layer values of the layered edge table — pure filesystem
     metadata, no data read."""
-    fs, root = io._fs(io.path("edges"))
-    if not fs.exists(root):
-        return []
-    return [
-        st.getPath().getName()[len("b_fp="):]
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("b_fp=")
-    ]
+    return _partition_values(io, "edges", "b_fp")
 
 
 def _maybe_fold_layers(spark, cfg, io: TableIO) -> bool:
@@ -1300,10 +1571,9 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
     io.recover_replace("edges")  # heal a layer fold that crashed mid-swap
     state = io.read_json(MAT_STATE) or {}
     applied = _applied_batches(io)
-    linked = io.read("linked_urls", LINKED_URLS_DDL)
-    all_batches = sorted(
-        r["batch_fp"] for r in linked.select("batch_fp").distinct().collect()
-    )
+    # the url index's batch partitions ARE the batch list — a listing,
+    # not a job
+    all_batches = sorted(_partition_values(io, "linked_urls", "batch_fp"))
     pending = [b for b in all_batches if b not in applied]
     if not pending and io.exists("edges"):
         return
@@ -1322,9 +1592,6 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         # crashed before committing — its contents overlap every batch
         # unpredictably, so re-running the rebuild is the only safe move
         or _full_layer_uncommitted(io)
-        # delta batches need the link stage's handoff tables; their
-        # absence means a pre-handoff layout — rebuild once
-        or (bool(pending) and not (io.exists("delta_triples") and io.exists("term_maps")))
     )
     changed = None
     if not full_needed:
@@ -1338,35 +1605,44 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
             raw = spark.createDataFrame([], "old_c string, new_c string")
         # several pending batches can CHAIN label changes (batch 2
         # relabels a label batch 1 introduced); the edge table still
-        # holds pre-batch-1 labels, so compose before applying
-        changed = _compose_changes(raw, len(pending)).localCheckpoint(eager=True)
-        if changed.limit(CHANGED_BROADCAST_LIMIT + 1).count() > CHANGED_BROADCAST_LIMIT:
+        # holds pre-batch-1 labels, so compose before applying. One
+        # job pins the composed set and counts it (Observation).
+        cobs = Observation()
+        changed = (
+            _compose_changes(raw, len(pending))
+            .observe(cobs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n_changed = cobs.get["n"]
+        if n_changed > CHANGED_BROADCAST_LIMIT:
             full_needed = True
 
-    if not full_needed and changed.limit(1).count() > 0:
-        # merge repair: find the EXACT dirs holding affected rows —
-        # one scan; source dirs and per-layer destination dirs (rows
-        # whose canon_s changed move to pmod(hash(new_c)) within their
-        # own layer) come from the same canon_s join
+    if not full_needed and n_changed > 0:
+        # merge repair: ONE scan of the edge table against the
+        # broadcast change set finds the EXACT dirs holding affected
+        # rows, plus the dirs rows whose canon_s changed move to
+        # (pmod(hash(new_c)) within their own layer)
+        ch_s = changed.select(F.col("old_c").alias("canon_s"), F.col("new_c").alias("ns"))
+        ch_o = changed.select(F.col("old_c").alias("canon_o"), F.col("new_c").alias("no"))
+
+        def relabel(edges: DataFrame) -> DataFrame:
+            return edges.join(F.broadcast(ch_s), "canon_s", "left").join(
+                F.broadcast(ch_o), "canon_o", "left"
+            )
+
         old_edges = io.read("edges", EDGES_INC_DDL)
-        ch_keys = F.broadcast(changed.withColumnRenamed("old_c", "canon_s"))
-        sd_rows = (
-            old_edges.join(ch_keys, "canon_s")
+        hits = (
+            relabel(old_edges)
+            .where(F.col("ns").isNotNull() | F.col("no").isNotNull())
             .select(
                 "b_fp", "part_id",
-                F.pmod(F.xxhash64("new_c"), F.lit(cfg.n_buckets)).cast("int").alias("pt"),
+                F.pmod(F.xxhash64("ns"), F.lit(cfg.n_buckets)).cast("int").alias("pt"),
             )
             .distinct().collect()
         )
-        src_s = {(r["b_fp"], r["part_id"]) for r in sd_rows}
-        dest = {(r["b_fp"], r["pt"]) for r in sd_rows}
-        keys_o = F.broadcast(changed.select(F.col("old_c").alias("canon_o")))
-        src_o = {
-            (r["b_fp"], r["part_id"])
-            for r in old_edges.join(keys_o, "canon_o", "left_semi")
-            .select("b_fp", "part_id").distinct().collect()
+        dirs = {(r["b_fp"], r["part_id"]) for r in hits} | {
+            (r["b_fp"], r["pt"]) for r in hits if r["pt"] is not None
         }
-        dirs = src_s | src_o | dest
         existing = _edges_layer_dirs(io)
         if len(dirs) > REWRITE_DIR_FRACTION * max(len(existing), 1):
             full_needed = True
@@ -1376,25 +1652,19 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
                     [(b, p) for b, p in sorted(dirs)], "b_fp string, part_id int"
                 )
             )
-            ch_s = changed.select(F.col("old_c").alias("canon_s"), F.col("new_c").alias("ns"))
-            ch_o = changed.select(F.col("old_c").alias("canon_o"), F.col("new_c").alias("no"))
             # coarse literal rectangle first — it prunes PARTITION DIRS
             # at the scan (a semi-join alone may not) — then the exact
             # broadcast semi-join trims the rectangle's corners
             coarse = F.col("b_fp").isin(sorted({b for b, _ in dirs})) & F.col(
                 "part_id"
             ).isin(sorted({p for _, p in dirs}))
-            relabeled = (
-                old_edges.where(coarse)
-                .join(dir_df, ["b_fp", "part_id"], "left_semi")
-                .join(F.broadcast(ch_s), "canon_s", "left")
-                .join(F.broadcast(ch_o), "canon_o", "left")
-                .select(
-                    F.coalesce("ns", "canon_s").alias("canon_s"),
-                    F.col("p"),
-                    F.coalesce("no", "canon_o").alias("canon_o"),
-                    F.col("b_fp"),
-                )
+            relabeled = relabel(
+                old_edges.where(coarse).join(dir_df, ["b_fp", "part_id"], "left_semi")
+            ).select(
+                F.coalesce("ns", "canon_s").alias("canon_s"),
+                F.col("p"),
+                F.coalesce("no", "canon_o").alias("canon_o"),
+                F.col("b_fp"),
             )
             out = edges_with_buckets(relabeled, cfg.n_buckets)
             io.patch_partitions(
@@ -1409,13 +1679,18 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         # "re-applied" by a later retry's dynamic overwrite, replacing
         # the whole corpus's rows with delta-only rows.
         # Broadcast only while the map fits the budget (module
-        # contract); the rebuild is a rare, minutes-scale path, so an
-        # early-stopping probe of the non-identity rows is fine here.
-        n_cmap = (
-            cmap.where(F.col("uri") != F.col("canon_id"))
-            .limit(CMAP_BROADCAST_LIMIT + 1)
-            .count()
-        )
+        # contract). The size signal is the row count every
+        # incremental map write records in the link ledger (identity
+        # rows included, so it errs toward the sort-merge join); an
+        # early-stopping probe of the non-identity rows covers a
+        # warehouse without that row.
+        n_cmap = log.last_n_out("link_urls")
+        if n_cmap is None:
+            n_cmap = (
+                cmap.where(F.col("uri") != F.col("canon_id"))
+                .limit(CMAP_BROADCAST_LIMIT + 1)
+                .count()
+            )
         out = edges_with_buckets(
             canonicalize_triples(
                 triples, cmap, broadcast_map=n_cmap <= CMAP_BROADCAST_LIMIT
@@ -1431,48 +1706,40 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         # coverage marker LAST: a crash before it leaves every batch
         # pending and the rebuild simply re-runs
         io.write_json_atomic(_layer_marker("full"), {"batches": all_batches})
+        n_out = obs.get["n"]
     else:
         # the delta itself: its own b_fp layer(s), dynamic partition
         # overwrite — zero old files touched, retry replaces itself.
-        # Inputs are the link stage's delta-sized handoff tables
-        # (partition-pruned to the pending batches): NO scan of the
-        # triples table or the canonical map happens here.
-        delta_triples = io.read("delta_triples", DELTA_TRIPLES_DDL).where(
-            F.col("batch_fp").isin(pending)
+        # Inputs are the pending batches' triples_raw layers (partition-
+        # pruned — no scan of the other layers) and the map rows their
+        # terms resolve through. The CURRENT map already holds every
+        # pending batch's merges, so those rows need no composing.
+        delta_triples = (
+            io.read("triples_raw", RAW_LAYER_DDL)
+            .where(F.col("batch_fp").isin(pending) & F.col("error").isNull())
+            .select("s", "p", "o", "batch_fp")
         )
-        m_rows = (
-            io.read("term_maps", TERM_MAPS_DDL)
-            .where(F.col("batch_fp").isin(pending))
-            .select("uri", "canon_id")
+        m_eff = cmap.where(F.col("uri") != F.col("canon_id")).join(
+            F.broadcast(_uris(delta_triples)), "uri", "left_semi"
         )
-        # later pending batches may have relabeled (a) values an
-        # earlier batch's term_map resolved to — fix them through the
-        # composed change set — and (b) terms an earlier batch saw as
-        # identity — the change rows themselves are those mappings
-        m_fixed = (
-            m_rows.join(
-                F.broadcast(changed.withColumnRenamed("old_c", "canon_id")),
-                "canon_id", "left",
-            )
-            .select("uri", F.coalesce("new_c", "canon_id").alias("canon_id"))
-        )
-        m_eff = m_fixed.union(
-            changed.select(F.col("old_c").alias("uri"), F.col("new_c").alias("canon_id"))
-        ).distinct()
-        # broadcast stays unconditional HERE: m_eff is delta-sized by
-        # construction — pending-batch term maps plus a change set the
-        # CHANGED_BROADCAST_LIMIT gate already bounded above
+        # broadcast stays unconditional HERE: m_eff holds only the
+        # pending layers' terms — delta-sized by construction
         delta_new = edges_with_buckets(
             canonicalize_triples(
                 delta_triples, m_eff, broadcast_map=True, keep_cols=["batch_fp"],
             ),
             cfg.n_buckets,
         ).withColumnRenamed("batch_fp", "b_fp")
-        delta_new = delta_new.observe(obs, F.count(F.lit(1)).alias("n"))
-        io.write(
-            delta_new.repartition(min(cfg.n_buckets, 32), "b_fp", "part_id"),
-            "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
-        )
+        n_out = 0
+        # a batch of cosmetic re-crawls only has no layer: nothing to
+        # write (and a scan of no files would never report its count)
+        if set(pending) & set(_partition_values(io, "triples_raw", "batch_fp")):
+            io.write(
+                delta_new.observe(obs, F.count(F.lit(1)).alias("n"))
+                .repartition(min(cfg.n_buckets, 32), "b_fp", "part_id"),
+                "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
+            )
+            n_out = obs.get["n"]
         # completion markers LAST — a half-written layer stays pending
         for b in pending:
             io.write_json_atomic(_layer_marker(b), {"batches": [b]})
@@ -1483,7 +1750,6 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
     io.write_json_atomic(
         MAT_STATE, {"n_buckets": cfg.n_buckets, "layout": MAT_LAYOUT_VERSION}
     )
-    n_out = obs.get["n"]
     log.mark_done_rows(stage, [(0, 0, len(pending), n_out, 0)])
 
 

@@ -4,6 +4,7 @@ Iceberg seam (exercised when the runtime jar is present, skipped
 otherwise — this sandbox has no jar and no ivy network)."""
 
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -409,3 +410,60 @@ def test_checkpoint_rows_api_equivalent_and_durable(spark, tmp_path):
         sums = lg.counter_sums()
         assert sums["a"] == {"n_in": 11, "n_out": 10, "n_err": 1}
         assert sums["b"] == {"n_in": 2, "n_out": 2, "n_err": 0}
+
+
+@pytest.mark.parametrize("ddl,rows", [
+    ("id int, amount decimal(10,2)",
+     [(1, Decimal("12.50")), (2, None)]),
+    ("id int, pair struct<a:int,b:int>", [(1, (2, 3)), (2, None)]),
+    ("id int, tags array<string>", [(1, ["x", "y"])]),
+])
+def test_write_small_rows_parameterized_ddl_takes_spark_writer(spark, tmp_path, ddl, rows):
+    """A DDL the flat `name type` parser cannot read — type parameters,
+    nested types — goes to the Spark writer instead of raising, and
+    reads back exactly as a plain Spark write of the same rows."""
+    io = TableIO(spark, str(tmp_path / "wh"))
+    io.write_small_rows(rows, ddl, "t")
+    io.write(spark.createDataFrame(rows, ddl), "ref")
+    got, ref = io.read("t", ddl), io.read("ref", ddl)
+    assert got.schema == ref.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, ref.collect()))
+
+
+def test_checkpoint_cache_is_thread_safe(spark, tmp_path):
+    """The ledger cache is shared by the main thread and the deferred
+    extract-stats thread: concurrent appends and reads from more
+    threads than cores lose no row."""
+    import sys
+    import threading
+
+    from kgpipe.checkpoints import CheckpointLog
+
+    io = TableIO(spark, str(tmp_path / "wh"))
+    log = CheckpointLog(io)
+    log.completed_set("s0")  # load the (empty) cache
+    errors = []
+
+    def worker(stage):
+        try:
+            for i in range(10):
+                log.mark_done_rows(stage, [(i, i, 1, 1, 0)])
+                log.counter_sums()
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    stages = [f"s{k}" for k in range(2 * (os.cpu_count() or 4))]
+    threads = [threading.Thread(target=worker, args=(s,)) for s in stages]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    for lg in (log, CheckpointLog(io)):
+        assert all(len(lg.completed_set(s)) == 10 for s in stages)

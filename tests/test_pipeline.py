@@ -1028,3 +1028,218 @@ def test_materialize_broadcast_gate_output_identical(spark, tmp_path, monkeypatc
 
     log = CheckpointLog(TableIO(spark, str(tmp_path / "wa")))
     assert log.last_n_out("link_canonicalize") == res_a.canonical_map.count()
+
+
+def _graph(res):
+    cmap = {(r.uri, r.canon_id) for r in res.canonical_map.collect()}
+    edges = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res.edges.collect())
+    return cmap, edges
+
+
+def _inc_cfg(wh, **kw):
+    return PipelineConfig(
+        warehouse=str(wh), rules_text=RULES_16_TEXT, mode="compat", n_parts=4,
+        n_buckets=8, incremental_link=True, **kw,
+    )
+
+
+def test_delta_extracts_only_new_pages(spark, tmp_path, monkeypatch):
+    """A delta run feeds the extractor only the pages whose url the
+    index has never seen, writes them as ONE triples_raw layer with one
+    ledger row, and computes url content fingerprints over that layer
+    alone — _url_fingerprints never sees an old url."""
+    import time
+
+    import kgpipe.pipeline as pl
+
+    all_pages = gen_pages(60)
+    cfg = _inc_cfg(tmp_path / "wh_only_new")
+    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
+    new_urls = set(all_pages["url"].iloc[50:])
+
+    extracted, fingerprinted = [], []
+    real_fused, real_ufp = pl.fused_extract_parse_abbrev, pl._url_fingerprints
+
+    def spy_fused(pages_df, *a, **k):
+        extracted.append({r.url for r in pages_df.select("url").collect()})
+        return real_fused(pages_df, *a, **k)
+
+    def spy_ufp(triples):
+        fingerprinted.append({r.url for r in triples.select("url").distinct().collect()})
+        return real_ufp(triples)
+
+    monkeypatch.setattr(pl, "fused_extract_parse_abbrev", spy_fused)
+    monkeypatch.setattr(pl, "_url_fingerprints", spy_ufp)
+    before = pl._partition_values(pl.TableIO(spark, cfg.warehouse), "triples_raw", "batch_fp")
+    t0 = time.time()
+    res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
+
+    assert extracted == [new_urls]
+    assert fingerprinted and all(urls <= new_urls for urls in fingerprinted)
+    io = pl.TableIO(spark, cfg.warehouse)
+    after = pl._partition_values(io, "triples_raw", "batch_fp")
+    assert len(after) == len(before) + 1
+    rows = [
+        r for r in spark.read.parquet(f"{cfg.warehouse}/checkpoints").collect()
+        if r.stage == "extract_parse_abbrev" and r.ts >= t0
+    ]
+    assert [r.n_in for r in rows] == [len(new_urls)]
+
+    monkeypatch.undo()
+    ref = run_pipeline(
+        spark, spark.createDataFrame(all_pages).repartition(3),
+        PipelineConfig(warehouse=str(tmp_path / "wh_only_new_full"),
+                       rules_text=RULES_16_TEXT, mode="compat", n_parts=4, n_buckets=8),
+    )
+    assert _graph(res) == _graph(ref)
+
+
+def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
+    """Kill a delta run after its k-th TableIO.write / replace /
+    write_json_atomic, for every k, then rerun it: the canonical map
+    and the edges equal both an uninterrupted delta run and a full
+    build. Writes nested inside another counted write (replace's
+    staged write) belong to the outer one."""
+    import shutil
+
+    from kgpipe.io import TableIO
+
+    all_pages = gen_pages(36)
+    base_df = spark.createDataFrame(all_pages.iloc[:30]).repartition(2)
+    all_df = spark.createDataFrame(all_pages).repartition(2)
+    base_wh = tmp_path / "base"
+    run_pipeline(spark, base_df, _inc_cfg(base_wh))
+
+    full = _graph(run_pipeline(
+        spark, all_df,
+        PipelineConfig(warehouse=str(tmp_path / "full"), rules_text=RULES_16_TEXT,
+                       mode="compat", n_parts=4, n_buckets=8),
+    ))
+
+    class Killed(Exception):
+        pass
+
+    state = {"depth": 0, "n": 0, "kill_at": None}
+
+    def counted(orig):
+        def w(self, *a, **k):
+            state["depth"] += 1
+            try:
+                out = orig(self, *a, **k)
+            finally:
+                state["depth"] -= 1
+            if state["depth"] == 0:
+                state["n"] += 1
+                if state["n"] == state["kill_at"]:
+                    raise Killed(state["n"])
+            return out
+        return w
+
+    for name in ("write", "replace", "write_json_atomic"):
+        monkeypatch.setattr(TableIO, name, counted(getattr(TableIO, name)))
+
+    def delta_run(wh, kill_at=None):
+        shutil.rmtree(wh, ignore_errors=True)
+        shutil.copytree(base_wh, wh)
+        state.update(n=0, kill_at=kill_at)
+        if kill_at is not None:
+            with pytest.raises(Killed):
+                run_pipeline(spark, all_df, _inc_cfg(wh))
+            state.update(n=0, kill_at=None)
+        return run_pipeline(spark, all_df, _inc_cfg(wh))
+
+    uninterrupted = _graph(delta_run(tmp_path / "clean"))
+    n_writes = state["n"]
+    assert uninterrupted == full
+    assert n_writes >= 6  # layer, hubs, changes, map, url index, markers
+    for k in range(1, n_writes + 1):
+        assert _graph(delta_run(tmp_path / f"kill{k}", kill_at=k)) == full, f"killed at write {k}"
+
+
+def test_old_layout_warehouse_migrates_once(spark, tmp_path):
+    """A warehouse written before the delta-first layout — triples_raw
+    partitioned by part_id only, a url index without page
+    fingerprints — migrates through ONE rebuild that re-extracts every
+    page; the next delta then takes the append path."""
+    import time
+
+    import kgpipe.pipeline as pl
+
+    all_pages = gen_pages(70)
+    wh = tmp_path / "wh_old"
+    cfg = _inc_cfg(wh)
+    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
+
+    # rewrite it into the old layout
+    io = pl.TableIO(spark, str(wh))
+    raw = io.read("triples_raw", pl.RAW_LAYER_DDL).drop("batch_fp").localCheckpoint()
+    io.drop("triples_raw")
+    io.write(raw, "triples_raw", mode="overwrite", partition_by=["part_id"])
+    urls = io.read("linked_urls", pl.LINKED_URLS_DDL).drop("pfp").localCheckpoint()
+    io.drop("linked_urls")
+    io.write(urls, "linked_urls", mode="overwrite", partition_by=["batch_fp"])
+    assert pl._partition_values(io, "triples_raw", "part_id")
+
+    t0 = time.time()
+    res = run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:60]).repartition(3), cfg)
+    n_in = [
+        r.n_in for r in spark.read.parquet(f"{wh}/checkpoints").collect()
+        if r.stage == "extract_parse_abbrev" and r.ts >= t0
+    ]
+    assert n_in == [60]
+    layers = pl._partition_values(io, "triples_raw", "batch_fp")
+    assert not pl._partition_values(io, "triples_raw", "part_id")
+    assert len(layers) == 1 and layers[0].startswith("rebuild_")
+    assert pl._partition_values(io, "linked_urls", "batch_fp") == layers
+    assert io.read("linked_urls", pl.LINKED_URLS_DDL).where(F.col("pfp").isNull()).count() == 0
+    ref_cfg = dict(rules_text=RULES_16_TEXT, mode="compat", n_parts=4, n_buckets=8)
+    ref = run_pipeline(
+        spark, spark.createDataFrame(all_pages.iloc[:60]).repartition(3),
+        PipelineConfig(warehouse=str(tmp_path / "ref60"), **ref_cfg),
+    )
+    assert _graph(res) == _graph(ref)
+
+    res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
+    batches = pl._partition_values(io, "linked_urls", "batch_fp")
+    assert len(batches) == 2 and sum(b.startswith("rebuild_") for b in batches) == 1
+    assert sorted(pl._partition_values(io, "triples_raw", "batch_fp")) == sorted(batches)
+    ref = run_pipeline(
+        spark, spark.createDataFrame(all_pages).repartition(3),
+        PipelineConfig(warehouse=str(tmp_path / "ref70"), **ref_cfg),
+    )
+    assert _graph(res) == _graph(ref)
+
+
+def test_cosmetic_recrawl_is_not_a_change(spark, tmp_path, monkeypatch):
+    """A re-crawled page whose clean triples did not change (only its
+    markup did) neither rebuilds nor re-links: its new page fingerprint
+    joins the url index, so the next run does not extract it again."""
+    import kgpipe.pipeline as pl
+
+    pages = gen_pages(40)
+    cfg = _inc_cfg(tmp_path / "wh_cosmetic")
+    run_pipeline(spark, spark.createDataFrame(pages).repartition(3), cfg)
+    recrawled = pages.copy()
+    for i in (3, 7):
+        html = recrawled.at[i, "html"]
+        recrawled.at[i, "html"] = html.replace(b"<html>", b'<html lang="en">', 1)
+    assert (recrawled["html"] != pages["html"]).sum() == 2
+
+    res = run_pipeline(spark, spark.createDataFrame(recrawled).repartition(3), cfg)
+    io = pl.TableIO(spark, cfg.warehouse)
+    batches = pl._partition_values(io, "linked_urls", "batch_fp")
+    assert len(batches) == 2 and not any(b.startswith("rebuild_") for b in batches)
+    assert len(pl._partition_values(io, "triples_raw", "batch_fp")) == 1
+
+    def boom(*a, **k):
+        raise AssertionError("an unchanged page was extracted again")
+
+    monkeypatch.setattr(pl, "fused_extract_parse_abbrev", boom)
+    again = run_pipeline(spark, spark.createDataFrame(recrawled).repartition(3), cfg)
+    monkeypatch.undo()
+    ref = run_pipeline(
+        spark, spark.createDataFrame(recrawled).repartition(3),
+        PipelineConfig(warehouse=str(tmp_path / "wh_cosmetic_full"), rules_text=RULES_16_TEXT,
+                       mode="compat", n_parts=4, n_buckets=8),
+    )
+    assert _graph(res) == _graph(again) == _graph(ref)

@@ -464,10 +464,8 @@ def cell_d2_storm(spark, n_edges: int, out: dict) -> None:
     from kgpipe.pipeline import (
         CHANGED_BROADCAST_LIMIT,
         CHANGES_DDL,
-        DELTA_TRIPLES_DDL,
         EDGES_INC_DDL,
         LINKED_URLS_DDL,
-        TERM_MAPS_DDL,
         PipelineConfig,
         _compose_changes,
         _stage_materialize_incremental,
@@ -503,13 +501,9 @@ def cell_d2_storm(spark, n_edges: int, out: dict) -> None:
 
     # ---- batch b0: initial full materialize lays down the layered state
     io.write(
-        spark.createDataFrame([("seed-url", 0, "b0")], LINKED_URLS_DDL),
-        "linked_urls",
+        spark.createDataFrame([("seed-url", 0, 0, "b0")], LINKED_URLS_DDL),
+        "linked_urls", partition_by=["batch_fp"],
     )
-    # handoff tables must EXIST for the storm call's pre-gate (their
-    # content is only read on the delta path, which the storm skips)
-    io.write(spark.createDataFrame([], DELTA_TRIPLES_DDL), "delta_triples")
-    io.write(spark.createDataFrame([], TERM_MAPS_DDL), "term_maps")
     load0 = wait_quiet()
     t0 = time.monotonic()
     _stage_materialize_incremental(spark, triples, base_map, cfg, io, log)
@@ -549,10 +543,10 @@ def cell_d2_storm(spark, n_edges: int, out: dict) -> None:
     io.write(changes_all, "canon_changes", partition_by=["batch_fp"])
     io.write(
         spark.createDataFrame(
-            [("seed-url", 0, "b0")] + [(f"u-b{i}", 0, f"b{i}") for i in range(1, 9)],
+            [("seed-url", 0, 0, "b0")] + [(f"u-b{i}", 0, 0, f"b{i}") for i in range(1, 9)],
             LINKED_URLS_DDL,
         ),
-        "linked_urls",
+        "linked_urls", partition_by=["batch_fp"],
     )
     n_composed = _compose_changes(
         io.read("canon_changes", CHANGES_DDL).select("old_c", "new_c"), 8
