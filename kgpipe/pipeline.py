@@ -374,6 +374,13 @@ def _stage_extract_parse_abbrev(
     # resume set-logic happens driver-side — no broadcast join, no
     # second fingerprint pass for the checkpoint stats.
     completed = log.completed_set(stage)
+    if _partition_values(io, "triples_raw", "batch_fp"):
+        # a daily-delta warehouse lays triples_raw out by batch layer:
+        # part_id dirs beside those would break partition discovery,
+        # and the ledger's per-part rows no longer describe the table —
+        # extract every part afresh
+        io.drop("triples_raw")
+        completed = set()
     fps_thread = None
     fps_box: dict = {}
     if not completed and not io.exists("triples_raw"):
@@ -781,40 +788,6 @@ def _write_layer(
     return int(m["n_out"] or 0), int(m["n_err"] or 0)
 
 
-def _warm_python_worker(spark):
-    """Start a Python worker — with the fused extractor's modules
-    imported — in a one-row background job while the JVM-only delta
-    pass runs. Workers are reused across tasks
-    (spark.python.worker.reuse), so the extract job then skips the
-    worker start-up instead of paying it after the delta pass. Returns
-    a join handle, which re-raises a failure of the job; the caller
-    joins it before leaving the stage."""
-    from pyspark import InheritableThread
-
-    def _import(batches):
-        import kgpipe.operators.fused  # noqa: F401
-
-        yield from batches
-
-    box: dict = {}
-
-    def _job():
-        try:
-            spark.range(1, numPartitions=1).mapInPandas(_import, "id long").collect()
-        except BaseException as e:  # re-raised on join
-            box["err"] = e
-
-    th = InheritableThread(target=_job)
-    th.start()
-
-    def join() -> None:
-        th.join()
-        if "err" in box:
-            raise box["err"]
-
-    return join
-
-
 def _extract_delta(spark, pages, cfg, io: TableIO, log: CheckpointLog, rules) -> _Delta:
     """The incremental extract stage: find the delta first, then
     extract only it.
@@ -846,7 +819,6 @@ def _extract_delta(spark, pages, cfg, io: TableIO, log: CheckpointLog, rules) ->
       - index_gap / cfg_gap: the link indexes are missing or were
         built under another link config."""
     stage = "extract_parse_abbrev"
-    warm_join = _warm_python_worker(spark)
     page_fps = _page_fingerprints(pages.select("url", "html"))
     linked = io.exists("linked_urls")
     if linked:
@@ -938,7 +910,6 @@ def _extract_delta(spark, pages, cfg, io: TableIO, log: CheckpointLog, rules) ->
             cosmetic = cmp.select("url", "ufp", "pfp")
 
     base = dict(rebuild_id=rebuild_id, page_fps=page_fps)
-    warm_join()
     if trigger is not None:
         _rebuild_triples(
             pages, delta, extracted, relayout, st, rebuild_id,
@@ -1226,7 +1197,12 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
         prev = spark.createDataFrame([], CMAP_DDL)
     # pinned once: the merge reads the delta's edges three times (the
     # touched components, the CC edge set, the label changes)
-    delta_edges = delta_edges.distinct().localCheckpoint(eager=True)
+    eobs = Observation()
+    delta_edges = (
+        delta_edges.distinct()
+        .observe(eobs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     cmap, label_changes = incremental_merge(prev, delta_edges, max_iter=cfg.cc_max_iter)
 
     # label changes BEFORE the map replace: they derive from prev, and
@@ -1243,9 +1219,7 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     # crash-safe: the merged map derives from the live table, so it
     # must never be overwritten in place (delete-then-write would
     # destroy the retry's input) — replace() swaps via renames
-    obs = Observation()
-    io.replace(cmap.observe(obs, F.count(F.lit(1)).alias("n")), "canonical_map")
-    n_cmap = obs.get["n"]
+    io.replace(cmap, "canonical_map")
 
     if lsh_new_banded is not None:
         io.write(
@@ -1271,7 +1245,7 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     if delta.cosmetic is not None:
         index_rows = index_rows.unionByName(delta.cosmetic)
     _commit_url_index(index_rows, b, cfg, io)
-    log.mark_done_rows(stage, [(0, _signed(b), delta.n_new, n_cmap, 0)])
+    log.mark_done_rows(stage, [(0, _signed(b), delta.n_new, eobs.get["n"], 0)])
 
 
 def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
@@ -1325,30 +1299,33 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
                     max_bucket=cfg.lsh_max_bucket,
                 )
             )
-        edges = edges.distinct().localCheckpoint(eager=True)
     else:
         hubs_all = None
-        edges = explicit.distinct().localCheckpoint(eager=True)
+        edges = explicit
+    eobs = Observation()
+    edges = edges.distinct().observe(eobs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
     nodes = (
         edges.select(F.col("src").alias("uri"))
         .union(edges.select(F.col("dst").alias("uri")))
         .distinct()
     )
     cmap = canonical_map_for_nodes(nodes, edges, max_iter=cfg.cc_max_iter)
-    obs = Observation()
-    io.replace(cmap.observe(obs, F.count(F.lit(1)).alias("n")), "canonical_map")
-    n_cmap = obs.get["n"]
+    io.replace(cmap, "canonical_map")
     io.drop("norm_hubs")
     if hubs_all is not None:
         io.write(
             hubs_all.withColumn("batch_fp", F.lit(batch_fp)),
             "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
         )
-    # a rebuild invalidates every pending label change (retractions) —
-    # materialize routes rebuild batches to its full path anyway.
+    # a rebuild invalidates every pending label change (retractions),
+    # and the edges: a rebuild over a page set an earlier rebuild
+    # covered gets that rebuild's id, which the edge coverage markers
+    # already list — without edges materialize takes its full path.
     # delta_triples and term_maps are handoff tables that warehouses
     # written before the triples_raw layers still carry.
-    for name in ("canon_changes", "lsh_index", "delta_triples", "term_maps"):
+    for name in ("canon_changes", "edges", "lsh_index", "delta_triples", "term_maps"):
         io.drop(name)
     if lsh_mode:
         from kgpipe.operators.link import (
@@ -1385,7 +1362,7 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
         cur_urls.observe(uobs, F.count(F.lit(1)).alias("n")), batch_fp, cfg, io,
         replace=True,
     )
-    log.mark_done_rows("link_urls", [(0, _signed(batch_fp), uobs.get["n"], n_cmap, 0)])
+    log.mark_done_rows("link_urls", [(0, _signed(batch_fp), uobs.get["n"], eobs.get["n"], 0)])
 
 
 EDGES_INC_DDL = "canon_s string, p string, canon_o string, b_fp string, part_id int"
@@ -1679,18 +1656,13 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         # "re-applied" by a later retry's dynamic overwrite, replacing
         # the whole corpus's rows with delta-only rows.
         # Broadcast only while the map fits the budget (module
-        # contract). The size signal is the row count every
-        # incremental map write records in the link ledger (identity
-        # rows included, so it errs toward the sort-merge join); an
-        # early-stopping probe of the non-identity rows covers a
-        # warehouse without that row.
-        n_cmap = log.last_n_out("link_urls")
-        if n_cmap is None:
-            n_cmap = (
-                cmap.where(F.col("uri") != F.col("canon_id"))
-                .limit(CMAP_BROADCAST_LIMIT + 1)
-                .count()
-            )
+        # contract); the rebuild is a rare, minutes-scale path, so an
+        # early-stopping probe of the non-identity rows is fine here.
+        n_cmap = (
+            cmap.where(F.col("uri") != F.col("canon_id"))
+            .limit(CMAP_BROADCAST_LIMIT + 1)
+            .count()
+        )
         out = edges_with_buckets(
             canonicalize_triples(
                 triples, cmap, broadcast_map=n_cmap <= CMAP_BROADCAST_LIMIT
