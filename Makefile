@@ -28,7 +28,6 @@ zip:
 	rm -f kgpipe.zip && zip -qr kgpipe.zip kgpipe -x '*__pycache__*'
 
 scaling:
-	python tools/scaling_report.py
 	python tools/scaling_probe.py
 
 # end-to-end smoke: the driver contract + CLI surfaces

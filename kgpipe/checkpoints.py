@@ -1,19 +1,16 @@
-"""Per-partition lineage + counters + idempotent resume (north rule;
-SURVEY.md §7 M6).
+"""Lineage + counters + idempotent resume (north rule; SURVEY.md §7
+M6).
 
-Every pipeline stage processes the input in deterministic partitions
-`part_id = pmod(xxhash64(url), n_parts)` and records one checkpoint
-row per completed partition:
+Every pipeline stage records one checkpoint row per unit of work it
+completed — for the pipeline, one row per batch layer:
 
     checkpoints(stage, part_id, fingerprint, n_in, n_out, n_err,
                 status, ts)
 
-`fingerprint` is an order-insensitive hash of the partition's input
-keys, so a resume run can verify it is skipping work over the SAME
-bytes, not merely the same partition number. Stage execution
-anti-joins its input against completed checkpoint rows — a rerun
-after a crash recomputes only missing partitions and appends only
-their outputs (idempotence test: SURVEY.md §5.2-5).
+`fingerprint` identifies the unit's input (the pipeline stores the
+batch id there), so a resume run can verify it is skipping work over
+the SAME input, not merely the same unit number; a rerun after a crash
+redoes only units without a row (idempotence test: SURVEY.md §5.2-5).
 
 The reference has no persistence at all (a crashed ntto run restarts
 from byte 0); this subsystem is what makes the same dataflow safe at
@@ -25,7 +22,7 @@ from __future__ import annotations
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from kgpipe.io import TableIO
 
@@ -45,18 +42,9 @@ def with_part_id(df: DataFrame, key_col: str, n_parts: int) -> DataFrame:
     )
 
 
-def partition_fingerprints(df: DataFrame, key_col: str) -> DataFrame:
-    """(part_id, fingerprint, n_in): order-insensitive xor-hash of the
-    keys in each part."""
-    return df.groupBy("part_id").agg(
-        F.bit_xor(F.xxhash64(F.col(key_col))).alias("fingerprint"),
-        F.count(F.lit(1)).alias("n_in"),
-    )
-
-
 class CheckpointLog:
-    """The ledger is tiny by construction (one row per stage ×
-    partition), so this object keeps a DRIVER-SIDE row cache: the
+    """The ledger is tiny by construction (one row per stage × unit
+    of work), so this object keeps a DRIVER-SIDE row cache: the
     parquet table is scanned at most once per CheckpointLog instance
     (a fresh instance per run re-reads disk, so resume across
     processes is untouched), and the per-stage completed()/read()
@@ -64,9 +52,8 @@ class CheckpointLog:
     of one fixed-latency Spark job each — three scan jobs saved per
     pipeline run. mark_done appends to disk first (crash-safe: an
     unflushed cache is only ever MISSING completed work, never
-    inventing it), then to the cache. A lock guards the cache: the
-    full pipeline's deferred extract-stats thread appends to it while
-    the main thread reads it."""
+    inventing it), then to the cache. A lock guards the cache, so one
+    log may be shared across threads."""
 
     def __init__(self, io: TableIO):
         self.io = io
@@ -132,19 +119,6 @@ class CheckpointLog:
             c["n_err"] += r[5]
         return out
 
-    def last_n_out(self, stage: str) -> int | None:
-        """n_out of the most recent 'done' row for a stage (None when
-        the stage has no ledger row) — a free driver-side size signal
-        for downstream join-strategy decisions (e.g. whether the
-        canonical map fits the broadcast budget)."""
-        best = None
-        for r in self._load():
-            if r[0] == stage and r[6] == "done" and (
-                best is None or r[7] > best[7]
-            ):
-                best = r
-        return None if best is None else int(best[4])
-
     def mark_done_rows(self, stage: str, rows: list[tuple]) -> None:
         """rows: [(part_id, fingerprint, n_in, n_out, n_err)] —
         driver-local, appended to the ledger without building a Spark
@@ -171,17 +145,3 @@ class CheckpointLog:
                 ).collect()
             ],
         )
-
-    def pending_partitions(self, stage: str, inputs: DataFrame, key_col: str) -> DataFrame:
-        """Filter `inputs` (must carry part_id) down to rows in
-        partitions not yet checkpointed with a matching fingerprint.
-        Anti-join on (part_id, fingerprint, n_in): a partition whose
-        input bytes OR row count changed since the checkpoint is
-        recomputed, not skipped."""
-        fps = partition_fingerprints(inputs, key_col)
-        todo = fps.join(
-            self.completed(stage), on=["part_id", "fingerprint", "n_in"], how="left_anti"
-        ).select("part_id")
-        # part universe is small (n_parts rows) → broadcast semi-join,
-        # no shuffle of the big side
-        return inputs.join(F.broadcast(todo), "part_id", "left_semi")

@@ -9,7 +9,8 @@ Subcommands mirror the reference CLI surface
   convert    — the reference's PRIMARY job: NT file (or '-' stdin) →
                abbreviate → parse → LDJ/NT output
                (ntto [-a] [-j] [-n S] FILE, ntto.go:144-211)
-  run        — full KG pipeline (extract→link→canonicalize→materialize)
+  run        — KG pipeline (extract→link→canonicalize→materialize),
+               run as a delta: only unseen urls are extracted and linked
   dump-rules — print the active rule table, sorted (ntto -d)
   explain    — print the physical plan of the extract stage without
                running it (ntto -c printed its shell command)
@@ -79,7 +80,9 @@ def main(argv: list[str] | None = None) -> int:
                          "reference's -w, default 4); Spark owns real "
                          "parallelism so this only shapes the dumped command")
 
-    run = sub.add_parser("run", help="run the full KG pipeline")
+    run = sub.add_parser(
+        "run", help="run the KG pipeline as a delta over the warehouse: extract and "
+                    "link only unseen urls (a fresh warehouse is the first delta)")
     run.add_argument("--pages", required=True, help="parquet dir of pages")
     run.add_argument("--warehouse", required=True)
     run.add_argument("--rules", default=None, help="rules file (default: embedded 16)")
@@ -90,10 +93,8 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--buckets", type=int, default=64)
     run.add_argument("--no-neardup", action="store_true")
     run.add_argument("--incremental-link", action="store_true",
-                     help="daily-delta mode: extract and link only unseen urls, "
-                          "merge components incrementally (exact-normalized or, "
-                          "with --jaccard < 1, index-backed LSH), and add the "
-                          "delta's edges as their own layer")
+                     help="accepted and ignored: every run is a delta (kept for "
+                          "existing scripts)")
     run.add_argument("--jaccard", type=float, default=1.0,
                      help="near-dup link threshold; < 1.0 enables LSH linking "
                           "(default 1.0 = exact-normalized only)")
@@ -248,7 +249,6 @@ def main(argv: list[str] | None = None) -> int:
                 n_buckets=args.buckets,
                 neardup_link=not args.no_neardup,
                 jaccard_threshold=args.jaccard,
-                incremental_link=args.incremental_link,
             )
             if args.explain:
                 from kgpipe.nt.rules import parse_rules

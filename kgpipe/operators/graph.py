@@ -3,10 +3,12 @@ connected components (operators/cc.py builds canonical_map; these
 operators ANSWER questions over the materialized edges).
 
 Scale shape: one join + distinct per hop, shuffling on the join key.
-Over the pipeline's edges table — bucketed by canon_s at rest
-(kgpipe.pipeline materialize stage) — the per-hop join on the source
-key runs WITHOUT an exchange on the edge side: the shuffle was paid
-once at write time, which is exactly why the bucketed layout exists.
+Over an edge table bucketed by its source key at rest
+(TableIO.write_bucketed) the per-hop join on the source key runs
+WITHOUT an exchange on the edge side: the shuffle was paid once at
+write time. The pipeline's own edges are laid out in batch layers
+instead (kgpipe.pipeline materialize stage), so a traversal over them
+shuffles the edge side once per hop.
 The frontier is localCheckpoint-ed per hop, so the iterative plan
 stays shallow (the CC lesson: iterative self-joins without lineage
 truncation grow exponentially — SURVEY.md §7 hard part 1).
@@ -70,7 +72,7 @@ def khop_frontier(
 def _hop_join(frontier: DataFrame, e: DataFrame) -> DataFrame:
     """The per-hop frontier ⋈ edges join, factored out so plan tests
     can pin the docstring promise: over a src-bucketed edge table
-    (pipeline materialize → TableIO.read_bucketed) the EDGE side
+    (TableIO.write_bucketed → TableIO.read_bucketed) the EDGE side
     joins with no Exchange — only the (small) frontier shuffles to the
     bucket layout (tests/test_graph.py)."""
     return frontier.join(e, frontier["node"] == e["__s"])

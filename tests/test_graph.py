@@ -122,12 +122,12 @@ def test_pagerank_random_graph(spark):
 
 
 def test_khop_over_bucketed_edges_no_edge_exchange(spark, tmp_path):
-    """The docstring promise, pinned: over the pipeline's bucketed
-    edge layout (write_bucketed by the source key, read back THROUGH
-    the catalog) the per-hop join's EDGE side runs with no Exchange —
-    the only shuffle in the join is the (small) frontier aligning to
-    the bucket layout. Broadcast is disabled so the plan must rely on
-    the bucketing, exactly like the pipeline's edge-join pin."""
+    """The docstring promise, pinned: over a bucketed edge layout
+    (write_bucketed by the source key, read back THROUGH the catalog)
+    the per-hop join's EDGE side runs with no Exchange — the only
+    shuffle in the join is the (small) frontier aligning to the bucket
+    layout. Broadcast is disabled so the plan must rely on the
+    bucketing."""
     from kgpipe.io import TableIO
     from kgpipe.operators.graph import _hop_join, khop_frontier
 

@@ -1,9 +1,10 @@
 """End-to-end pipeline tests (SURVEY.md §5.2-4/5): P/R vs a pure-
-Python reference implementation of ntto semantics, determinism
-across parallelism, and idempotent resume from a partial checkpoint
-table."""
+Python reference implementation of ntto semantics, the linked graph
+vs a pure-Python graph oracle, determinism across parallelism, and
+idempotent resume from a partial checkpoint table."""
 
 import collections
+import re
 import subprocess
 
 import pytest
@@ -37,6 +38,72 @@ def reference_triples(pages_pdf, mode="compat"):
                 s, p, o = rw.rewrite_term(s), rw.rewrite_term(p), rw.rewrite_term(o)
             out[(s, p, o)] += 1
     return out, n_err
+
+
+OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
+# the exact-normalized linker's URI normal form, restated: https→http,
+# strip www., strip one trailing slash, decode %20
+_NORM_REWRITES = [(r"^https://", "http://"), (r"^http://www\.", "http://"), (r"/$", ""),
+                  (r"%20", " ")]
+
+
+def _normal_form(term):
+    for pat, rep in _NORM_REWRITES:
+        term = re.sub(pat, rep, term)
+    return term
+
+
+def oracle_graph(triples, neardup=True, sameas=OWL_SAMEAS):
+    """Pure-Python graph oracle over clean (s, p, o) triples, for the
+    exact-normalized linker: union-find over the owl:sameAs pairs plus,
+    with neardup, every group of terms sharing a normal form; canon =
+    the component's minimum; one map row per link-edge endpoint; edges
+    = each triple with s and o relabelled. Returns what _graph does."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    def union(a, b):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+
+    for s, p, o in triples:
+        if p == sameas:
+            union(s, o)
+    if neardup:
+        groups = collections.defaultdict(set)
+        for s, _p, o in triples:
+            groups[_normal_form(s)].add(s)
+            groups[_normal_form(o)].add(o)
+        for g in groups.values():
+            first, *rest = sorted(g)
+            for t in rest:
+                union(first, t)
+    # union keeps the smaller root, so each root is its component's min
+    canon = {t: find(t) for t in list(parent)}
+    cmap = set(canon.items())
+    edges = collections.Counter(
+        (canon.get(s, s), p, canon.get(o, o)) for s, p, o in triples
+    )
+    return cmap, edges
+
+
+def _graph(res):
+    cmap = {(r.uri, r.canon_id) for r in res.canonical_map.collect()}
+    edges = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res.edges.collect())
+    return cmap, edges
+
+
+def _oracle(res, neardup=True):
+    return oracle_graph(
+        [(r.s, r.p, r.o) for r in res.triples.select("s", "p", "o").collect()], neardup
+    )
 
 
 @pytest.fixture(scope="module")
@@ -97,9 +164,15 @@ def test_sameas_collapsed_in_edges(spark, result):
         assert cmap.get(r.canon_s, r.canon_s) == r.canon_s
 
 
+def test_fresh_build_matches_graph_oracle(result):
+    """A fresh warehouse is the first delta: its canonical map and
+    edges equal the pure-Python graph oracle over its clean triples."""
+    assert _graph(result) == _oracle(result)
+
+
 def test_rerun_is_noop(spark, warehouse, result):
-    """Second run over the same input: every partition checkpointed →
-    no new work, identical outputs."""
+    """Second run over the same input: no new url, so no new work and
+    identical outputs."""
     before = result.triples.count(), result.edges.count()
     log_before = spark.read.parquet(f"{warehouse}/checkpoints").count()
     pages = spark.createDataFrame(gen_pages(N_PAGES))
@@ -111,16 +184,15 @@ def test_rerun_is_noop(spark, warehouse, result):
 
 
 def test_resume_after_partial_failure(spark, tmp_path):
-    """Simulated crash: first run completes only the extract stage
-    (checkpoint rows for later stages absent); resume must finish and
-    match a clean run, without recomputing done partitions."""
+    """A run over half the pages, then a resume over all of them:
+    the resume extracts only the unseen half and matches a clean
+    run."""
     pages = spark.createDataFrame(gen_pages(60))
     wh_clean = str(tmp_path / "clean")
     wh_crash = str(tmp_path / "crash")
     cfg_clean = PipelineConfig(warehouse=wh_clean, rules_text=RULES_16_TEXT, mode="compat", n_parts=4)
     clean = run_pipeline(spark, pages, cfg_clean)
 
-    # crash run: drop half the pages first so only some partitions done
     half = pages.limit(30)
     cfg_crash = PipelineConfig(warehouse=wh_crash, rules_text=RULES_16_TEXT, mode="compat", n_parts=4)
     run_pipeline(spark, half, cfg_crash)
@@ -129,8 +201,7 @@ def test_resume_after_partial_failure(spark, tmp_path):
         .where(F.col("stage") == "extract_parse_abbrev")
         .count()
     )
-    # resume with the full input: partitions whose fingerprint changed
-    # (more pages hash into them) are recomputed; the rest skipped
+    # resume with the full input: only the new urls are extracted
     res = run_pipeline(spark, pages, cfg_crash)
     got = collections.Counter((r.s, r.p, r.o) for r in res.triples.select("s", "p", "o").collect())
     exp = collections.Counter((r.s, r.p, r.o) for r in clean.triples.select("s", "p", "o").collect())
@@ -171,46 +242,6 @@ def test_fused_equals_chained(spark):
             fused.where(F.col("error").isNotNull()).count()
             == chained.where(F.col("error").isNotNull()).count()
         )
-
-
-def test_edges_written_bucketed_joins_without_exchange(spark, result):
-    """The materialize stage writes edges BUCKETED by canon_s, so a
-    self-join (any entity-keyed join) over the edge table needs no
-    Exchange — the shuffle was paid once at write time. Broadcast is
-    disabled so the plan must rely on the bucketing."""
-    edges = result.edges
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = edges.alias("a").join(
-            edges.alias("b"),
-            F.col("a.canon_s") == F.col("b.canon_s"),
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:3000]
-        assert j.count() >= edges.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_edges_read_falls_back_without_catalog_metadata(spark, warehouse, result):
-    """Cross-session resume: the in-memory catalog's bucketed-table
-    metadata dies with the session, the parquet files don't. Reading
-    edges after the metadata is gone must fall back to a plain
-    parquet read with identical rows (minus the exchange-free join
-    property, which only the catalog can provide)."""
-    from kgpipe.io import TableIO
-    from kgpipe.pipeline import _read_edges
-
-    io = TableIO(spark, warehouse)
-    before = sorted(
-        (r.canon_s, r.p, r.canon_o) for r in _read_edges(io).collect()
-    )
-    spark.sql(f"drop table if exists {io._bucket_ident('edges')}")
-    after = sorted(
-        (r.canon_s, r.p, r.canon_o) for r in _read_edges(io).collect()
-    )
-    assert after == before and before
 
 
 def test_lsh_bucket_stats_in_counters(spark, tmp_path):
@@ -258,17 +289,17 @@ def test_exact_link_mode_reports_zero_lsh_budget(spark, result):
 
 
 def test_incremental_link_matches_full(spark, tmp_path):
-    """Daily-delta mode: run the pipeline incrementally (batch 1,
-    then batches 1+2 — the link stage only processes changed
-    partitions, merging via incremental_canonical_map and the
-    persisted norm-hub index) and compare against a from-scratch run
-    over everything. canonical_map and edges must be IDENTICAL."""
+    """Daily delta: batch 1, then batches 1+2 — the link stage only
+    processes the new urls, merging via incremental_merge and the
+    persisted norm-hub index — compared against a fresh build over
+    everything and the graph oracle. canonical_map and edges must be
+    IDENTICAL."""
     all_pages = gen_pages(120)
     batch1 = all_pages.iloc[:80]
 
     cfg_inc = PipelineConfig(
         warehouse=str(tmp_path / "wh_inc"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=8, incremental_link=True,
+        mode="compat", n_parts=8,
     )
     run_pipeline(spark, spark.createDataFrame(batch1).repartition(5), cfg_inc)
     res_inc = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_inc)
@@ -290,15 +321,16 @@ def test_incremental_link_matches_full(spark, tmp_path):
         (r.canon_s, r.p, r.canon_o) for r in res_full.edges.collect()
     )
     assert e_inc == e_full
+    assert _graph(res_inc) == _oracle(res_inc)
 
 
 def test_incremental_link_rerun_is_noop(spark, tmp_path):
-    """Re-running the incremental pipeline with no new pages leaves
-    the canonical map unchanged (per-part ledger short-circuits)."""
+    """Re-running the pipeline with no new pages leaves the canonical
+    map unchanged (the delta is empty)."""
     pages = spark.createDataFrame(gen_pages(40)).repartition(3)
     cfg = PipelineConfig(
         warehouse=str(tmp_path / "wh_noop"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=4, incremental_link=True,
+        mode="compat", n_parts=4,
     )
     first = run_pipeline(spark, pages, cfg)
     before = {(r.uri, r.canon_id) for r in first.canonical_map.collect()}
@@ -320,7 +352,7 @@ def test_incremental_lsh_matches_full(spark, tmp_path):
         jaccard_threshold=0.85, lsh_max_bucket=4096,
     )
     cfg_inc = PipelineConfig(
-        warehouse=str(tmp_path / "wh_ilsh"), incremental_link=True, **kw
+        warehouse=str(tmp_path / "wh_ilsh"), **kw
     )
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:80]).repartition(5), cfg_inc)
     res_inc = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_inc)
@@ -360,7 +392,7 @@ def test_incremental_lsh_with_tight_cap_matches_full(spark, tmp_path):
         jaccard_threshold=0.85, lsh_max_bucket=8,
     )
     cfg_inc = PipelineConfig(
-        warehouse=str(tmp_path / "wh_tlsh"), incremental_link=True, **kw
+        warehouse=str(tmp_path / "wh_tlsh"), **kw
     )
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:60]).repartition(4), cfg_inc)
     res_inc = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg_inc)
@@ -376,11 +408,11 @@ def test_incremental_link_recrawl_triggers_rebuild(spark, tmp_path):
     """A re-crawled url (content changed → possible retraction) must
     NOT be merged silently: the stage detects the changed url
     fingerprint, rebuilds from all current triples, and the result
-    equals a fresh full recompute over the modified corpus."""
+    equals a fresh build over the modified corpus and the oracle."""
     pages = gen_pages(60)
     cfg_inc = PipelineConfig(
         warehouse=str(tmp_path / "wh_rc"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=4, incremental_link=True,
+        mode="compat", n_parts=4,
     )
     run_pipeline(spark, spark.createDataFrame(pages).repartition(3), cfg_inc)
 
@@ -403,6 +435,7 @@ def test_incremental_link_recrawl_triggers_rebuild(spark, tmp_path):
     cmap_inc = {(r.uri, r.canon_id) for r in res_inc.canonical_map.collect()}
     cmap_full = {(r.uri, r.canon_id) for r in res_full.canonical_map.collect()}
     assert cmap_inc == cmap_full
+    assert _graph(res_inc) == _oracle(res_inc)
 
 
 def test_url_fingerprint_breaks_even_multiplicity(spark):
@@ -432,7 +465,7 @@ def test_incremental_link_url_removal_triggers_rebuild(spark, tmp_path):
     pages = gen_pages(60)
     cfg_inc = PipelineConfig(
         warehouse=str(tmp_path / "wh_rm"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=4, incremental_link=True,
+        mode="compat", n_parts=4,
     )
     run_pipeline(spark, spark.createDataFrame(pages).repartition(3), cfg_inc)
 
@@ -450,20 +483,21 @@ def test_incremental_link_url_removal_triggers_rebuild(spark, tmp_path):
     cmap_inc = {(r.uri, r.canon_id) for r in res_inc.canonical_map.collect()}
     cmap_full = {(r.uri, r.canon_id) for r in res_full.canonical_map.collect()}
     assert cmap_inc == cmap_full
+    assert _graph(res_inc) == _oracle(res_inc)
 
 
 def test_incremental_link_respects_neardup_false(spark, tmp_path):
-    """incremental_link with neardup_link=False must produce the same
-    canonical map as the full path with neardup_link=False (explicit
-    sameAs edges ONLY — no invented norm→hub edges), and must not
-    build the norm_hubs index at all."""
+    """A delta with neardup_link=False must produce the same canonical
+    map as a fresh build with neardup_link=False (explicit sameAs
+    edges ONLY — no invented norm→hub edges), and must not build the
+    norm_hubs index at all."""
     import os
 
     all_pages = gen_pages(80)
     wh = str(tmp_path / "wh_nd0")
     cfg_inc = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=4,
-        incremental_link=True, neardup_link=False,
+        neardup_link=False,
     )
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg_inc)
     res_inc = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg_inc)
@@ -477,6 +511,7 @@ def test_incremental_link_respects_neardup_false(spark, tmp_path):
     cmap_inc = {(r.uri, r.canon_id) for r in res_inc.canonical_map.collect()}
     cmap_full = {(r.uri, r.canon_id) for r in res_full.canonical_map.collect()}
     assert cmap_inc == cmap_full
+    assert _graph(res_inc) == _oracle(res_inc, neardup=False)
     assert not os.path.exists(os.path.join(wh, "norm_hubs"))
 
 
@@ -492,7 +527,7 @@ def test_incremental_materialize_patches_only_affected_partitions(spark, tmp_pat
     # handful of buckets, so most partitions must survive untouched
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        n_buckets=64, incremental_link=True,
+        n_buckets=64,
     )
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:118]).repartition(5), cfg)
 
@@ -537,7 +572,6 @@ def test_incremental_materialize_retry_after_marker_crash(spark, tmp_path):
     wh = str(tmp_path / "wh_crash2")
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        incremental_link=True,
     )
     # small delta: the append path (not the merge-storm rebuild
     # fallback) is the crash window under test
@@ -574,6 +608,7 @@ def test_incremental_materialize_retry_after_marker_crash(spark, tmp_path):
         (r.canon_s, r.p, r.canon_o) for r in res_full.edges.collect()
     )
     assert e_retry == e_full
+    assert _graph(res_retry) == _oracle(res_retry)
 
 
 def test_noop_resume_is_metadata_only(spark, tmp_path, monkeypatch):
@@ -594,39 +629,13 @@ def test_noop_resume_is_metadata_only(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise AssertionError("no-op resume scanned table data")
 
-    monkeypatch.setattr(pl, "partition_fingerprints", boom)
-    monkeypatch.setattr(pl, "_triples_fingerprint", boom)
+    monkeypatch.setattr(pl, "_page_fingerprints", boom)
     monkeypatch.setattr(pl, "_url_fingerprints", boom)
     monkeypatch.setattr(pl, "fused_extract_parse_abbrev", boom)
 
     res = run_pipeline(spark, spark.read.parquet(src), cfg)
     assert (res.triples.count(), res.edges.count()) == (n_triples, n_edges)
     assert "extract_parse_abbrev" in res.counters
-
-
-def test_noop_resume_metadata_only_incremental(spark, tmp_path, monkeypatch):
-    """Same pin for the incremental mode — the url-fingerprint scan is
-    also skipped on a manifest hit."""
-    import kgpipe.pipeline as pl
-
-    src = str(tmp_path / "pages_inc")
-    spark.createDataFrame(gen_pages(40)).write.parquet(src)
-    wh = str(tmp_path / "wh_meta_inc")
-    cfg = PipelineConfig(
-        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=4,
-        incremental_link=True,
-    )
-    first = run_pipeline(spark, spark.read.parquet(src), cfg)
-    before = {(r.uri, r.canon_id) for r in first.canonical_map.collect()}
-
-    def boom(*a, **k):
-        raise AssertionError("no-op resume scanned table data")
-
-    monkeypatch.setattr(pl, "partition_fingerprints", boom)
-    monkeypatch.setattr(pl, "_url_fingerprints", boom)
-    monkeypatch.setattr(pl, "fused_extract_parse_abbrev", boom)
-    res = run_pipeline(spark, spark.read.parquet(src), cfg)
-    assert {(r.uri, r.canon_id) for r in res.canonical_map.collect()} == before
 
 
 def test_manifest_skip_defeated_by_config_or_file_change(spark, tmp_path):
@@ -689,7 +698,7 @@ def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
     wh = str(tmp_path / "wh_cfgchg")
     cfg_lsh = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        incremental_link=True, jaccard_threshold=0.85, lsh_max_bucket=4096,
+        jaccard_threshold=0.85, lsh_max_bucket=4096,
     )
     run_pipeline(
         spark, spark.createDataFrame(all_pages.iloc[:60]).repartition(5), cfg_lsh
@@ -719,33 +728,7 @@ def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
     assert {(r.uri, r.canon_id) for r in res.canonical_map.collect()} == {
         (r.uri, r.canon_id) for r in res_full.canonical_map.collect()
     }
-
-
-def test_full_to_incremental_switch_reads_layered_edges(spark, tmp_path):
-    """ADVICE r5: switching one warehouse from full mode (bucketed
-    edges) to incremental mode (b_fp-layered edges) must not read the
-    new layout through the stale session-catalog bucketed ident —
-    TableIO.drop now clears it, so _read_edges falls back to the plain
-    parquet read and returns the layered rows."""
-    import dataclasses
-
-    pages = spark.createDataFrame(gen_pages(60)).repartition(4)
-    wh = str(tmp_path / "wh_switch")
-    cfg_full = PipelineConfig(
-        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=4
-    )
-    res_full = run_pipeline(spark, pages, cfg_full)
-    full_edges = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res_full.edges.collect()
-    )
-    assert sum(full_edges.values()) > 0
-
-    cfg_inc = dataclasses.replace(cfg_full, incremental_link=True)
-    res_inc = run_pipeline(spark, pages, cfg_inc)
-    inc_edges = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res_inc.edges.collect()
-    )
-    assert inc_edges == full_edges
+    assert _graph(res) == _oracle(res)
 
 
 def test_incremental_materialize_folds_layers(spark, tmp_path):
@@ -762,7 +745,7 @@ def test_incremental_materialize_folds_layers(spark, tmp_path):
     wh = str(tmp_path / "wh_fold")
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        incremental_link=True, edges_fold_layers=3,
+        edges_fold_layers=3,
     )
     res = None
     for n in (40, 60, 80, 100, 120, 140):
@@ -794,34 +777,7 @@ def test_incremental_materialize_folds_layers(spark, tmp_path):
         (r.canon_s, r.p, r.canon_o) for r in res2.edges.collect()
     )
     assert got2 == exp
-
-
-def test_stage_fp_equals_dedicated_scan(spark, tmp_path):
-    """The extract stage's xor-combined per-partition fingerprint (the
-    r7 shared-scan optimization) must equal _triples_fingerprint's
-    dedicated whole-table scan bit-for-bit — the link/materialize
-    whole-stage checkpoints key on it, so a divergence would corrupt
-    resume identity. Covers both the fresh-run fast path (marker fp
-    written from stage_fp) and the xor/sign arithmetic round-trip."""
-    import json
-
-    from kgpipe.pipeline import _triples_fingerprint
-
-    wh = str(tmp_path / "wh_fp")
-    # pages must come from FILES: the run manifest (which carries the
-    # fp) is only written for file-backed sources
-    src = str(tmp_path / "pages_fp")
-    spark.createDataFrame(gen_pages(120)).repartition(5).write.parquet(src)
-    pages = spark.read.parquet(src)
-    cfg = PipelineConfig(
-        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8
-    )
-    res = run_pipeline(spark, pages, cfg)
-    marker = json.loads((tmp_path / "wh_fp" / "run_manifest.json").read_text())
-    assert marker["triples_fp"] is not None
-    assert (marker["triples_fp"], marker["triples_n"]) == _triples_fingerprint(
-        res.triples
-    )
+    assert _graph(res2) == _oracle(res2)
 
 
 def _nt_pages(specs, start=0):
@@ -888,7 +844,6 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
     wh = str(tmp_path / "wh_pend")
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        incremental_link=True,
     )
     p_base = _nt_pages(base)
     p_d1 = _nt_pages(d1, start=100)
@@ -936,6 +891,7 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
     # the pre-batch-1 label kx-c is gone from the edge table — only a
     # COMPOSED kx-c→kx-a application explains that plus correctness
     assert not any(k[0] == "http://kx-c.example/e" for k in got)
+    assert _graph(res) == _oracle(res)
 
 
 def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
@@ -964,7 +920,6 @@ def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
     wh = str(tmp_path / "wh_storm")
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        incremental_link=True,
     )
     import pandas as pd
 
@@ -992,6 +947,7 @@ def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
     got = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res.edges.collect())
     exp = collections.Counter((r.canon_s, r.p, r.canon_o) for r in ref.edges.collect())
     assert got == exp
+    assert _graph(res) == _oracle(res)
 
 
 def test_materialize_broadcast_gate_output_identical(spark, tmp_path, monkeypatch):
@@ -1022,25 +978,11 @@ def test_materialize_broadcast_gate_output_identical(spark, tmp_path, monkeypatc
     a = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res_a.edges.collect())
     b = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res_b.edges.collect())
     assert a == b and sum(a.values()) > 0
-    # the free size signal equals the written cmap row count
-    from kgpipe.checkpoints import CheckpointLog
-    from kgpipe.io import TableIO
-
-    log = CheckpointLog(TableIO(spark, str(tmp_path / "wa")))
-    assert log.last_n_out("link_canonicalize") == res_a.canonical_map.count()
 
 
-def _graph(res):
-    cmap = {(r.uri, r.canon_id) for r in res.canonical_map.collect()}
-    edges = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res.edges.collect())
-    return cmap, edges
-
-
-def _inc_cfg(wh, **kw):
-    return PipelineConfig(
-        warehouse=str(wh), rules_text=RULES_16_TEXT, mode="compat", n_parts=4,
-        n_buckets=8, incremental_link=True, **kw,
-    )
+def _cfg(wh, **kw):
+    kw = {"rules_text": RULES_16_TEXT, **kw}
+    return PipelineConfig(warehouse=str(wh), mode="compat", n_parts=4, n_buckets=8, **kw)
 
 
 def test_delta_extracts_only_new_pages(spark, tmp_path, monkeypatch):
@@ -1053,7 +995,7 @@ def test_delta_extracts_only_new_pages(spark, tmp_path, monkeypatch):
     import kgpipe.pipeline as pl
 
     all_pages = gen_pages(60)
-    cfg = _inc_cfg(tmp_path / "wh_only_new")
+    cfg = _cfg(tmp_path / "wh_only_new")
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
     new_urls = set(all_pages["url"].iloc[50:])
 
@@ -1091,13 +1033,13 @@ def test_delta_extracts_only_new_pages(spark, tmp_path, monkeypatch):
         PipelineConfig(warehouse=str(tmp_path / "wh_only_new_full"),
                        rules_text=RULES_16_TEXT, mode="compat", n_parts=4, n_buckets=8),
     )
-    assert _graph(res) == _graph(ref)
+    assert _graph(res) == _graph(ref) == _oracle(res)
 
 
 def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     """Kill a delta run after its k-th TableIO.write / replace /
     write_json_atomic, for every k, then rerun it: the canonical map
-    and the edges equal both an uninterrupted delta run and a full
+    and the edges equal both an uninterrupted delta run and a fresh
     build. Writes nested inside another counted write (replace's
     staged write) belong to the outer one."""
     import shutil
@@ -1108,13 +1050,15 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     base_df = spark.createDataFrame(all_pages.iloc[:30]).repartition(2)
     all_df = spark.createDataFrame(all_pages).repartition(2)
     base_wh = tmp_path / "base"
-    run_pipeline(spark, base_df, _inc_cfg(base_wh))
+    run_pipeline(spark, base_df, _cfg(base_wh))
 
-    full = _graph(run_pipeline(
+    fresh = run_pipeline(
         spark, all_df,
         PipelineConfig(warehouse=str(tmp_path / "full"), rules_text=RULES_16_TEXT,
                        mode="compat", n_parts=4, n_buckets=8),
-    ))
+    )
+    full = _graph(fresh)
+    assert full == _oracle(fresh)
 
     class Killed(Exception):
         pass
@@ -1144,9 +1088,9 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
         state.update(n=0, kill_at=kill_at)
         if kill_at is not None:
             with pytest.raises(Killed):
-                run_pipeline(spark, all_df, _inc_cfg(wh))
+                run_pipeline(spark, all_df, _cfg(wh))
             state.update(n=0, kill_at=None)
-        return run_pipeline(spark, all_df, _inc_cfg(wh))
+        return run_pipeline(spark, all_df, _cfg(wh))
 
     uninterrupted = _graph(delta_run(tmp_path / "clean"))
     n_writes = state["n"]
@@ -1167,7 +1111,7 @@ def test_old_layout_warehouse_migrates_once(spark, tmp_path):
 
     all_pages = gen_pages(70)
     wh = tmp_path / "wh_old"
-    cfg = _inc_cfg(wh)
+    cfg = _cfg(wh)
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
 
     # rewrite it into the old layout
@@ -1207,7 +1151,7 @@ def test_old_layout_warehouse_migrates_once(spark, tmp_path):
         spark, spark.createDataFrame(all_pages).repartition(3),
         PipelineConfig(warehouse=str(tmp_path / "ref70"), **ref_cfg),
     )
-    assert _graph(res) == _graph(ref)
+    assert _graph(res) == _graph(ref) == _oracle(res)
 
 
 def test_cosmetic_recrawl_is_not_a_change(spark, tmp_path, monkeypatch):
@@ -1217,7 +1161,7 @@ def test_cosmetic_recrawl_is_not_a_change(spark, tmp_path, monkeypatch):
     import kgpipe.pipeline as pl
 
     pages = gen_pages(40)
-    cfg = _inc_cfg(tmp_path / "wh_cosmetic")
+    cfg = _cfg(tmp_path / "wh_cosmetic")
     run_pipeline(spark, spark.createDataFrame(pages).repartition(3), cfg)
     recrawled = pages.copy()
     for i in (3, 7):
@@ -1242,43 +1186,7 @@ def test_cosmetic_recrawl_is_not_a_change(spark, tmp_path, monkeypatch):
         PipelineConfig(warehouse=str(tmp_path / "wh_cosmetic_full"), rules_text=RULES_16_TEXT,
                        mode="compat", n_parts=4, n_buckets=8),
     )
-    assert _graph(res) == _graph(again) == _graph(ref)
-
-
-def _full_cfg(wh):
-    return PipelineConfig(
-        warehouse=str(wh), rules_text=RULES_16_TEXT, mode="compat", n_parts=4, n_buckets=8,
-    )
-
-
-def test_incremental_to_full_switch_matches_fresh_full(spark, tmp_path):
-    """Switching a daily-delta warehouse (triples_raw in batch_fp=
-    layers) back to full mode must re-lay triples_raw by part_id, not
-    put part_id= dirs beside the layers: the result equals a fresh full
-    build, and switching back to deltas still works."""
-    import dataclasses
-
-    import kgpipe.pipeline as pl
-
-    pages = gen_pages(60)
-    wh = tmp_path / "wh_inc_full"
-    run_pipeline(spark, spark.createDataFrame(pages.iloc[:45]).repartition(3), _inc_cfg(wh))
-    run_pipeline(spark, spark.createDataFrame(pages.iloc[:50]).repartition(3), _inc_cfg(wh))
-
-    all_df = spark.createDataFrame(pages).repartition(3)
-    res = run_pipeline(spark, all_df, _full_cfg(wh))
-    io = pl.TableIO(spark, str(wh))
-    assert not pl._partition_values(io, "triples_raw", "batch_fp")
-    ref = run_pipeline(spark, all_df, _full_cfg(tmp_path / "wh_inc_full_ref"))
-    assert _graph(res) == _graph(ref)
-    assert collections.Counter(
-        (r.s, r.p, r.o) for r in res.triples.select("s", "p", "o").collect()
-    ) == collections.Counter(
-        (r.s, r.p, r.o) for r in ref.triples.select("s", "p", "o").collect()
-    )
-
-    back = run_pipeline(spark, all_df, dataclasses.replace(_full_cfg(wh), incremental_link=True))
-    assert _graph(back) == _graph(ref)
+    assert _graph(res) == _graph(again) == _graph(ref) == _oracle(res)
 
 
 def test_readded_then_removed_url_matches_full(spark, tmp_path):
@@ -1289,7 +1197,7 @@ def test_readded_then_removed_url_matches_full(spark, tmp_path):
     pages = gen_pages(42)
     base = pages.iloc[:40]
     wh = tmp_path / "wh_readd"
-    cfg = _inc_cfg(wh)
+    cfg = _cfg(wh)
     # a rebuild over `base`: index base + one url, then remove it
     run_pipeline(spark, spark.createDataFrame(pages.iloc[:41]).repartition(3), cfg)
     run_pipeline(spark, spark.createDataFrame(base).repartition(3), cfg)
@@ -1299,6 +1207,58 @@ def test_readded_then_removed_url_matches_full(spark, tmp_path):
     res = run_pipeline(spark, spark.createDataFrame(base).repartition(3), cfg)
 
     ref = run_pipeline(
-        spark, spark.createDataFrame(base).repartition(3), _full_cfg(tmp_path / "wh_readd_ref")
+        spark, spark.createDataFrame(base).repartition(3), _cfg(tmp_path / "wh_readd_ref")
     )
-    assert _graph(res) == _graph(ref)
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+
+def test_extract_config_change_reextracts_every_page(spark, tmp_path):
+    """A rerun of the same pages under another extract config must not
+    keep the old triples: the recorded extract digest no longer
+    matches, every page is re-extracted, and the warehouse equals a
+    fresh build under the new config."""
+    pages = gen_pages(40)
+    wh = tmp_path / "wh_rules"
+    run_pipeline(spark, spark.createDataFrame(pages).repartition(3), _cfg(wh))
+    # another rule table: half the prefixes no longer abbreviate
+    rules = "\n".join(RULES_16_TEXT.strip().splitlines()[::2]) + "\n"
+    res = run_pipeline(
+        spark, spark.createDataFrame(pages).repartition(3),
+        _cfg(wh, rules_text=rules),
+    )
+    ref = run_pipeline(
+        spark, spark.createDataFrame(pages).repartition(3),
+        _cfg(tmp_path / "wh_rules_ref", rules_text=rules),
+    )
+
+    def triples(r):
+        return collections.Counter((t.s, t.p, t.o) for t in r.triples.collect())
+
+    assert triples(res) == triples(ref)
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+
+def test_normal_form_variants_link_across_batches(spark, tmp_path):
+    """URI variants that differ only by scheme, www., a trailing slash
+    or %20 link through the norm-hub index even when they arrive in
+    different batches: the delta equals a fresh build and the graph
+    oracle, whose normal-form groups change the map on this input."""
+    import pandas as pd
+
+    base = [
+        ["<https://www.nv.example/a> <http://kx-p.example/t> \"a1\" ."],
+        ["<http://nv.example/b%20c> <http://kx-p.example/t> \"b1\" ."],
+        ["<http://nv.example/z> <http://kx-p.example/t> \"z1\" ."],
+    ]
+    delta = [
+        ["<http://nv.example/a/> <http://kx-p.example/t> \"a2\" ."],
+        ["<https://nv.example/b%20c/> <http://kx-p.example/t> \"b2\" ."],
+        [f"<http://nv.example/a> {SAMEAS} <http://nv.example/z> ."],
+    ]
+    p_base = _nt_pages(base)
+    p_all = pd.concat([p_base, _nt_pages(delta, start=10)], ignore_index=True)
+    run_pipeline(spark, spark.createDataFrame(p_base), _cfg(tmp_path / "wh_nv"))
+    res = run_pipeline(spark, spark.createDataFrame(p_all), _cfg(tmp_path / "wh_nv"))
+    ref = run_pipeline(spark, spark.createDataFrame(p_all), _cfg(tmp_path / "wh_nv_ref"))
+    assert _graph(res) == _graph(ref) == _oracle(res)
+    assert _oracle(res) != _oracle(res, neardup=False)

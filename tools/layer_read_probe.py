@@ -87,7 +87,7 @@ def run_series(spark, pages_pdf, n_base, n_delta, delta_pages, fold_layers, chec
     wh = tempfile.mkdtemp(prefix="kg_layers_")
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=4,
-        n_buckets=4, incremental_link=True, edges_fold_layers=fold_layers,
+        n_buckets=4, edges_fold_layers=fold_layers,
     )
     io = TableIO(spark, wh)
     series = []

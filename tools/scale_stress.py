@@ -496,7 +496,7 @@ def cell_d2_storm(spark, n_edges: int, out: dict) -> None:
     log = CheckpointLog(io)
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat",
-        n_buckets=32, incremental_link=True,
+        n_buckets=32,
     )
 
     # ---- batch b0: initial full materialize lays down the layered state
