@@ -638,6 +638,32 @@ def test_noop_resume_is_metadata_only(spark, tmp_path, monkeypatch):
     assert "extract_parse_abbrev" in res.counters
 
 
+def test_noop_resume_metadata_only_incremental(spark, tmp_path, monkeypatch):
+    """Same pin with the legacy incremental_link flag set: it still
+    parses, the url-fingerprint scan is skipped on a manifest hit, and
+    the resumed canonical map equals the first run's."""
+    import kgpipe.pipeline as pl
+
+    src = str(tmp_path / "pages_inc")
+    spark.createDataFrame(gen_pages(40)).write.parquet(src)
+    wh = str(tmp_path / "wh_meta_inc")
+    cfg = PipelineConfig(
+        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=4,
+        incremental_link=True,
+    )
+    first = run_pipeline(spark, spark.read.parquet(src), cfg)
+    before = {(r.uri, r.canon_id) for r in first.canonical_map.collect()}
+
+    def boom(*a, **k):
+        raise AssertionError("no-op resume scanned table data")
+
+    monkeypatch.setattr(pl, "_page_fingerprints", boom)
+    monkeypatch.setattr(pl, "_url_fingerprints", boom)
+    monkeypatch.setattr(pl, "fused_extract_parse_abbrev", boom)
+    res = run_pipeline(spark, spark.read.parquet(src), cfg)
+    assert {(r.uri, r.canon_id) for r in res.canonical_map.collect()} == before
+
+
 def test_manifest_skip_defeated_by_config_or_file_change(spark, tmp_path):
     """The manifest short-circuit must NOT survive a config change or
     a source-file change — either reruns the stages."""
