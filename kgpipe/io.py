@@ -218,7 +218,8 @@ class TableIO:
         self._write_small_local(df.collect(), pairs, name, mode)
 
     def write_small_rows(
-        self, rows: list[tuple], ddl: str, name: str, mode: str = "overwrite"
+        self, rows: list[tuple], ddl: str, name: str, mode: str = "overwrite",
+        partition: tuple[str, str] | None = None,
     ) -> None:
         """write_small for DRIVER-LOCAL rows: no Spark DataFrame is
         built on the fast path at all. A createDataFrame(rows) +
@@ -230,7 +231,25 @@ class TableIO:
         writer off the local filesystem / in catalog mode / for types
         outside the fast-path map or DDL the simple parser cannot read
         (parameterized or nested types such as decimal(10,2) or
-        struct<a:int,b:int>) — semantics preserved everywhere."""
+        struct<a:int,b:int>) — semantics preserved everywhere.
+
+        partition=(col, value): the rows (without col) become partition
+        col=value of a hive-partitioned table, with the semantics of
+        write(mode="overwrite", partition_by=[col]) under dynamic
+        partition overwrite: that partition alone is replaced, and no
+        rows replace nothing."""
+        if partition is not None:
+            col, val = partition
+            if not rows:
+                return
+            if self.catalog is None and self._local_dir(name) is not None:
+                name = f"{name}/{col}={val}"
+            else:
+                from pyspark.sql import functions as F
+
+                df = self.spark.createDataFrame(rows, ddl).withColumn(col, F.lit(val))
+                self.write(df, name, mode="overwrite", partition_by=[col])
+                return
         pairs = self._flat_ddl(ddl)
         if (
             self.catalog is not None or self._local_dir(name) is None or pairs is None

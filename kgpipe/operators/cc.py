@@ -30,6 +30,8 @@ none"); this is new capability mandated by the north rule.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -102,27 +104,11 @@ def _checkpoint_with_fingerprint(edges: DataFrame) -> tuple[DataFrame, tuple[int
 SMALL_GRAPH_MAX_EDGES = 200_000
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Exact union-find on a collected small edge set → the same
-    (uri, canon_id) contract as the star-rounds: every node appearing
-    in an edge maps to its component's lexicographic-min URI (roots
-    included, mapping to themselves)."""
-    import pandas as pd
-
-    pdf = e.select("src", "dst").toPandas()
-    return _union_find_from_pandas(e.sparkSession, pdf)
-
-
-def _union_find_from_pandas(spark, pdf) -> DataFrame:
-    """Union-find over an already-collected (src, dst) pandas frame.
-    Collect and return both ride Arrow (toPandas /
-    createDataFrame(pandas) — enabled in kgpipe.session), which at the
-    ~10⁵-edge threshold is several times faster than row-pickled
-    collect() + createDataFrame(list-of-tuples). Output is order-
-    independent: union-by-canonical-order makes the root the
-    component minimum regardless of edge order."""
-    import pandas as pd
-
+def _components(pairs) -> dict[str, str]:
+    """Exact union-find over (a, b) pairs: every node → its
+    component's lexicographic-min node. Order-independent: union by
+    canonical order makes each root its component's minimum whatever
+    the pair order; a self-pair just registers its node."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -133,7 +119,7 @@ def _union_find_from_pandas(spark, pdf) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for a, b in zip(pdf["src"], pdf["dst"]):
+    for a, b in pairs:
         for v in (a, b):
             if v not in parent:
                 parent[v] = v
@@ -145,10 +131,26 @@ def _union_find_from_pandas(spark, pdf) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    out = pd.DataFrame(
-        {"uri": list(parent.keys()), "canon_id": [find(v) for v in parent]}
-    )
-    return spark.createDataFrame(out, schema="uri string, canon_id string")
+    return {v: find(v) for v in parent}
+
+
+def _local_frame(spark, cols: dict) -> DataFrame:
+    """Driver-side string columns as a DataFrame built from an Arrow
+    table: a LocalRelation even when empty, so building it, collecting
+    it, and planning over an empty one start no Spark job."""
+    import pyarrow as pa
+
+    table = pa.table({k: pa.array(list(v), pa.string()) for k, v in cols.items()})
+    return spark.createDataFrame(table, ", ".join(f"{k} string" for k in cols))
+
+
+def _union_find_from_pandas(spark, pdf) -> DataFrame:
+    """Union-find over an already-collected (src, dst) pandas frame.
+    Collect and return both ride Arrow (toPandas / _local_frame),
+    which at the ~10⁵-edge threshold is several times faster than
+    row-pickled collect() + createDataFrame(list-of-tuples)."""
+    canon = _components(zip(pdf["src"], pdf["dst"]))
+    return _local_frame(spark, {"uri": canon.keys(), "canon_id": canon.values()})
 
 
 def connected_components(
@@ -281,12 +283,11 @@ def incremental_canonical_map(
     Only components the delta touches are recomputed:
       1. touched  = endpoints of new_edges
       2. affected = canon_ids of touched nodes present in prev
-         (delta-sized → AQE broadcasts these joins at runtime)
       3. the affected components re-enter as their STAR edges
          (uri → canon_id), which are connectivity-equivalent to the
          original component membership
-      4. connected_components runs over (affected stars ∪ new_edges)
-         — a graph the size of the delta's neighborhood, not the world
+      4. connected components over (affected stars ∪ new_edges) — a
+         graph the size of the delta's neighborhood, not the world
       5. result = untouched prev rows ∪ the recomputed sub-map
 
     canon_id remains the component's lexicographic-min uri: the star
@@ -297,28 +298,97 @@ def incremental_canonical_map(
     prev_cmap may be empty (first run degenerates to a plain CC over
     new_edges). Nodes supported: any uri appearing in either input.
     """
-    return incremental_merge(prev_cmap, new_edges, **kw)[0]
+    return incremental_merge(prev_cmap, new_edges, **kw).cmap
+
+
+@dataclass
+class Merge:
+    """incremental_merge's result. cmap: the merged map. changes:
+    (old_c, new_c) for every label that was an EFFECTIVE canon id
+    before the merge (a fixed point of prev — an explicit
+    uri==canon_id row, or a uri absent from prev entirely) and now
+    maps to a different label. n_edges: distinct new edges merged."""
+
+    cmap: DataFrame
+    changes: DataFrame
+    n_edges: int
 
 
 def incremental_merge(
-    prev_cmap: DataFrame, new_edges: DataFrame, **kw
-) -> tuple[DataFrame, DataFrame]:
+    prev_cmap: DataFrame,
+    new_edges: DataFrame,
+    small_graph_max_edges: int | None = SMALL_GRAPH_MAX_EDGES,
+    **kw,
+) -> Merge:
     """incremental_canonical_map, plus the LABEL CHANGES the merge
-    caused: (merged_map, changes) where changes(old_c, new_c) maps
-    every label that was an EFFECTIVE canon id before the merge (a
-    fixed point of prev — an explicit uri==canon_id row, or a uri
-    absent from prev entirely) to its new, different label.
+    caused (see Merge).
 
-    The changes frame is what downstream MATERIALIZED artifacts keyed
-    by canon labels (the edge table) need to relabel themselves — and
-    it is computed entirely within the delta's neighborhood (sub_map ⋈
-    the affected components' prev rows), so its cost scales with the
-    delta, not the corpus. Emitting it here, where the merge already
-    holds the neighborhood, is what lets the materialize stage avoid
-    keeping (and diffing, and rewriting) its own full copy of the map
-    per run — a map-scale cost that dominated delta runs."""
+    The changes are what downstream MATERIALIZED artifacts keyed by
+    canon labels (the edge table) need to relabel themselves — and
+    they come from the delta's neighborhood alone (the affected
+    components' prev rows), so their cost scales with the delta, not
+    the corpus. Emitting them here, where the merge already holds the
+    neighborhood, is what lets the materialize stage avoid keeping
+    (and diffing, and rewriting) its own full copy of the map per run
+    — a map-scale cost that dominated delta runs.
+
+    Same tiers as connected_components: while the new edges plus the
+    affected components' rows fit small_graph_max_edges, both are
+    collected (two queries; the map is filtered map-side against
+    broadcast driver-built key sets) and the merge, the changes and
+    the edge count are computed on the driver; past it the
+    neighborhood is pinned and merged in Spark. Pass
+    small_graph_max_edges=None/0 to force the distributed tier (tests
+    pin both tiers equal)."""
     prev = prev_cmap.select("uri", "canon_id")
-    ne = new_edges.select("src", "dst")
+    ne = new_edges.select("src", "dst").where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
+    if small_graph_max_edges:
+        merged = _merge_on_driver(prev, ne, small_graph_max_edges)
+        if merged is not None:
+            return merged
+    return _merge_distributed(prev, ne, small_graph_max_edges=small_graph_max_edges, **kw)
+
+
+def _merge_on_driver(prev: DataFrame, ne: DataFrame, cap: int) -> Merge | None:
+    """The union-find tier of incremental_merge, or None when the
+    neighborhood (new edges + affected rows) exceeds `cap`."""
+    spark = ne.sparkSession
+    edges = ne.limit(cap + 1).toPandas()
+    if len(edges) > cap:
+        return None
+    edges = edges.drop_duplicates()
+    touched = _local_frame(spark, {"uri": set(edges["src"]) | set(edges["dst"])})
+    affected = prev.join(F.broadcast(touched), "uri", "left_semi").select("canon_id")
+    room = cap - len(edges)
+    aff = prev.join(F.broadcast(affected), "canon_id", "left_semi").limit(room + 1).toPandas()
+    if len(aff) > room:
+        return None
+    old = dict(zip(aff["uri"], aff["canon_id"]))
+    canon = _components([*old.items(), *zip(edges["src"], edges["dst"])])
+    changes = [(u, c) for u, c in canon.items() if c != u and old.get(u, u) == u]
+    untouched = prev.join(
+        F.broadcast(_local_frame(spark, {"canon_id": set(old.values())})), "canon_id", "left_anti"
+    ).select("uri", "canon_id")
+    sub_map = _local_frame(spark, {"uri": canon.keys(), "canon_id": canon.values()})
+    return Merge(
+        cmap=untouched.union(sub_map),
+        changes=_local_frame(
+            spark, {"old_c": [u for u, _ in changes], "new_c": [c for _, c in changes]}
+        ),
+        n_edges=len(edges),
+    )
+
+
+def _merge_distributed(prev: DataFrame, ne: DataFrame, **kw) -> Merge:
+    """The Spark tier of incremental_merge."""
+    from pyspark.sql import Observation
+
+    # pinned once: the merge reads the new edges three times (the
+    # touched components, the CC edge set, the label changes)
+    eobs = Observation()
+    ne = ne.distinct().observe(eobs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     touched = (
         ne.select(F.col("src").alias("uri"))
         .union(ne.select(F.col("dst").alias("uri")))
@@ -361,4 +431,4 @@ def incremental_merge(
         .where(F.col("canon_id") != F.col("uri"))
         .select(F.col("uri").alias("old_c"), F.col("canon_id").alias("new_c"))
     )
-    return merged, changes
+    return Merge(cmap=merged, changes=changes, n_edges=int(eobs.get["n"]))

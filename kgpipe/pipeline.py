@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from kgpipe.checkpoints import CheckpointLog, with_part_id
 from kgpipe.io import TableIO
 from kgpipe.nt.rules import parse_rules
-from kgpipe.operators.cc import canonical_map_for_nodes
 from kgpipe.operators.fused import fused_extract_parse_abbrev
 from kgpipe.operators.link import (
     LSH_MAX_BUCKET,
@@ -239,11 +238,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
         )
 
     delta = _stage_extract_parse_abbrev(spark, pages, cfg, io, log, parse_rules(cfg.rules_text))
-    _stage_link_incremental(spark, delta, cfg, io, log)
+    link = _stage_link_incremental(spark, delta, cfg, io, log)
     # read after link: its LSH-cap rebuild may relayer triples_raw
     triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
     cmap = io.read("canonical_map", CMAP_DDL)
-    _stage_materialize_incremental(spark, triples, cmap, cfg, io, log)
+    _stage_materialize_incremental(spark, triples, cmap, cfg, io, log, link)
     if manifest is not None:
         io.write_json_atomic(RUN_MANIFEST, {"manifest": manifest, "config": ckey})
     return PipelineResult(
@@ -325,7 +324,14 @@ def _url_fingerprints(triples) -> DataFrame:
 
 
 # pages through one extract task: a daily delta of a few hundred pages
-# is one task writing one triples_raw file
+# is one task writing one triples_raw file. A Python task costs
+# ~0.22-0.29 s before its first page, even on a reused worker (pyspark
+# runs importlib.invalidate_caches() per task, and on Python 3.11 every
+# zipimporter for pyspark.zip's packages then re-reads the archive);
+# a page costs ~120 µs of extract kernel (perfbench
+# operators.extract.us_per_page) plus the parse and abbreviation of its
+# lines. So a task of this many pages spends about as long starting as
+# working, and a layer runs in as few waves as it can.
 LAYER_PAGES_PER_TASK = 1000
 MASK64 = (1 << 64) - 1
 
@@ -399,17 +405,19 @@ def _page_fingerprints(pages: DataFrame) -> DataFrame:
 def _extract_pages(pages, urls, cfg, rules, n_pages: int) -> DataFrame:
     """Fused extract/parse/abbreviate of the pages whose url is in
     `urls` (every page when None), in ceil(n_pages /
-    LAYER_PAGES_PER_TASK) tasks — so a small delta is one task and
-    one output file, not one per scan split. A layer of several tasks
-    rounds up to whole waves of the default parallelism, so the last
-    wave does not run half empty."""
+    LAYER_PAGES_PER_TASK) tasks while those fit one wave of the default
+    parallelism — so a small delta is one task and one output file, not
+    one per scan split. A bigger layer runs whole waves of tasks of at
+    least LAYER_PAGES_PER_TASK pages: the task count rounds DOWN to a
+    multiple of the parallelism (6k pages on 4 cores: one wave of 4
+    tasks, not 6 tasks that take two waves)."""
     src = pages.select("url", "html")
     if urls is not None:
         src = src.join(F.broadcast(urls), "url", "left_semi")
     k = -(-n_pages // LAYER_PAGES_PER_TASK)
-    if k > 1:
-        par = pages.sparkSession.sparkContext.defaultParallelism
-        k = -(-k // par) * par
+    par = pages.sparkSession.sparkContext.defaultParallelism
+    if k > par:
+        k -= k % par
     src = src.coalesce(1) if k <= 1 else src.repartition(k)
     return fused_extract_parse_abbrev(
         with_part_id(src, "url", cfg.n_parts), rules, mode=cfg.mode,
@@ -440,8 +448,8 @@ def _write_layer(
         io.replace(out, "triples_raw", partition_by=["batch_fp"])
     else:
         io.write(out, "triples_raw", mode="overwrite", partition_by=["batch_fp"])
-    m = obs.get
-    return int(m["n_out"] or 0), int(m["n_err"] or 0)
+    m = _observed(obs)
+    return m["n_out"], m["n_err"]
 
 
 def _stage_extract_parse_abbrev(spark, pages, cfg, io: TableIO, log: CheckpointLog, rules) -> _Delta:
@@ -523,7 +531,7 @@ def _stage_extract_parse_abbrev(spark, pages, cfg, io: TableIO, log: CheckpointL
         .select("url", "pfp", "old_ufp", "kind")
         .localCheckpoint(eager=True)
     )
-    st = {k: int(v or 0) for k, v in obs.get.items()}
+    st = _observed(obs)
     n_new, n_changed = st["new"], st["changed"]
     batch = "%016x" % (st["batch"] & MASK64)
     # the configs are part of a rebuild's identity: the same pages
@@ -627,14 +635,15 @@ def _rebuild_triples(
 LSH_INDEX_DDL = "uri string, band int, bh long, batch_fp string"
 
 
-def _incremental_lsh_delta(spark, delta, cfg, io: TableIO):
+def _incremental_lsh_delta(spark, base, cfg, io: TableIO):
     """Delta-only LSH near-dup linking against the persisted signature
     index (r4 verdict missing #2, closed): band ONLY the delta's
-    previously-unseen URIs, join their (band, bh) keys against the
-    `lsh_index` table, and emit verified pairs with at least one new
-    member — old×old pairs were emitted when their members arrived.
-    Signature work is delta-sized; the only touch of old data is a
-    broadcast semi-join of the index against the delta's bucket keys.
+    previously-unseen URIs (base: the batch's distinct (uri, norm)),
+    join their (band, bh) keys against the `lsh_index` table, and emit
+    verified pairs with at least one new member — old×old pairs were
+    emitted when their members arrived. Signature work is delta-sized;
+    the only touch of old data is a broadcast semi-join of the index
+    against the delta's bucket keys.
 
     Cap semantics match the full linker's capped_buckets exactly:
     a bucket whose COMBINED size exceeds cfg.lsh_max_bucket emits
@@ -662,12 +671,6 @@ def _incremental_lsh_delta(spark, delta, cfg, io: TableIO):
     )
 
     cap = cfg.lsh_max_bucket
-    base = (
-        delta.select(F.col("s").alias("uri"))
-        .union(delta.select(F.col("o").alias("uri")))
-        .distinct()
-        .select("uri", normalize_uri(F.col("uri")).alias("norm"))
-    )
     if io.exists("lsh_index"):
         index = io.read("lsh_index", LSH_INDEX_DDL).select("uri", "band", "bh")
     else:
@@ -751,18 +754,25 @@ def _commit_url_index(
     )
 
 
-def _endpoint_map(edges: DataFrame, cfg) -> DataFrame:
-    """Canonical map over the endpoints of an (src, dst) edge set."""
-    nodes = edges.select(F.col("src").alias("uri")).union(edges.select(F.col("dst").alias("uri")))
-    return canonical_map_for_nodes(nodes, edges, max_iter=cfg.cc_max_iter)
-
-
 def _uris(triples: DataFrame) -> DataFrame:
     return (
         triples.select(F.col("s").alias("uri"))
         .union(triples.select(F.col("o").alias("uri")))
         .distinct()
     )
+
+
+@dataclass
+class _Link:
+    """What the link stage observed while it wrote, for materialize —
+    so materialize's path decisions need no probe of their own. None
+    for a count the stage did not observe (it wrote no map, or a retry
+    left label changes of an earlier attempt on disk); materialize
+    then counts for itself."""
+
+    batch: str
+    n_changes: int | None = None  # rows of canon_changes batch_fp=<batch>
+    n_cmap: int | None = None  # non-identity rows of the map it wrote
 
 
 def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
@@ -781,7 +791,14 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     incremental_merge, so CC work scales with the delta's
     neighborhood, not the corpus; its label changes drive the
     materialize stage's relabel of old edges. The first batch of a
-    fresh warehouse has no map to merge into: plain CC over its edges.
+    fresh warehouse merges into an empty map and writes no label
+    changes: there is no edge table yet for them to relabel.
+
+    The batch's normal forms with their URIs and hubs are derived
+    once: the delta edges and the new hubs both read them (cached by
+    the first). The
+    map write observes the map's non-identity row count and the
+    label-change write its row count; both go to materialize (_Link).
 
     Rebuild path: the extract stage already named a trigger (a
     re-crawl that changed clean triples, a removed url, a config or
@@ -791,114 +808,128 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     (_incremental_full_rebuild). Either way the result is pinned EQUAL
     to a fresh build and to a pure-Python graph oracle (test_pipeline).
 
-    Crash safety: canonical_map goes through TableIO.replace (it
-    derives from its own previous version); the hub, label-change
-    and LSH deltas land in per-batch `batch_fp=` partitions under
-    dynamic overwrite, so a retry replaces its own rows; the
-    url index is written LAST, so a crashed attempt re-detects its
-    delta and re-runs idempotently (test_pipeline kills a delta run
-    after every write).
+    Crash safety: label changes are written BEFORE the map replace
+    (they derive from the previous map), canonical_map goes through
+    TableIO.replace (it derives from its own previous version); the
+    hub, label-change and LSH deltas land in per-batch `batch_fp=`
+    partitions under dynamic overwrite, so a retry replaces its own
+    rows; the url index is written LAST, so a crashed attempt
+    re-detects its delta and re-runs idempotently (test_pipeline kills
+    a delta run after every write).
     """
-    from kgpipe.operators.cc import incremental_merge
+    from kgpipe.operators.cc import _local_frame, incremental_merge
     from kgpipe.operators.link import normalize_uri
 
     stage = "link_urls"
     if delta.rebuild is not None:
-        _incremental_full_rebuild(spark, delta, cfg, io, log)
-        return
+        return _incremental_full_rebuild(spark, delta, cfg, io, log)
     b = delta.batch
     if b is None:
-        return
+        return None
     if delta.new_urls is None:
-        # cosmetic re-crawls only: no triples to link
+        # cosmetic re-crawls only: no triples to link, no label changes
         _commit_url_index(delta.cosmetic, b, cfg, io)
-        return
+        return _Link(batch=b, n_changes=0)
     layer = (
         io.read("triples_raw", RAW_LAYER_DDL)
         .where(F.col("batch_fp") == b)
         .where(F.col("error").isNull())
     )
 
-    # no distinct here: the edge set is distinct-ed once, below
-    explicit = (
+    # no distinct here: the merge dedups the edge set
+    delta_edges = (
         layer.where(F.col("p") == cfg.sameas_pred)
         .select(F.col("s").alias("src"), F.col("o").alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    lsh_new_banded = None
+    forms = lsh_new_banded = None
     if cfg.neardup_link:
-        base = _uris(layer).select("uri", normalize_uri(F.col("uri")).alias("norm"))
-        unseen = base
+        # the batch's URIs grouped by normal form: one shuffle, and the
+        # join with the hub index needs none more on this side
+        forms = (
+            layer.select(F.explode(F.array("s", "o")).alias("uri"))
+            .groupBy(normalize_uri(F.col("uri")).alias("norm"))
+            .agg(F.collect_set("uri").alias("uris"))
+        )
         if io.exists("norm_hubs"):
-            unseen = base.join(
-                io.read("norm_hubs", NORM_HUBS_DDL).select("norm", "hub"), "norm", "left_anti"
-            )
-        # unseen normal forms elect their min URI as hub. Written FIRST,
-        # so the edges read every hub — earlier batches' and this
-        # one's — through one join: each URI gets one edge to its
-        # form's hub. A retry finds its own hubs already there, writes
-        # none, and derives the same edges.
-        new_hubs = unseen.groupBy("norm").agg(F.min("uri").alias("hub"))
-        io.write(
-            new_hubs.withColumn("batch_fp", F.lit(b)),
-            "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
+            old = io.read("norm_hubs", NORM_HUBS_DDL).select("norm", F.col("hub").alias("old_hub"))
+            forms = forms.join(old, "norm", "left")
+        else:
+            forms = forms.withColumn("old_hub", F.lit(None).cast("string"))
+        # a normal form an earlier batch saw keeps that batch's hub; an
+        # unseen one elects the batch's min URI. Each URI gets one edge
+        # to its form's hub. A retry finds its own hubs already
+        # written, so it derives the same edges.
+        forms = forms.withColumn("hub", F.coalesce("old_hub", F.array_min("uris"))).persist()
+        delta_edges = delta_edges.union(
+            forms.select(F.explode("uris").alias("src"), F.col("hub").alias("dst"))
+            .where(F.col("src") != F.col("dst"))
         )
-        hub_edges = (
-            base.join(io.read("norm_hubs", NORM_HUBS_DDL).select("norm", "hub"), "norm")
-            .where(F.col("uri") != F.col("hub"))
-            .select(F.col("uri").alias("src"), F.col("hub").alias("dst"))
-        )
-        delta_edges = explicit.union(hub_edges)
         if cfg.jaccard_threshold < 1.0:
-            lsh_res = _incremental_lsh_delta(spark, layer, cfg, io)
+            lsh_res = _incremental_lsh_delta(
+                spark, forms.select(F.explode("uris").alias("uri"), "norm"), cfg, io
+            )
             if lsh_res is None:
                 # a bucket that already emitted pairs crossed the cap:
                 # a full recompute would retract them — rebuild
-                _incremental_full_rebuild(
+                forms.unpersist()
+                return _incremental_full_rebuild(
                     spark, dataclasses.replace(delta, rebuild="lsh_cap"), cfg, io, log
                 )
-                return
             lsh_edges, lsh_new_banded = lsh_res
             delta_edges = delta_edges.union(lsh_edges)
-    else:
-        # with the near-dup linker off only explicit sameAs edges link:
-        # no norm→hub edges, and no norm_hubs index
-        delta_edges = explicit
+    # with the near-dup linker off only explicit sameAs edges link:
+    # no norm→hub edges, and no norm_hubs index
 
-    # pinned once: the merge reads the delta's edges three times (the
-    # touched components, the CC edge set, the label changes)
-    eobs = Observation()
-    delta_edges = (
-        delta_edges.distinct()
-        .observe(eobs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    had_map = io.exists("canonical_map")
+    prev = (
+        io.read("canonical_map", CMAP_DDL) if had_map
+        else _local_frame(spark, {"uri": [], "canon_id": []})
     )
-    if io.exists("canonical_map"):
-        cmap, label_changes = incremental_merge(
-            io.read("canonical_map", CMAP_DDL), delta_edges, max_iter=cfg.cc_max_iter
-        )
+    merge = incremental_merge(prev, delta_edges, max_iter=cfg.cc_max_iter)
+    link = _Link(batch=b, n_changes=0)
+    if had_map:
         # label changes BEFORE the map replace: they derive from prev,
         # and the materialize stage relabels the edge table from them
         # (per-batch partitions, delta-sized — the map itself is never
         # copied or diffed again). A retry AFTER the replace recomputes
         # an EMPTY change set (prev is already merged), whose dynamic
-        # overwrite writes no partitions — the original rows survive; a
-        # retry before it recomputes identical rows and replaces its
-        # own partition.
-        io.write(
-            label_changes.withColumn("batch_fp", F.lit(b)),
-            "canon_changes", mode="overwrite", partition_by=["batch_fp"],
+        # overwrite writes no partitions — the original rows survive,
+        # and their count is not this write's; a retry before it
+        # recomputes identical rows and replaces its own partition.
+        # The union-find tier's changes are rows on the driver already:
+        # they land without a Spark job.
+        if merge.changes.isLocal():
+            rows = [tuple(r) for r in merge.changes.collect()]
+            io.write_small_rows(
+                rows, CHANGES_DDL_ROWS, "canon_changes", partition=("batch_fp", b)
+            )
+            n = len(rows)
+        else:
+            cobs = Observation()
+            io.write(
+                merge.changes.observe(cobs, F.count(F.lit(1)).alias("n"))
+                .withColumn("batch_fp", F.lit(b)),
+                "canon_changes", mode="overwrite", partition_by=["batch_fp"],
+            )
+            n = _observed(cobs)["n"]
+        link.n_changes = (
+            n if n or b not in _partition_values(io, "canon_changes", "batch_fp") else None
         )
-    else:
-        # the first batch: no map to merge into, and no edge table for
-        # label changes to relabel (materialize builds it whole) — plain
-        # CC over the batch's edges
-        cmap = _endpoint_map(delta_edges, cfg)
     # crash-safe: the merged map derives from the live table, so it
     # must never be overwritten in place (delete-then-write would
     # destroy the retry's input) — replace() swaps via renames
-    io.replace(cmap, "canonical_map")
+    link.n_cmap = _replace_map(merge.cmap, io)
 
+    if forms is not None:
+        # a batch's new hubs are delta-sized: one file, like its layer
+        io.write(
+            forms.where(F.col("old_hub").isNull())
+            .select("norm", "hub", F.lit(b).alias("batch_fp"))
+            .coalesce(1),
+            "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
+        )
+        forms.unpersist()
     if lsh_new_banded is not None:
         io.write(
             lsh_new_banded.withColumn("batch_fp", F.lit(b)),
@@ -923,7 +954,39 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     if delta.cosmetic is not None:
         index_rows = index_rows.unionByName(delta.cosmetic)
     _commit_url_index(index_rows, b, cfg, io)
-    log.mark_done_rows(stage, [(0, _signed(b), delta.n_new, eobs.get["n"], 0)])
+    log.mark_done_rows(stage, [(0, _signed(b), delta.n_new, merge.n_edges, 0)])
+    return link
+
+
+def _replace_map(cmap: DataFrame, io: TableIO) -> int:
+    """Swap in a new canonical_map (TableIO.replace) and return its
+    non-identity row count, observed during the write — the size
+    materialize's broadcast gate needs."""
+    obs = Observation()
+    io.replace(
+        cmap.observe(
+            obs, F.sum(F.when(F.col("uri") != F.col("canon_id"), 1).otherwise(0)).alias("n")
+        ),
+        "canonical_map",
+    )
+    return _observed(obs)["n"]
+
+
+def _observed(obs: Observation) -> dict[str, int]:
+    """An Observation's counts (null → 0); every count reads 0 when
+    the observed plan saw no rows at all. Spark drops an observation
+    from a plan it proves empty before running (a read of a table that
+    does not exist yet, joined or not), and Observation.get then fails
+    instead of reporting zeros."""
+    from collections import defaultdict
+
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        got = obs.get
+    except Py4JJavaError:
+        got = {}
+    return defaultdict(int, {k: int(v or 0) for k, v in got.items()})
 
 
 def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
@@ -943,6 +1006,7 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     the retry detects the same trigger and re-runs the rebuild; a
     crash after it cannot strand a stale map (the map was written
     first)."""
+    from kgpipe.operators.cc import _local_frame, incremental_merge
     from kgpipe.operators.link import normalize_uri
 
     batch_fp = delta.rebuild_id
@@ -979,11 +1043,11 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     else:
         hubs_all = None
         edges = explicit
-    eobs = Observation()
-    edges = edges.distinct().observe(eobs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
+    # a merge into an empty map: one map row per edge endpoint
+    merge = incremental_merge(
+        _local_frame(spark, {"uri": [], "canon_id": []}), edges, max_iter=cfg.cc_max_iter
     )
-    io.replace(_endpoint_map(edges, cfg), "canonical_map")
+    n_cmap = _replace_map(merge.cmap, io)
     io.drop("norm_hubs")
     if hubs_all is not None:
         io.write(
@@ -1033,7 +1097,10 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
         cur_urls.observe(uobs, F.count(F.lit(1)).alias("n")), batch_fp, cfg, io,
         replace=True,
     )
-    log.mark_done_rows("link_urls", [(0, _signed(batch_fp), uobs.get["n"], eobs.get["n"], 0)])
+    log.mark_done_rows(
+        "link_urls", [(0, _signed(batch_fp), _observed(uobs)["n"], merge.n_edges, 0)]
+    )
+    return _Link(batch=batch_fp, n_cmap=n_cmap)
 
 
 EDGES_INC_DDL = "canon_s string, p string, canon_o string, b_fp string, part_id int"
@@ -1047,7 +1114,8 @@ CHANGED_BROADCAST_LIMIT = 1_000_000
 # staged dir swaps
 REWRITE_DIR_FRACTION = 0.6
 MAT_LAYOUT_VERSION = 3  # b_fp-layered hive layout + per-layer coverage markers
-CHANGES_DDL = "old_c string, new_c string, batch_fp string"
+CHANGES_DDL_ROWS = "old_c string, new_c string"
+CHANGES_DDL = CHANGES_DDL_ROWS + ", batch_fp string"
 
 
 def _compose_changes(ch: DataFrame, n_batches: int) -> DataFrame:
@@ -1068,6 +1136,15 @@ def _compose_changes(ch: DataFrame, n_batches: int) -> DataFrame:
         )
         ch = nxt
     return ch.distinct()
+
+
+def _one_wave(spark, n_dirs: int) -> int:
+    """Tasks for an edge-table write of n_dirs partition dirs: one
+    wave. Rows are hashed on their dir columns, so a dir still lands
+    in one task and one file, while a task writes several dirs; one
+    task per dir paid a task's fixed cost per dir (35.8k rows into 32
+    dirs on 4 cores: 0.94 s at 32 tasks, 0.46 s at 4)."""
+    return max(1, min(n_dirs, spark.sparkContext.defaultParallelism))
 
 
 def _layer_marker(b_fp: str) -> str:
@@ -1157,7 +1234,7 @@ def _maybe_fold_layers(spark, cfg, io: TableIO) -> bool:
     folded = (
         io.read("edges", EDGES_INC_DDL)
         .withColumn("b_fp", F.lit("full"))
-        .repartition(cfg.n_buckets, F.col("part_id"))
+        .repartition(_one_wave(spark, cfg.n_buckets), F.col("part_id"))
     )
     io.replace(
         folded, "edges", partition_by=["b_fp", "part_id"],
@@ -1166,7 +1243,9 @@ def _maybe_fold_layers(spark, cfg, io: TableIO) -> bool:
     return True
 
 
-def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: CheckpointLog):
+def _stage_materialize_incremental(
+    spark, triples, cmap, cfg, io: TableIO, log: CheckpointLog, link: _Link | None = None
+):
     """Batch-layered edge materialization: a delta APPENDS its own
     layer and only canon-label changes rewrite anything old (the r4
     verdict's #1 gap — the full per-run edge-table rewrite — closed).
@@ -1214,7 +1293,16 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
     relabeling), n_buckets changed, the diff exceeds the broadcast
     budget, or label changes would rewrite more than
     REWRITE_DIR_FRACTION of the existing dirs (a merge storm — one
-    sequential write beats thousands of staged swaps)."""
+    sequential write beats thousands of staged swaps).
+
+    `link` carries the counts the link stage observed during its own
+    writes in this run: with one pending batch — the one it linked —
+    its label-change count stands in for the composed set's, and the
+    map size it observed feeds the broadcast gate. Without them (a
+    resumed run whose link already committed, several pending
+    batches, an old warehouse) this stage counts for itself. Every
+    edge-table write runs one wave of tasks: a dir's rows hash to one
+    task, so each dir is still one file."""
     stage = "materialize"
     io.recover_patch("edges")
     io.recover_replace("edges")  # heal a layer fold that crashed mid-swap
@@ -1245,24 +1333,29 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
     changed = None
     if not full_needed:
         if io.exists("canon_changes"):
-            raw = (
+            changed = (
                 io.read("canon_changes", CHANGES_DDL)
                 .where(F.col("batch_fp").isin(pending))
                 .select("old_c", "new_c")
             )
         else:
-            raw = spark.createDataFrame([], "old_c string, new_c string")
-        # several pending batches can CHAIN label changes (batch 2
-        # relabels a label batch 1 introduced); the edge table still
-        # holds pre-batch-1 labels, so compose before applying. One
-        # job pins the composed set and counts it (Observation).
-        cobs = Observation()
-        changed = (
-            _compose_changes(raw, len(pending))
-            .observe(cobs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_changed = cobs.get["n"]
+            changed = spark.createDataFrame([], "old_c string, new_c string")
+        if link is not None and pending == [link.batch] and link.n_changes is not None:
+            # one batch's changes, counted as the link stage wrote
+            # them: no chains to compose, and old_c is unique already
+            n_changed = link.n_changes
+        else:
+            # several pending batches can CHAIN label changes (batch 2
+            # relabels a label batch 1 introduced); the edge table
+            # still holds pre-batch-1 labels, so compose before
+            # applying. One job pins the composed set and counts it.
+            cobs = Observation()
+            changed = (
+                _compose_changes(changed, len(pending))
+                .observe(cobs, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            n_changed = _observed(cobs)["n"]
         if n_changed > CHANGED_BROADCAST_LIMIT:
             full_needed = True
 
@@ -1317,7 +1410,7 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
             )
             out = edges_with_buckets(relabeled, cfg.n_buckets)
             io.patch_partitions(
-                out.repartition(max(len(dirs), 1), F.col("b_fp"), F.col("part_id")),
+                out.repartition(_one_wave(spark, len(dirs)), F.col("b_fp"), F.col("part_id")),
                 "edges", ["b_fp", "part_id"], sorted(dirs),
             )
 
@@ -1328,13 +1421,15 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         # "re-applied" by a later retry's dynamic overwrite, replacing
         # the whole corpus's rows with delta-only rows.
         # Broadcast only while the map fits the budget (module
-        # contract); the rebuild is a rare, minutes-scale path, so an
-        # early-stopping probe of the non-identity rows is fine here.
-        n_cmap = (
-            cmap.where(F.col("uri") != F.col("canon_id"))
-            .limit(CMAP_BROADCAST_LIMIT + 1)
-            .count()
-        )
+        # contract): the map size the link stage observed as it wrote
+        # the map, else an early-stopping probe of the non-identity rows.
+        n_cmap = link.n_cmap if link is not None else None
+        if n_cmap is None:
+            n_cmap = (
+                cmap.where(F.col("uri") != F.col("canon_id"))
+                .limit(CMAP_BROADCAST_LIMIT + 1)
+                .count()
+            )
         out = edges_with_buckets(
             canonicalize_triples(
                 triples, cmap, broadcast_map=n_cmap <= CMAP_BROADCAST_LIMIT
@@ -1344,13 +1439,13 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         out = out.observe(obs, F.count(F.lit(1)).alias("n"))
         io.drop("edges")  # stale layers must not outlive a rebuild
         io.write(
-            out.repartition(cfg.n_buckets, F.col("part_id")),
+            out.repartition(_one_wave(spark, cfg.n_buckets), F.col("part_id")),
             "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
         )
         # coverage marker LAST: a crash before it leaves every batch
         # pending and the rebuild simply re-runs
         io.write_json_atomic(_layer_marker("full"), {"batches": all_batches})
-        n_out = obs.get["n"]
+        n_out = _observed(obs)["n"]
     else:
         # the delta itself: its own b_fp layer(s), dynamic partition
         # overwrite — zero old files touched, retry replaces itself.
@@ -1380,10 +1475,10 @@ def _stage_materialize_incremental(spark, triples, cmap, cfg, io: TableIO, log: 
         if set(pending) & set(_partition_values(io, "triples_raw", "batch_fp")):
             io.write(
                 delta_new.observe(obs, F.count(F.lit(1)).alias("n"))
-                .repartition(min(cfg.n_buckets, 32), "b_fp", "part_id"),
+                .repartition(_one_wave(spark, cfg.n_buckets), "b_fp", "part_id"),
                 "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
             )
-            n_out = obs.get["n"]
+            n_out = _observed(obs)["n"]
         # completion markers LAST — a half-written layer stays pending
         for b in pending:
             io.write_json_atomic(_layer_marker(b), {"batches": [b]})

@@ -157,3 +157,46 @@ def test_incremental_untouched_components_unchanged(spark):
     e2 = spark.createDataFrame([("p", "q")], "src string, dst string")
     inc = {(r.uri, r.canon_id) for r in incremental_canonical_map(prev, e2).collect()}
     assert {("a", "a"), ("b", "a"), ("x", "x"), ("y", "x"), ("p", "p"), ("q", "p")} == inc
+
+
+def test_incremental_merge_tiers_equal(spark):
+    """incremental_merge's union-find tier (the neighborhood fits
+    small_graph_max_edges) and its Spark tier return the same merged
+    map, label changes and edge count — on both sides of the boundary:
+    the new edges plus the affected components' rows exactly at the
+    cap take the driver, one over it the distributed path."""
+    import random
+
+    from kgpipe.operators.cc import connected_components, incremental_merge
+
+    rng = random.Random(7)
+    n1 = [f"http://ex.org/n{i:02d}" for i in range(40)]
+    batch1 = [(rng.choice(n1), rng.choice(n1)) for _ in range(30)]
+    # a* sorts below n*: merges with new nodes relabel old components
+    n2 = n1 + [f"http://ex.org/a{i:02d}" for i in range(10)]
+    # merges across old components, brand-new nodes, a duplicate
+    # edge and a self-loop on a new node
+    batch2 = [(rng.choice(n2), rng.choice(n2)) for _ in range(15)]
+    batch2 += [batch2[0], ("http://ex.org/a09", "http://ex.org/a09")]
+    prev = connected_components(spark.createDataFrame(batch1, "src string, dst string"))
+    e2 = spark.createDataFrame(batch2, "src string, dst string")
+
+    def run(cap):
+        m = incremental_merge(prev, e2, small_graph_max_edges=cap)
+        return (
+            {(r.uri, r.canon_id) for r in m.cmap.collect()},
+            sorted((r.old_c, r.new_c) for r in m.changes.collect()),
+            m.n_edges,
+            m.changes.isLocal(),
+        )
+
+    touched = {x for e in batch2 for x in e}
+    old = {r.uri: r.canon_id for r in prev.collect()}
+    hit = {old[u] for u in touched if u in old}
+    at_cap = len(set(batch2)) + sum(1 for c in old.values() if c in hit)
+    on_driver = run(at_cap)
+    over = run(at_cap - 1)
+    spark_tier = run(0)
+    assert on_driver[3] and not over[3] and not spark_tier[3]
+    assert on_driver[:3] == over[:3] == spark_tier[:3]
+    assert on_driver[1] and on_driver[2] == len(set(batch2))

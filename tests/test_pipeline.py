@@ -1064,10 +1064,11 @@ def test_delta_extracts_only_new_pages(spark, tmp_path, monkeypatch):
 
 def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     """Kill a delta run after its k-th TableIO.write / replace /
-    write_json_atomic, for every k, then rerun it: the canonical map
-    and the edges equal both an uninterrupted delta run and a fresh
-    build. Writes nested inside another counted write (replace's
-    staged write) belong to the outer one."""
+    write_json_atomic / write_small_rows (the label changes and the
+    ledger land through the last), for every k, then rerun it: the
+    canonical map and the edges equal both an uninterrupted delta run
+    and a fresh build. Writes nested inside another counted write
+    (replace's staged write) belong to the outer one."""
     import shutil
 
     from kgpipe.io import TableIO
@@ -1105,7 +1106,7 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
             return out
         return w
 
-    for name in ("write", "replace", "write_json_atomic"):
+    for name in ("write", "replace", "write_json_atomic", "write_small_rows"):
         monkeypatch.setattr(TableIO, name, counted(getattr(TableIO, name)))
 
     def delta_run(wh, kill_at=None):
@@ -1288,3 +1289,45 @@ def test_normal_form_variants_link_across_batches(spark, tmp_path):
     ref = run_pipeline(spark, spark.createDataFrame(p_all), _cfg(tmp_path / "wh_nv_ref"))
     assert _graph(res) == _graph(ref) == _oracle(res)
     assert _oracle(res) != _oracle(res, neardup=False)
+
+
+def test_empty_first_run_finishes_empty(spark, tmp_path):
+    """A run over no pages on a fresh warehouse finishes with an empty
+    canonical map and edge table (every observed count copes with a
+    plan that saw no rows), and the next run over real pages equals a
+    fresh build."""
+    pages = gen_pages(20)
+    wh = tmp_path / "wh_empty"
+    empty = run_pipeline(spark, spark.createDataFrame(pages).limit(0), _cfg(wh))
+    assert empty.canonical_map.count() == 0 and empty.edges.count() == 0
+    res = run_pipeline(spark, spark.createDataFrame(pages).repartition(2), _cfg(wh))
+    ref = run_pipeline(
+        spark, spark.createDataFrame(pages).repartition(2), _cfg(tmp_path / "wh_empty_ref")
+    )
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+
+# Spark jobs one append delta over the fixture may start: 26 since the
+# link and materialize probes, pins and re-reads were folded into their
+# writes (37 before). A tripwire, not a speed metric: a later change
+# that re-adds a probe, a pin or a re-read trips it and must justify
+# raising the number.
+DELTA_JOB_BUDGET = 26
+
+
+def test_delta_job_budget(spark, tmp_path):
+    """One append delta over the test fixture starts at most
+    DELTA_JOB_BUDGET Spark jobs."""
+    all_pages = gen_pages(60)
+    cfg = _cfg(tmp_path / "wh_jobs")
+    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
+    pages = spark.createDataFrame(all_pages).repartition(3)
+    sc = spark.sparkContext
+    sc.setJobGroup("kgpipe-delta-budget", "one append delta")
+    try:
+        run_pipeline(spark, pages, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("kgpipe-delta-budget"))
+    assert 0 < n_jobs <= DELTA_JOB_BUDGET, n_jobs

@@ -240,7 +240,7 @@ def cell_c_merge(spark, n_edges: int, out: dict) -> None:
 
     load = wait_quiet()
     t0 = time.monotonic()
-    merged, changes = incremental_merge(prev, d, max_iter=30)
+    merged = incremental_merge(prev, d, max_iter=30).cmap
     n_m = merged.count()
     t_merge = time.monotonic() - t0
 
@@ -356,7 +356,8 @@ def cell_d_stacked(spark, n_edges: int, out: dict, n_batches: int = 8) -> None:
         d = spark.read.parquet(dpath)
         load = wait_quiet()
         t0 = time.monotonic()
-        merged, changes = incremental_merge(prev, d, max_iter=30)
+        m = incremental_merge(prev, d, max_iter=30)
+        merged, changes = m.cmap, m.changes
         mpath = os.path.join(out["workdir"], f"map_{i}")
         cpath = os.path.join(out["workdir"], f"changes_{i}")
         merged.write.mode("overwrite").parquet(mpath)
