@@ -12,12 +12,11 @@ Layout:
                         saner LPM default)
     kgpipe.operators  — Spark operators: extract, parse, abbrev,
                         link, connected components, materialize,
-                        dedup, similarity, textops, multimodal
+                        graph traversal, sinks
     kgpipe.convert    — NT lines → abbreviated triples in one fused
                         stage (the reference's primary -a -j job)
-    kgpipe.pipeline   — stage orchestration with checkpoint/resume
-    kgpipe.streaming  — incremental ingest, watermarked windows,
-                        stateful sessionization
+    kgpipe.pipeline   — stage orchestration with checkpoint/resume;
+                        every run is a daily delta
     kgpipe.fixtures   — deterministic synthetic corpora (seed 42)
     kgpipe.session    — SparkSession factory
     kgpipe.io         — table-format shim (Parquet default)

@@ -10,11 +10,10 @@ Subcommands mirror the reference CLI surface
                abbreviate → parse → LDJ/NT output
                (ntto [-a] [-j] [-n S] FILE, ntto.go:144-211)
   run        — KG pipeline (extract→link→canonicalize→materialize),
-               run as a delta: only unseen urls are extracted and linked
+               run as a delta: only unseen urls are extracted and linked;
+               `run --explain` prints the extract stage's physical plan
+               without running it (ntto -c printed its shell command)
   dump-rules — print the active rule table, sorted (ntto -d)
-  explain    — print the physical plan of the extract stage without
-               running it (ntto -c printed its shell command)
-  incremental— process only new pages files (streaming AvailableNow)
   compact    — small-file compaction of a warehouse table (atomic
                directory swap; Iceberg rewrite_data_files in catalog
                mode)
@@ -109,13 +108,6 @@ def main(argv: list[str] | None = None) -> int:
     cp.add_argument("--target-mb", type=int, default=128, help="target file size (MiB)")
     cp.add_argument("--partition-by", default=None,
                     help="comma-separated hive partition columns of the table")
-
-    inc = sub.add_parser("incremental", help="ingest only new pages files")
-    inc.add_argument("--pages", required=True)
-    inc.add_argument("--out", required=True)
-    inc.add_argument("--checkpoint", required=True)
-    inc.add_argument("--rules", default=None)
-    inc.add_argument("--mode", choices=["lpm", "compat"], default="lpm")
 
     args = ap.parse_args(argv)
 
@@ -251,18 +243,15 @@ def main(argv: list[str] | None = None) -> int:
                 jaccard_threshold=args.jaccard,
             )
             if args.explain:
+                # the extract stage's own operator, on every page
+                from kgpipe.checkpoints import with_part_id
                 from kgpipe.nt.rules import parse_rules
-                from kgpipe.operators.abbrev import abbreviate_columns
-                from kgpipe.operators.extract import with_extracted_text
-                from kgpipe.operators.parse import parse_pages_to_triples
+                from kgpipe.operators.fused import fused_extract_parse_abbrev
 
-                chain = abbreviate_columns(
-                    parse_pages_to_triples(with_extracted_text(pages.select("url", "html"))),
-                    ["s", "p", "o"],
-                    parse_rules(cfg.rules_text),
-                    mode=cfg.mode,
-                )
-                chain.explain("formatted")
+                fused_extract_parse_abbrev(
+                    with_part_id(pages.select("url", "html"), "url", cfg.n_parts),
+                    parse_rules(cfg.rules_text), mode=cfg.mode, null=cfg.null_shortcut,
+                ).explain("formatted")
                 return 0
             res = run_pipeline(spark, pages, cfg)
             print({"counters": res.counters})
@@ -281,16 +270,6 @@ def main(argv: list[str] | None = None) -> int:
                 print({"table": args.table, "compacted": "via catalog rewrite_data_files"})
             else:
                 print({"table": args.table, "target_files": n})
-            return 0
-
-        if args.cmd == "incremental":
-            from kgpipe.streaming import incremental_triples
-
-            n = incremental_triples(
-                spark, args.pages, args.out, args.checkpoint,
-                _load_rules(args.rules), mode=args.mode,
-            )
-            print({"batches": n})
             return 0
     finally:
         if not pre_existing:

@@ -126,12 +126,6 @@ class TableIO:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
-        # a plain write to a name that previously held a bucketed
-        # table leaves the durable bucket-spec marker stale (dynamic
-        # partition overwrite replaces partition dirs, not root
-        # files) — clear it, or compact() would refuse the
-        # no-longer-bucketed table forever
-        self._clear_bucket_spec(name)
 
     def read(self, name: str, schema: str | None = None) -> DataFrame:
         """schema: optional DDL string. Required to round-trip tables
@@ -282,7 +276,6 @@ class TableIO:
         final = os.path.join(d, f"part-{uuid.uuid4().hex}-kgpipe.parquet")
         pq.write_table(table, tmp)
         os.rename(tmp, final)  # atomic on local fs
-        self._clear_bucket_spec(name)
 
     def read_small_rows(self, name: str) -> list[dict] | None:
         """Driver-side read of a small table as a list of row dicts —
@@ -309,103 +302,6 @@ class TableIO:
         for p in parts:
             out.extend(pq.read_table(p).to_pylist())
         return out
-
-    def _bucket_ident(self, name: str) -> str:
-        """Session-catalog identifier for a bucketed table, namespaced
-        by warehouse root so two TableIO instances with different
-        warehouses in one session cannot clobber each other's bucketing
-        metadata; backtick-quoted so the name never interpolates as
-        SQL."""
-        import hashlib
-        import re
-
-        tag = hashlib.md5(self.root.rstrip("/").encode()).hexdigest()[:8]
-        safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
-        return f"`kgpipe_b_{tag}_{safe}`"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_by: list[str],
-        n_buckets: int,
-        sort_by: list[str] | None = None,
-    ) -> None:
-        """Bucketed (and optionally sorted) table write: co-locates
-        rows by hash(bucket_by) at REST, so a join or aggregation on
-        the bucket key between same-bucketed tables runs with NO
-        exchange — the shuffle is paid once at write time instead of
-        per query. This is the on-disk layout a 100 TB edge/triple
-        store wants for entity-keyed work. Bucketing metadata lives
-        in the session catalog (saveAsTable, warehouse-namespaced
-        identifier); the files live under the warehouse root like
-        every other table."""
-        ident = self._bucket_ident(name)
-        self.spark.sql(f"drop table if exists {ident}")
-        w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_by)
-        if sort_by:
-            w = w.sortBy(*sort_by)
-        w.option("path", self.path(name)).format("parquet").saveAsTable(
-            ident.strip("`")
-        )
-        # durable bucket-spec marker NEXT TO the files: the session
-        # catalog's bucketing metadata dies with the session, but the
-        # one-file-per-bucket layout it paid for persists — compact()
-        # in a FRESH session must still refuse to rewrite it into a
-        # non-bucketed layout. Leading underscore keeps the marker
-        # invisible to parquet file listings.
-        self._write_marker(name, {
-            "bucket_by": list(bucket_by),
-            "n_buckets": int(n_buckets),
-            "sort_by": list(sort_by or []),
-        })
-
-    _BUCKET_MARKER = "_kgpipe_bucket_spec.json"
-
-    def _write_marker(self, name: str, spec: dict) -> None:
-        import json
-
-        fs, p = self._fs(f"{self.path(name)}/{self._BUCKET_MARKER}")
-        out = fs.create(p, True)
-        # writeBytes(String), not write(byte[]): py4j resolves the
-        # bytearray call to the write(int) overload and drops the data
-        out.writeBytes(json.dumps(spec, ensure_ascii=True))
-        out.close()
-
-    def _clear_bucket_spec(self, name: str) -> None:
-        """Remove the durable bucket marker and the session-catalog
-        bucket entry after a non-bucketed rewrite of `name`. Both
-        unconditionally: a full overwrite may have already wiped the
-        marker file while the catalog entry lives on."""
-        fs, p = self._fs(f"{self.path(name)}/{self._BUCKET_MARKER}")
-        if fs.exists(p):
-            fs.delete(p, False)
-        self.spark.sql(f"drop table if exists {self._bucket_ident(name)}")
-
-    def bucket_spec(self, name: str) -> dict | None:
-        """The durable bucket spec written by write_bucketed, or None
-        for unbucketed tables (or tables from older layouts)."""
-        import json
-
-        fs, p = self._fs(f"{self.path(name)}/{self._BUCKET_MARKER}")
-        if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            # commons-io (on Spark's classpath) — py4j cannot fill a
-            # Python bytearray in place through readFully
-            txt = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-            return json.loads(txt)
-        finally:
-            stream.close()
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a bucketed table THROUGH the catalog (a plain
-        spark.read.parquet of the same files loses the bucketing
-        metadata and re-shuffles)."""
-        return self.spark.table(self._bucket_ident(name))
 
     def table_bytes(self, name: str) -> int:
         """Total bytes of a table's data files (recursive, Hadoop FS —
@@ -463,12 +359,6 @@ class TableIO:
         hold — use the Iceberg catalog path there, whose
         rewrite_data_files is snapshot-safe on any store.
 
-        Refuses tables written with write_bucketed (checked via both
-        the session catalog and the durable _kgpipe_bucket_spec.json
-        marker, so a fresh session cannot silently flatten a bucketed
-        layout): re-run write_bucketed to compact those (it already
-        writes one file per bucket).
-
         With an Iceberg catalog configured, compaction is the
         catalog's job (`CALL catalog.system.rewrite_data_files`) —
         snapshot-safe, no reader disruption; returns the procedure's
@@ -494,14 +384,6 @@ class TableIO:
                 "(rename is copy+delete, not atomic) — configure an Iceberg "
                 "catalog (TableIO(catalog=...)) and compact through "
                 "rewrite_data_files instead"
-            )
-        if (
-            self.spark.catalog.tableExists(self._bucket_ident(name).strip("`"))
-            or self.bucket_spec(name) is not None
-        ):
-            raise ValueError(
-                f"compact: {name!r} is a bucketed table — re-run "
-                "write_bucketed instead"
             )
         import math
 
@@ -654,12 +536,6 @@ class TableIO:
             raise IOError(f"replace: rename {nxt_p} -> {live} failed")
         if had_live:
             fs.delete(aside, True)
-        # write() cleared the staged `name__next` bucket metadata, not
-        # `name`'s: a replace of a previously BUCKETED table must also
-        # drop the live ident's session-catalog entry and bucket-spec
-        # marker, or read_bucketed-preferring callers keep stale
-        # bucketed metadata — same class as the drop() fix (ADVICE r6)
-        self._clear_bucket_spec(name)
 
     # -- small json side-files (markers, applied-batch ledgers) --------
     def write_json_atomic(self, name: str, obj) -> None:
@@ -799,9 +675,3 @@ class TableIO:
             return
         fs, p = self._fs(self.path(name))
         fs.delete(p, True)
-        # the session-catalog bucketed ident (write_bucketed) must not
-        # outlive the files: a later non-bucketed rewrite of the same
-        # name would otherwise be read through stale bucketed metadata
-        # by read_bucketed-preferring callers — failing or returning
-        # wrong rows at action time
-        self.spark.sql(f"drop table if exists {self._bucket_ident(name)}")

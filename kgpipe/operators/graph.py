@@ -3,12 +3,9 @@ connected components (operators/cc.py builds canonical_map; these
 operators ANSWER questions over the materialized edges).
 
 Scale shape: one join + distinct per hop, shuffling on the join key.
-Over an edge table bucketed by its source key at rest
-(TableIO.write_bucketed) the per-hop join on the source key runs
-WITHOUT an exchange on the edge side: the shuffle was paid once at
-write time. The pipeline's own edges are laid out in batch layers
-instead (kgpipe.pipeline materialize stage), so a traversal over them
-shuffles the edge side once per hop.
+The pipeline's edges are laid out in batch layers (kgpipe.pipeline
+materialize stage), so a traversal over them shuffles the edge side
+once per hop.
 The frontier is localCheckpoint-ed per hop, so the iterative plan
 stays shallow (the CC lesson: iterative self-joins without lineage
 truncation grow exponentially — SURVEY.md §7 hard part 1).
@@ -55,7 +52,7 @@ def khop_frontier(
     visited = frontier
     for i in range(1, k + 1):
         nxt = (
-            _hop_join(frontier, e)
+            frontier.join(e, frontier["node"] == e["__s"])
             .select(F.col("__d").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
@@ -67,15 +64,6 @@ def khop_frontier(
         visited = visited.union(nxt)
         frontier = nxt
     return visited
-
-
-def _hop_join(frontier: DataFrame, e: DataFrame) -> DataFrame:
-    """The per-hop frontier ⋈ edges join, factored out so plan tests
-    can pin the docstring promise: over a src-bucketed edge table
-    (TableIO.write_bucketed → TableIO.read_bucketed) the EDGE side
-    joins with no Exchange — only the (small) frontier shuffles to the
-    bucket layout (tests/test_graph.py)."""
-    return frontier.join(e, frontier["node"] == e["__s"])
 
 
 def pagerank(
@@ -101,14 +89,14 @@ def pagerank(
     (~1e-16 per aggregation) can never compound into a visible
     difference between runs or between Spark and an SQL oracle.
 
-    Scale: each iteration is one join on src (exchange-free over a
-    src-bucketed edge table) + one aggregation of E rows; rank state
-    is one double per node. The node universe AND the out-degree
-    table are checkpointed ONCE (both are n_nodes rows); the edge
-    frame itself is deliberately NOT checkpointed — for table-backed
-    edges a parquet re-scan per iteration is cheaper than copying the
-    whole edge set to local storage, and callers holding an expensive
-    DERIVED edge plan should checkpoint it before calling."""
+    Scale: each iteration is one join on src + one aggregation of E
+    rows; rank state is one double per node. The node universe AND
+    the out-degree table are checkpointed ONCE (both are n_nodes
+    rows); the edge frame itself is deliberately NOT checkpointed —
+    for table-backed edges a parquet re-scan per iteration is cheaper
+    than copying the whole edge set to local storage, and callers
+    holding an expensive DERIVED edge plan should checkpoint it
+    before calling."""
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
     nodes = (
         e.select(F.col("__s").alias("node"))

@@ -1287,13 +1287,13 @@ def _stage_materialize_incremental(
     == new_eff(u) — pinned equal to a full recompute in test_pipeline.
 
     Falls back to one full rebuild write when: the edge table or diff
-    base is missing, the layout is pre-layering (edges bucketed by a
-    warehouse written before the single path), a rebuild
-    batch is pending (re-crawl — retractions invalidate merge-only
-    relabeling), n_buckets changed, the diff exceeds the broadcast
-    budget, or label changes would rewrite more than
-    REWRITE_DIR_FRACTION of the existing dirs (a merge storm — one
-    sequential write beats thousands of staged swaps).
+    base is missing, a rebuild batch is pending (re-crawl or an old
+    warehouse's layout rebuild — retractions invalidate merge-only
+    relabeling, and the old edge layout is replaced), n_buckets
+    changed, the diff exceeds the broadcast budget, or label changes
+    would rewrite more than REWRITE_DIR_FRACTION of the existing dirs
+    (a merge storm — one sequential write beats thousands of staged
+    swaps).
 
     `link` carries the counts the link stage observed during its own
     writes in this run: with one pending batch — the one it linked —
@@ -1321,7 +1321,6 @@ def _stage_materialize_incremental(
         # path (MERGE) is the cluster answer; here rebuild
         io.catalog is not None
         or not io.exists("edges")
-        or io.bucket_spec("edges") is not None
         or any(b.startswith("rebuild") for b in pending)
         or state.get("n_buckets") != cfg.n_buckets
         or state.get("layout") != MAT_LAYOUT_VERSION

@@ -66,38 +66,6 @@ def test_iceberg_roundtrip(spark, tmp_path):
     assert not io.exists("t")
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the same key join WITHOUT any exchange:
-    the shuffle was paid at write time (the 100 TB layout for
-    entity-keyed joins). Broadcast is disabled for the assertion so
-    the plan must rely on the bucketing, not on table size."""
-    io = TableIO(spark, str(tmp_path))
-    a = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    io.write_bucketed(a, "bk_a", ["k"], 8, sort_by=["k"])
-    io.write_bucketed(b, "bk_b", ["k"], 8, sort_by=["k"])
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = io.read_bucketed("bk_a").join(io.read_bucketed("bk_b"), "k")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert j.count() == 1000
-        # unbucketed read of the same data DOES shuffle — the contrast
-        pa = spark.read.parquet(io.path("bk_a"))
-        pb = spark.read.parquet(io.path("bk_b"))
-        plan2 = pa.join(pb, "k")._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("drop table if exists bk_a")
-        spark.sql("drop table if exists bk_b")
-
-
 def test_compact_small_files(spark, tmp_path):
     """Small-file compaction: a table fragmented into ~40 tiny files
     collapses to the target count with identical content, and readers
@@ -196,38 +164,6 @@ def test_compact_refuses_object_store(spark):
     io = TableIO(spark, "s3a://bucket/warehouse")
     with pytest.raises(ValueError, match="Iceberg"):
         io.compact("edges")
-
-
-def test_compact_refuses_bucketed_fresh_session(spark, tmp_path):
-    """The bucketed-table refusal must survive a session restart: the
-    session catalog's entry is gone, but the durable bucket-spec
-    marker still identifies the layout."""
-    io = TableIO(spark, str(tmp_path))
-    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    io.write_bucketed(df, "bt", ["k"], 4)
-    try:
-        spec = io.bucket_spec("bt")
-        assert spec == {"bucket_by": ["k"], "n_buckets": 4, "sort_by": []}
-        # simulate a fresh session: drop only the catalog entry
-        spark.sql(f"drop table if exists {io._bucket_ident('bt')}")
-        with pytest.raises(ValueError, match="bucketed"):
-            io.compact("bt")
-    finally:
-        spark.sql(f"drop table if exists {io._bucket_ident('bt')}")
-
-
-def test_plain_overwrite_clears_stale_bucket_marker(spark, tmp_path):
-    """A non-bucketed rewrite of a formerly bucketed table must clear
-    the durable bucket marker — otherwise compact() refuses the table
-    forever even though the layout is plain parquet."""
-    io = TableIO(spark, str(tmp_path))
-    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    io.write_bucketed(df, "rw", ["k"], 4)
-    assert io.bucket_spec("rw") is not None
-    io.write(df, "rw", mode="overwrite")  # plain rewrite
-    assert io.bucket_spec("rw") is None
-    assert io.compact("rw", target_file_bytes=1 << 30) == 1
-    assert io.read("rw").count() == 100
 
 
 def test_replace_swap_and_crash_recovery(spark, tmp_path):
@@ -344,25 +280,6 @@ def test_patch_partitions_crash_recovery(spark, tmp_path):
     got = sorted((r.pt, r.v) for r in io.read("t", "pt int, v string").collect())
     assert got == [(0, "new0"), (1, "old1")]
     assert not (tmp_path / "t__patch.json").exists()
-
-
-def test_drop_clears_bucketed_catalog_entry(spark, tmp_path):
-    """ADVICE r5: TableIO.drop deleted only the directory, leaving the
-    session-catalog bucketed ident alive — a later non-bucketed
-    rewrite under the same name was then read through stale bucketed
-    metadata by read_bucketed-preferring callers. drop must take the
-    catalog entry with the files."""
-    io = TableIO(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame([(i, i % 3) for i in range(20)], "k long, v long")
-    io.write_bucketed(df, "t", bucket_by=["k"], n_buckets=4)
-    ident = io._bucket_ident("t").strip("`")
-    assert spark.catalog.tableExists(ident)
-    io.drop("t")
-    assert not spark.catalog.tableExists(ident)
-    # a rewrite under the same name with a partitioned (non-bucketed)
-    # layout must read cleanly through the plain-parquet path
-    io.write(df.withColumn("b", F.lit("x")), "t", partition_by=["b"])
-    assert io.read("t").count() == 20
 
 
 def test_write_small_rows_roundtrip_matches_spark_writer(spark, tmp_path):

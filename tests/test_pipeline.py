@@ -1331,3 +1331,67 @@ def test_delta_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("kgpipe-delta-budget"))
     assert 0 < n_jobs <= DELTA_JOB_BUDGET, n_jobs
+
+
+def test_old_bucketed_edge_table_migrates(spark, tmp_path):
+    """A warehouse whose edge table still has the layout the old full
+    path wrote — Spark's bucketBy(canon_s) with the bucket-spec marker
+    beside it, no b_fp= layers — and whose link config predates the
+    extract digest takes the layout rebuild on its next delta, which
+    rewrites the edges as batch layers equal to a fresh build."""
+    import json
+
+    import kgpipe.pipeline as pl
+
+    all_pages = gen_pages(60)
+    wh = tmp_path / "wh_bucketed"
+    cfg = _cfg(wh)
+    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
+
+    # rewrite the edges the way the old full path wrote them; the
+    # materialize state file stays as it is
+    io = pl.TableIO(spark, str(wh))
+    edges = io.read("edges", pl.EDGES_DDL).localCheckpoint()
+    io.drop("edges")
+    ident = "kgpipe_old_bucketed_edges"
+    try:
+        (
+            edges.repartition(cfg.n_buckets, F.col("canon_s")).write.mode("overwrite")
+            .bucketBy(cfg.n_buckets, "canon_s").sortBy("canon_s")
+            .option("path", io.path("edges")).format("parquet").saveAsTable(ident)
+        )
+    finally:
+        spark.sql(f"drop table if exists {ident}")
+    (wh / "edges" / "_kgpipe_bucket_spec.json").write_text(json.dumps(
+        {"bucket_by": ["canon_s"], "n_buckets": cfg.n_buckets, "sort_by": ["canon_s"]}
+    ))
+    assert not pl._partition_values(io, "edges", "b_fp")
+    conf = io.read_json(pl.LINK_CONFIG)
+    del conf["extract"]
+    io.write_json_atomic(pl.LINK_CONFIG, conf)
+
+    res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
+    layers = pl._partition_values(io, "edges", "b_fp")
+    assert layers == ["full"]
+    assert not [f for f in (wh / "edges").iterdir() if f.suffix == ".parquet"]
+    ref = run_pipeline(
+        spark, spark.createDataFrame(all_pages).repartition(3), _cfg(tmp_path / "ref_bucketed")
+    )
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+
+def test_run_explain_shows_the_fused_extract_plan(spark, tmp_path, capsys):
+    """`kgpipe run --explain` prints the plan of the operator the
+    extract stage runs: the fused extract/parse/abbreviate, one
+    MapInPandas and no pandas-UDF evaluation, without running it."""
+    from kgpipe.cli import main
+
+    pages = tmp_path / "pages"
+    spark.createDataFrame(gen_pages(5)).write.parquet(str(pages))
+    wh = tmp_path / "wh_explain"
+    rc = main(["run", "--pages", str(pages), "--warehouse", str(wh), "--explain"])
+    assert rc == 0
+    plan = capsys.readouterr().out
+    assert "MapInPandas" in plan
+    assert "ArrowEvalPython" not in plan
+    assert not wh.exists()
