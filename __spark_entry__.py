@@ -1,11 +1,12 @@
 """Driver contract for the kgpipe PySpark engine.
 
 `entry(spark)` runs the flagship mini KG pipeline on sf0.001.
-`queries()` exposes the KG-semantics operators (parse, abbreviate,
-expand, extract, canonicalize, traverse) as (spark, sf_dir)
-callables; `oracle_sql()` gives, for every one of them, the
-DuckDB-equivalent SQL its output is compared against at sf0.01 (row
-count + schema + order-insensitive value hash).
+`queries()` exposes every SURVEY.md §2 operator as a (spark, sf_dir)
+callable; `oracle_sql()` gives the DuckDB-equivalent SQL the driver
+compares against at sf0.01 (row count + schema + order-insensitive
+value hash). Every query has an oracle: hash-seeded operators
+(minhash/simhash LSH) are checked through their *verified* outputs
+(exact Jaccard, planted duplicates, full-probe IVF).
 
 Column names are aliased identically on both sides (driver sorts
 columns by name before hashing).
@@ -23,8 +24,26 @@ RULES_DDL_PATH = None  # rules are embedded (kgpipe.fixtures.RULES_16_TEXT)
 # shared builders
 # ---------------------------------------------------------------------------
 
+_TITLE_P = "http://purl.org/dc/elements/1.1/title"
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Unlock parallelism for CPU-heavy chains over tiny tables: a
+    single-row-group parquet file arrives as ONE input split no
+    matter what minPartitionNum says (row groups don't split), which
+    serializes the whole downstream expression chain onto one core.
+    The explicit repartition is a trivial shuffle of small rows here;
+    at real scale inputs have many row groups and the same operators
+    parallelize off the scan alone."""
+    return df.repartition(spark.sparkContext.defaultParallelism)
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _nt_uri_lines(docs: DataFrame) -> DataFrame:
@@ -171,6 +190,57 @@ def q_pagerank_3(spark, sf_dir):
     return pr.select("node", F.round(F.col("pr"), 6).alias("pr"))
 
 
+def q_hash_sample(spark, sf_dir):
+    """Reproducible corpus sampling (operators/sample): membership is
+    a pure function of the key — the engine-portable Knuth bucket
+    here, so DuckDB computes the IDENTICAL sample — with nested
+    fractions (10% ⊆ 30%) surfaced as a split label per kept row."""
+    from kgpipe.operators.sample import hash_sample, knuth_bucket
+
+    docs = _docs(spark, sf_dir).select("doc_id")
+    b = knuth_bucket(F.col("doc_id"))
+    kept = hash_sample(docs.withColumn("bucket", b), F.col("bucket"), 0.3)
+    return kept.select(
+        "doc_id",
+        "bucket",
+        F.when(F.col("bucket") < 100_000, F.lit("holdout"))
+        .otherwise(F.lit("train"))
+        .alias("split"),
+    )
+
+
+def q_tfidf_top_terms(spark, sf_dir):
+    """Per-document top-3 terms by tf-idf (operators/textops) —
+    ranked on the ROUNDED score (6dp) with term-asc tie-break, so
+    ranking can never flip on a last-ulp ln() difference between
+    engines."""
+    from kgpipe.operators.textops import tfidf_top_terms
+
+    return tfidf_top_terms(_docs(spark, sf_dir), "doc_id", "text", top_k=3)
+
+
+def q_contamination_flags(spark, sf_dir):
+    """Benchmark decontamination (operators/textops): documents
+    sharing ≥2 distinct word 3-grams with a pseudo eval set (every
+    97th document). The benchmark gram set broadcasts; the corpus
+    side is one narrow explode + map-side join — the shape that
+    sweeps 10^12 docs against a fixed eval suite."""
+    from kgpipe.operators.textops import contamination_flags
+
+    docs = _docs(spark, sf_dir)
+    bench = docs.where(F.col("doc_id") % 97 == 0)
+    return contamination_flags(docs, "doc_id", "text", bench, "text", k=3, min_shared=2)
+
+
+def q_boilerplate_ngrams(spark, sf_dir):
+    """Corpus-hygiene boilerplate detector (operators/textops): word
+    2-grams present in ≥5% of documents — what a training-data
+    cleaning pass filters against."""
+    from kgpipe.operators.textops import boilerplate_ngrams
+
+    return boilerplate_ngrams(_docs(spark, sf_dir), "doc_id", "text", k=2, min_doc_frac=0.05)
+
+
 def q_abbrev_compat_lines(spark, sf_dir):
     """The `ntto -a` surface: raw-line compat abbreviation through the
     compiled single-pass trie engine (kgpipe.nt.rules), over the full
@@ -253,6 +323,254 @@ def q_sameas_canonical(spark, sf_dir):
     return canonical_map_for_nodes(nodes, edges).select("uri", "canon_id")
 
 
+def q_exact_dedup_docs(spark, sf_dir):
+    from kgpipe.operators.dedup import distinct_documents
+
+    return distinct_documents(
+        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text"
+    ).select("doc_id")
+
+
+def q_doc_fingerprints(spark, sf_dir):
+    from kgpipe.operators.textops import doc_fingerprint
+
+    return _docs(spark, sf_dir).select(
+        "doc_id", doc_fingerprint(F.col("text")).alias("fingerprint")
+    )
+
+
+def q_winnowing_fps(spark, sf_dir):
+    """Rolling-hash (winnowing) fingerprints — the partial-overlap
+    detector; oracle reproduces the md5-hex window-min exactly."""
+    from kgpipe.operators.textops import winnowing_fingerprint_rows
+
+    return winnowing_fingerprint_rows(
+        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text", k=8, w=4
+    )
+
+
+def q_token_counts(spark, sf_dir):
+    from kgpipe.operators.textops import token_count, whitespace_token_count
+
+    return _docs(spark, sf_dir).select(
+        "doc_id",
+        token_count(F.col("text")).alias("n_bpe_tokens"),
+        whitespace_token_count(F.col("text")).alias("n_ws_tokens"),
+    )
+
+
+def q_quality_scores(spark, sf_dir):
+    from kgpipe.operators.textops import quality_score
+
+    return _docs(spark, sf_dir).select(
+        "doc_id", quality_score(F.col("text")).alias("quality")
+    )
+
+
+def q_lang_id(spark, sf_dir):
+    from kgpipe.operators.textops import lang_id
+
+    return _docs(spark, sf_dir).select("doc_id", lang_id(F.col("text")).alias("lang_pred"))
+
+
+def q_ngram_jaccard(spark, sf_dir):
+    from kgpipe.operators.dedup import ngram_jaccard_pairs
+
+    pairs = ngram_jaccard_pairs(
+        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text", k=2, threshold=0.2
+    )
+    return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
+
+
+def q_minhash_lsh_pairs(spark, sf_dir):
+    """Oracle-gated against the EXACT 2-gram Jaccard pair set at
+    J ≥ 0.8: the exact-Jaccard verification step makes every emitted
+    pair ground-truth-correct, and the banding's recall at this
+    threshold (P(miss per pair) ≈ 2e-4, deterministic given the
+    data) is complete on the sf0.01 corpus — verified side-by-side
+    before promoting this from a rows-only check."""
+    from kgpipe.operators.dedup import minhash_dup_pairs
+
+    # r=4 rows/band targets the J≥0.8 regime (P(match|J=0.8)≈0.9998,
+    # P(match|J=0.3)≈0.12) — wide bands at low thresholds flood the
+    # candidate stage with O(n²) pairs
+    pairs = minhash_dup_pairs(
+        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text",
+        num_hashes=64, bands=16, shingle_k=2, jaccard_threshold=0.8,
+    )
+    return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
+
+
+def _planted_offset_guard(df, id_col, offset=100_000):
+    """Plan-side guard for the planted-duplicate corpora: the closed
+    -form oracles assume real ids never reach the planted range
+    (id + offset), so an id ≥ offset would collide two different rows
+    under one id and silently diverge query from oracle (ADVICE r6,
+    low). assert_true inside a filter survives column pruning and
+    fails the action with a named error instead. Safe at every
+    sandbox sf (≤5000 docs); this makes the scale trap diagnose
+    itself."""
+    ok = F.assert_true(
+        F.col(id_col) < F.lit(offset),
+        F.concat(
+            F.lit(f"planted-offset collision: {id_col}="),
+            F.col(id_col).cast("string"),
+            F.lit(f" >= {offset}"),
+        ),
+    )
+    return df.where(ok.isNull())
+
+
+def q_simhash_pairs(spark, sf_dir):
+    """Planted-duplicate corpus (the emb_neardup_lsh move, r5 verdict
+    missing #3): per doc_id, a synthetic text whose word grams are
+    UNIQUE to that doc, plus an exact duplicate at doc_id + 100000.
+    Identical texts give identical simhashes (hamming 0 — banding
+    recall 1.0 by pigeonhole), and cross-doc gram sets are disjoint so
+    cross simhashes are independent 64-bit values (P(hamming ≤ 3) ≈
+    2.4e-15 per pair — verified zero at sf0.01 AND sf0.1). Expected
+    pair set is therefore closed-form: exactly (i, i+100000, 0) per
+    doc — a real value oracle for the banding + capped-bucket + pair
+    machinery. simhash over REAL text (nonzero hammings included) is
+    pinned in pytest by a brute-force hamming twin (test_dedup)."""
+    from kgpipe.operators.dedup import simhash_near_pairs
+
+    ids = _docs(spark, sf_dir).select("doc_id")
+    text = F.concat_ws(
+        " ",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(11)),
+            lambda j: F.concat(
+                F.lit("t"), F.col("doc_id").cast("string"), F.lit("x"), j.cast("string")
+            ),
+        ),
+    )
+    docs = _planted_offset_guard(ids.select("doc_id", text.alias("text")), "doc_id")
+    dup = docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
+    # max_hamming=3 is the guaranteed-recall radius of the 4-band
+    # blocking (pigeonhole); simhash_near_pairs raises on anything
+    # wider to avoid silently incomplete pair sets
+    return simhash_near_pairs(
+        _spread(spark, docs.union(dup)), "doc_id", "text", max_hamming=3, shingle_k=2
+    )
+
+
+def q_ann_bruteforce(spark, sf_dir):
+    from kgpipe.operators.similarity import cosine_topk
+
+    emb = _emb(spark, sf_dir)
+    return cosine_topk(emb.where(F.col("vec_id") < 50), emb, k=3).select(
+        "query_id", "neighbor_id", "rank", F.round("score", 4).alias("score")
+    )
+
+
+def q_ann_ivf_fullprobe(spark, sf_dir):
+    """IVF with nprobe covering all clusters ⇒ must equal brute force
+    (same oracle SQL as q_ann_bruteforce)."""
+    from kgpipe.operators.similarity import ivf_topk
+
+    emb = _emb(spark, sf_dir)
+    return ivf_topk(
+        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50, nprobe=10**6
+    ).select(
+        "query_id", "neighbor_id", "rank", F.round("score", 4).alias("score")
+    )
+
+
+def q_ann_ivf(spark, sf_dir):
+    """Approximate path at the ENGINE DEFAULT operating point
+    (ivf_topk nprobe=24, set from the r7 recall-vs-wall sweep —
+    recall@3 0.87 vs brute force at sf0.1), oracle-gated: the IVF
+    algorithm is deterministic given the corpus, so its SQL twin
+    emulates the ACTUAL probe-limited search (_IVF_NPROBE_ORACLE).
+    At sf0.01 (10 clusters) the default covers every cluster; the
+    probe-SELECTION logic stays discriminatively gated by
+    ann_ivf_probelim below."""
+    from kgpipe.operators.similarity import ivf_topk
+
+    emb = _emb(spark, sf_dir)
+    return ivf_topk(
+        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50
+    ).select("query_id", "neighbor_id", "rank")
+
+
+def q_ann_ivf_probelim(spark, sf_dir):
+    """Deliberately probe-LIMITED IVF (nprobe=3 < n_clusters at every
+    sf): the gate that proves the top-nprobe probe selection and the
+    candidate restriction actually bound the search — the engine-
+    default query covers all sf0.01 clusters and can't see a probe-
+    selection bug there."""
+    from kgpipe.operators.similarity import ivf_topk
+
+    emb = _emb(spark, sf_dir)
+    return ivf_topk(
+        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50, nprobe=3
+    ).select("query_id", "neighbor_id", "rank")
+
+
+def q_ann_ivf_refined_fullprobe(spark, sf_dir):
+    """Lloyd-refined IVF (refine_iters=2) probing ALL clusters ⇒ must
+    still equal brute force — the k-means training path is hash-gated
+    against the same DuckDB oracle as the unrefined variants."""
+    from kgpipe.operators.similarity import ivf_topk
+
+    emb = _emb(spark, sf_dir)
+    return ivf_topk(
+        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50,
+        nprobe=10**6, refine_iters=2,
+    ).select(
+        "query_id", "neighbor_id", "rank", F.round("score", 4).alias("score")
+    )
+
+
+def q_ann_ivf_refined(spark, sf_dir):
+    """Refined approximate path (nprobe=3, refine_iters=2),
+    oracle-gated since r6: the SQL twin unrolls the two Lloyd
+    iterations (assignment → 9-decimal-rounded means → empty-cluster
+    carry) and then emulates the probe-limited search
+    (_IVF_REFINED_ORACLE)."""
+    from kgpipe.operators.similarity import ivf_topk
+
+    emb = _emb(spark, sf_dir)
+    return ivf_topk(
+        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50,
+        nprobe=3, refine_iters=2,
+    ).select("query_id", "neighbor_id", "rank")
+
+
+def q_emb_neardup_exact(spark, sf_dir):
+    """Embedding-cosine near-dup, exact path: all pairs ≥ threshold
+    (oracle = DuckDB cross-join cosine). Threshold sits inside the
+    synthetic corpus's similarity range so the gate checks real
+    pairs, not an empty set."""
+    from kgpipe.operators.similarity import cosine_pairs_exact
+
+    return cosine_pairs_exact(_spread(spark, _emb(spark, sf_dir)), threshold=0.4)
+
+
+def q_emb_neardup_lsh(spark, sf_dir):
+    """Embedding-cosine near-dup, LSH scale path (random-hyperplane
+    signatures, banded buckets, exact-cosine verification). The
+    corpus is augmented with exact duplicates (vec_id + 100000), so
+    the expected pair set is closed-form: identical vectors share
+    every band (deterministic recall 1.0) and nothing else in the
+    synthetic data reaches cos 0.95 — giving this LSH query a real
+    value oracle instead of a rows-only check."""
+    from kgpipe.operators.similarity import cosine_neardup_pairs
+
+    emb = _planted_offset_guard(
+        _emb(spark, sf_dir).select("vec_id", "embedding"), "vec_id"
+    )
+    dup = emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
+    # 8-bit bands: 256 bucket values per band keeps buckets ~n/256
+    # (well under the cap); identical vectors share every band, so
+    # recall for the oracle's pair set is deterministic
+    return cosine_neardup_pairs(
+        _spread(spark, emb.union(dup)),
+        threshold=0.95, n_bits=32, n_bands=4,
+    )
+
+
 def q_extract_html(spark, sf_dir):
     """Real HTML extractor over synthesized pages; oracle constructs
     the expected text directly from the template."""
@@ -266,6 +584,259 @@ def q_extract_html(spark, sf_dir):
     ).cast("binary")
     pages = docs.select(F.col("doc_id"), html.alias("html"))
     return with_extracted_text(pages).select("doc_id", "text")
+
+
+# --- generic operator coverage over the TPC-H-ish tables ---------------
+
+def q_lineitem_agg(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return (
+        li.where(F.col("l_shipdate") <= "1998-09-02")
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
+            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
+
+
+def q_revenue_by_nation(spark, sf_dir):
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    return (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+             F.count(F.lit(1)).alias("n_orders"))
+        .orderBy("n_name")
+    )
+
+
+def q_topk_orders_per_customer(spark, sf_dir):
+    from pyspark.sql import Window
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
+    return (
+        o.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= 3)
+        .select("o_custkey", "o_orderkey", "rk")
+    )
+
+
+def q_events_agg(spark, sf_dir):
+    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return (
+        e.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+            F.countDistinct("user_id").alias("n_users"),
+        )
+        .orderBy("event_type")
+    )
+
+
+def q_asof_click_view(spark, sf_dir):
+    """As-of join: each click event gets the latest earlier-or-equal
+    view event's value per user (window carry-forward impl)."""
+    from kgpipe.operators.temporal import asof_join
+
+    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    left = e.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
+    right = (
+        e.where(F.col("event_type") == "view")
+        .groupBy("user_id", "ts")
+        .agg(F.round(F.max("value"), 4).alias("view_value"))
+    )
+    return asof_join(left, right, on="ts", by="user_id").select(
+        "user_id", "event_id", "view_value"
+    )
+
+
+def q_sessionize_events(spark, sf_dir):
+    from kgpipe.operators.temporal import sessionize
+
+    e = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts", "event_id")
+    return sessionize(e, gap_minutes=30, tiebreak_col="event_id").select(
+        "user_id", "event_id", "session_seq"
+    )
+
+
+def q_rollup_orders(spark, sf_dir):
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    return (
+        o.rollup("o_orderpriority", "o_orderstatus")
+        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+             F.count(F.lit(1)).alias("n"))
+    )
+
+
+def q_pivot_order_status(spark, sf_dir):
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    statuses = ["O", "F", "P"]
+    aggs = [
+        F.round(F.sum(F.when(F.col("o_orderstatus") == s, F.col("o_totalprice")).otherwise(F.lit(0.0))), 2).alias(f"rev_{s}")
+        for s in statuses
+    ]
+    return o.groupBy("o_orderpriority").agg(*aggs).orderBy("o_orderpriority")
+
+
+def q_price_quantiles(spark, sf_dir):
+    """Exact interpolated percentiles per group (Spark `percentile`
+    ≡ DuckDB `quantile_cont`)."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return (
+        li.groupBy("l_returnflag")
+        .agg(
+            F.round(F.percentile("l_extendedprice", F.lit(0.25)), 4).alias("p25"),
+            F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("p50"),
+            F.round(F.percentile("l_extendedprice", F.lit(0.75)), 4).alias("p75"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+def q_cube_orders(spark, sf_dir):
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    return o.cube("o_orderstatus", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+
+def q_string_funcs(spark, sf_dir):
+    """String-function surface over a real table, oracle-gated:
+    case, length, substring, concat, padding, reverse, split."""
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    return c.select(
+        "c_custkey",
+        F.upper("c_mktsegment").alias("seg_upper"),
+        F.lower("c_name").alias("name_lower"),
+        F.length("c_name").alias("name_len"),
+        F.substring("c_name", 1, 8).alias("name_prefix"),
+        F.concat_ws("|", "c_mktsegment", F.col("c_custkey").cast("string")).alias("seg_key"),
+        F.lpad(F.col("c_custkey").cast("string"), 10, "0").alias("key_pad"),
+        F.reverse("c_mktsegment").alias("seg_rev"),
+        F.split("c_name", "#").getItem(1).alias("name_num"),
+        F.replace(F.col("c_name"), F.lit("Customer"), F.lit("Cust")).alias("name_short"),
+    )
+
+
+def q_date_funcs(spark, sf_dir):
+    """Calendar-function surface over the orders timestamps."""
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    return o.select(
+        "o_orderkey",
+        F.year("o_orderdate").alias("yr"),
+        F.quarter("o_orderdate").alias("qtr"),
+        F.month("o_orderdate").alias("mon"),
+        F.dayofmonth("o_orderdate").alias("dom"),
+        F.trunc("o_orderdate", "month").alias("month_start"),
+        F.last_day("o_orderdate").alias("month_end"),
+        F.datediff(F.col("o_orderdate"), F.lit("1995-01-01")).alias("days_since"),
+    )
+
+
+def q_array_funcs(spark, sf_dir):
+    """Array-function surface over the embedding column (the shape
+    every vector pipeline manipulates): size, extrema, slicing,
+    ordered folds."""
+    e = _emb(spark, sf_dir)
+    vec = F.col("embedding").cast("array<double>")
+    return e.select(
+        "vec_id",
+        F.size("embedding").alias("dim"),
+        F.round(F.array_max(vec), 4).alias("vmax"),
+        F.round(F.array_min(vec), 4).alias("vmin"),
+        F.round(F.element_at(vec, 1), 4).alias("first"),
+        F.round(
+            F.aggregate(F.slice(vec, 1, 4), F.lit(0.0), lambda a, x: a + x), 4
+        ).alias("head_sum"),
+        F.round(F.element_at(F.array_sort(vec), 3), 4).alias("third_smallest"),
+    )
+
+
+def q_json_funcs(spark, sf_dir):
+    """JSON-function surface over the events props column (real JSON
+    strings): path extraction and typed parse."""
+    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return e.select(
+        "event_id",
+        F.get_json_object("props", "$.k").cast("long").alias("k_extracted"),
+        F.from_json("props", "k long").getField("k").alias("k_parsed"),
+        (F.get_json_object("props", "$.k").cast("long") % 10).alias("k_mod"),
+    )
+
+
+def q_window_funcs(spark, sf_dir):
+    """Window-function surface beyond row_number: lag/lead, rank with
+    ties, dense_rank, cumulative aggregates, ntile."""
+    from pyspark.sql import Window
+
+    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    wv = Window.partitionBy("user_id").orderBy(F.col("value").desc(), F.col("event_id"))
+    return e.select(
+        "user_id",
+        "event_id",
+        F.round(F.lag("value").over(w), 4).alias("prev_value"),
+        F.round(F.lead("value").over(w), 4).alias("next_value"),
+        F.rank().over(wv).alias("value_rank"),
+        F.dense_rank().over(wv).alias("value_dense_rank"),
+        F.round(F.sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 4).alias("cum_value"),
+        F.ntile(4).over(w).alias("quartile"),
+    )
+
+
+def q_orders_set_algebra(spark, sf_dir):
+    """Distinct set algebra (INTERSECT / EXCEPT) on top of the
+    semi/anti joins covered by customer_set_ops."""
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    a = o.where(F.col("o_orderstatus") == "O").select("o_custkey")
+    b = o.where(F.col("o_orderstatus") == "F").select("o_custkey")
+    return (
+        a.intersect(b).withColumn("bucket", F.lit("both"))
+        .union(a.subtract(b).withColumn("bucket", F.lit("open_only")))
+        .union(b.subtract(a).withColumn("bucket", F.lit("filled_only")))
+    )
+
+
+def q_grouping_sets_orders(spark, sf_dir):
+    """Explicit GROUPING SETS + grouping_id — the generalization
+    rollup/cube are sugar for; completes the multi-dimensional agg
+    surface."""
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    return (
+        o.groupingSets(
+            [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
+            "o_orderstatus", "o_orderpriority",
+        )
+        .agg(
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+            F.count(F.lit(1)).alias("n"),
+            F.grouping_id().alias("gid"),
+        )
+    )
+
+
+def q_customer_set_ops(spark, sf_dir):
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    with_orders = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey")
+    no_orders = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey")
+    return (
+        with_orders.withColumn("has_orders", F.lit(True))
+        .union(no_orders.withColumn("has_orders", F.lit(False)))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -293,12 +864,177 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curie_roundtrip": q_curie_roundtrip,
         "khop_2": q_khop_2,
         "pagerank_3": q_pagerank_3,
+        "hash_sample": q_hash_sample,
+        "tfidf_top_terms": q_tfidf_top_terms,
+        "boilerplate_ngrams": q_boilerplate_ngrams,
+        "contamination_flags": q_contamination_flags,
         "abbrev_compat_lines": q_abbrev_compat_lines,
         "top_predicates": q_top_predicates,
         "triples_distinct": q_triples_distinct,
         "sameas_canonical": q_sameas_canonical,
+        "exact_dedup_docs": q_exact_dedup_docs,
+        "doc_fingerprints": q_doc_fingerprints,
+        "winnowing_fps": q_winnowing_fps,
+        "token_counts": q_token_counts,
+        "quality_scores": q_quality_scores,
+        "lang_id": q_lang_id,
+        "ngram_jaccard": q_ngram_jaccard,
+        "minhash_lsh_pairs": q_minhash_lsh_pairs,
+        "simhash_pairs": q_simhash_pairs,
+        "ann_bruteforce": q_ann_bruteforce,
+        "ann_ivf_fullprobe": q_ann_ivf_fullprobe,
+        "ann_ivf": q_ann_ivf,
+        "ann_ivf_probelim": q_ann_ivf_probelim,
+        "ann_ivf_refined_fullprobe": q_ann_ivf_refined_fullprobe,
+        "ann_ivf_refined": q_ann_ivf_refined,
+        "emb_neardup_exact": q_emb_neardup_exact,
+        "emb_neardup_lsh": q_emb_neardup_lsh,
         "extract_html": q_extract_html,
+        "lineitem_agg": q_lineitem_agg,
+        "revenue_by_nation": q_revenue_by_nation,
+        "topk_orders_per_customer": q_topk_orders_per_customer,
+        "events_agg": q_events_agg,
+        "customer_set_ops": q_customer_set_ops,
+        "string_funcs": q_string_funcs,
+        "date_funcs": q_date_funcs,
+        "array_funcs": q_array_funcs,
+        "json_funcs": q_json_funcs,
+        "window_funcs": q_window_funcs,
+        "orders_set_algebra": q_orders_set_algebra,
+        "grouping_sets_orders": q_grouping_sets_orders,
+        "asof_click_view": q_asof_click_view,
+        "sessionize_events": q_sessionize_events,
+        "rollup_orders": q_rollup_orders,
+        "price_quantiles": q_price_quantiles,
+        "cube_orders": q_cube_orders,
+        "pivot_order_status": q_pivot_order_status,
     }
+
+
+# --- IVF approximate-path oracles (r5 verdict missing #3) -----------
+# The IVF algorithm is DETERMINISTIC given the corpus — stride-sampled
+# centroids, nearest-centroid assignment (tie: highest sim, lowest
+# centroid id), top-nprobe probe selection, candidate top-k — so the
+# APPROXIMATE path has an exact SQL twin: emulate the algorithm, not
+# just its ideal answer. Every float comparison that Spark performs
+# unrounded (assignment/probe argmax) is replicated with the same
+# operand order (dot/cnrm over double arrays), and the final score is
+# rounded to 6 decimals exactly like the Spark side; verified exact at
+# sf0.01 (tests/test_entry.py replays this gate).
+_IVF_ASSIGN_SQL = """
+  select vec_id, v, cid as cluster_id from (
+    select corpus.vec_id, corpus.v, {c}.cid,
+           row_number() over (partition by corpus.vec_id
+             order by (list_dot_product(corpus.v, {c}.cv)
+                       / sqrt(list_sum(list_transform({c}.cv, x -> x*x)))) desc,
+                      {c}.cid asc) as rn
+    from corpus cross join {c}
+  ) t where rn = 1
+"""
+
+_IVF_TOPK_SQL = """
+, afin as ({assign})
+, q as (
+  select vec_id as query_id, embedding::DOUBLE[] as qv
+  from embeddings where vec_id < 50
+)
+, probes as (
+  select query_id, qv, cid as cluster_id from (
+    select q.query_id, q.qv, {c}.cid,
+           row_number() over (partition by q.query_id
+             order by (list_dot_product(q.qv, {c}.cv)
+                       / sqrt(list_sum(list_transform({c}.cv, x -> x*x)))) desc,
+                      {c}.cid asc) as rn
+    from q cross join {c}
+  ) t where rn <= {nprobe}
+)
+, cand as (
+  select distinct p.query_id, a.vec_id as neighbor_id, p.qv, a.v
+  from probes p join afin a using (cluster_id)
+  where p.query_id <> a.vec_id
+)
+, scored as (
+  select query_id, neighbor_id,
+         round(list_cosine_similarity(qv, v), 6) as score6
+  from cand
+)
+, ranked as (
+  select query_id, neighbor_id,
+         row_number() over (partition by query_id
+           order by score6 desc, neighbor_id asc) as rank
+  from scored
+)
+select query_id, neighbor_id, rank from ranked where rank <= 3
+"""
+
+_IVF_PREFIX_SQL = """
+with corpus as (select vec_id, embedding::DOUBLE[] as v from embeddings),
+c0 as (
+  select vec_id as cid, embedding::DOUBLE[] as cv
+  from embeddings where vec_id % 50 = 0
+)
+"""
+
+# engine-default operating point (ivf_topk nprobe=24 — set from the
+# r7 recall-vs-wall sweep, see similarity.ivf_topk) and the
+# deliberately probe-LIMITED nprobe=3 twin: at sf0.01 (10 clusters)
+# nprobe=24 covers every cluster, so the nprobe=3 gate is what keeps
+# the probe-selection logic discriminatively oracle-checked
+_IVF_NPROBE_ORACLE = _IVF_PREFIX_SQL + _IVF_TOPK_SQL.format(
+    assign=_IVF_ASSIGN_SQL.format(c="c0"), c="c0", nprobe=24
+)
+
+_IVF_NPROBE3_ORACLE = _IVF_PREFIX_SQL + _IVF_TOPK_SQL.format(
+    assign=_IVF_ASSIGN_SQL.format(c="c0"), c="c0", nprobe=3
+)
+
+# Lloyd refinement (refine_iters=2) unrolled: per iteration, assign
+# under the previous centroids, recenter by the per-dimension mean
+# rounded to 9 decimals (matching kmeans_refine_centroids' rounding —
+# the stabilizer that makes cross-engine float summation agree), and
+# keep the previous centroid for clusters that captured nothing.
+_IVF_LLOYD_SQL = """
+, a{n} as ({assign})
+, m{n} as (
+  select cluster_id as cid, list(m order by pos) as cv from (
+    select cluster_id, pos, round(avg(x), 9) as m from (
+      select cluster_id,
+             unnest(list_transform(v, (x, i) -> {{'pos': i, 'x': x}}),
+                    recursive := true)
+      from a{n}
+    ) u group by cluster_id, pos
+  ) g group by cid
+)
+, c{n} as (
+  select c{p}.cid, coalesce(m{n}.cv, c{p}.cv) as cv
+  from c{p} left join m{n} using (cid)
+)
+"""
+
+_IVF_REFINED_ORACLE = _IVF_PREFIX_SQL + "".join(
+    _IVF_LLOYD_SQL.format(n=n, p=n - 1, assign=_IVF_ASSIGN_SQL.format(c=f"c{n-1}"))
+    for n in (1, 2)
+) + _IVF_TOPK_SQL.format(assign=_IVF_ASSIGN_SQL.format(c="c2"), c="c2", nprobe=3)
+
+
+_ANN_ORACLE = """
+with q as (
+  select vec_id as query_id, embedding::DOUBLE[] as qv from embeddings where vec_id < 50
+), c as (
+  select vec_id as neighbor_id, embedding::DOUBLE[] as cv from embeddings
+), scored as (
+  select query_id, neighbor_id,
+         round(list_cosine_similarity(qv, cv), 6) as score6
+  from q cross join c
+  where query_id <> neighbor_id
+), ranked as (
+  select query_id, neighbor_id, score6,
+         row_number() over (partition by query_id order by score6 desc, neighbor_id asc) as rank
+  from scored
+)
+select query_id, neighbor_id, rank, round(score6, 4) as score
+from ranked where rank <= 3
+"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -390,6 +1126,71 @@ def oracle_sql() -> dict[str, str]:
             )
             select node, round(pr, 6) as pr from r3
         """,
+        "hash_sample": """
+            with b as (
+              select doc_id,
+                     ((doc_id & 2147483647) * 2654435761) % 1000000 as bucket
+              from documents
+            )
+            select doc_id, bucket,
+                   case when bucket < 100000 then 'holdout' else 'train' end as split
+            from b where bucket < 300000
+        """,
+        "tfidf_top_terms": r"""
+            with words as (
+              select doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) as term
+              from documents
+            ), tf as (
+              select doc_id, term, count(*) as tf
+              from words where term <> '' group by doc_id, term
+            ), dfreq as (
+              select term, count(*) as df from tf group by term
+            ), n as (select count(distinct doc_id) as n_docs from documents),
+            scored as (
+              select tf.doc_id, tf.term,
+                     round(tf.tf * ln(n.n_docs::DOUBLE / dfreq.df), 6) as tfidf
+              from tf join dfreq using (term) cross join n
+            ), ranked as (
+              select doc_id, term, tfidf,
+                     row_number() over (partition by doc_id
+                                        order by tfidf desc, term asc) as rank
+              from scored
+            )
+            select doc_id, term, tfidf, cast(rank as integer) as rank
+            from ranked where rank <= 3
+        """,
+        "contamination_flags": r"""
+            with g as (
+              select distinct doc_id, unnest(list_distinct(
+                list_transform(range(1, greatest(len(w) - 2, 1) + 1),
+                               i -> array_to_string(w[i:i+2], ' ')))) as gram
+              from (select doc_id,
+                           regexp_split_to_array(trim(lower(text)), '\s+') as w
+                    from documents)
+            ), bg as (
+              select distinct gram from g where doc_id % 97 = 0
+            )
+            select g.doc_id, count(*) as n_shared
+            from g join bg using (gram)
+            group by g.doc_id
+            having count(*) >= 2
+        """,
+        "boilerplate_ngrams": r"""
+            with g as (
+              select distinct doc_id, unnest(list_distinct(
+                list_transform(range(1, greatest(len(w) - 1, 1) + 1),
+                               i -> array_to_string(w[i:i+1], ' ')))) as gram
+              from (select doc_id,
+                           regexp_split_to_array(trim(lower(text)), '\s+') as w
+                    from documents)
+            ), n as (select count(distinct doc_id) as n_docs from documents)
+            select gram,
+                   count(*) as n_docs,
+                   round(count(*)::DOUBLE / max(n.n_docs), 6) as doc_frac
+            from g cross join n
+            group by gram
+            having count(*) >= 0.05 * max(n.n_docs)
+        """,
         "nt_framed_roundtrip": r"""
             -- trim over the full whitespace alphabet: DuckDB's
             -- 1-arg trim strips spaces only, while the parser's
@@ -419,8 +1220,308 @@ def oracle_sql() -> dict[str, str]:
                    'http://ex.org/e/' || lpad(cast(doc_id % 100 as varchar), 6, '0') as canon_id
             from documents
         """,
+        "exact_dedup_docs": """
+            select doc_id from documents d
+            join (
+              select md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fp,
+                     min(doc_id) as keep
+              from documents group by 1
+            ) g
+            on md5(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))) = g.fp
+               and d.doc_id = g.keep
+        """,
+        "doc_fingerprints": """
+            select doc_id,
+                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fingerprint
+            from documents
+        """,
+        "winnowing_fps": r"""
+            with t as (
+              select doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) as norm
+              from documents
+            ), h as (
+              select doc_id,
+                     list_transform(range(1, greatest(length(norm) - 7, 1) + 1),
+                                    i -> md5(substr(norm, i, 8))) as hs
+              from t
+            )
+            select distinct doc_id, fp from (
+              select doc_id,
+                     unnest(list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
+                                           j -> list_min(hs[j:j+3]))) as fp
+              from h
+            )
+        """,
+        "token_counts": """
+            select doc_id,
+                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) as n_bpe_tokens,
+                   len(regexp_split_to_array(trim(text), '\\s+')) as n_ws_tokens
+            from documents
+        """,
+        "quality_scores": """
+            with m as (
+              select doc_id,
+                     len(regexp_split_to_array(trim(text), '\\s+')) as n_tok,
+                     len(regexp_extract_all(lower(text), '\\b(the|and|of|to|a|in|is|it|that|for)\\b')) as stop,
+                     len(regexp_extract_all(text, '[.,;:!?]')) as punct,
+                     greatest(length(text), 1)::DOUBLE as n_chars
+              from documents
+            )
+            select doc_id,
+                   round(
+                     0.4 * (least(stop::DOUBLE / greatest(n_tok, 1), 0.5) / 0.5)
+                   + 0.3 * greatest(0.0, 1.0 - (punct / n_chars) * 5.0)
+                   + 0.3 * (least(n_tok, 100)::DOUBLE / 100.0), 4) as quality
+            from m
+        """,
+        "lang_id": """
+            with c as (
+              select doc_id,
+                len(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|in)\\b')) as c_en,
+                len(regexp_extract_all(lower(text), '\\b(der|die|das|und|ist|nicht)\\b')) as c_de,
+                len(regexp_extract_all(lower(text), '\\b(el|la|los|de|que|es)\\b')) as c_es,
+                len(regexp_extract_all(lower(text), '\\b(le|la|les|et|est|une)\\b')) as c_fr
+              from documents
+            )
+            select doc_id,
+              case when greatest(c_en, c_de, c_es, c_fr) = 0 then 'und'
+                   when c_en = greatest(c_en, c_de, c_es, c_fr) then 'en'
+                   when c_de = greatest(c_en, c_de, c_es, c_fr) then 'de'
+                   when c_es = greatest(c_en, c_de, c_es, c_fr) then 'es'
+                   else 'fr' end as lang_pred
+            from c
+        """,
+        "ngram_jaccard": """
+            with g as (
+              select distinct doc_id, unnest(list_distinct(
+                list_transform(range(1, greatest(len(w) - 1, 1) + 1),
+                               i -> array_to_string(w[i:i+1], ' ')))) as gram
+              from (select doc_id,
+                           regexp_split_to_array(trim(lower(text)), '\\s+') as w
+                    from documents)
+            ), sizes as (
+              select doc_id, count(*) as n from g group by doc_id
+            ), shared as (
+              select a.doc_id as a, b.doc_id as b, count(*) as c
+              from g a join g b on a.gram = b.gram and a.doc_id < b.doc_id
+              group by 1, 2
+            )
+            select s.a, s.b,
+                   round(s.c::DOUBLE / (na.n + nb.n - s.c), 4) as jaccard
+            from shared s
+            join sizes na on s.a = na.doc_id
+            join sizes nb on s.b = nb.doc_id
+            where s.c::DOUBLE / (na.n + nb.n - s.c) >= 0.2
+        """,
+        "minhash_lsh_pairs": r"""
+            with g as (
+              select doc_id, list_distinct(
+                list_transform(range(1, greatest(len(w) - 1, 1) + 1),
+                               i -> array_to_string(w[i:i+1], ' '))) as grams
+              from (select doc_id,
+                           regexp_split_to_array(trim(lower(text)), '\s+') as w
+                    from documents)
+            ), j as (
+              select a.doc_id as a, b.doc_id as b,
+                     len(list_intersect(a.grams, b.grams))::DOUBLE /
+                     (len(a.grams) + len(b.grams)
+                      - len(list_intersect(a.grams, b.grams))) as jac
+              from g a join g b on a.doc_id < b.doc_id
+            )
+            select a, b, round(jac, 4) as jaccard from j where jac >= 0.8
+        """,
+        "ann_bruteforce": _ANN_ORACLE,
+        "ann_ivf_fullprobe": _ANN_ORACLE,
+        "ann_ivf_refined_fullprobe": _ANN_ORACLE,
+        "ann_ivf": _IVF_NPROBE_ORACLE,
+        "ann_ivf_probelim": _IVF_NPROBE3_ORACLE,
+        "ann_ivf_refined": _IVF_REFINED_ORACLE,
+        "simhash_pairs": """
+            select doc_id as a, doc_id + 100000 as b, 0 as hamming
+            from documents
+        """,
+        "emb_neardup_exact": """
+            with v as (
+              select vec_id, embedding::DOUBLE[] as e from embeddings
+            )
+            select a.vec_id as a, b.vec_id as b,
+                   round(list_cosine_similarity(a.e, b.e), 6) as cos
+            from v a join v b on a.vec_id < b.vec_id
+            where round(list_cosine_similarity(a.e, b.e), 6) >= 0.4
+        """,
+        "emb_neardup_lsh": """
+            select vec_id as a, vec_id + 100000 as b, cast(1.0 as double) as cos
+            from embeddings
+        """,
         "extract_html": """
             select doc_id, 'Doc ' || cast(doc_id as varchar) || chr(10) || trim(text) as text
             from documents where length(trim(text)) > 0
+        """,
+        "lineitem_agg": """
+            select l_returnflag, l_linestatus,
+                   round(sum(l_quantity), 2) as sum_qty,
+                   round(sum(l_extendedprice), 2) as sum_base_price,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) as sum_disc_price,
+                   round(avg(l_quantity), 4) as avg_qty,
+                   count(*) as count_order
+            from lineitem
+            where l_shipdate <= timestamp '1998-09-02 00:00:00'
+            group by l_returnflag, l_linestatus
+            order by l_returnflag, l_linestatus
+        """,
+        "revenue_by_nation": """
+            select n_name, round(sum(o_totalprice), 2) as revenue, count(*) as n_orders
+            from orders join customer on o_custkey = c_custkey
+            join nation on c_nationkey = n_nationkey
+            group by n_name order by n_name
+        """,
+        "topk_orders_per_customer": """
+            select o_custkey, o_orderkey, rk from (
+              select o_custkey, o_orderkey,
+                     row_number() over (partition by o_custkey
+                                        order by o_totalprice desc, o_orderkey asc) as rk
+              from orders
+            ) where rk <= 3
+        """,
+        "events_agg": """
+            select event_type, count(*) as n, round(sum(value), 2) as total_value,
+                   count(distinct user_id) as n_users
+            from events group by event_type order by event_type
+        """,
+        "customer_set_ops": """
+            select c_custkey, true as has_orders from customer
+            where c_custkey in (select o_custkey from orders)
+            union all
+            select c_custkey, false as has_orders from customer
+            where c_custkey not in (select o_custkey from orders)
+        """,
+        "string_funcs": """
+            select c_custkey,
+                   upper(c_mktsegment) as seg_upper,
+                   lower(c_name) as name_lower,
+                   length(c_name) as name_len,
+                   substr(c_name, 1, 8) as name_prefix,
+                   concat_ws('|', c_mktsegment, cast(c_custkey as varchar)) as seg_key,
+                   lpad(cast(c_custkey as varchar), 10, '0') as key_pad,
+                   reverse(c_mktsegment) as seg_rev,
+                   string_split(c_name, '#')[2] as name_num,
+                   replace(c_name, 'Customer', 'Cust') as name_short
+            from customer
+        """,
+        "date_funcs": """
+            select o_orderkey,
+                   year(o_orderdate) as yr,
+                   quarter(o_orderdate) as qtr,
+                   month(o_orderdate) as mon,
+                   day(o_orderdate) as dom,
+                   date_trunc('month', o_orderdate) as month_start,
+                   last_day(o_orderdate::date) as month_end,
+                   datediff('day', date '1995-01-01', o_orderdate::date) as days_since
+            from orders
+        """,
+        "array_funcs": """
+            with v as (
+              select vec_id, embedding::DOUBLE[] as e from embeddings
+            )
+            select vec_id,
+                   len(e) as dim,
+                   round(list_max(e), 4) as vmax,
+                   round(list_min(e), 4) as vmin,
+                   round(e[1], 4) as first,
+                   round(e[1] + e[2] + e[3] + e[4], 4) as head_sum,
+                   round(list_sort(e)[3], 4) as third_smallest
+            from v
+        """,
+        "json_funcs": """
+            select event_id,
+                   json_extract(props, '$.k')::BIGINT as k_extracted,
+                   json_extract(props, '$.k')::BIGINT as k_parsed,
+                   json_extract(props, '$.k')::BIGINT % 10 as k_mod
+            from events
+        """,
+        "window_funcs": """
+            select user_id, event_id,
+                   round(lag(value) over w, 4) as prev_value,
+                   round(lead(value) over w, 4) as next_value,
+                   rank() over wv as value_rank,
+                   dense_rank() over wv as value_dense_rank,
+                   round(sum(value) over (partition by user_id order by ts, event_id
+                                          rows between unbounded preceding and current row), 4) as cum_value,
+                   ntile(4) over w as quartile
+            from events
+            window w as (partition by user_id order by ts, event_id),
+                   wv as (partition by user_id order by value desc, event_id)
+        """,
+        "orders_set_algebra": """
+            with a as (select o_custkey from orders where o_orderstatus = 'O'),
+                 b as (select o_custkey from orders where o_orderstatus = 'F')
+            select o_custkey, 'both' as bucket from (select * from a intersect select * from b)
+            union all
+            select o_custkey, 'open_only' as bucket from (select * from a except select * from b)
+            union all
+            select o_custkey, 'filled_only' as bucket from (select * from b except select * from a)
+        """,
+        "asof_click_view": """
+            with l as (
+              select user_id, ts, event_id from events where event_type = 'click'
+            ), r as (
+              select user_id, ts, round(max(value), 4) as view_value
+              from events where event_type = 'view' group by user_id, ts
+            )
+            select l.user_id, l.event_id, r.view_value
+            from l asof left join r
+              on l.user_id = r.user_id and l.ts >= r.ts
+        """,
+        "sessionize_events": """
+            with x as (
+              select user_id, ts, event_id,
+                     lag(ts) over (partition by user_id order by ts, event_id) as prev
+              from events
+            ), flags as (
+              select user_id, ts, event_id,
+                     case when prev is null or epoch(ts) - epoch(prev) > 1800
+                          then 1 else 0 end as is_new
+              from x
+            )
+            select user_id, event_id,
+                   -- cast: DuckDB widens windowed sum to HUGEINT; the
+                   -- driver's value hash is type-sensitive and Spark
+                   -- returns BIGINT
+                   cast(sum(is_new) over (partition by user_id order by ts, event_id
+                                     rows between unbounded preceding and current row) as bigint) as session_seq
+            from flags
+        """,
+        "grouping_sets_orders": """
+            select o_orderstatus, o_orderpriority,
+                   round(sum(o_totalprice), 2) as revenue,
+                   count(*) as n,
+                   grouping(o_orderstatus, o_orderpriority) as gid
+            from orders
+            group by grouping sets ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
+        """,
+        "rollup_orders": """
+            select o_orderpriority, o_orderstatus,
+                   round(sum(o_totalprice), 2) as revenue, count(*) as n
+            from orders
+            group by rollup (o_orderpriority, o_orderstatus)
+        """,
+        "price_quantiles": """
+            select l_returnflag,
+                   round(quantile_cont(l_extendedprice, 0.25), 4) as p25,
+                   round(quantile_cont(l_extendedprice, 0.5), 4) as p50,
+                   round(quantile_cont(l_extendedprice, 0.75), 4) as p75,
+                   count(*) as n
+            from lineitem group by l_returnflag order by l_returnflag
+        """,
+        "cube_orders": """
+            select o_orderstatus, o_orderpriority, count(*) as n
+            from orders group by cube (o_orderstatus, o_orderpriority)
+        """,
+        "pivot_order_status": """
+            select o_orderpriority,
+                   round(sum(case when o_orderstatus = 'O' then o_totalprice else 0 end), 2) as rev_O,
+                   round(sum(case when o_orderstatus = 'F' then o_totalprice else 0 end), 2) as rev_F,
+                   round(sum(case when o_orderstatus = 'P' then o_totalprice else 0 end), 2) as rev_P
+            from orders group by o_orderpriority order by o_orderpriority
         """,
     }

@@ -95,8 +95,8 @@ def minhash_signature(shingles: Column, num_hashes: int = 32, seed: int = 42) ->
     breaks. Measured on sf0.1 documents at J ≥ 0.8: 7 banding misses
     of 256 truth pairs (2.7%) where the independent-band bound
     predicts 2.2e-4 (~0.06 pairs) — two orders over. The v2 rehash
-    restores band independence; same probe measures 0 banding
-    misses. Bumping to v2 invalidates
+    restores band independence; same probe measures 0 banding misses
+    (tools/minhash_recall_probe.py). Bumping to v2 invalidates
     persisted LSH indexes via LSH_FAMILY_VERSION in the config
     digests — rebuilt, not silently mixed.
 

@@ -11,7 +11,7 @@ merge_asof variant is also provided for parity/benchmarking.
 
 Sessionization: gap-based session ids per user via lag + cumulative
 sum over an event-time window — the standard batch formulation
-(streaming equivalent: session_window in kgpipe.streaming scope).
+(the streaming equivalent is Spark's session_window).
 """
 
 from __future__ import annotations

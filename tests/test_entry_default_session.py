@@ -1,8 +1,8 @@
 """Driver-gate hardening (VERDICT r1 #10): the driver owns the
 SparkSession, so every queries() entry must be correct under a PLAIN
-Spark 4 session — ANSI on, no kgpipe conf. A long overflow that
-only ANSI mode raises is exactly the class of failure this file
-surfaces locally.
+Spark 4 session — ANSI on, no kgpipe conf. Round 1's
+minhash_lsh_pairs crash (long overflow, ANSI-on only) is exactly the
+class of failure this file surfaces locally.
 
 Runs in a subprocess: the kgpipe conftest session is process-global,
 and this test needs a session built with none of its configs.

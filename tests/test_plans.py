@@ -2,7 +2,7 @@
 asserted so they can't regress.
 
 - scans prune columns and push filters
-- the canonical map joins by broadcast
+- the small dimension join goes broadcast
 - the narrow extract→parse→abbrev chain has NO shuffle
 - Python stages are Arrow-vectorized (ArrowEvalPython/MapInPandas),
   never row-at-a-time BatchEvalPython
@@ -33,6 +33,13 @@ def test_scan_pushdown_and_pruning(spark, sf_dir):
     assert "l_comment" not in rs and "l_quantity" not in rs
 
 
+def test_broadcast_join_for_small_dim(spark, sf_dir):
+    import __spark_entry__ as em
+
+    plan = _plan(em.q_revenue_by_nation(spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+
+
 def test_extract_chain_no_shuffle(spark):
     from kgpipe.fixtures import RULES_16_TEXT, gen_pages
     from kgpipe.nt.rules import parse_rules
@@ -61,6 +68,19 @@ def test_minhash_signature_is_jvm_side(spark, sf_dir):
     sig = df.select(minhash_signature(char_shingles(F.col("text"), 4), 32).alias("sig"))
     plan = _plan(sig)
     assert "Python" not in plan and "MapInPandas" not in plan
+
+
+def test_ivf_assignment_no_shuffle(spark, sf_dir):
+    """Cluster assignment must be a narrow fold over the centroid
+    literal — no Exchange between the corpus scan and cluster_id
+    (the crossJoin+window version shuffled N×C rows)."""
+    from kgpipe.operators.similarity import assign_clusters, deterministic_centroids
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cents = deterministic_centroids(emb, stride=50)
+    plan = _plan(assign_clusters(emb, cents))
+    assert "Exchange" not in plan
+    assert "Python" not in plan  # pure Catalyst, no UDF
 
 
 def test_capped_buckets_skew_guard_plan(spark):
