@@ -1,16 +1,4 @@
-.PHONY: test bench zip scaling verify iceberg
-
-# Iceberg runtime for the TableIO catalog seam (needs network; the
-# offline sandbox skips its 1 test gracefully without it). The jar
-# lands in jars/, which kgpipe.session.get_spark puts on the session
-# classpath automatically.
-ICEBERG_VERSION ?= 1.10.0
-ICEBERG_ARTIFACT = iceberg-spark-runtime-4.0_2.13
-iceberg:
-	mkdir -p jars
-	curl -fL -o jars/$(ICEBERG_ARTIFACT)-$(ICEBERG_VERSION).jar \
-	  https://repo1.maven.org/maven2/org/apache/iceberg/$(ICEBERG_ARTIFACT)/$(ICEBERG_VERSION)/$(ICEBERG_ARTIFACT)-$(ICEBERG_VERSION).jar
-	@echo "Iceberg runtime fetched; tests marked skip-without-jar now run."
+.PHONY: test bench zip scaling verify
 
 # the tier-1 test command
 test:

@@ -15,8 +15,7 @@ Subcommands mirror the reference CLI surface
                without running it (ntto -c printed its shell command)
   dump-rules — print the active rule table, sorted (ntto -d)
   compact    — small-file compaction of a warehouse table (atomic
-               directory swap; Iceberg rewrite_data_files in catalog
-               mode)
+               directory swap; refused on object stores)
 `-w`-style parallelism is owned by spark-submit (--master local[N] /
 executor count), not by this CLI.
 
@@ -266,10 +265,7 @@ def main(argv: list[str] | None = None) -> int:
                 target_file_bytes=args.target_mb << 20,
                 partition_by=args.partition_by.split(",") if args.partition_by else None,
             )
-            if n is None:
-                print({"table": args.table, "compacted": "via catalog rewrite_data_files"})
-            else:
-                print({"table": args.table, "target_files": n})
+            print({"table": args.table, "target_files": n})
             return 0
     finally:
         if not pre_existing:

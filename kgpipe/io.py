@@ -1,14 +1,11 @@
-"""Table-format shim (SURVEY.md §7): Iceberg when its runtime jar is
-on the classpath and a catalog is configured, Parquet with identical
-partition layout otherwise.
-
-The sandbox has no Iceberg jar and no network for ivy, so Parquet is
-the tested path; the API is the thing the pipeline codes against, so
-a cluster with Iceberg configured gets real table semantics (hidden
-partitioning, snapshot isolation, schema evolution) without touching
-the stages. BASELINE.json names Iceberg tables as the input contract —
-`configure_iceberg` + `TableIO(catalog=...)` is that seam, and the
-tests exercise it when the jar is present (skip otherwise).
+"""Warehouse tables as Parquet directories under one root, with the
+crash-safe swaps the pipeline builds on: `replace` (a whole table,
+staged beside the live one and renamed in, optionally with marker
+files that land atomically with the data), `compact` (small-file
+compaction by the same directory swap) and atomic JSON side files.
+Every existence check and rename goes through the Hadoop FileSystem
+API, so resume works on any cluster filesystem (HDFS, local); object
+stores, whose rename is copy+delete, are refused for the swaps.
 """
 
 from __future__ import annotations
@@ -16,61 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def iceberg_conf(catalog: str, warehouse: str) -> dict[str, str]:
-    """The session configs that make `catalog` an Iceberg hadoop
-    catalog rooted at `warehouse`. Pass to get_spark(extra_conf=...)
-    or apply to a builder before getOrCreate — catalog configs are
-    session-start-only."""
-    return {
-        "spark.sql.extensions": (
-            "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-        ),
-        f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
-        f"spark.sql.catalog.{catalog}.type": "hadoop",
-        f"spark.sql.catalog.{catalog}.warehouse": warehouse,
-    }
-
-
-def configure_iceberg(spark: SparkSession, catalog: str, warehouse: str) -> bool:
-    """Best-effort runtime configuration of an Iceberg catalog on an
-    existing session (works because SparkCatalog instances are
-    resolved lazily on first reference). Returns False when the
-    runtime jar is absent."""
-    if not iceberg_available(spark):
-        return False
-    for k, v in iceberg_conf(catalog, warehouse).items():
-        if k != "spark.sql.extensions":  # extensions are start-only
-            spark.conf.set(k, v)
-    return True
-
-
 class TableIO:
     """Read/write named tables under a warehouse root.
 
     Parquet layout: {root}/{name}/ (+ hive-style partition dirs when
-    partition_by is given). With `catalog` set (requires the Iceberg
-    jar) the same calls go through `writeTo(catalog.name)` /
-    `spark.table` instead. Existence checks go through the Hadoop
+    partition_by is given). Existence checks go through the Hadoop
     FileSystem API, so resume works on any cluster filesystem
     (HDFS, s3a, gs), not just the driver's local disk.
     """
 
-    def __init__(self, spark: SparkSession, root: str, catalog: str | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.catalog = catalog
-        if catalog is not None and not configure_iceberg(spark, catalog, root):
-            raise RuntimeError(
-                "Iceberg catalog requested but the runtime jar is not on the classpath"
-            )
 
     # -- path helpers (parquet layout) ---------------------------------
     def path(self, name: str) -> str:
@@ -82,12 +36,7 @@ class TableIO:
         fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, hpath
 
-    def _ident(self, name: str) -> str:
-        return f"{self.catalog}.{name}"
-
     def exists(self, name: str) -> bool:
-        if self.catalog is not None:
-            return self.spark.catalog.tableExists(self._ident(name))
         fs, p = self._fs(self.path(name))
         if not fs.exists(p) or not fs.getFileStatus(p).isDirectory():
             return False
@@ -107,21 +56,6 @@ class TableIO:
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
     ) -> None:
-        if self.catalog is not None:
-            w = df.writeTo(self._ident(name))
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            if mode == "append" and self.exists(name):
-                w.append()
-            elif mode == "overwrite" and partition_by and self.exists(name):
-                # same semantics as dynamic partition overwrite: only
-                # the partitions present in df are replaced
-                w.overwritePartitions()
-            else:
-                w.createOrReplace()
-            return
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -131,12 +65,6 @@ class TableIO:
         """schema: optional DDL string. Required to round-trip tables
         that may legitimately be empty (a zero-row write leaves no
         parquet footer to infer from)."""
-        if self.catalog is not None:
-            if not self.exists(name):
-                if schema is not None:
-                    return self.spark.createDataFrame([], schema)
-                raise ValueError(f"no such table: {self._ident(name)}")
-            return self.spark.table(self._ident(name))
         r = self.spark.read
         if schema is not None:
             r = r.schema(schema)
@@ -155,8 +83,8 @@ class TableIO:
     # via pyarrow + an atomic rename in ~10ms, producing parquet files
     # Spark reads interchangeably (the read path already tolerates
     # mixed files; leading-underscore temp names are invisible to
-    # listings, like _SUCCESS). Non-local warehouses and catalog mode
-    # keep the Spark writer — correctness first, the fast path is an
+    # listings, like _SUCCESS). Non-local warehouses keep the Spark
+    # writer — correctness first, the fast path is an
     # I/O shortcut with identical on-disk semantics.
 
     def _local_dir(self, name: str) -> str | None:
@@ -202,9 +130,9 @@ class TableIO:
         """Write a SMALL DataFrame (collected to the driver) as one
         parquet file. Semantics match write(): overwrite replaces the
         table, append adds rows. Falls back to the Spark writer off
-        the local filesystem or in catalog mode."""
+        the local filesystem."""
         pairs = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-        if self.catalog is not None or self._local_dir(name) is None or any(
+        if self._local_dir(name) is None or any(
             self._pa_type(t) is None for _, t in pairs
         ):
             self.write(df, name, mode=mode)
@@ -212,8 +140,7 @@ class TableIO:
         self._write_small_local(df.collect(), pairs, name, mode)
 
     def write_small_rows(
-        self, rows: list[tuple], ddl: str, name: str, mode: str = "overwrite",
-        partition: tuple[str, str] | None = None,
+        self, rows: list[tuple], ddl: str, name: str, mode: str = "overwrite"
     ) -> None:
         """write_small for DRIVER-LOCAL rows: no Spark DataFrame is
         built on the fast path at all. A createDataFrame(rows) +
@@ -222,31 +149,13 @@ class TableIO:
         and stats tables pay that several times per pipeline run for
         kilobytes of data. Same on-disk bytes as write_small (same
         schema mapping, same atomic rename). Falls back to the Spark
-        writer off the local filesystem / in catalog mode / for types
-        outside the fast-path map or DDL the simple parser cannot read
+        writer off the local filesystem, for types outside the
+        fast-path map, or for DDL the simple parser cannot read
         (parameterized or nested types such as decimal(10,2) or
-        struct<a:int,b:int>) — semantics preserved everywhere.
-
-        partition=(col, value): the rows (without col) become partition
-        col=value of a hive-partitioned table, with the semantics of
-        write(mode="overwrite", partition_by=[col]) under dynamic
-        partition overwrite: that partition alone is replaced, and no
-        rows replace nothing."""
-        if partition is not None:
-            col, val = partition
-            if not rows:
-                return
-            if self.catalog is None and self._local_dir(name) is not None:
-                name = f"{name}/{col}={val}"
-            else:
-                from pyspark.sql import functions as F
-
-                df = self.spark.createDataFrame(rows, ddl).withColumn(col, F.lit(val))
-                self.write(df, name, mode="overwrite", partition_by=[col])
-                return
+        struct<a:int,b:int>) — semantics preserved everywhere."""
         pairs = self._flat_ddl(ddl)
         if (
-            self.catalog is not None or self._local_dir(name) is None or pairs is None
+            self._local_dir(name) is None or pairs is None
             or any(self._pa_type(t) is None for _, t in pairs)
         ):
             self.write(self.spark.createDataFrame(rows, ddl), name, mode=mode)
@@ -279,10 +188,8 @@ class TableIO:
 
     def read_small_rows(self, name: str) -> list[dict] | None:
         """Driver-side read of a small table as a list of row dicts —
-        None when the fast path does not apply (non-local / catalog /
-        missing table); callers then use the Spark reader."""
-        if self.catalog is not None:
-            return None
+        None when the fast path does not apply (non-local / missing
+        table); callers then use the Spark reader."""
         d = self._local_dir(name)
         if d is None:
             return None
@@ -335,7 +242,7 @@ class TableIO:
         target_file_bytes: int = 128 << 20,
         partition_by: list[str] | None = None,
         schema: str | None = None,
-    ) -> int | None:
+    ) -> int:
         """Small-file compaction — the table-maintenance operation a
         100 TB lakehouse lives or dies by (every incremental append
         and fine-grained partition overwrite leaves small files, and
@@ -356,34 +263,14 @@ class TableIO:
 
         REFUSED on object stores (s3a/gs/abfs/…): their "rename" is
         copy+delete, so the swap's crash-safety argument does not
-        hold — use the Iceberg catalog path there, whose
-        rewrite_data_files is snapshot-safe on any store.
-
-        With an Iceberg catalog configured, compaction is the
-        catalog's job (`CALL catalog.system.rewrite_data_files`) —
-        snapshot-safe, no reader disruption; returns the procedure's
-        rewritten-file count (None if the procedure returns nothing)."""
-        if self.catalog is not None:
-            import re
-
-            ident = self._ident(name)
-            if not re.fullmatch(r"[A-Za-z0-9_][A-Za-z0-9_.]*", ident):
-                raise ValueError(f"compact: unsafe table identifier {ident!r}")
-            rows = self.spark.sql(
-                f"CALL {self.catalog}.system.rewrite_data_files("
-                f"table => '{ident}')"
-            ).collect()
-            try:
-                return int(rows[0]["rewritten_data_files_count"])
-            except Exception:
-                return None
+        hold."""
         scheme = self._scheme()
         if scheme in self._NON_ATOMIC_RENAME_SCHEMES:
             raise ValueError(
                 f"compact: directory-swap compaction is unsafe on {scheme}:// "
-                "(rename is copy+delete, not atomic) — configure an Iceberg "
-                "catalog (TableIO(catalog=...)) and compact through "
-                "rewrite_data_files instead"
+                "(rename is copy+delete, not atomic) — compact such tables "
+                "through a snapshot-safe table format (e.g. Iceberg's "
+                "rewrite_data_files) instead"
             )
         import math
 
@@ -459,8 +346,6 @@ class TableIO:
         healthy live table is deleted. MUST be called before reading
         a table that is maintained via replace() (a schema'd read of
         the missing live path would silently return empty)."""
-        if self.catalog is not None:
-            return
         fs, live = self._fs(self.path(name))
         _, aside = self._fs(self.path(f"{name}__replaced"))
         if not fs.exists(aside):
@@ -489,29 +374,19 @@ class TableIO:
         (live→aside, next→live, delete aside) — at no instant is the
         only copy deleted, and recover_replace() heals the one
         crash window between the renames. Refused on object stores
-        (rename is copy+delete there — use an Iceberg catalog, whose
-        createOrReplace is snapshot-safe and taken automatically in
-        catalog mode).
+        (rename is copy+delete there).
 
         side_files maps table-relative paths to small JSON objects
         written into the staged dir AFTER the data write and BEFORE
         the swap — so ledger/marker files land atomically WITH the
         data they describe (a layer-fold's coverage marker must never
         be observable without its folded rows, or vice versa)."""
-        if self.catalog is not None:
-            if side_files:
-                raise ValueError(
-                    "replace: side_files have no catalog-mode equivalent — "
-                    "table-adjacent markers are a parquet-layout concept"
-                )
-            self.write(df, name, mode="overwrite", partition_by=partition_by)
-            return
         scheme = self._scheme()
         if scheme in self._NON_ATOMIC_RENAME_SCHEMES:
             raise ValueError(
-                f"replace: rename-swap is unsafe on {scheme}:// — configure an "
-                "Iceberg catalog (TableIO(catalog=...)) for snapshot-safe "
-                "replacement"
+                f"replace: rename-swap is unsafe on {scheme}:// — replace "
+                "such tables through a snapshot-safe table format (e.g. "
+                "Iceberg) instead"
             )
         self.recover_replace(name)
         nxt = f"{name}__next"
@@ -572,106 +447,6 @@ class TableIO:
         finally:
             stream.close()
 
-    # -- partition-level crash-safe patching ---------------------------
-    def _patch_marker(self, name: str) -> str:
-        return f"{name}__patch.json"
-
-    def recover_patch(self, name: str) -> None:
-        """Finish a partition patch whose process died mid-swap. The
-        commit marker (written only AFTER the staging dir is complete)
-        records every partition value with whether staged data exists
-        for it; replaying the swap loop is idempotent:
-          - has_data and staged dir present  → swap it in now
-          - has_data and staged dir absent   → already swapped, skip
-          - no data (partition emptied)      → delete the live dir
-        MUST run before reading or patching a partition-patched table."""
-        marker = self.read_json(self._patch_marker(name))
-        if marker is None:
-            return
-        part_cols = marker.get("part_cols") or [marker["part_col"]]
-        fs, root = self._fs(self.path(name))
-        _, staging = self._fs(self.path(f"{name}__patchstage"))
-        for ent in marker["parts"]:
-            val, has_data = ent["val"], ent["has_data"]
-            vals = val if isinstance(val, list) else [val]
-            rel = "/".join(f"{c}={v}" for c, v in zip(part_cols, vals))
-            jvm = self.spark._jvm
-            live_d = jvm.org.apache.hadoop.fs.Path(root, rel)
-            staged_d = jvm.org.apache.hadoop.fs.Path(staging, rel)
-            if has_data:
-                if fs.exists(staged_d):
-                    if fs.exists(live_d):
-                        fs.delete(live_d, True)
-                    fs.mkdirs(live_d.getParent())  # nested layouts: rename needs the parent
-                    if not fs.rename(staged_d, live_d):
-                        raise IOError(f"patch: rename {staged_d} -> {live_d} failed")
-            else:
-                if fs.exists(live_d):
-                    fs.delete(live_d, True)
-        fs.delete(staging, True)
-        fs, mk = self._fs(self.path(self._patch_marker(name)))
-        fs.delete(mk, False)
-
-    def patch_partitions(
-        self, df: DataFrame, name: str, part_col, part_vals: list
-    ) -> None:
-        """Crash-safe replacement of a SUBSET of a partitioned table's
-        partitions — the primitive behind incremental edge
-        materialization: at 100 TB a daily delta must rewrite the few
-        partitions it touches, not the table.
-
-        part_col may be one column name or a list (hive-nested layout,
-        e.g. ["b_fp", "part_id"]); part_vals then holds tuples in the
-        same order. `df` must contain the FULL new content of exactly
-        the partitions in `part_vals` (a partition whose new content
-        is empty is deleted). Protocol: (1) heal any earlier crashed
-        patch; (2) write df into a staging dir, partitioned — the live
-        table is read-consistent throughout, so df may derive from it;
-        (3) write a commit marker listing every target partition and
-        whether staged data exists for it; (4) swap partition dirs
-        (delete live, rename staged — the staged dir is never deleted
-        before landing, so a crash between the two steps leaves the
-        only copy in staging and the marker replays it); (5) drop
-        staging + marker. A crash before (3) leaves the live table
-        untouched; after (3), recover_patch completes the swap.
-
-        Refused on object stores — rename is copy+delete there; use
-        the Iceberg catalog's row-level operations instead."""
-        if self.catalog is not None:
-            raise ValueError(
-                "patch_partitions: use the Iceberg catalog's overwritePartitions "
-                "path (TableIO.write with partition_by) in catalog mode"
-            )
-        scheme = self._scheme()
-        if scheme in self._NON_ATOMIC_RENAME_SCHEMES:
-            raise ValueError(
-                f"patch_partitions: unsafe on {scheme}:// (rename is copy+delete)"
-            )
-        part_cols = [part_col] if isinstance(part_col, str) else list(part_col)
-        self.recover_patch(name)
-        staging = f"{name}__patchstage"
-        fs, staging_p = self._fs(self.path(staging))
-        if fs.exists(staging_p):
-            fs.delete(staging_p, True)  # stale pre-marker leftovers
-        df.write.mode("overwrite").partitionBy(*part_cols).parquet(self.path(staging))
-        jvm = self.spark._jvm
-        parts = []
-        for val in part_vals:
-            vals = list(val) if isinstance(val, (list, tuple)) else [val]
-            rel = "/".join(f"{c}={v}" for c, v in zip(part_cols, vals))
-            staged_d = jvm.org.apache.hadoop.fs.Path(staging_p, rel)
-            ent_val = vals if len(part_cols) > 1 else vals[0]
-            parts.append({"val": ent_val, "has_data": bool(fs.exists(staged_d))})
-        self.write_json_atomic(
-            self._patch_marker(name), {"part_cols": part_cols, "parts": parts}
-        )
-        # the swap loop IS the recovery loop — one code path, replayed
-        # verbatim after any crash past the marker write
-        self.recover_patch(name)
-
     def drop(self, name: str) -> None:
-        if self.catalog is not None:
-            self.spark.sql(f"drop table if exists {self._ident(name)}")
-            return
         fs, p = self._fs(self.path(name))
         fs.delete(p, True)

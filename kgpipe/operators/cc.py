@@ -323,14 +323,12 @@ def incremental_merge(
     """incremental_canonical_map, plus the LABEL CHANGES the merge
     caused (see Merge).
 
-    The changes are what downstream MATERIALIZED artifacts keyed by
-    canon labels (the edge table) need to relabel themselves — and
-    they come from the delta's neighborhood alone (the affected
+    The changes tell downstream MATERIALIZED artifacts keyed by canon
+    labels (the edge table) whether their old rows still hold current
+    labels — the pipeline appends a batch's edges only when there are
+    none. They come from the delta's neighborhood alone (the affected
     components' prev rows), so their cost scales with the delta, not
-    the corpus. Emitting them here, where the merge already holds the
-    neighborhood, is what lets the materialize stage avoid keeping
-    (and diffing, and rewriting) its own full copy of the map per run
-    — a map-scale cost that dominated delta runs.
+    the corpus, and no copy of the previous map is kept to diff.
 
     Same tiers as connected_components: while the new edges plus the
     affected components' rows fit small_graph_max_edges, both are

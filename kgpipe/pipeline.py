@@ -372,12 +372,10 @@ class _Delta:
 
 
 def _recover_swaps(io: TableIO) -> None:
-    """Heal a crashed swap of every table a run replaces or patches —
-    filesystem metadata only, and a no-op when nothing crashed."""
-    for name in ("canonical_map", "triples_raw", "linked_urls"):
+    """Heal a crashed swap of every table a run replaces — filesystem
+    metadata only, and a no-op when nothing crashed."""
+    for name in ("canonical_map", "triples_raw", "linked_urls", "edges"):
         io.recover_replace(name)
-    io.recover_patch("edges")
-    io.recover_replace("edges")
 
 
 def _partition_values(io: TableIO, name: str, col: str) -> list[str]:
@@ -765,14 +763,15 @@ def _uris(triples: DataFrame) -> DataFrame:
 @dataclass
 class _Link:
     """What the link stage observed while it wrote, for materialize —
-    so materialize's path decisions need no probe of their own. None
-    for a count the stage did not observe (it wrote no map, or a retry
-    left label changes of an earlier attempt on disk); materialize
-    then counts for itself."""
+    so materialize's path decisions need no probe of their own.
+    n_changes: canon labels the batch's merge changed; None when
+    unknown (a rebuild, or a retry whose map swap an earlier attempt
+    already made), which materialize treats as a change. n_cmap:
+    non-identity rows of the map it wrote (None: materialize counts)."""
 
     batch: str
-    n_changes: int | None = None  # rows of canon_changes batch_fp=<batch>
-    n_cmap: int | None = None  # non-identity rows of the map it wrote
+    n_changes: int | None = None
+    n_cmap: int | None = None
 
 
 def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
@@ -789,16 +788,16 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     the delta's new URIs are also banded against the persisted LSH
     signature index (_incremental_lsh_delta). Components merge via
     incremental_merge, so CC work scales with the delta's
-    neighborhood, not the corpus; its label changes drive the
-    materialize stage's relabel of old edges. The first batch of a
-    fresh warehouse merges into an empty map and writes no label
-    changes: there is no edge table yet for them to relabel.
+    neighborhood, not the corpus. Only the NUMBER of canon labels the
+    merge changed is kept: materialize appends the batch's edges when
+    it is 0 and rewrites the edge table otherwise. The first batch of
+    a fresh warehouse merges into an empty map and counts nothing:
+    there is no edge table yet to keep.
 
     The batch's normal forms with their URIs and hubs are derived
     once: the delta edges and the new hubs both read them (cached by
-    the first). The
-    map write observes the map's non-identity row count and the
-    label-change write its row count; both go to materialize (_Link).
+    the first). The map write observes the map's non-identity row
+    count; it and the change count go to materialize (_Link).
 
     Rebuild path: the extract stage already named a trigger (a
     re-crawl that changed clean triples, a removed url, a config or
@@ -808,14 +807,16 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     (_incremental_full_rebuild). Either way the result is pinned EQUAL
     to a fresh build and to a pure-Python graph oracle (test_pipeline).
 
-    Crash safety: label changes are written BEFORE the map replace
-    (they derive from the previous map), canonical_map goes through
-    TableIO.replace (it derives from its own previous version); the
-    hub, label-change and LSH deltas land in per-batch `batch_fp=`
-    partitions under dynamic overwrite, so a retry replaces its own
-    rows; the url index is written LAST, so a crashed attempt
-    re-detects its delta and re-runs idempotently (test_pipeline kills
-    a delta run after every write).
+    Crash safety: canonical_map goes through TableIO.replace (it
+    derives from its own previous version), stamped with the batch
+    and its change count in the same swap; the hub and LSH deltas land
+    in per-batch `batch_fp=` partitions under dynamic overwrite, so a
+    retry replaces its own rows; the url index is written LAST, so a
+    crashed attempt re-detects its delta and re-runs idempotently. A
+    retry after the map swap merges into the already-merged map and
+    counts 0 changes; the stamp naming its own batch turns that into
+    "unknown", so the edges are rewritten (test_pipeline kills a delta
+    run after every write).
     """
     from kgpipe.operators.cc import _local_frame, incremental_merge
     from kgpipe.operators.link import normalize_uri
@@ -887,39 +888,21 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
         else _local_frame(spark, {"uri": [], "canon_id": []})
     )
     merge = incremental_merge(prev, delta_edges, max_iter=cfg.cc_max_iter)
-    link = _Link(batch=b, n_changes=0)
+    n_changes = 0
     if had_map:
-        # label changes BEFORE the map replace: they derive from prev,
-        # and the materialize stage relabels the edge table from them
-        # (per-batch partitions, delta-sized — the map itself is never
-        # copied or diffed again). A retry AFTER the replace recomputes
-        # an EMPTY change set (prev is already merged), whose dynamic
-        # overwrite writes no partitions — the original rows survive,
-        # and their count is not this write's; a retry before it
-        # recomputes identical rows and replaces its own partition.
-        # The union-find tier's changes are rows on the driver already:
-        # they land without a Spark job.
-        if merge.changes.isLocal():
-            rows = [tuple(r) for r in merge.changes.collect()]
-            io.write_small_rows(
-                rows, CHANGES_DDL_ROWS, "canon_changes", partition=("batch_fp", b)
-            )
-            n = len(rows)
-        else:
-            cobs = Observation()
-            io.write(
-                merge.changes.observe(cobs, F.count(F.lit(1)).alias("n"))
-                .withColumn("batch_fp", F.lit(b)),
-                "canon_changes", mode="overwrite", partition_by=["batch_fp"],
-            )
-            n = _observed(cobs)["n"]
-        link.n_changes = (
-            n if n or b not in _partition_values(io, "canon_changes", "batch_fp") else None
+        # the union-find tier's changes are rows on the driver already:
+        # a collect of them starts no job (a count would start two)
+        n_changes = (
+            len(merge.changes.collect()) if merge.changes.isLocal()
+            else merge.changes.count()
         )
+        if n_changes == 0 and _merged_batch(io) == b:
+            n_changes = None  # this batch's map is already swapped in
     # crash-safe: the merged map derives from the live table, so it
     # must never be overwritten in place (delete-then-write would
     # destroy the retry's input) — replace() swaps via renames
-    link.n_cmap = _replace_map(merge.cmap, io)
+    link = _Link(batch=b, n_changes=n_changes)
+    link.n_cmap = _replace_map(merge.cmap, io, b, n_changes)
 
     if forms is not None:
         # a batch's new hubs are delta-sized: one file, like its layer
@@ -958,8 +941,9 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     return link
 
 
-def _replace_map(cmap: DataFrame, io: TableIO) -> int:
-    """Swap in a new canonical_map (TableIO.replace) and return its
+def _replace_map(cmap: DataFrame, io: TableIO, batch: str, n_changes: int | None) -> int:
+    """Swap in a new canonical_map (TableIO.replace), stamped with the
+    batch it merged and that merge's change count, and return its
     non-identity row count, observed during the write — the size
     materialize's broadcast gate needs."""
     obs = Observation()
@@ -968,8 +952,14 @@ def _replace_map(cmap: DataFrame, io: TableIO) -> int:
             obs, F.sum(F.when(F.col("uri") != F.col("canon_id"), 1).otherwise(0)).alias("n")
         ),
         "canonical_map",
+        side_files={"_kgpipe_merge.json": {"batch": batch, "n_changes": n_changes}},
     )
     return _observed(obs)["n"]
+
+
+def _merged_batch(io: TableIO) -> str | None:
+    """The batch whose merge the live canonical_map holds (its stamp)."""
+    return (io.read_json("canonical_map/_kgpipe_merge.json") or {}).get("batch")
 
 
 def _observed(obs: Observation) -> dict[str, int]:
@@ -997,8 +987,9 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     Hubs cover EVERY normal form (singletons too) so future deltas can
     link against them. triples_raw is one layer named delta.rebuild_id
     here (the extract stage rebuilt it, or the LSH-cap case folds the
-    layers first), and the url index names that one batch; the
-    `rebuild_` prefix routes materialize to its rebuild branch.
+    layers first), and the url index names that one batch. Its change
+    count is unknown (None, also in the map's stamp), so materialize
+    rewrites the edges.
 
     Write order is load-bearing: canonical_map first (replace —
     crash-safe), then hubs, then the url index LAST (replace too). A
@@ -1047,20 +1038,19 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     merge = incremental_merge(
         _local_frame(spark, {"uri": [], "canon_id": []}), edges, max_iter=cfg.cc_max_iter
     )
-    n_cmap = _replace_map(merge.cmap, io)
+    n_cmap = _replace_map(merge.cmap, io, batch_fp, None)
     io.drop("norm_hubs")
     if hubs_all is not None:
         io.write(
             hubs_all.withColumn("batch_fp", F.lit(batch_fp)),
             "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
         )
-    # a rebuild invalidates every pending label change (retractions),
-    # and the edges: a rebuild over a page set an earlier rebuild
-    # covered gets that rebuild's id, which the edge coverage markers
-    # already list — without edges materialize takes its rebuild branch.
-    # delta_triples and term_maps are handoff tables that warehouses
-    # written before the triples_raw layers still carry.
-    for name in ("canon_changes", "edges", "lsh_index", "delta_triples", "term_maps"):
+    # a rebuild invalidates the edges: a rebuild over a page set an
+    # earlier rebuild covered gets that rebuild's id, which the edge
+    # coverage markers already list — without edges materialize
+    # rewrites them. delta_triples and term_maps are handoff tables
+    # that warehouses written before the triples_raw layers still carry.
+    for name in ("edges", "lsh_index", "delta_triples", "term_maps"):
         io.drop(name)
     if lsh_mode:
         from kgpipe.operators.link import (
@@ -1105,37 +1095,7 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
 
 EDGES_INC_DDL = "canon_s string, p string, canon_o string, b_fp string, part_id int"
 MAT_STATE = "edges_mat_state.json"
-# above this many changed canon labels the delta relabel map stops
-# being broadcast-sized and a full rebuild is cheaper anyway (a merge
-# storm touching a quarter of the corpus is not a "delta")
-CHANGED_BROADCAST_LIMIT = 1_000_000
-# if label changes force rewriting more than this fraction of the
-# existing (b_fp, part_id) dirs, one full rebuild write beats many
-# staged dir swaps
-REWRITE_DIR_FRACTION = 0.6
 MAT_LAYOUT_VERSION = 3  # b_fp-layered hive layout + per-layer coverage markers
-CHANGES_DDL_ROWS = "old_c string, new_c string"
-CHANGES_DDL = CHANGES_DDL_ROWS + ", batch_fp string"
-
-
-def _compose_changes(ch: DataFrame, n_batches: int) -> DataFrame:
-    """Compose label-change chains across pending batches: (a→b from
-    batch 1, b→c from batch 2) must apply to the edge table — which
-    still holds a — as a→c. Within one batch there are no chains (a
-    batch's new labels are fixed points of its own change set), so at
-    most n_batches-1 resolution rounds are needed; the frames are
-    delta-sized throughout."""
-    for _ in range(max(n_batches - 1, 0)):
-        nxt = ch.alias("a").join(
-            ch.select(
-                F.col("old_c").alias("new_c"), F.col("new_c").alias("__final")
-            ),
-            "new_c", "left",
-        ).select(
-            F.col("old_c"), F.coalesce(F.col("__final"), F.col("new_c")).alias("new_c")
-        )
-        ch = nxt
-    return ch.distinct()
 
 
 def _one_wave(spark, n_dirs: int) -> int:
@@ -1149,8 +1109,8 @@ def _one_wave(spark, n_dirs: int) -> int:
 
 def _layer_marker(b_fp: str) -> str:
     # leading underscore: invisible to parquet file listings, like
-    # _SUCCESS — lives INSIDE the layer dir so partition-level swaps
-    # (patch_partitions operates on part_id subdirs) never touch it
+    # _SUCCESS — lives INSIDE the layer dir, so a layer and its marker
+    # go together
     return f"edges/b_fp={b_fp}/_kgpipe_layer.json"
 
 
@@ -1182,25 +1142,6 @@ def _applied_batches(io: TableIO) -> set[str]:
 def _full_layer_uncommitted(io: TableIO) -> bool:
     fs, d = io._fs(io.path("edges/b_fp=full"))
     return bool(fs.exists(d)) and io.read_json(_layer_marker("full")) is None
-
-
-def _edges_layer_dirs(io: TableIO) -> set[tuple[str, int]]:
-    """Existing (b_fp, part_id) hive dirs of the layered edge table —
-    pure filesystem metadata, no data read."""
-    fs, root = io._fs(io.path("edges"))
-    out = set()
-    if not fs.exists(root):
-        return out
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("b_fp=")):
-            continue
-        b = name[len("b_fp="):]
-        for st2 in fs.listStatus(st.getPath()):
-            n2 = st2.getPath().getName()
-            if st2.isDirectory() and n2.startswith("part_id="):
-                out.add((b, int(n2[len("part_id="):])))
-    return out
 
 
 def _edges_layer_names(io: TableIO) -> list[str]:
@@ -1246,65 +1187,36 @@ def _maybe_fold_layers(spark, cfg, io: TableIO) -> bool:
 def _stage_materialize_incremental(
     spark, triples, cmap, cfg, io: TableIO, log: CheckpointLog, link: _Link | None = None
 ):
-    """Batch-layered edge materialization: a delta APPENDS its own
-    layer and only canon-label changes rewrite anything old (the r4
-    verdict's #1 gap — the full per-run edge-table rewrite — closed).
+    """Batch-layered edge materialization by two rules: APPEND the
+    pending batch's own layer, or REWRITE the edge table from
+    triples_raw ⋈ canonical_map.
 
     Layout: edges partitioned by (b_fp, part_id) — an outer hive
     layer per applied batch, inner dirs by part_id = pmod(
-    xxhash64(canon_s), n_buckets). The layering is what makes a delta
-    O(delta): its new edges land under their own b_fp=X as a dynamic
-    partition overwrite, which touches ZERO old files and is retry-
-    idempotent by construction (a re-run replaces exactly b_fp=X's
-    partitions). Bucketing the delta by canon_s alone could never do
-    this: a delta with more distinct subjects than buckets lands in
-    EVERY bucket, and whole-partition patching then degenerates to a
-    full rewrite plus overhead — measured, which is why the layout is
-    layered. The cost shifted to reads (a bucket's rows span layers)
-    is the standard date-partitioned trade; io.compact() folds layers
-    back together as table maintenance.
+    xxhash64(canon_s), n_buckets). A delta's new edges land under
+    their own b_fp=X as a dynamic partition overwrite, which touches
+    ZERO old files and is retry-idempotent by construction (a re-run
+    replaces exactly b_fp=X's partitions). The cost shifted to reads
+    (a bucket's rows span layers) is the standard date-partitioned
+    trade; _maybe_fold_layers folds the layers back into one when they
+    pile up.
 
-    Old data is touched ONLY when components merged across batches:
-    the link stage's per-batch canon_changes (old label → new label,
-    emitted delta-neighborhood-sized by cc.incremental_merge — the
-    materialize stage keeps NO copy of the map and never diffs or
-    rewrites one; an earlier design did, and that map-scale cost
-    dominated every delta run) drive a relabel of exactly the
-    (b_fp, part_id) dirs that hold affected rows:
-      - dirs with changed canon_s or canon_o: ONE read-only scan of
-        the table against the broadcast diff (skipped entirely when
-        the diff is empty — the pure-append daily case);
-      - destination dirs (b, pmod(hash(new_c))) for rows whose
-        canon_s change moves them between part_ids within their layer.
-    Those dirs are rewritten in full via patch_partitions (staging →
-    commit marker → replayable swap). The rewrite is a pure,
-    IDEMPOTENT function of table state: relabeling already-relabeled
-    rows is the identity (new labels are never diff keys), moved rows
-    re-derive to where they already are, and the delta is NOT mixed
-    into the rewrite — so any crash/retry interleaving of {rewrite,
-    append, markers} converges. Under merge-only incrementality the
-    relabel composes exactly: coalesce(diff[old_eff(u)], old_eff(u))
-    == new_eff(u) — pinned equal to a full recompute in test_pipeline.
-
-    Falls back to one full rebuild write when: the edge table or diff
-    base is missing, a rebuild batch is pending (re-crawl or an old
-    warehouse's layout rebuild — retractions invalidate merge-only
-    relabeling, and the old edge layout is replaced), n_buckets
-    changed, the diff exceeds the broadcast budget, or label changes
-    would rewrite more than REWRITE_DIR_FRACTION of the existing dirs
-    (a merge storm — one sequential write beats thousands of staged
-    swaps).
-
-    `link` carries the counts the link stage observed during its own
-    writes in this run: with one pending batch — the one it linked —
-    its label-change count stands in for the composed set's, and the
-    map size it observed feeds the broadcast gate. Without them (a
-    resumed run whose link already committed, several pending
-    batches, an old warehouse) this stage counts for itself. Every
-    edge-table write runs one wave of tasks: a dir's rows hash to one
-    task, so each dir is still one file."""
+    Append needs all of: exactly one pending batch, the one the link
+    stage linked in this run, whose merge it observed changing no
+    canon label (link.n_changes == 0) — the old edges then hold
+    exactly their current labels, and only the batch's rows are new.
+    Every other case rewrites: label changes (old edges hold stale
+    labels), a resumed run (link is None), several pending batches, a
+    rebuild (its n_changes is None), a missing edge table, another
+    n_buckets or layout, or a full layer whose coverage marker never
+    landed (a rewrite that crashed before committing). The rewrite
+    writes ONE b_fp=full layer whose marker lists every batch; it
+    broadcasts the map only while it fits CMAP_BROADCAST_LIMIT, sized
+    by the count the link stage observed as it wrote the map (else an
+    early-stopping probe). Every edge-table write runs one wave of
+    tasks: a dir's rows hash to one task, so each dir is still one
+    file."""
     stage = "materialize"
-    io.recover_patch("edges")
     io.recover_replace("edges")  # heal a layer fold that crashed mid-swap
     state = io.read_json(MAT_STATE) or {}
     applied = _applied_batches(io)
@@ -1315,106 +1227,18 @@ def _stage_materialize_incremental(
     if not pending and io.exists("edges"):
         return
 
-    full_needed = (
-        # catalog mode: Iceberg's overwritePartitions cannot DELETE a
-        # partition the patch emptied — the snapshot-safe row-level
-        # path (MERGE) is the cluster answer; here rebuild
-        io.catalog is not None
+    rewrite = (
+        link is None
+        or link.n_changes != 0
+        or pending != [link.batch]
         or not io.exists("edges")
-        or any(b.startswith("rebuild") for b in pending)
         or state.get("n_buckets") != cfg.n_buckets
         or state.get("layout") != MAT_LAYOUT_VERSION
-        # a full layer without its coverage marker is a rebuild that
-        # crashed before committing — its contents overlap every batch
-        # unpredictably, so re-running the rebuild is the only safe move
         or _full_layer_uncommitted(io)
     )
-    changed = None
-    if not full_needed:
-        if io.exists("canon_changes"):
-            changed = (
-                io.read("canon_changes", CHANGES_DDL)
-                .where(F.col("batch_fp").isin(pending))
-                .select("old_c", "new_c")
-            )
-        else:
-            changed = spark.createDataFrame([], "old_c string, new_c string")
-        if link is not None and pending == [link.batch] and link.n_changes is not None:
-            # one batch's changes, counted as the link stage wrote
-            # them: no chains to compose, and old_c is unique already
-            n_changed = link.n_changes
-        else:
-            # several pending batches can CHAIN label changes (batch 2
-            # relabels a label batch 1 introduced); the edge table
-            # still holds pre-batch-1 labels, so compose before
-            # applying. One job pins the composed set and counts it.
-            cobs = Observation()
-            changed = (
-                _compose_changes(changed, len(pending))
-                .observe(cobs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            n_changed = _observed(cobs)["n"]
-        if n_changed > CHANGED_BROADCAST_LIMIT:
-            full_needed = True
-
-    if not full_needed and n_changed > 0:
-        # merge repair: ONE scan of the edge table against the
-        # broadcast change set finds the EXACT dirs holding affected
-        # rows, plus the dirs rows whose canon_s changed move to
-        # (pmod(hash(new_c)) within their own layer)
-        ch_s = changed.select(F.col("old_c").alias("canon_s"), F.col("new_c").alias("ns"))
-        ch_o = changed.select(F.col("old_c").alias("canon_o"), F.col("new_c").alias("no"))
-
-        def relabel(edges: DataFrame) -> DataFrame:
-            return edges.join(F.broadcast(ch_s), "canon_s", "left").join(
-                F.broadcast(ch_o), "canon_o", "left"
-            )
-
-        old_edges = io.read("edges", EDGES_INC_DDL)
-        hits = (
-            relabel(old_edges)
-            .where(F.col("ns").isNotNull() | F.col("no").isNotNull())
-            .select(
-                "b_fp", "part_id",
-                F.pmod(F.xxhash64("ns"), F.lit(cfg.n_buckets)).cast("int").alias("pt"),
-            )
-            .distinct().collect()
-        )
-        dirs = {(r["b_fp"], r["part_id"]) for r in hits} | {
-            (r["b_fp"], r["pt"]) for r in hits if r["pt"] is not None
-        }
-        existing = _edges_layer_dirs(io)
-        if len(dirs) > REWRITE_DIR_FRACTION * max(len(existing), 1):
-            full_needed = True
-        elif dirs:
-            dir_df = F.broadcast(
-                spark.createDataFrame(
-                    [(b, p) for b, p in sorted(dirs)], "b_fp string, part_id int"
-                )
-            )
-            # coarse literal rectangle first — it prunes PARTITION DIRS
-            # at the scan (a semi-join alone may not) — then the exact
-            # broadcast semi-join trims the rectangle's corners
-            coarse = F.col("b_fp").isin(sorted({b for b, _ in dirs})) & F.col(
-                "part_id"
-            ).isin(sorted({p for _, p in dirs}))
-            relabeled = relabel(
-                old_edges.where(coarse).join(dir_df, ["b_fp", "part_id"], "left_semi")
-            ).select(
-                F.coalesce("ns", "canon_s").alias("canon_s"),
-                F.col("p"),
-                F.coalesce("no", "canon_o").alias("canon_o"),
-                F.col("b_fp"),
-            )
-            out = edges_with_buckets(relabeled, cfg.n_buckets)
-            io.patch_partitions(
-                out.repartition(_one_wave(spark, len(dirs)), F.col("b_fp"), F.col("part_id")),
-                "edges", ["b_fp", "part_id"], sorted(dirs),
-            )
 
     obs = Observation()
-    if full_needed:
+    if rewrite:
         # the full layer's tag is a DEDICATED namespace — never a
         # batch id: a rebuild tagged with a pending batch id would be
         # "re-applied" by a later retry's dynamic overwrite, replacing
@@ -1436,7 +1260,11 @@ def _stage_materialize_incremental(
             cfg.n_buckets,
         ).withColumn("b_fp", F.lit("full"))
         out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        io.drop("edges")  # stale layers must not outlive a rebuild
+        # stale layers must not outlive a rewrite, nor what warehouses
+        # of the retired dir-level relabel left: its label-change table
+        # and a half-swapped partition patch
+        for name in ("edges", "edges__patch.json", "edges__patchstage", "canon_changes"):
+            io.drop(name)
         io.write(
             out.repartition(_one_wave(spark, cfg.n_buckets), F.col("part_id")),
             "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
@@ -1446,22 +1274,22 @@ def _stage_materialize_incremental(
         io.write_json_atomic(_layer_marker("full"), {"batches": all_batches})
         n_out = _observed(obs)["n"]
     else:
-        # the delta itself: its own b_fp layer(s), dynamic partition
+        # the delta itself: its own b_fp layer, dynamic partition
         # overwrite — zero old files touched, retry replaces itself.
-        # Inputs are the pending batches' triples_raw layers (partition-
-        # pruned — no scan of the other layers) and the map rows their
-        # terms resolve through. The CURRENT map already holds every
-        # pending batch's merges, so those rows need no composing.
+        # Inputs are the batch's triples_raw layer (partition-pruned —
+        # no scan of the other layers) and the map rows its terms
+        # resolve through.
+        b = link.batch
         delta_triples = (
             io.read("triples_raw", RAW_LAYER_DDL)
-            .where(F.col("batch_fp").isin(pending) & F.col("error").isNull())
+            .where((F.col("batch_fp") == b) & F.col("error").isNull())
             .select("s", "p", "o", "batch_fp")
         )
         m_eff = cmap.where(F.col("uri") != F.col("canon_id")).join(
             F.broadcast(_uris(delta_triples)), "uri", "left_semi"
         )
         # broadcast stays unconditional HERE: m_eff holds only the
-        # pending layers' terms — delta-sized by construction
+        # layer's terms — delta-sized by construction
         delta_new = edges_with_buckets(
             canonicalize_triples(
                 delta_triples, m_eff, broadcast_map=True, keep_cols=["batch_fp"],
@@ -1471,16 +1299,15 @@ def _stage_materialize_incremental(
         n_out = 0
         # a batch of cosmetic re-crawls only has no layer: nothing to
         # write (and a scan of no files would never report its count)
-        if set(pending) & set(_partition_values(io, "triples_raw", "batch_fp")):
+        if b in _partition_values(io, "triples_raw", "batch_fp"):
             io.write(
                 delta_new.observe(obs, F.count(F.lit(1)).alias("n"))
                 .repartition(_one_wave(spark, cfg.n_buckets), "b_fp", "part_id"),
                 "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
             )
             n_out = _observed(obs)["n"]
-        # completion markers LAST — a half-written layer stays pending
-        for b in pending:
-            io.write_json_atomic(_layer_marker(b), {"batches": [b]})
+        # completion marker LAST — a half-written layer stays pending
+        io.write_json_atomic(_layer_marker(b), {"batches": [b]})
         # table maintenance, AFTER this delta committed: fold the
         # accumulated layers back into one when they pile up
         _maybe_fold_layers(spark, cfg, io)

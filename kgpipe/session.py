@@ -90,32 +90,11 @@ def get_spark(
         builder = builder.config("spark.eventLog.enabled", "true").config(
             "spark.eventLog.dir", event_dir
         )
-    # optional-dependency jars (Iceberg runtime, fetched by `make
-    # iceberg` into <repo>/jars/): put them on the session classpath
-    # when present, so the Iceberg seam tests and TableIO(catalog=...)
-    # work anywhere with network — this sandbox has neither, and the
-    # empty/missing dir is a clean no-op. Override dir via
-    # SPARK_GRAFT_JARS_DIR. Session-start-only config, like all jars.
-    jars = _optional_jars(pkg_root)
-    if jars:
-        builder = builder.config("spark.jars", ",".join(jars))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def _optional_jars(pkg_root: str) -> list[str]:
-    """Jar files from the optional-dependency dir (default
-    <repo>/jars/, override SPARK_GRAFT_JARS_DIR) — [] when the dir is
-    absent or empty (the offline sandbox)."""
-    jars_dir = os.environ.get("SPARK_GRAFT_JARS_DIR", os.path.join(pkg_root, "jars"))
-    if not os.path.isdir(jars_dir):
-        return []
-    return sorted(
-        os.path.join(jars_dir, f) for f in os.listdir(jars_dir) if f.endswith(".jar")
-    )
 
 
 def _parse_local_cores(master: str) -> int:

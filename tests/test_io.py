@@ -1,7 +1,6 @@
 """TableIO: Hadoop-FS existence semantics (resume must work on
-cluster filesystems, not just the driver's local disk) and the
-Iceberg seam (exercised when the runtime jar is present, skipped
-otherwise — this sandbox has no jar and no ivy network)."""
+cluster filesystems, not just the driver's local disk), the crash-safe
+replace and compaction swaps, and the driver-side small-table path."""
 
 import os
 from decimal import Decimal
@@ -9,7 +8,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe.io import TableIO, iceberg_available, iceberg_conf
+from kgpipe.io import TableIO
 
 
 def test_exists_and_roundtrip(spark, tmp_path):
@@ -36,34 +35,6 @@ def test_empty_table_roundtrip_with_schema(spark, tmp_path):
     io = TableIO(spark, str(tmp_path))
     out = io.read("missing", "a string, b long")
     assert out.count() == 0 and [f.name for f in out.schema.fields] == ["a", "b"]
-
-
-def test_iceberg_conf_shape():
-    conf = iceberg_conf("kg", "/data/wh")
-    assert conf["spark.sql.catalog.kg"] == "org.apache.iceberg.spark.SparkCatalog"
-    assert conf["spark.sql.catalog.kg.warehouse"] == "/data/wh"
-    assert "Iceberg" in conf["spark.sql.extensions"]
-
-
-def test_catalog_requires_jar(spark, tmp_path):
-    if iceberg_available(spark):
-        pytest.skip("jar present: covered by test_iceberg_roundtrip")
-    with pytest.raises(RuntimeError, match="Iceberg"):
-        TableIO(spark, str(tmp_path), catalog="kg")
-
-
-def test_iceberg_roundtrip(spark, tmp_path):
-    if not iceberg_available(spark):
-        pytest.skip("Iceberg runtime jar not on classpath")
-    io = TableIO(spark, str(tmp_path), catalog="kg")
-    df = spark.range(10).select(F.col("id"), (F.col("id") % 3).alias("part_id"))
-    io.write(df, "t", partition_by=["part_id"])
-    assert io.exists("t") and io.read("t").count() == 10
-    io.write(df.where(F.col("part_id") == 0), "t", mode="overwrite", partition_by=["part_id"])
-    # dynamic-partition semantics: untouched partitions survive
-    assert io.read("t").count() == 10
-    io.drop("t")
-    assert not io.exists("t")
 
 
 def test_compact_small_files(spark, tmp_path):
@@ -219,67 +190,6 @@ def test_restore_aside_replaces_existing_live_dir(spark, tmp_path):
 
     assert sorted(os.listdir(live)) == ["real.parquet"]
     assert not aside.exists()
-
-
-def test_patch_partitions_replaces_subset_and_deletes_empty(spark, tmp_path):
-    """patch_partitions must (a) replace exactly the named partitions,
-    (b) DELETE a named partition whose new content is empty, and
-    (c) leave unnamed partitions byte-untouched."""
-    import os
-
-    from kgpipe.io import TableIO
-
-    io = TableIO(spark, str(tmp_path))
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(6)], "pt int, v string"
-    ).withColumn("pt", (F.col("pt") % 3))
-    io.write(df, "t", mode="overwrite", partition_by=["pt"])
-    p1_files = {
-        f: os.path.getmtime(os.path.join(tmp_path, "t", "pt=1", f))
-        for f in os.listdir(tmp_path / "t" / "pt=1")
-    }
-
-    # replace pt=0 with one row, empty pt=2, leave pt=1 alone
-    patch = spark.createDataFrame([(0, "NEW")], "pt int, v string")
-    io.patch_partitions(patch, "t", "pt", [0, 2])
-
-    got = sorted((r.pt, r.v) for r in io.read("t", "pt int, v string").collect())
-    kept = sorted((1, f"v{i}") for i in (1, 4))
-    assert got == [(0, "NEW")] + kept
-    assert not (tmp_path / "t" / "pt=2").exists()
-    after = {
-        f: os.path.getmtime(os.path.join(tmp_path, "t", "pt=1", f))
-        for f in os.listdir(tmp_path / "t" / "pt=1")
-    }
-    assert after == p1_files, "untouched partition was rewritten"
-    assert not (tmp_path / "t__patchstage").exists()
-    assert not (tmp_path / "t__patch.json").exists()
-
-
-def test_patch_partitions_crash_recovery(spark, tmp_path):
-    """A crash after the commit marker but mid-swap must be healed by
-    recover_patch: staged partitions land, emptied partitions are
-    deleted, and the replay is idempotent."""
-    from kgpipe.io import TableIO
-
-    io = TableIO(spark, str(tmp_path))
-    df = spark.createDataFrame([(0, "old0"), (1, "old1"), (2, "old2")], "pt int, v string")
-    io.write(df, "t", mode="overwrite", partition_by=["pt"])
-
-    # simulate the crashed patch: staging dir + marker present, no swap
-    patch = spark.createDataFrame([(0, "new0")], "pt int, v string")
-    patch.write.mode("overwrite").partitionBy("pt").parquet(str(tmp_path / "t__patchstage"))
-    io.write_json_atomic(
-        "t__patch.json",
-        {"part_col": "pt", "parts": [
-            {"val": 0, "has_data": True}, {"val": 2, "has_data": False},
-        ]},
-    )
-    io.recover_patch("t")
-    io.recover_patch("t")  # replay must be a no-op
-    got = sorted((r.pt, r.v) for r in io.read("t", "pt int, v string").collect())
-    assert got == [(0, "new0"), (1, "old1")]
-    assert not (tmp_path / "t__patch.json").exists()
 
 
 def test_write_small_rows_roundtrip_matches_spark_writer(spark, tmp_path):

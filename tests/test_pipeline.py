@@ -516,20 +516,22 @@ def test_incremental_link_respects_neardup_false(spark, tmp_path):
 
 
 def test_incremental_materialize_patches_only_affected_partitions(spark, tmp_path):
-    """The r4 verdict's #1 gap, closed: a delta run must NOT rewrite
-    the whole edge table. Pin it physically — partition dirs untouched
-    by the delta keep their exact files (same names, same mtimes)."""
+    """The r4 verdict's #1 gap, closed: a delta run that changes no
+    canon label must NOT rewrite the edge table. Pin it physically —
+    every old partition dir keeps its exact files (same names, same
+    mtimes) and the delta lands as its own layer."""
     import os
 
-    all_pages = gen_pages(120)
+    import pandas as pd
+
+    base = gen_pages(118)
+    all_pages = pd.concat([base, _label_free_pages(2)], ignore_index=True)
     wh = str(tmp_path / "wh_patch")
-    # a 2-page delta against 64 buckets: the delta's edges land in a
-    # handful of buckets, so most partitions must survive untouched
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
         n_buckets=64,
     )
-    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:118]).repartition(5), cfg)
+    run_pipeline(spark, spark.createDataFrame(base).repartition(5), cfg)
 
     edir = os.path.join(wh, "edges")
     def snapshot():
@@ -551,8 +553,9 @@ def test_incremental_materialize_patches_only_affected_partitions(spark, tmp_pat
     run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg)
     after = snapshot()
 
-    untouched = [d for d in before if d in after and after[d] == before[d]]
-    assert untouched, "delta rewrote every partition — patching is not happening"
+    assert before and all(after.get(d) == before[d] for d in before), (
+        "the label-free delta rewrote old edge dirs"
+    )
     # the delta landed as its OWN layer: new b_fp dirs exist
     assert len({k.split("/")[0] for k in after}) > len(
         {k.split("/")[0] for k in before}
@@ -560,22 +563,26 @@ def test_incremental_materialize_patches_only_affected_partitions(spark, tmp_pat
 
 
 def test_incremental_materialize_retry_after_marker_crash(spark, tmp_path):
-    """Crash window: the partition patch landed but the state markers
-    (edges_cmap, applied-batch ledger) did not. The rerun re-applies
-    the same delta over already-patched partitions — the b_fp
-    exclusion must prevent duplicated delta rows, and the final edges
-    must still equal a full recompute."""
+    """Crash window: the appended delta layer landed but its
+    completion marker (the applied-batch ledger) did not. The rerun
+    finds the batch pending again with nothing left to link — a
+    resumed run, so it rewrites the edge table — and must not
+    duplicate the delta's rows: the final edges equal a full
+    recompute."""
     import os
     import shutil
 
-    all_pages = gen_pages(100)
+    import pandas as pd
+
+    base = gen_pages(95)
+    all_pages = pd.concat([base, _label_free_pages(5)], ignore_index=True)
     wh = str(tmp_path / "wh_crash2")
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
     )
-    # small delta: the append path (not the merge-storm rebuild
-    # fallback) is the crash window under test
-    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:95]).repartition(4), cfg)
+    # a delta that changes no canon label: the append path (not the
+    # rewrite) is the crash window under test
+    run_pipeline(spark, spark.createDataFrame(base).repartition(4), cfg)
     layers_before = set(os.listdir(os.path.join(wh, "edges")))
 
     run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg)
@@ -835,26 +842,39 @@ def _nt_pages(specs, start=0):
     return pd.DataFrame(rows)
 
 
+def _label_free_pages(n, start=900):
+    """n pages whose one triple each links nothing: a fresh singleton
+    subject URI and literal, no sameAs, no normal form shared with
+    each other or the gen_pages corpus — a delta of them changes no
+    canon label, so materialize appends it."""
+    return _nt_pages(
+        [
+            [f"<http://lf{start + i}.label-free.example/e> "
+             f"<http://label-free.example/p> \"lf-{start + i}\" ."]
+            for i in range(n)
+        ],
+        start=start,
+    )
+
+
 SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
 
 
 def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypatch):
-    """r6 verdict next #6 (small-scale pin; scale cell in
-    tools/scale_stress.py cell D): several UNAPPLIED pending batches
-    whose label changes CHAIN (batch 1: kx-c→kx-b, batch 2: kx-b→kx-a
-    — canon is the lexicographic component min) must compose through
-    _compose_changes when one materialize finally applies them all:
-    the edge table still holds pre-batch-1 labels, so applying either
-    batch's change set alone would corrupt it. Batches are left
-    pending by suppressing the materialize stage during the delta
-    runs — exactly the crash shape (link committed, materialize not
-    reached)."""
+    """Several UNAPPLIED pending batches whose label changes CHAIN
+    (batch 1: kx-c→kx-b, batch 2: kx-b→kx-a — canon is the
+    lexicographic component min): the edge table still holds
+    pre-batch-1 labels, so appending either batch alone would leave
+    stale labels. The materialize that finally meets them — a resumed
+    run with several pending batches — rewrites the edge table into
+    one full layer. Batches are left pending by suppressing the
+    materialize stage during the delta runs — exactly the crash shape
+    (link committed, materialize not reached)."""
     import kgpipe.pipeline as pl
     from kgpipe.io import TableIO
 
     # base: component {kx-c, kx-d} (canon kx-c) + filler entities so
-    # the edge table spans several part_id dirs and the repair path
-    # (not the merge-storm rebuild) is what runs
+    # the edge table spans several part_id dirs
     base = [
         [
             f"<http://kx-c.example/e> {SAMEAS} <http://kx-d.example/e> .",
@@ -878,34 +898,33 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
 
     run_pipeline(spark, spark.createDataFrame(p_base).repartition(4), cfg)
 
-    # deltas 1 and 2: link runs (canon_changes committed per batch),
+    # deltas 1 and 2: link runs and swaps in each merged map,
     # materialize never reached — both batches stack up pending
+    io = TableIO(spark, wh)
+
+    def canon_of(uri):
+        rows = io.read("canonical_map", pl.CMAP_DDL).where(F.col("uri") == uri).collect()
+        return rows[0].canon_id
+
     real_mat = pl._stage_materialize_incremental
     monkeypatch.setattr(pl, "_stage_materialize_incremental", lambda *a, **k: None)
     all_d1 = pd.concat([p_base, p_d1], ignore_index=True)
     run_pipeline(spark, spark.createDataFrame(all_d1).repartition(4), cfg)
+    # the chain: batch 1 relabels kx-c's component to kx-b, batch 2
+    # relabels kx-b to kx-a
+    assert canon_of("http://kx-d.example/e") == "http://kx-b.example/e"
     all_d2 = pd.concat([all_d1, p_d2], ignore_index=True)
     run_pipeline(spark, spark.createDataFrame(all_d2).repartition(4), cfg)
+    assert canon_of("http://kx-d.example/e") == "http://kx-a.example/e"
     monkeypatch.setattr(pl, "_stage_materialize_incremental", real_mat)
+    assert len(
+        [b for b in pl._partition_values(io, "linked_urls", "batch_fp")
+         if b not in pl._applied_batches(io)]
+    ) == 2
 
-    io = TableIO(spark, wh)
-    applied = pl._applied_batches(io)
-    ch = io.read("canon_changes", pl.CHANGES_DDL)
-    pend_ch = ch.where(~F.col("batch_fp").isin(sorted(applied)))
-    by_batch = {
-        r.batch_fp: (r.old_c, r.new_c)
-        for r in pend_ch.where(F.col("old_c").startswith("http://kx-")).collect()
-    }
-    assert len(by_batch) == 2, f"expected 2 pending kx change batches: {by_batch}"
-    (o1, n1), (o2, n2) = sorted(by_batch.values(), key=lambda t: t[0], reverse=True)
-    # the chain: batch 2 relabels the label batch 1 introduced
-    assert (o1, n1) == ("http://kx-c.example/e", "http://kx-b.example/e")
-    assert (o2, n2) == ("http://kx-b.example/e", "http://kx-a.example/e")
-
-    # one run applies BOTH pending batches; edges must equal scratch
+    # one run meets BOTH pending batches: it rewrites the edge table
     res = run_pipeline(spark, spark.createDataFrame(all_d2).repartition(4), cfg)
-    layers = pl._edges_layer_names(io)
-    assert len(layers) > 1, f"repair path expected (not a rebuild): {layers}"
+    assert pl._edges_layer_names(io) == ["full"]
     cfg_ref = PipelineConfig(
         warehouse=str(tmp_path / "wh_pend_ref"), rules_text=RULES_16_TEXT,
         mode="compat", n_parts=8,
@@ -914,18 +933,16 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
     got = collections.Counter((r.canon_s, r.p, r.canon_o) for r in res.edges.collect())
     exp = collections.Counter((r.canon_s, r.p, r.canon_o) for r in ref.edges.collect())
     assert got == exp
-    # the pre-batch-1 label kx-c is gone from the edge table — only a
-    # COMPOSED kx-c→kx-a application explains that plus correctness
+    # the pre-batch-1 label kx-c is gone from the edge table
     assert not any(k[0] == "http://kx-c.example/e" for k in got)
     assert _graph(res) == _oracle(res)
 
 
 def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
-    """The REWRITE_DIR_FRACTION fallback (pipeline.py ~1176): a delta
-    whose merges relabel nearly every component would rewrite more
-    dirs than one sequential full write costs — the stage must fall
-    back to ONE rebuild layer, and the result must still equal a
-    scratch recompute."""
+    """A delta whose merges relabel nearly every component changes
+    canon labels, so materialize rewrites the edge table into ONE
+    full layer whose coverage marker lists every batch, and the
+    result must still equal a scratch recompute."""
     import kgpipe.pipeline as pl
     from kgpipe.io import TableIO
 
@@ -938,7 +955,7 @@ def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
         for i in range(k)
     ]
     # every component gets a new lexicographically-SMALLER member →
-    # every canon label changes → affected dirs ≫ REWRITE_DIR_FRACTION
+    # every canon label changes
     storm = [
         [f"<http://kx-a{i:02d}.example/e> {SAMEAS} <http://kx-n{i:02d}.example/e> ."]
         for i in range(k)
@@ -1064,20 +1081,39 @@ def test_delta_extracts_only_new_pages(spark, tmp_path, monkeypatch):
 
 def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     """Kill a delta run after its k-th TableIO.write / replace /
-    write_json_atomic / write_small_rows (the label changes and the
-    ledger land through the last), for every k, then rerun it: the
-    canonical map and the edges equal both an uninterrupted delta run
-    and a fresh build. Writes nested inside another counted write
-    (replace's staged write) belong to the outer one."""
+    write_json_atomic / write_small_rows (the ledger lands through the
+    last), for every k, then rerun it: the canonical map and the edges
+    equal both an uninterrupted delta run and a fresh build. Writes
+    nested inside another counted write (replace's staged write)
+    belong to the outer one. The delta changes canon labels the old
+    edges hold, so a kill right after the map swap leaves a retry
+    whose merge counts 0 changes over the already-merged map: only the
+    map's stamp stops it from appending beside stale old edges."""
     import shutil
 
+    import pandas as pd
+
+    from kgpipe.fixtures import nt_block
     from kgpipe.io import TableIO
 
-    all_pages = gen_pages(36)
+    # the delta: gen_pages' next 6 pages, whose label changes are all
+    # new URIs joining old components (no old edge holds them), plus a
+    # page giving page 0's subject a sameAs twin that sorts first — it
+    # relabels a component the old edges hold
+    s0 = nt_block(0).split()[0]
+    all_pages = pd.concat(
+        [gen_pages(36), _nt_pages([[f"{s0} {SAMEAS} <0-twin.example/e> ."]])],
+        ignore_index=True,
+    )
     base_df = spark.createDataFrame(all_pages.iloc[:30]).repartition(2)
     all_df = spark.createDataFrame(all_pages).repartition(2)
     base_wh = tmp_path / "base"
-    run_pipeline(spark, base_df, _cfg(base_wh))
+    base = run_pipeline(spark, base_df, _cfg(base_wh))
+    rw = PrefixRewriter(parse_rules(RULES_16_TEXT), mode="compat")
+    s0_abbr = parse_ntriple(rw.rewrite_term(nt_block(0)))[0]
+    base_cmap, base_edges = _graph(base)
+    old_label = dict(base_cmap).get(s0_abbr, s0_abbr)
+    assert any(old_label in (cs, co) for cs, _p, co in base_edges)
 
     fresh = run_pipeline(
         spark, all_df,
@@ -1122,7 +1158,10 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     uninterrupted = _graph(delta_run(tmp_path / "clean"))
     n_writes = state["n"]
     assert uninterrupted == full
-    assert n_writes >= 6  # layer, hubs, changes, map, url index, markers
+    stamp = TableIO(spark, str(tmp_path / "clean")).read_json("canonical_map/_kgpipe_merge.json")
+    assert stamp["n_changes"] >= 1, stamp
+    assert not any(old_label in (cs, co) for cs, _p, co in uninterrupted[1])
+    assert n_writes >= 6  # layer, hubs, map, url index, edges, markers
     for k in range(1, n_writes + 1):
         assert _graph(delta_run(tmp_path / f"kill{k}", kill_at=k)) == full, f"killed at write {k}"
 
@@ -1307,17 +1346,18 @@ def test_empty_first_run_finishes_empty(spark, tmp_path):
     assert _graph(res) == _graph(ref) == _oracle(res)
 
 
-# Spark jobs one append delta over the fixture may start: 26 since the
-# link and materialize probes, pins and re-reads were folded into their
-# writes (37 before). A tripwire, not a speed metric: a later change
+# Spark jobs one delta over the fixture may start: 22 since materialize
+# lost its dir-level relabel scan (26 before; 37 before the link and
+# materialize probes, pins and re-reads were folded into their
+# writes). A tripwire, not a speed metric: a later change
 # that re-adds a probe, a pin or a re-read trips it and must justify
 # raising the number.
-DELTA_JOB_BUDGET = 26
+DELTA_JOB_BUDGET = 22
 
 
 def test_delta_job_budget(spark, tmp_path):
-    """One append delta over the test fixture starts at most
-    DELTA_JOB_BUDGET Spark jobs."""
+    """One delta over the test fixture starts at most DELTA_JOB_BUDGET
+    Spark jobs."""
     all_pages = gen_pages(60)
     cfg = _cfg(tmp_path / "wh_jobs")
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
@@ -1376,6 +1416,70 @@ def test_old_bucketed_edge_table_migrates(spark, tmp_path):
     assert not [f for f in (wh / "edges").iterdir() if f.suffix == ".parquet"]
     ref = run_pipeline(
         spark, spark.createDataFrame(all_pages).repartition(3), _cfg(tmp_path / "ref_bucketed")
+    )
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+
+def test_warehouse_of_the_dir_level_relabel_migrates(spark, tmp_path, monkeypatch):
+    """A warehouse the retired dir-level relabel left behind — its
+    per-batch canon_changes table, a linked batch still pending, and a
+    partition patch that died mid-swap (the edges__patch.json marker,
+    an edges__patchstage dir holding staged rows, one live dir already
+    deleted) — resumes with a rewrite of the edge table that equals a
+    fresh build and the graph oracle, and leaves none of those paths
+    behind."""
+    import json
+    import shutil
+
+    import kgpipe.pipeline as pl
+
+    all_pages = gen_pages(60)
+    wh = tmp_path / "wh_relabel"
+    cfg = _cfg(wh)
+    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
+    # the delta links, then dies before materialize: one pending batch
+    monkeypatch.setattr(pl, "_stage_materialize_incremental", lambda *a, **k: None)
+    run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
+    monkeypatch.undo()
+    io = pl.TableIO(spark, str(wh))
+    pending = [
+        b for b in pl._partition_values(io, "linked_urls", "batch_fp")
+        if b not in pl._applied_batches(io)
+    ]
+    assert len(pending) == 1
+
+    io.write(
+        spark.createDataFrame(
+            [("http://old.example/c", "http://old.example/a", pending[0])],
+            "old_c string, new_c string, batch_fp string",
+        ),
+        "canon_changes", partition_by=["batch_fp"],
+    )
+    # the patch died between "delete live dir" and "rename staged dir"
+    # for part_id=0, after swapping part_id=1: its staged rows carry a
+    # label no build produces
+    layer = pl._edges_layer_names(io)[0]
+    staged = spark.createDataFrame(
+        [("http://stale.example/x", "http://stale.example/p", "http://stale.example/y",
+          layer, 0)],
+        pl.EDGES_INC_DDL,
+    )
+    staged.write.partitionBy("b_fp", "part_id").parquet(io.path("edges__patchstage"))
+    shutil.rmtree(wh / "edges" / f"b_fp={layer}" / "part_id=0", ignore_errors=True)
+    parts = [{"val": [layer, 0], "has_data": True}, {"val": [layer, 1], "has_data": True}]
+    io.write_json_atomic(
+        "edges__patch.json", {"part_cols": ["b_fp", "part_id"], "parts": parts}
+    )
+    assert json.loads((wh / "edges__patch.json").read_text())["parts"] == parts
+
+    res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
+    assert pl._edges_layer_names(io) == ["full"]
+    left = sorted(
+        f.name for f in wh.iterdir() if "canon_changes" in f.name or "__patch" in f.name
+    )
+    assert left == [], left
+    ref = run_pipeline(
+        spark, spark.createDataFrame(all_pages).repartition(3), _cfg(tmp_path / "ref_relabel")
     )
     assert _graph(res) == _graph(ref) == _oracle(res)
 

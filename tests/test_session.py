@@ -39,21 +39,3 @@ def test_unknown_topology_falls_back():
     assert _infer_parallelism("yarn", {}) == 32
     assert _infer_parallelism("yarn", {"spark.executor.instances": "bogus"}) == 32
     assert _infer_parallelism("yarn", {"spark.executor.instances": "5"}) == 32
-
-
-def test_optional_jars_discovery(tmp_path, monkeypatch):
-    """`make iceberg` drops jars into jars/; the session factory puts
-    them on the classpath. Absent/empty dir → clean no-op (offline)."""
-    from kgpipe.session import _optional_jars
-
-    monkeypatch.setenv("SPARK_GRAFT_JARS_DIR", str(tmp_path / "nope"))
-    assert _optional_jars("/x") == []
-    d = tmp_path / "jars"
-    d.mkdir()
-    monkeypatch.setenv("SPARK_GRAFT_JARS_DIR", str(d))
-    assert _optional_jars("/x") == []
-    (d / "iceberg-spark-runtime-4.0_2.13-1.10.0.jar").write_bytes(b"")
-    (d / "notes.txt").write_text("ignored")
-    assert _optional_jars("/x") == [
-        str(d / "iceberg-spark-runtime-4.0_2.13-1.10.0.jar")
-    ]

@@ -33,12 +33,12 @@ def gen_append_pages(n: int):
     """Pages whose NT entities are PAGE-SCOPED (…/e/{i}/x) with
     sameAs only within the page, so append-only deltas never merge
     components across batches — the daily-append regime the layered
-    materialize is built for (canon_changes stays empty and every
-    delta is a pure b_fp layer append). The stock gen_pages corpus
-    draws subjects from a shared pool, so each delta merges into
-    existing components; with few buckets the dir-fraction guard then
-    correctly prefers a full rewrite every time and layers never
-    accumulate (measured — that run answers a different question)."""
+    materialize is built for (no canon label changes, so every delta
+    is a pure b_fp layer append). The stock gen_pages corpus draws
+    subjects from a shared pool, so each delta merges into existing
+    components and changes labels; materialize then rewrites the edge
+    table every time and layers never accumulate (measured — that run
+    answers a different question)."""
     import pandas as pd
 
     from kgpipe.fixtures import _EPOCH, OWL_SAMEAS, html_escape
