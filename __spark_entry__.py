@@ -190,25 +190,6 @@ def q_pagerank_3(spark, sf_dir):
     return pr.select("node", F.round(F.col("pr"), 6).alias("pr"))
 
 
-def q_hash_sample(spark, sf_dir):
-    """Reproducible corpus sampling (operators/sample): membership is
-    a pure function of the key — the engine-portable Knuth bucket
-    here, so DuckDB computes the IDENTICAL sample — with nested
-    fractions (10% ⊆ 30%) surfaced as a split label per kept row."""
-    from kgpipe.operators.sample import hash_sample, knuth_bucket
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    b = knuth_bucket(F.col("doc_id"))
-    kept = hash_sample(docs.withColumn("bucket", b), F.col("bucket"), 0.3)
-    return kept.select(
-        "doc_id",
-        "bucket",
-        F.when(F.col("bucket") < 100_000, F.lit("holdout"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-
-
 def q_tfidf_top_terms(spark, sf_dir):
     """Per-document top-3 terms by tf-idf (operators/textops) —
     ranked on the ROUNDED score (6dp) with term-asc tie-break, so
@@ -643,32 +624,6 @@ def q_events_agg(spark, sf_dir):
     )
 
 
-def q_asof_click_view(spark, sf_dir):
-    """As-of join: each click event gets the latest earlier-or-equal
-    view event's value per user (window carry-forward impl)."""
-    from kgpipe.operators.temporal import asof_join
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    left = e.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    right = (
-        e.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.round(F.max("value"), 4).alias("view_value"))
-    )
-    return asof_join(left, right, on="ts", by="user_id").select(
-        "user_id", "event_id", "view_value"
-    )
-
-
-def q_sessionize_events(spark, sf_dir):
-    from kgpipe.operators.temporal import sessionize
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts", "event_id")
-    return sessionize(e, gap_minutes=30, tiebreak_col="event_id").select(
-        "user_id", "event_id", "session_seq"
-    )
-
-
 def q_rollup_orders(spark, sf_dir):
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     return (
@@ -864,7 +819,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curie_roundtrip": q_curie_roundtrip,
         "khop_2": q_khop_2,
         "pagerank_3": q_pagerank_3,
-        "hash_sample": q_hash_sample,
         "tfidf_top_terms": q_tfidf_top_terms,
         "boilerplate_ngrams": q_boilerplate_ngrams,
         "contamination_flags": q_contamination_flags,
@@ -902,8 +856,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_funcs": q_window_funcs,
         "orders_set_algebra": q_orders_set_algebra,
         "grouping_sets_orders": q_grouping_sets_orders,
-        "asof_click_view": q_asof_click_view,
-        "sessionize_events": q_sessionize_events,
         "rollup_orders": q_rollup_orders,
         "price_quantiles": q_price_quantiles,
         "cube_orders": q_cube_orders,
@@ -1125,16 +1077,6 @@ def oracle_sql() -> dict[str, str]:
               from nodes left join c3 on nodes.node = c3.node cross join nn
             )
             select node, round(pr, 6) as pr from r3
-        """,
-        "hash_sample": """
-            with b as (
-              select doc_id,
-                     ((doc_id & 2147483647) * 2654435761) % 1000000 as bucket
-              from documents
-            )
-            select doc_id, bucket,
-                   case when bucket < 100000 then 'holdout' else 'train' end as split
-            from b where bucket < 300000
         """,
         "tfidf_top_terms": r"""
             with words as (
@@ -1460,36 +1402,6 @@ def oracle_sql() -> dict[str, str]:
             select o_custkey, 'open_only' as bucket from (select * from a except select * from b)
             union all
             select o_custkey, 'filled_only' as bucket from (select * from b except select * from a)
-        """,
-        "asof_click_view": """
-            with l as (
-              select user_id, ts, event_id from events where event_type = 'click'
-            ), r as (
-              select user_id, ts, round(max(value), 4) as view_value
-              from events where event_type = 'view' group by user_id, ts
-            )
-            select l.user_id, l.event_id, r.view_value
-            from l asof left join r
-              on l.user_id = r.user_id and l.ts >= r.ts
-        """,
-        "sessionize_events": """
-            with x as (
-              select user_id, ts, event_id,
-                     lag(ts) over (partition by user_id order by ts, event_id) as prev
-              from events
-            ), flags as (
-              select user_id, ts, event_id,
-                     case when prev is null or epoch(ts) - epoch(prev) > 1800
-                          then 1 else 0 end as is_new
-              from x
-            )
-            select user_id, event_id,
-                   -- cast: DuckDB widens windowed sum to HUGEINT; the
-                   -- driver's value hash is type-sensitive and Spark
-                   -- returns BIGINT
-                   cast(sum(is_new) over (partition by user_id order by ts, event_id
-                                     rows between unbounded preceding and current row) as bigint) as session_seq
-            from flags
         """,
         "grouping_sets_orders": """
             select o_orderstatus, o_orderpriority,

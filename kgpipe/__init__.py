@@ -13,7 +13,7 @@ Layout:
     kgpipe.operators  — Spark operators: extract, parse, abbrev,
                         link, connected components, materialize,
                         graph traversal, sinks, dedup, similarity,
-                        textops, multimodal
+                        textops
     kgpipe.convert    — NT lines → abbreviated triples in one fused
                         stage (the reference's primary -a -j job)
     kgpipe.pipeline   — stage orchestration with checkpoint/resume;

@@ -47,13 +47,12 @@ class CheckpointLog:
     of work), so this object keeps a DRIVER-SIDE row cache: the
     parquet table is scanned at most once per CheckpointLog instance
     (a fresh instance per run re-reads disk, so resume across
-    processes is untouched), and the per-stage completed()/read()
-    lookups that every stage makes are served from local rows instead
-    of one fixed-latency Spark job each — three scan jobs saved per
-    pipeline run. mark_done appends to disk first (crash-safe: an
-    unflushed cache is only ever MISSING completed work, never
-    inventing it), then to the cache. A lock guards the cache, so one
-    log may be shared across threads."""
+    processes is untouched), and the per-stage completed_set() and
+    counter_sums() lookups are served from local rows instead of one
+    fixed-latency Spark job each. mark_done_rows appends to disk first
+    (crash-safe: an unflushed cache is only ever MISSING completed
+    work, never inventing it), then to the cache. A lock guards the
+    cache, so one log may be shared across threads."""
 
     def __init__(self, io: TableIO):
         self.io = io
@@ -81,9 +80,6 @@ class CheckpointLog:
                     self._rows = []
             return list(self._rows)
 
-    def read(self) -> DataFrame:
-        return self.io.spark.createDataFrame(self._load(), CHECKPOINT_SCHEMA)
-
     def completed_set(self, stage: str) -> set[tuple]:
         """Driver-side {(part_id, fingerprint, n_in)} of partitions
         already done for a stage — the ledger is tiny, so set logic
@@ -99,18 +95,10 @@ class CheckpointLog:
             if r[0] == stage and r[6] == "done"
         }
 
-    def completed(self, stage: str) -> DataFrame:
-        """completed_set as a DataFrame, for join-shaped callers."""
-        return self.io.spark.createDataFrame(
-            sorted(self.completed_set(stage)),
-            "part_id int, fingerprint long, n_in long",
-        )
-
     def counter_sums(self) -> dict[str, dict[str, int]]:
         """Per-stage {n_in, n_out, n_err} sums over the ledger —
-        driver-side Python over the cached rows, same arithmetic as a
-        groupBy('stage').sum() over read() (which cost one aggregation
-        job per pipeline run for a <100-row local relation)."""
+        driver-side Python over the cached rows (a Spark groupBy would
+        cost one aggregation job for a <100-row relation)."""
         out: dict[str, dict[str, int]] = {}
         for r in self._load():
             c = out.setdefault(r[0], {"n_in": 0, "n_out": 0, "n_err": 0})
@@ -133,15 +121,3 @@ class CheckpointLog:
         with self._lock:
             if self._rows is not None:
                 self._rows.extend(srows)
-
-    def mark_done(self, stage: str, stats: DataFrame) -> None:
-        """stats: (part_id, fingerprint, n_in, n_out, n_err)."""
-        self.mark_done_rows(
-            stage,
-            [
-                (r[0], r[1], r[2], r[3], r[4])
-                for r in stats.select(
-                    "part_id", "fingerprint", "n_in", "n_out", "n_err"
-                ).collect()
-            ],
-        )

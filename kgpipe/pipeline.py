@@ -80,7 +80,6 @@ class PipelineConfig:
     # 1.0 → exact-normalized linking only (precision-first default);
     # < 1.0 → minhash-LSH + Jaccard near-dup linking
     jaccard_threshold: float = 1.0
-    cc_max_iter: int = 25
     # LSH skew-guard bucket cap (both link modes); surfaced so tests
     # and corpora with known bucket structure can tune the
     # recall/blowup trade explicitly
@@ -134,8 +133,7 @@ def _config_key(cfg: PipelineConfig) -> str:
             "rules": cfg.rules_text, "mode": cfg.mode, "n_parts": cfg.n_parts,
             "n_buckets": cfg.n_buckets, "sameas": cfg.sameas_pred,
             "null": cfg.null_shortcut, "neardup": cfg.neardup_link,
-            "jt": cfg.jaccard_threshold, "cc": cfg.cc_max_iter,
-            "cap": cfg.lsh_max_bucket,
+            "jt": cfg.jaccard_threshold, "cap": cfg.lsh_max_bucket,
             "lsh_family": [LSH_NUM_HASHES, LSH_BANDS, LSH_SHINGLE_K, LSH_SEED,
                            LSH_FAMILY_VERSION],
         },
@@ -195,9 +193,8 @@ def _source_manifest(pages: DataFrame) -> str | None:
 
 
 def _collect_counters(io: TableIO, log: CheckpointLog) -> dict:
-    # driver-side sums over the (tiny) ledger rows — the former
-    # groupBy over log.read() spawned one aggregation job per
-    # pipeline run for a <100-row local relation
+    # driver-side sums over the (tiny) cached ledger rows: no Spark
+    # job for a <100-row relation
     counters = log.counter_sums()
     # the LSH recall budget (SURVEY.md §6 P/R ≥ 0.95): how many
     # buckets the skew guard dropped and how many URIs sat inside
@@ -887,7 +884,7 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
         io.read("canonical_map", CMAP_DDL) if had_map
         else _local_frame(spark, {"uri": [], "canon_id": []})
     )
-    merge = incremental_merge(prev, delta_edges, max_iter=cfg.cc_max_iter)
+    merge = incremental_merge(prev, delta_edges)
     n_changes = 0
     if had_map:
         # the union-find tier's changes are rows on the driver already:
@@ -1035,9 +1032,7 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
         hubs_all = None
         edges = explicit
     # a merge into an empty map: one map row per edge endpoint
-    merge = incremental_merge(
-        _local_frame(spark, {"uri": [], "canon_id": []}), edges, max_iter=cfg.cc_max_iter
-    )
+    merge = incremental_merge(_local_frame(spark, {"uri": [], "canon_id": []}), edges)
     n_cmap = _replace_map(merge.cmap, io, batch_fp, None)
     io.drop("norm_hubs")
     if hubs_all is not None:

