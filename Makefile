@@ -1,4 +1,4 @@
-.PHONY: test bench zip scaling verify
+.PHONY: test bench zip verify
 
 # the tier-1 test command
 test:
@@ -14,9 +14,6 @@ bench:
 
 zip:
 	rm -f kgpipe.zip && zip -qr kgpipe.zip kgpipe -x '*__pycache__*'
-
-scaling:
-	python tools/scaling_probe.py
 
 # end-to-end smoke: the driver contract + CLI surfaces
 verify:

@@ -6,7 +6,7 @@ callable; `oracle_sql()` gives the DuckDB-equivalent SQL the driver
 compares against at sf0.01 (row count + schema + order-insensitive
 value hash). Every query has an oracle: hash-seeded operators
 (minhash/simhash LSH) are checked through their *verified* outputs
-(exact Jaccard, planted duplicates, full-probe IVF).
+(exact Jaccard, planted duplicates).
 
 Column names are aliased identically on both sides (driver sorts
 columns by name before hashing).
@@ -403,9 +403,9 @@ def _planted_offset_guard(df, id_col, offset=100_000):
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """Planted-duplicate corpus (the emb_neardup_lsh move, r5 verdict
-    missing #3): per doc_id, a synthetic text whose word grams are
-    UNIQUE to that doc, plus an exact duplicate at doc_id + 100000.
+    """Planted-duplicate corpus: per doc_id, a synthetic text whose
+    word grams are UNIQUE to that doc, plus an exact duplicate at
+    doc_id + 100000.
     Identical texts give identical simhashes (hamming 0 — banding
     recall 1.0 by pigeonhole), and cross-doc gram sets are disjoint so
     cross simhashes are independent 64-bit values (P(hamming ≤ 3) ≈
@@ -433,122 +433,6 @@ def q_simhash_pairs(spark, sf_dir):
     # wider to avoid silently incomplete pair sets
     return simhash_near_pairs(
         _spread(spark, docs.union(dup)), "doc_id", "text", max_hamming=3, shingle_k=2
-    )
-
-
-def q_ann_bruteforce(spark, sf_dir):
-    from kgpipe.operators.similarity import cosine_topk
-
-    emb = _emb(spark, sf_dir)
-    return cosine_topk(emb.where(F.col("vec_id") < 50), emb, k=3).select(
-        "query_id", "neighbor_id", "rank", F.round("score", 4).alias("score")
-    )
-
-
-def q_ann_ivf_fullprobe(spark, sf_dir):
-    """IVF with nprobe covering all clusters ⇒ must equal brute force
-    (same oracle SQL as q_ann_bruteforce)."""
-    from kgpipe.operators.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_topk(
-        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50, nprobe=10**6
-    ).select(
-        "query_id", "neighbor_id", "rank", F.round("score", 4).alias("score")
-    )
-
-
-def q_ann_ivf(spark, sf_dir):
-    """Approximate path at the ENGINE DEFAULT operating point
-    (ivf_topk nprobe=24, set from the r7 recall-vs-wall sweep —
-    recall@3 0.87 vs brute force at sf0.1), oracle-gated: the IVF
-    algorithm is deterministic given the corpus, so its SQL twin
-    emulates the ACTUAL probe-limited search (_IVF_NPROBE_ORACLE).
-    At sf0.01 (10 clusters) the default covers every cluster; the
-    probe-SELECTION logic stays discriminatively gated by
-    ann_ivf_probelim below."""
-    from kgpipe.operators.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_topk(
-        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50
-    ).select("query_id", "neighbor_id", "rank")
-
-
-def q_ann_ivf_probelim(spark, sf_dir):
-    """Deliberately probe-LIMITED IVF (nprobe=3 < n_clusters at every
-    sf): the gate that proves the top-nprobe probe selection and the
-    candidate restriction actually bound the search — the engine-
-    default query covers all sf0.01 clusters and can't see a probe-
-    selection bug there."""
-    from kgpipe.operators.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_topk(
-        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50, nprobe=3
-    ).select("query_id", "neighbor_id", "rank")
-
-
-def q_ann_ivf_refined_fullprobe(spark, sf_dir):
-    """Lloyd-refined IVF (refine_iters=2) probing ALL clusters ⇒ must
-    still equal brute force — the k-means training path is hash-gated
-    against the same DuckDB oracle as the unrefined variants."""
-    from kgpipe.operators.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_topk(
-        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50,
-        nprobe=10**6, refine_iters=2,
-    ).select(
-        "query_id", "neighbor_id", "rank", F.round("score", 4).alias("score")
-    )
-
-
-def q_ann_ivf_refined(spark, sf_dir):
-    """Refined approximate path (nprobe=3, refine_iters=2),
-    oracle-gated since r6: the SQL twin unrolls the two Lloyd
-    iterations (assignment → 9-decimal-rounded means → empty-cluster
-    carry) and then emulates the probe-limited search
-    (_IVF_REFINED_ORACLE)."""
-    from kgpipe.operators.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_topk(
-        emb.where(F.col("vec_id") < 50), _spread(spark, emb), k=3, stride=50,
-        nprobe=3, refine_iters=2,
-    ).select("query_id", "neighbor_id", "rank")
-
-
-def q_emb_neardup_exact(spark, sf_dir):
-    """Embedding-cosine near-dup, exact path: all pairs ≥ threshold
-    (oracle = DuckDB cross-join cosine). Threshold sits inside the
-    synthetic corpus's similarity range so the gate checks real
-    pairs, not an empty set."""
-    from kgpipe.operators.similarity import cosine_pairs_exact
-
-    return cosine_pairs_exact(_spread(spark, _emb(spark, sf_dir)), threshold=0.4)
-
-
-def q_emb_neardup_lsh(spark, sf_dir):
-    """Embedding-cosine near-dup, LSH scale path (random-hyperplane
-    signatures, banded buckets, exact-cosine verification). The
-    corpus is augmented with exact duplicates (vec_id + 100000), so
-    the expected pair set is closed-form: identical vectors share
-    every band (deterministic recall 1.0) and nothing else in the
-    synthetic data reaches cos 0.95 — giving this LSH query a real
-    value oracle instead of a rows-only check."""
-    from kgpipe.operators.similarity import cosine_neardup_pairs
-
-    emb = _planted_offset_guard(
-        _emb(spark, sf_dir).select("vec_id", "embedding"), "vec_id"
-    )
-    dup = emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    # 8-bit bands: 256 bucket values per band keeps buckets ~n/256
-    # (well under the cap); identical vectors share every band, so
-    # recall for the oracle's pair set is deterministic
-    return cosine_neardup_pairs(
-        _spread(spark, emb.union(dup)),
-        threshold=0.95, n_bits=32, n_bands=4,
     )
 
 
@@ -835,14 +719,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": q_ngram_jaccard,
         "minhash_lsh_pairs": q_minhash_lsh_pairs,
         "simhash_pairs": q_simhash_pairs,
-        "ann_bruteforce": q_ann_bruteforce,
-        "ann_ivf_fullprobe": q_ann_ivf_fullprobe,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_probelim": q_ann_ivf_probelim,
-        "ann_ivf_refined_fullprobe": q_ann_ivf_refined_fullprobe,
-        "ann_ivf_refined": q_ann_ivf_refined,
-        "emb_neardup_exact": q_emb_neardup_exact,
-        "emb_neardup_lsh": q_emb_neardup_lsh,
         "extract_html": q_extract_html,
         "lineitem_agg": q_lineitem_agg,
         "revenue_by_nation": q_revenue_by_nation,
@@ -861,132 +737,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cube_orders": q_cube_orders,
         "pivot_order_status": q_pivot_order_status,
     }
-
-
-# --- IVF approximate-path oracles (r5 verdict missing #3) -----------
-# The IVF algorithm is DETERMINISTIC given the corpus — stride-sampled
-# centroids, nearest-centroid assignment (tie: highest sim, lowest
-# centroid id), top-nprobe probe selection, candidate top-k — so the
-# APPROXIMATE path has an exact SQL twin: emulate the algorithm, not
-# just its ideal answer. Every float comparison that Spark performs
-# unrounded (assignment/probe argmax) is replicated with the same
-# operand order (dot/cnrm over double arrays), and the final score is
-# rounded to 6 decimals exactly like the Spark side; verified exact at
-# sf0.01 (tests/test_entry.py replays this gate).
-_IVF_ASSIGN_SQL = """
-  select vec_id, v, cid as cluster_id from (
-    select corpus.vec_id, corpus.v, {c}.cid,
-           row_number() over (partition by corpus.vec_id
-             order by (list_dot_product(corpus.v, {c}.cv)
-                       / sqrt(list_sum(list_transform({c}.cv, x -> x*x)))) desc,
-                      {c}.cid asc) as rn
-    from corpus cross join {c}
-  ) t where rn = 1
-"""
-
-_IVF_TOPK_SQL = """
-, afin as ({assign})
-, q as (
-  select vec_id as query_id, embedding::DOUBLE[] as qv
-  from embeddings where vec_id < 50
-)
-, probes as (
-  select query_id, qv, cid as cluster_id from (
-    select q.query_id, q.qv, {c}.cid,
-           row_number() over (partition by q.query_id
-             order by (list_dot_product(q.qv, {c}.cv)
-                       / sqrt(list_sum(list_transform({c}.cv, x -> x*x)))) desc,
-                      {c}.cid asc) as rn
-    from q cross join {c}
-  ) t where rn <= {nprobe}
-)
-, cand as (
-  select distinct p.query_id, a.vec_id as neighbor_id, p.qv, a.v
-  from probes p join afin a using (cluster_id)
-  where p.query_id <> a.vec_id
-)
-, scored as (
-  select query_id, neighbor_id,
-         round(list_cosine_similarity(qv, v), 6) as score6
-  from cand
-)
-, ranked as (
-  select query_id, neighbor_id,
-         row_number() over (partition by query_id
-           order by score6 desc, neighbor_id asc) as rank
-  from scored
-)
-select query_id, neighbor_id, rank from ranked where rank <= 3
-"""
-
-_IVF_PREFIX_SQL = """
-with corpus as (select vec_id, embedding::DOUBLE[] as v from embeddings),
-c0 as (
-  select vec_id as cid, embedding::DOUBLE[] as cv
-  from embeddings where vec_id % 50 = 0
-)
-"""
-
-# engine-default operating point (ivf_topk nprobe=24 — set from the
-# r7 recall-vs-wall sweep, see similarity.ivf_topk) and the
-# deliberately probe-LIMITED nprobe=3 twin: at sf0.01 (10 clusters)
-# nprobe=24 covers every cluster, so the nprobe=3 gate is what keeps
-# the probe-selection logic discriminatively oracle-checked
-_IVF_NPROBE_ORACLE = _IVF_PREFIX_SQL + _IVF_TOPK_SQL.format(
-    assign=_IVF_ASSIGN_SQL.format(c="c0"), c="c0", nprobe=24
-)
-
-_IVF_NPROBE3_ORACLE = _IVF_PREFIX_SQL + _IVF_TOPK_SQL.format(
-    assign=_IVF_ASSIGN_SQL.format(c="c0"), c="c0", nprobe=3
-)
-
-# Lloyd refinement (refine_iters=2) unrolled: per iteration, assign
-# under the previous centroids, recenter by the per-dimension mean
-# rounded to 9 decimals (matching kmeans_refine_centroids' rounding —
-# the stabilizer that makes cross-engine float summation agree), and
-# keep the previous centroid for clusters that captured nothing.
-_IVF_LLOYD_SQL = """
-, a{n} as ({assign})
-, m{n} as (
-  select cluster_id as cid, list(m order by pos) as cv from (
-    select cluster_id, pos, round(avg(x), 9) as m from (
-      select cluster_id,
-             unnest(list_transform(v, (x, i) -> {{'pos': i, 'x': x}}),
-                    recursive := true)
-      from a{n}
-    ) u group by cluster_id, pos
-  ) g group by cid
-)
-, c{n} as (
-  select c{p}.cid, coalesce(m{n}.cv, c{p}.cv) as cv
-  from c{p} left join m{n} using (cid)
-)
-"""
-
-_IVF_REFINED_ORACLE = _IVF_PREFIX_SQL + "".join(
-    _IVF_LLOYD_SQL.format(n=n, p=n - 1, assign=_IVF_ASSIGN_SQL.format(c=f"c{n-1}"))
-    for n in (1, 2)
-) + _IVF_TOPK_SQL.format(assign=_IVF_ASSIGN_SQL.format(c="c2"), c="c2", nprobe=3)
-
-
-_ANN_ORACLE = """
-with q as (
-  select vec_id as query_id, embedding::DOUBLE[] as qv from embeddings where vec_id < 50
-), c as (
-  select vec_id as neighbor_id, embedding::DOUBLE[] as cv from embeddings
-), scored as (
-  select query_id, neighbor_id,
-         round(list_cosine_similarity(qv, cv), 6) as score6
-  from q cross join c
-  where query_id <> neighbor_id
-), ranked as (
-  select query_id, neighbor_id, score6,
-         row_number() over (partition by query_id order by score6 desc, neighbor_id asc) as rank
-  from scored
-)
-select query_id, neighbor_id, rank, round(score6, 4) as score
-from ranked where rank <= 3
-"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1272,28 +1022,9 @@ def oracle_sql() -> dict[str, str]:
             )
             select a, b, round(jac, 4) as jaccard from j where jac >= 0.8
         """,
-        "ann_bruteforce": _ANN_ORACLE,
-        "ann_ivf_fullprobe": _ANN_ORACLE,
-        "ann_ivf_refined_fullprobe": _ANN_ORACLE,
-        "ann_ivf": _IVF_NPROBE_ORACLE,
-        "ann_ivf_probelim": _IVF_NPROBE3_ORACLE,
-        "ann_ivf_refined": _IVF_REFINED_ORACLE,
         "simhash_pairs": """
             select doc_id as a, doc_id + 100000 as b, 0 as hamming
             from documents
-        """,
-        "emb_neardup_exact": """
-            with v as (
-              select vec_id, embedding::DOUBLE[] as e from embeddings
-            )
-            select a.vec_id as a, b.vec_id as b,
-                   round(list_cosine_similarity(a.e, b.e), 6) as cos
-            from v a join v b on a.vec_id < b.vec_id
-            where round(list_cosine_similarity(a.e, b.e), 6) >= 0.4
-        """,
-        "emb_neardup_lsh": """
-            select vec_id as a, vec_id + 100000 as b, cast(1.0 as double) as cos
-            from embeddings
         """,
         "extract_html": """
             select doc_id, 'Doc ' || cast(doc_id as varchar) || chr(10) || trim(text) as text

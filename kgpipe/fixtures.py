@@ -156,31 +156,6 @@ def gen_pages(n: int) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def gen_pages_spark(spark, n: int):
-    """Distributed pages generator: every row is a pure function of
-    its index, so generation parallelizes perfectly — the driver-side
-    pandas version takes ~20 min for 600k pages, this takes seconds
-    on 32 cores. Byte-identical to gen_pages(n) row-for-row."""
-    import pandas as pd
-
-    def _batch(batches):
-        for pdf in batches:
-            idx = pdf["id"].astype(int)
-            yield pd.DataFrame(
-                {
-                    "url": [f"https://site{i % 97}.example.org/page/{i}" for i in idx],
-                    "warc_ts": [_EPOCH + dt.timedelta(seconds=int(i)) for i in idx],
-                    "html": [page_html(int(i)) for i in idx],
-                    "text": ["" for _ in idx],
-                    "lang": [_LANGS[i % 5] for i in idx],
-                }
-            )
-
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    parallelism = spark.sparkContext.defaultParallelism
-    return spark.range(0, n, 1, max(parallelism * 2, 8)).mapInPandas(_batch, schema=schema)
-
-
 def gen_sameas_graph() -> tuple[list[tuple[str, str]], dict[str, str]]:
     """F4 canonicalization fixture: deterministic graph over 1,000
     URIs — 300 singletons, 100 chains of length 5, 20 stars of size

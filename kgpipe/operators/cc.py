@@ -98,9 +98,9 @@ def _checkpoint_with_fingerprint(edges: DataFrame) -> tuple[DataFrame, tuple[int
 # below this many (distinct) edges the component structure fits the
 # driver trivially, and ~10 iterative shuffle jobs of fixed scheduler
 # latency dominate the actual work by 10-100× (measured: 9-12s of
-# star-rounds vs <1s of union-find for a 5k-edge graph). Mirrors the
-# IVF LITERAL_CENTROID_MAX pattern: adaptive strategy selection by
-# measured data size, with the distributed path untouched for scale.
+# star-rounds vs <1s of union-find for a 5k-edge graph). The strategy
+# is chosen by measured data size, with the distributed path untouched
+# for scale.
 SMALL_GRAPH_MAX_EDGES = 200_000
 
 

@@ -208,9 +208,9 @@ def capped_buckets(
     The two phases traverse `banded` twice, so the cost of the
     signature derivation behind it is a per-family decision made by
     the CALLER: heavy folds (document minhash, simhash's 64-masks-
-    per-gram fold, hyperplane signatures) pass a banded frame whose
-    compact (id, sig) base is eagerly localCheckpoint-ed
-    (banded_rows(materialize=True)) and pay the fold once; cheap
+    per-gram fold) pass a banded frame whose compact (id, sig) base
+    is eagerly localCheckpoint-ed (banded_rows(materialize=True)) and
+    pay the fold once; cheap
     folds (short-string URI minhash in lsh_candidate_pairs) simply
     recompute — the sizes pass is cheap beyond the fold itself, since
     count() partial-aggregates map-side and its shuffle carries one
@@ -381,9 +381,7 @@ def verified_neardup_edges(
     return verified.union(exact).distinct()
 
 
-def exact_normalized_edges(
-    df: DataFrame, id_col: str = "uri", input_distinct: bool = False
-) -> DataFrame:
+def exact_normalized_edges(df: DataFrame, id_col: str = "uri") -> DataFrame:
     """Precision-first URI dedup: URIs identical AFTER normalization
     are duplicates, linked as a star around the min URI. One groupBy
     on the normal form (map-side combine on min; bucket sizes are the
@@ -391,18 +389,10 @@ def exact_normalized_edges(
     for entity identity. Jaccard-based near-dup linking
     (verified_neardup_edges) is opt-in because a 1-character id
     difference (gnd/123 vs gnd/124) is a DIFFERENT entity but a
-    high-Jaccard string.
-
-    input_distinct=True skips the internal dedup exchange when the
-    caller already guarantees one row per URI (the pipeline's URI
-    universe is a distinct() — re-distincting (uri, norm) was a
-    second shuffle of the same keys, since norm is a pure function
-    of uri)."""
+    high-Jaccard string."""
     base = df.select(
         F.col(id_col).alias("uri"), normalize_uri(F.col(id_col)).alias("norm")
-    )
-    if not input_distinct:
-        base = base.distinct()
+    ).distinct()
     hubs = base.groupBy("norm").agg(F.min("uri").alias("hub"), F.count(F.lit(1)).alias("n"))
     return (
         base.join(hubs.where(F.col("n") > 1), "norm")

@@ -1,12 +1,14 @@
 """Import guard: every `import kgpipe…` / `from kgpipe… import name` in
 the package, the tools, perfbench, the verify skill and the entry
-module must resolve. Tools and probes are scripts no other test loads,
-so a deleted module or renamed helper would otherwise only show when
-someone next runs them."""
+module must resolve, and every `PipelineConfig(...)` built there must
+name only fields of the dataclass. Tools and probes are scripts no
+other test loads, so a deleted module, renamed helper or dropped
+config field would otherwise only show when someone next runs them."""
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import importlib
 import importlib.util
 from pathlib import Path
@@ -70,3 +72,47 @@ def test_kgpipe_imports_resolve():
     for f in files:
         bad += _unresolved(f.read_text(), str(f.relative_to(ROOT)))
     assert not bad, "unresolved kgpipe imports:\n" + "\n".join(bad)
+
+
+def _dotted(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        base = _dotted(node.value)
+        return base and f"{base}.{node.attr}"
+    return None
+
+
+def _config_keywords(source: str, label: str, fields: set[str]) -> tuple[int, list[str]]:
+    """(number of PipelineConfig calls, keywords that name no field)."""
+    calls = [
+        node for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and _dotted(node.func) in ("PipelineConfig", "kgpipe.pipeline.PipelineConfig")
+    ]
+    bad = [
+        f"{label}:{kw.lineno}: PipelineConfig({kw.arg}=...)"
+        for call in calls for kw in call.keywords
+        if kw.arg is not None and kw.arg not in fields
+    ]
+    return len(calls), bad
+
+
+def test_pipeline_config_keywords_are_fields():
+    from kgpipe.pipeline import PipelineConfig
+
+    fields = {f.name for f in dataclasses.fields(PipelineConfig)}
+    # the guard itself sees a made-up keyword, in both call forms
+    assert _config_keywords(
+        "PipelineConfig(warehouse='w', no_such_field=1)\n"
+        "kgpipe.pipeline.PipelineConfig(warehouse='w', other_field=2)\n",
+        "probe", fields,
+    ) == (2, ["probe:1: PipelineConfig(no_such_field=...)",
+              "probe:2: PipelineConfig(other_field=...)"])
+    n_calls, bad = 0, []
+    for f in _scanned_files():
+        n, b = _config_keywords(f.read_text(), str(f.relative_to(ROOT)), fields)
+        n_calls, bad = n_calls + n, bad + b
+    # cli, perfbench/child.py, tools/layer_read_probe.py, the verify drive
+    assert n_calls >= 4
+    assert not bad, "PipelineConfig keywords that name no field:\n" + "\n".join(bad)

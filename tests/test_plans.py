@@ -70,19 +70,6 @@ def test_minhash_signature_is_jvm_side(spark, sf_dir):
     assert "Python" not in plan and "MapInPandas" not in plan
 
 
-def test_ivf_assignment_no_shuffle(spark, sf_dir):
-    """Cluster assignment must be a narrow fold over the centroid
-    literal — no Exchange between the corpus scan and cluster_id
-    (the crossJoin+window version shuffled N×C rows)."""
-    from kgpipe.operators.similarity import assign_clusters, deterministic_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = deterministic_centroids(emb, stride=50)
-    plan = _plan(assign_clusters(emb, cents))
-    assert "Exchange" not in plan
-    assert "Python" not in plan  # pure Catalyst, no UDF
-
-
 def test_capped_buckets_skew_guard_plan(spark):
     """Two-phase cap: (1) a count-only aggregation (map-side partial)
     finds oversized bucket keys, materialized eagerly; (2) a BROADCAST
