@@ -4,9 +4,7 @@
 `queries()` exposes every SURVEY.md §2 operator as a (spark, sf_dir)
 callable; `oracle_sql()` gives the DuckDB-equivalent SQL the driver
 compares against at sf0.01 (row count + schema + order-insensitive
-value hash). Every query has an oracle: hash-seeded operators
-(minhash/simhash LSH) are checked through their *verified* outputs
-(exact Jaccard, planted duplicates).
+value hash). Every query has an oracle.
 
 Column names are aliased identically on both sides (driver sorts
 columns by name before hashing).
@@ -29,17 +27,6 @@ _TITLE_P = "http://purl.org/dc/elements/1.1/title"
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Unlock parallelism for CPU-heavy chains over tiny tables: a
-    single-row-group parquet file arrives as ONE input split no
-    matter what minPartitionNum says (row groups don't split), which
-    serializes the whole downstream expression chain onto one core.
-    The explicit repartition is a trivial shuffle of small rows here;
-    at real scale inputs have many row groups and the same operators
-    parallelize off the scan alone."""
-    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,38 +177,6 @@ def q_pagerank_3(spark, sf_dir):
     return pr.select("node", F.round(F.col("pr"), 6).alias("pr"))
 
 
-def q_tfidf_top_terms(spark, sf_dir):
-    """Per-document top-3 terms by tf-idf (operators/textops) —
-    ranked on the ROUNDED score (6dp) with term-asc tie-break, so
-    ranking can never flip on a last-ulp ln() difference between
-    engines."""
-    from kgpipe.operators.textops import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir), "doc_id", "text", top_k=3)
-
-
-def q_contamination_flags(spark, sf_dir):
-    """Benchmark decontamination (operators/textops): documents
-    sharing ≥2 distinct word 3-grams with a pseudo eval set (every
-    97th document). The benchmark gram set broadcasts; the corpus
-    side is one narrow explode + map-side join — the shape that
-    sweeps 10^12 docs against a fixed eval suite."""
-    from kgpipe.operators.textops import contamination_flags
-
-    docs = _docs(spark, sf_dir)
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    return contamination_flags(docs, "doc_id", "text", bench, "text", k=3, min_shared=2)
-
-
-def q_boilerplate_ngrams(spark, sf_dir):
-    """Corpus-hygiene boilerplate detector (operators/textops): word
-    2-grams present in ≥5% of documents — what a training-data
-    cleaning pass filters against."""
-    from kgpipe.operators.textops import boilerplate_ngrams
-
-    return boilerplate_ngrams(_docs(spark, sf_dir), "doc_id", "text", k=2, min_doc_frac=0.05)
-
-
 def q_abbrev_compat_lines(spark, sf_dir):
     """The `ntto -a` surface: raw-line compat abbreviation through the
     compiled single-pass trie engine (kgpipe.nt.rules), over the full
@@ -302,138 +257,6 @@ def q_sameas_canonical(spark, sf_dir):
         ).alias("dst"),
     )
     return canonical_map_for_nodes(nodes, edges).select("uri", "canon_id")
-
-
-def q_exact_dedup_docs(spark, sf_dir):
-    from kgpipe.operators.dedup import distinct_documents
-
-    return distinct_documents(
-        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text"
-    ).select("doc_id")
-
-
-def q_doc_fingerprints(spark, sf_dir):
-    from kgpipe.operators.textops import doc_fingerprint
-
-    return _docs(spark, sf_dir).select(
-        "doc_id", doc_fingerprint(F.col("text")).alias("fingerprint")
-    )
-
-
-def q_winnowing_fps(spark, sf_dir):
-    """Rolling-hash (winnowing) fingerprints — the partial-overlap
-    detector; oracle reproduces the md5-hex window-min exactly."""
-    from kgpipe.operators.textops import winnowing_fingerprint_rows
-
-    return winnowing_fingerprint_rows(
-        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text", k=8, w=4
-    )
-
-
-def q_token_counts(spark, sf_dir):
-    from kgpipe.operators.textops import token_count, whitespace_token_count
-
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_bpe_tokens"),
-        whitespace_token_count(F.col("text")).alias("n_ws_tokens"),
-    )
-
-
-def q_quality_scores(spark, sf_dir):
-    from kgpipe.operators.textops import quality_score
-
-    return _docs(spark, sf_dir).select(
-        "doc_id", quality_score(F.col("text")).alias("quality")
-    )
-
-
-def q_lang_id(spark, sf_dir):
-    from kgpipe.operators.textops import lang_id
-
-    return _docs(spark, sf_dir).select("doc_id", lang_id(F.col("text")).alias("lang_pred"))
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    from kgpipe.operators.dedup import ngram_jaccard_pairs
-
-    pairs = ngram_jaccard_pairs(
-        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text", k=2, threshold=0.2
-    )
-    return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
-
-
-def q_minhash_lsh_pairs(spark, sf_dir):
-    """Oracle-gated against the EXACT 2-gram Jaccard pair set at
-    J ≥ 0.8: the exact-Jaccard verification step makes every emitted
-    pair ground-truth-correct, and the banding's recall at this
-    threshold (P(miss per pair) ≈ 2e-4, deterministic given the
-    data) is complete on the sf0.01 corpus — verified side-by-side
-    before promoting this from a rows-only check."""
-    from kgpipe.operators.dedup import minhash_dup_pairs
-
-    # r=4 rows/band targets the J≥0.8 regime (P(match|J=0.8)≈0.9998,
-    # P(match|J=0.3)≈0.12) — wide bands at low thresholds flood the
-    # candidate stage with O(n²) pairs
-    pairs = minhash_dup_pairs(
-        _spread(spark, _docs(spark, sf_dir)), "doc_id", "text",
-        num_hashes=64, bands=16, shingle_k=2, jaccard_threshold=0.8,
-    )
-    return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
-
-
-def _planted_offset_guard(df, id_col, offset=100_000):
-    """Plan-side guard for the planted-duplicate corpora: the closed
-    -form oracles assume real ids never reach the planted range
-    (id + offset), so an id ≥ offset would collide two different rows
-    under one id and silently diverge query from oracle (ADVICE r6,
-    low). assert_true inside a filter survives column pruning and
-    fails the action with a named error instead. Safe at every
-    sandbox sf (≤5000 docs); this makes the scale trap diagnose
-    itself."""
-    ok = F.assert_true(
-        F.col(id_col) < F.lit(offset),
-        F.concat(
-            F.lit(f"planted-offset collision: {id_col}="),
-            F.col(id_col).cast("string"),
-            F.lit(f" >= {offset}"),
-        ),
-    )
-    return df.where(ok.isNull())
-
-
-def q_simhash_pairs(spark, sf_dir):
-    """Planted-duplicate corpus: per doc_id, a synthetic text whose
-    word grams are UNIQUE to that doc, plus an exact duplicate at
-    doc_id + 100000.
-    Identical texts give identical simhashes (hamming 0 — banding
-    recall 1.0 by pigeonhole), and cross-doc gram sets are disjoint so
-    cross simhashes are independent 64-bit values (P(hamming ≤ 3) ≈
-    2.4e-15 per pair — verified zero at sf0.01 AND sf0.1). Expected
-    pair set is therefore closed-form: exactly (i, i+100000, 0) per
-    doc — a real value oracle for the banding + capped-bucket + pair
-    machinery. simhash over REAL text (nonzero hammings included) is
-    pinned in pytest by a brute-force hamming twin (test_dedup)."""
-    from kgpipe.operators.dedup import simhash_near_pairs
-
-    ids = _docs(spark, sf_dir).select("doc_id")
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(11)),
-            lambda j: F.concat(
-                F.lit("t"), F.col("doc_id").cast("string"), F.lit("x"), j.cast("string")
-            ),
-        ),
-    )
-    docs = _planted_offset_guard(ids.select("doc_id", text.alias("text")), "doc_id")
-    dup = docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    # max_hamming=3 is the guaranteed-recall radius of the 4-band
-    # blocking (pigeonhole); simhash_near_pairs raises on anything
-    # wider to avoid silently incomplete pair sets
-    return simhash_near_pairs(
-        _spread(spark, docs.union(dup)), "doc_id", "text", max_hamming=3, shingle_k=2
-    )
 
 
 def q_extract_html(spark, sf_dir):
@@ -703,22 +526,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curie_roundtrip": q_curie_roundtrip,
         "khop_2": q_khop_2,
         "pagerank_3": q_pagerank_3,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "boilerplate_ngrams": q_boilerplate_ngrams,
-        "contamination_flags": q_contamination_flags,
         "abbrev_compat_lines": q_abbrev_compat_lines,
         "top_predicates": q_top_predicates,
         "triples_distinct": q_triples_distinct,
         "sameas_canonical": q_sameas_canonical,
-        "exact_dedup_docs": q_exact_dedup_docs,
-        "doc_fingerprints": q_doc_fingerprints,
-        "winnowing_fps": q_winnowing_fps,
-        "token_counts": q_token_counts,
-        "quality_scores": q_quality_scores,
-        "lang_id": q_lang_id,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "simhash_pairs": q_simhash_pairs,
         "extract_html": q_extract_html,
         "lineitem_agg": q_lineitem_agg,
         "revenue_by_nation": q_revenue_by_nation,
@@ -828,61 +639,6 @@ def oracle_sql() -> dict[str, str]:
             )
             select node, round(pr, 6) as pr from r3
         """,
-        "tfidf_top_terms": r"""
-            with words as (
-              select doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) as term
-              from documents
-            ), tf as (
-              select doc_id, term, count(*) as tf
-              from words where term <> '' group by doc_id, term
-            ), dfreq as (
-              select term, count(*) as df from tf group by term
-            ), n as (select count(distinct doc_id) as n_docs from documents),
-            scored as (
-              select tf.doc_id, tf.term,
-                     round(tf.tf * ln(n.n_docs::DOUBLE / dfreq.df), 6) as tfidf
-              from tf join dfreq using (term) cross join n
-            ), ranked as (
-              select doc_id, term, tfidf,
-                     row_number() over (partition by doc_id
-                                        order by tfidf desc, term asc) as rank
-              from scored
-            )
-            select doc_id, term, tfidf, cast(rank as integer) as rank
-            from ranked where rank <= 3
-        """,
-        "contamination_flags": r"""
-            with g as (
-              select distinct doc_id, unnest(list_distinct(
-                list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-                               i -> array_to_string(w[i:i+2], ' ')))) as gram
-              from (select doc_id,
-                           regexp_split_to_array(trim(lower(text)), '\s+') as w
-                    from documents)
-            ), bg as (
-              select distinct gram from g where doc_id % 97 = 0
-            )
-            select g.doc_id, count(*) as n_shared
-            from g join bg using (gram)
-            group by g.doc_id
-            having count(*) >= 2
-        """,
-        "boilerplate_ngrams": r"""
-            with g as (
-              select distinct doc_id, unnest(list_distinct(
-                list_transform(range(1, greatest(len(w) - 1, 1) + 1),
-                               i -> array_to_string(w[i:i+1], ' ')))) as gram
-              from (select doc_id,
-                           regexp_split_to_array(trim(lower(text)), '\s+') as w
-                    from documents)
-            ), n as (select count(distinct doc_id) as n_docs from documents)
-            select gram,
-                   count(*) as n_docs,
-                   round(count(*)::DOUBLE / max(n.n_docs), 6) as doc_frac
-            from g cross join n
-            group by gram
-            having count(*) >= 0.05 * max(n.n_docs)
-        """,
         "nt_framed_roundtrip": r"""
             -- trim over the full whitespace alphabet: DuckDB's
             -- 1-arg trim strips spaces only, while the parser's
@@ -910,120 +666,6 @@ def oracle_sql() -> dict[str, str]:
         "sameas_canonical": """
             select 'http://ex.org/e/' || lpad(cast(doc_id as varchar), 6, '0') as uri,
                    'http://ex.org/e/' || lpad(cast(doc_id % 100 as varchar), 6, '0') as canon_id
-            from documents
-        """,
-        "exact_dedup_docs": """
-            select doc_id from documents d
-            join (
-              select md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fp,
-                     min(doc_id) as keep
-              from documents group by 1
-            ) g
-            on md5(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))) = g.fp
-               and d.doc_id = g.keep
-        """,
-        "doc_fingerprints": """
-            select doc_id,
-                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fingerprint
-            from documents
-        """,
-        "winnowing_fps": r"""
-            with t as (
-              select doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) as norm
-              from documents
-            ), h as (
-              select doc_id,
-                     list_transform(range(1, greatest(length(norm) - 7, 1) + 1),
-                                    i -> md5(substr(norm, i, 8))) as hs
-              from t
-            )
-            select distinct doc_id, fp from (
-              select doc_id,
-                     unnest(list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
-                                           j -> list_min(hs[j:j+3]))) as fp
-              from h
-            )
-        """,
-        "token_counts": """
-            select doc_id,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) as n_bpe_tokens,
-                   len(regexp_split_to_array(trim(text), '\\s+')) as n_ws_tokens
-            from documents
-        """,
-        "quality_scores": """
-            with m as (
-              select doc_id,
-                     len(regexp_split_to_array(trim(text), '\\s+')) as n_tok,
-                     len(regexp_extract_all(lower(text), '\\b(the|and|of|to|a|in|is|it|that|for)\\b')) as stop,
-                     len(regexp_extract_all(text, '[.,;:!?]')) as punct,
-                     greatest(length(text), 1)::DOUBLE as n_chars
-              from documents
-            )
-            select doc_id,
-                   round(
-                     0.4 * (least(stop::DOUBLE / greatest(n_tok, 1), 0.5) / 0.5)
-                   + 0.3 * greatest(0.0, 1.0 - (punct / n_chars) * 5.0)
-                   + 0.3 * (least(n_tok, 100)::DOUBLE / 100.0), 4) as quality
-            from m
-        """,
-        "lang_id": """
-            with c as (
-              select doc_id,
-                len(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|in)\\b')) as c_en,
-                len(regexp_extract_all(lower(text), '\\b(der|die|das|und|ist|nicht)\\b')) as c_de,
-                len(regexp_extract_all(lower(text), '\\b(el|la|los|de|que|es)\\b')) as c_es,
-                len(regexp_extract_all(lower(text), '\\b(le|la|les|et|est|une)\\b')) as c_fr
-              from documents
-            )
-            select doc_id,
-              case when greatest(c_en, c_de, c_es, c_fr) = 0 then 'und'
-                   when c_en = greatest(c_en, c_de, c_es, c_fr) then 'en'
-                   when c_de = greatest(c_en, c_de, c_es, c_fr) then 'de'
-                   when c_es = greatest(c_en, c_de, c_es, c_fr) then 'es'
-                   else 'fr' end as lang_pred
-            from c
-        """,
-        "ngram_jaccard": """
-            with g as (
-              select distinct doc_id, unnest(list_distinct(
-                list_transform(range(1, greatest(len(w) - 1, 1) + 1),
-                               i -> array_to_string(w[i:i+1], ' ')))) as gram
-              from (select doc_id,
-                           regexp_split_to_array(trim(lower(text)), '\\s+') as w
-                    from documents)
-            ), sizes as (
-              select doc_id, count(*) as n from g group by doc_id
-            ), shared as (
-              select a.doc_id as a, b.doc_id as b, count(*) as c
-              from g a join g b on a.gram = b.gram and a.doc_id < b.doc_id
-              group by 1, 2
-            )
-            select s.a, s.b,
-                   round(s.c::DOUBLE / (na.n + nb.n - s.c), 4) as jaccard
-            from shared s
-            join sizes na on s.a = na.doc_id
-            join sizes nb on s.b = nb.doc_id
-            where s.c::DOUBLE / (na.n + nb.n - s.c) >= 0.2
-        """,
-        "minhash_lsh_pairs": r"""
-            with g as (
-              select doc_id, list_distinct(
-                list_transform(range(1, greatest(len(w) - 1, 1) + 1),
-                               i -> array_to_string(w[i:i+1], ' '))) as grams
-              from (select doc_id,
-                           regexp_split_to_array(trim(lower(text)), '\s+') as w
-                    from documents)
-            ), j as (
-              select a.doc_id as a, b.doc_id as b,
-                     len(list_intersect(a.grams, b.grams))::DOUBLE /
-                     (len(a.grams) + len(b.grams)
-                      - len(list_intersect(a.grams, b.grams))) as jac
-              from g a join g b on a.doc_id < b.doc_id
-            )
-            select a, b, round(jac, 4) as jaccard from j where jac >= 0.8
-        """,
-        "simhash_pairs": """
-            select doc_id as a, doc_id + 100000 as b, 0 as hamming
             from documents
         """,
         "extract_html": """

@@ -12,7 +12,7 @@ Layout:
                         saner LPM default)
     kgpipe.operators  — Spark operators: extract, parse, abbrev,
                         link, connected components, materialize,
-                        graph traversal, sinks, dedup, textops
+                        graph traversal, sinks
     kgpipe.convert    — NT lines → abbreviated triples in one fused
                         stage (the reference's primary -a -j job)
     kgpipe.pipeline   — stage orchestration with checkpoint/resume;

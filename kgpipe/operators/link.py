@@ -31,21 +31,21 @@ from pyspark.sql import Column, DataFrame, functions as F
 LONG_MAX = (1 << 63) - 1
 
 # ONE source of truth for the URI-linker banding: lsh_candidate_pairs
-# (via verified_neardup_edges) and neardup_bucket_stats both default
-# to these, so the persisted recall budget always quantifies the
-# banding the linker actually ran — a drift between two functions'
-# literal defaults could otherwise silently decouple them.
+# (via verified_neardup_edges), the pipeline's lsh_index and
+# neardup_bucket_stats all use these, so the persisted recall budget
+# always quantifies the banding the linker actually ran — a drift
+# between literal defaults could otherwise silently decouple them.
 LSH_NUM_HASHES = 32
 LSH_BANDS = 8
 # k=8 (was 4): URL corpora share long skeletons ("http://", host/path
 # scaffolding), and with k=4 the tiny 4-gram space (drawn from a small
 # URL alphabet) concentrates minhash minima on shared grams — measured
-# on a 500k-URI synthetic web corpus (tools/scale_stress.py), k=4
-# dropped 85% of banded rows into over-cap buckets (max bucket 290k)
-# while k=8 dropped 23% (max 28k), VERIFIED 37% more true near-dup
-# edges, and ran 26% faster. Larger k = larger gram space = minima
-# spread across family-specific grams; exact-Jaccard verification uses
-# the same k, so emitted pairs stay ground-truth at this k's metric.
+# on a 500k-URI synthetic web corpus, k=4 dropped 85% of banded rows
+# into over-cap buckets (max bucket 290k) while k=8 dropped 23% (max
+# 28k), VERIFIED 37% more true near-dup edges, and ran 26% faster.
+# Larger k = larger gram space = minima spread across family-specific
+# grams; exact-Jaccard verification uses the same k, so emitted pairs
+# stay ground-truth at this k's metric.
 LSH_SHINGLE_K = 8
 LSH_MAX_BUCKET = 64
 LSH_SEED = 42
@@ -95,10 +95,10 @@ def minhash_signature(shingles: Column, num_hashes: int = 32, seed: int = 42) ->
     breaks. Measured on sf0.1 documents at J ≥ 0.8: 7 banding misses
     of 256 truth pairs (2.7%) where the independent-band bound
     predicts 2.2e-4 (~0.06 pairs) — two orders over. The v2 rehash
-    restores band independence; same probe measures 0 banding misses
-    (tools/minhash_recall_probe.py). Bumping to v2 invalidates
-    persisted LSH indexes via LSH_FAMILY_VERSION in the config
-    digests — rebuilt, not silently mixed.
+    restores band independence; the same measurement gives 0 banding
+    misses. Bumping to v2 invalidates persisted LSH indexes via
+    LSH_FAMILY_VERSION in the config digests — rebuilt, not silently
+    mixed.
 
     ANSI-safe: xxhash64 output is used as-is (no arithmetic at all,
     so no long overflow under Spark 4's default ANSI mode). Driver
@@ -133,11 +133,9 @@ def banded_rows(
     sig: Column,
     bands: int,
     rows_per_band: int,
-    extra_cols: list[str] | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
-    """(id[, extra…], band, bh): one row per (row, band) with the
-    band's slice hashed.
+    """(id, band, bh): one row per (row, band) with the band's slice
+    hashed.
 
     Plan shape matters here: the signature fold is ~100× the cost of
     a band hash, so it must be evaluated ONCE per row. Putting it in
@@ -145,29 +143,13 @@ def banded_rows(
     that — CollapseProject merges Project-over-Project (inlining the
     fold into the per-band lambda, where a HOF re-evaluates it per
     element: measured 16× blowup), but nothing inlines a child
-    Project into a Generate's generator.
-
-    materialize=True additionally pins the (id, sig) frame with an
-    EAGER localCheckpoint before the explode, so downstream consumers
-    that traverse the banded rows twice (capped_buckets' two-phase
-    skew guard) pay the signature fold ONCE. The checkpointed frame
-    is compact — num_hashes longs per row, no shingle arrays — so the
-    synchronous write+read costs far less than a second fold pass for
-    heavy folds; blocks are reclaimed by the ContextCleaner when the
-    frame is garbage-collected (unlike persist(), which pins the plan
-    in the session CacheManager until an explicit unpersist — a leak
-    from a lazy helper with no safe unpersist point)."""
-    extras = list(extra_cols or [])
-    sigd = df.select(F.col(id_col), *extras, sig.alias("__sig"))
-    if materialize:
-        sigd = sigd.localCheckpoint(eager=True)
+    Project into a Generate's generator."""
+    sigd = df.select(F.col(id_col), sig.alias("__sig"))
     band_hashes = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda j: F.xxhash64(F.slice(F.col("__sig"), j * rows_per_band + 1, rows_per_band)),
     )
-    return sigd.select(
-        id_col, *extras, F.posexplode(band_hashes).alias("band", "bh")
-    )
+    return sigd.select(id_col, F.posexplode(band_hashes).alias("band", "bh"))
 
 
 def capped_buckets(
@@ -199,24 +181,19 @@ def capped_buckets(
     the surviving collect_list state is bounded by max_bucket.
 
     SNAPSHOT semantics: because phase 1 runs at CALL time, the
-    oversize key set reflects the input as of plan construction —
-    matching the family callers, whose (id, sig) bases are
-    localCheckpoint-ed at the same moment. Build the plan and run it
-    against the same input snapshot; do not hold a built plan across
-    source appends (true of every eager-materializing operator here).
+    oversize key set reflects the input as of plan construction.
+    Build the plan and run it against the same input snapshot; do not
+    hold a built plan across source appends (true of every
+    eager-materializing operator here).
 
-    The two phases traverse `banded` twice, so the cost of the
-    signature derivation behind it is a per-family decision made by
-    the CALLER: heavy folds (document minhash, simhash's 64-masks-
-    per-gram fold) pass a banded frame whose compact (id, sig) base
-    is eagerly localCheckpoint-ed (banded_rows(materialize=True)) and
-    pay the fold once; cheap
-    folds (short-string URI minhash in lsh_candidate_pairs) simply
-    recompute — the sizes pass is cheap beyond the fold itself, since
-    count() partial-aggregates map-side and its shuffle carries one
-    row per (bucket, partition). persist() is never the answer here:
-    it pins the plan in the session CacheManager until an explicit
-    unpersist, which a lazy helper has no safe point to issue."""
+    The two phases traverse `banded` twice, so the signature fold
+    behind it runs twice. For the short-string URI minhash of
+    lsh_candidate_pairs that recompute is cheap — the sizes pass costs
+    little beyond the fold itself, since count() partial-aggregates
+    map-side and its shuffle carries one row per (bucket, partition).
+    persist() is never the answer here: it pins the plan in the
+    session CacheManager until an explicit unpersist, which a lazy
+    helper has no safe point to issue."""
     from pyspark.sql import Observation
 
     # key count measured by the SAME job that materializes the key
@@ -304,9 +281,9 @@ def neardup_bucket_stats(
     uses (same normalization, shingling, hash family, band count) —
     one row quantifying the LSH skew guard's recall budget for a
     corpus: ids_in_dropped is the upper bound on URIs whose pairs the
-    bucket cap may have cost. One extra pass over the (cheap,
-    short-string) URI fold — run when the LSH linker runs, as the
-    pipeline does."""
+    bucket cap may have cost. It bands the URIs itself, so it is the
+    independent reference for the budget the pipeline reads off its
+    persisted lsh_index (test_pipeline compares the two)."""
     base = df.select(
         F.col(id_col).alias("uri"), normalize_uri(F.col(id_col)).alias("norm")
     ).distinct()

@@ -38,7 +38,6 @@ from kgpipe.operators.fused import fused_extract_parse_abbrev
 from kgpipe.operators.link import (
     LSH_MAX_BUCKET,
     bucket_stats,
-    neardup_bucket_stats,
     sameas_edges_from_triples,
     verified_neardup_edges,
 )
@@ -1063,9 +1062,12 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
             banded_all.withColumn("batch_fp", F.lit(batch_fp)),
             "lsh_index", mode="overwrite", partition_by=["batch_fp"],
         )
+        # recall budget from the index just written, as the delta path
+        # computes it — no second banding of the URIs
         io.write_small(
-            neardup_bucket_stats(
-                base.select("uri"), "uri", max_bucket=cfg.lsh_max_bucket
+            bucket_stats(
+                io.read("lsh_index", LSH_INDEX_DDL).select("uri", "band", "bh"),
+                cfg.lsh_max_bucket,
             ),
             "link_bucket_stats",
         )
@@ -1219,7 +1221,13 @@ def _stage_materialize_incremental(
     # not a job
     all_batches = sorted(_partition_values(io, "linked_urls", "batch_fp"))
     pending = [b for b in all_batches if b not in applied]
-    if not pending and io.exists("edges"):
+    # a rerun under another n_buckets has no pending batch but must
+    # still re-bucket every edge
+    same_layout = (
+        state.get("n_buckets") == cfg.n_buckets
+        and state.get("layout") == MAT_LAYOUT_VERSION
+    )
+    if not pending and io.exists("edges") and same_layout:
         return
 
     rewrite = (
@@ -1227,8 +1235,7 @@ def _stage_materialize_incremental(
         or link.n_changes != 0
         or pending != [link.batch]
         or not io.exists("edges")
-        or state.get("n_buckets") != cfg.n_buckets
-        or state.get("layout") != MAT_LAYOUT_VERSION
+        or not same_layout
         or _full_layer_uncommitted(io)
     )
 

@@ -403,6 +403,24 @@ def test_incremental_lsh_with_tight_cap_matches_full(spark, tmp_path):
     cmap_full = {(r.uri, r.canon_id) for r in res_full.canonical_map.collect()}
     assert cmap_inc == cmap_full
 
+    # the second run rebuilt, and the rebuild's recall budget (read off
+    # its lsh_index) equals an independent banding of the same URIs
+    from kgpipe.operators.link import neardup_bucket_stats
+
+    batches = {
+        r.batch_fp
+        for r in spark.read.parquet(str(tmp_path / "wh_tlsh" / "linked_urls"))
+        .select("batch_fp").distinct().collect()
+    }
+    assert all(b.startswith("rebuild") for b in batches)
+    uris = (
+        res_inc.triples.select(F.col("s").alias("uri"))
+        .union(res_inc.triples.select(F.col("o").alias("uri")))
+        .distinct()
+    )
+    expected = neardup_bucket_stats(uris, "uri", max_bucket=8).collect()[0].asDict()
+    assert res_inc.counters["lsh_bucket_stats"] == expected
+
 
 def test_incremental_link_recrawl_triggers_rebuild(spark, tmp_path):
     """A re-crawled url (content changed → possible retraction) must
@@ -811,6 +829,33 @@ def test_incremental_materialize_folds_layers(spark, tmp_path):
     )
     assert got2 == exp
     assert _graph(res2) == _oracle(res2)
+
+
+def test_rerun_with_other_n_buckets_rebuckets_edges(spark, tmp_path):
+    """A rerun under another n_buckets brings no new pages, so no batch
+    is pending — materialize must still rewrite the edges: every
+    part_id follows the new count, the layout state records it, and
+    the graph is unchanged."""
+    import dataclasses
+
+    import kgpipe.pipeline as pl
+    from kgpipe.io import TableIO
+
+    pages = spark.createDataFrame(gen_pages(40)).repartition(3)
+    cfg = PipelineConfig(
+        warehouse=str(tmp_path / "wh_nb"), rules_text=RULES_16_TEXT,
+        mode="compat", n_parts=4, n_buckets=8,
+    )
+    before = _graph(run_pipeline(spark, pages, cfg))
+    res = run_pipeline(spark, pages, dataclasses.replace(cfg, n_buckets=4))
+
+    stale = res.edges.where(
+        F.col("part_id") != F.pmod(F.xxhash64("canon_s"), F.lit(4))
+    ).count()
+    assert stale == 0
+    assert TableIO(spark, cfg.warehouse).read_json(pl.MAT_STATE)["n_buckets"] == 4
+    assert _graph(res) == before
+    assert _graph(res) == _oracle(res)
 
 
 def _nt_pages(specs, start=0):
