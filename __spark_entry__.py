@@ -259,6 +259,93 @@ def q_sameas_canonical(spark, sf_dir):
     return canonical_map_for_nodes(nodes, edges).select("uri", "canon_id")
 
 
+# --- document-text queries: plain column expressions over `documents` --
+
+def _doc_fingerprint(text):
+    """md5 of the whitespace-normalized, lowercased text."""
+    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
+
+
+def _n_matches(text, pattern: str):
+    return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("long")
+
+
+def _n_ws_tokens(text):
+    return F.size(F.split(F.trim(text), r"\s+")).cast("long")
+
+
+def q_exact_dedup_docs(spark, sf_dir):
+    """One document per distinct fingerprint: the min doc_id."""
+    docs = _docs(spark, sf_dir)
+    keep = docs.groupBy(_doc_fingerprint(F.col("text"))).agg(F.min("doc_id").alias("doc_id"))
+    return docs.join(keep, "doc_id", "left_semi").select("doc_id")
+
+
+def q_doc_fingerprints(spark, sf_dir):
+    return _docs(spark, sf_dir).select(
+        "doc_id", _doc_fingerprint(F.col("text")).alias("fingerprint")
+    )
+
+
+def q_winnowing_fps(spark, sf_dir, k=8, w=4):
+    """Winnowing fingerprints: md5-hex of every char k-gram of the
+    normalized text, minimum of each w-window of them, distinct per
+    doc. The hash array sits in its own select under the explode, so
+    it is evaluated once per row, not once per window."""
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    hashes = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))),
+        lambda i: F.md5(norm.substr(i, F.lit(k))),
+    )
+    hashed = _docs(spark, sf_dir).select("doc_id", hashes.alias("h"))
+    mins = F.array_distinct(F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size("h") - (w - 1), F.lit(1))),
+        lambda j: F.array_min(F.slice(F.col("h"), j, w)),
+    ))
+    return hashed.select("doc_id", F.explode(mins).alias("fp"))
+
+
+def q_token_counts(spark, sf_dir):
+    return _docs(spark, sf_dir).select(
+        "doc_id",
+        _n_matches(F.col("text"), r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]").alias("n_bpe_tokens"),
+        _n_ws_tokens(F.col("text")).alias("n_ws_tokens"),
+    )
+
+
+def q_quality_scores(spark, sf_dir):
+    """Heuristic quality in [0, 1]: stopword ratio, punctuation
+    penalty and length, rounded to 4dp."""
+    text = F.col("text")
+    n_tok = _n_ws_tokens(text)
+    stop = _n_matches(F.lower(text), r"\b(the|and|of|to|a|in|is|it|that|for)\b")
+    punct = _n_matches(text, r"[.,;:!?]")
+    n_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
+    stop_ratio = F.least(stop / F.greatest(n_tok, F.lit(1)).cast("double"), F.lit(0.5)) / 0.5
+    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - (punct / n_chars) * 5.0)
+    len_part = F.least(n_tok, F.lit(100)).cast("double") / 100.0
+    quality = F.round(0.4 * stop_ratio + 0.3 * punct_pen + 0.3 * len_part, 4)
+    return _docs(spark, sf_dir).select("doc_id", quality.alias("quality"))
+
+
+def q_lang_id(spark, sf_dir):
+    """Marker-word language id over {en, de, es, fr}; 'und' when no
+    marker hits; ties go to the first language in that order."""
+    lower = F.lower(F.col("text"))
+    c = {
+        lang: _n_matches(lower, rf"\b({words})\b")
+        for lang, words in [
+            ("en", "the|and|of|to|is|in"), ("de", "der|die|das|und|ist|nicht"),
+            ("es", "el|la|los|de|que|es"), ("fr", "le|la|les|et|est|une"),
+        ]
+    }
+    mx = F.greatest(*c.values())
+    pred = F.when(mx == 0, F.lit("und"))
+    for lang in ("en", "de", "es"):
+        pred = pred.when(c[lang] == mx, F.lit(lang))
+    return _docs(spark, sf_dir).select("doc_id", pred.otherwise(F.lit("fr")).alias("lang_pred"))
+
+
 def q_extract_html(spark, sf_dir):
     """Real HTML extractor over synthesized pages; oracle constructs
     the expected text directly from the template."""
@@ -530,6 +617,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_predicates": q_top_predicates,
         "triples_distinct": q_triples_distinct,
         "sameas_canonical": q_sameas_canonical,
+        "exact_dedup_docs": q_exact_dedup_docs,
+        "doc_fingerprints": q_doc_fingerprints,
+        "winnowing_fps": q_winnowing_fps,
+        "token_counts": q_token_counts,
+        "quality_scores": q_quality_scores,
+        "lang_id": q_lang_id,
         "extract_html": q_extract_html,
         "lineitem_agg": q_lineitem_agg,
         "revenue_by_nation": q_revenue_by_nation,
@@ -667,6 +760,77 @@ def oracle_sql() -> dict[str, str]:
             select 'http://ex.org/e/' || lpad(cast(doc_id as varchar), 6, '0') as uri,
                    'http://ex.org/e/' || lpad(cast(doc_id % 100 as varchar), 6, '0') as canon_id
             from documents
+        """,
+        "exact_dedup_docs": """
+            select doc_id from documents d
+            join (
+              select md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fp,
+                     min(doc_id) as keep
+              from documents group by 1
+            ) g
+            on md5(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))) = g.fp
+               and d.doc_id = g.keep
+        """,
+        "doc_fingerprints": """
+            select doc_id,
+                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fingerprint
+            from documents
+        """,
+        "winnowing_fps": r"""
+            with t as (
+              select doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) as norm
+              from documents
+            ), h as (
+              select doc_id,
+                     list_transform(range(1, greatest(length(norm) - 7, 1) + 1),
+                                    i -> md5(substr(norm, i, 8))) as hs
+              from t
+            )
+            select distinct doc_id, fp from (
+              select doc_id,
+                     unnest(list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
+                                           j -> list_min(hs[j:j+3]))) as fp
+              from h
+            )
+        """,
+        "token_counts": """
+            select doc_id,
+                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) as n_bpe_tokens,
+                   len(regexp_split_to_array(trim(text), '\\s+')) as n_ws_tokens
+            from documents
+        """,
+        "quality_scores": """
+            with m as (
+              select doc_id,
+                     len(regexp_split_to_array(trim(text), '\\s+')) as n_tok,
+                     len(regexp_extract_all(lower(text), '\\b(the|and|of|to|a|in|is|it|that|for)\\b')) as stop,
+                     len(regexp_extract_all(text, '[.,;:!?]')) as punct,
+                     greatest(length(text), 1)::DOUBLE as n_chars
+              from documents
+            )
+            select doc_id,
+                   round(
+                     0.4 * (least(stop::DOUBLE / greatest(n_tok, 1), 0.5) / 0.5)
+                   + 0.3 * greatest(0.0, 1.0 - (punct / n_chars) * 5.0)
+                   + 0.3 * (least(n_tok, 100)::DOUBLE / 100.0), 4) as quality
+            from m
+        """,
+        "lang_id": """
+            with c as (
+              select doc_id,
+                len(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|in)\\b')) as c_en,
+                len(regexp_extract_all(lower(text), '\\b(der|die|das|und|ist|nicht)\\b')) as c_de,
+                len(regexp_extract_all(lower(text), '\\b(el|la|los|de|que|es)\\b')) as c_es,
+                len(regexp_extract_all(lower(text), '\\b(le|la|les|et|est|une)\\b')) as c_fr
+              from documents
+            )
+            select doc_id,
+              case when greatest(c_en, c_de, c_es, c_fr) = 0 then 'und'
+                   when c_en = greatest(c_en, c_de, c_es, c_fr) then 'en'
+                   when c_de = greatest(c_en, c_de, c_es, c_fr) then 'de'
+                   when c_es = greatest(c_en, c_de, c_es, c_fr) then 'es'
+                   else 'fr' end as lang_pred
+            from c
         """,
         "extract_html": """
             select doc_id, 'Doc ' || cast(doc_id as varchar) || chr(10) || trim(text) as text
