@@ -93,9 +93,6 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--incremental-link", action="store_true",
                      help="accepted and ignored: every run is a delta (kept for "
                           "existing scripts)")
-    run.add_argument("--jaccard", type=float, default=1.0,
-                     help="near-dup link threshold; < 1.0 enables LSH linking "
-                          "(default 1.0 = exact-normalized only)")
     run.add_argument("--explain", action="store_true", help="print plans, do not execute")
 
     dr = sub.add_parser("dump-rules", help="print active rules, sorted")
@@ -239,7 +236,6 @@ def main(argv: list[str] | None = None) -> int:
                 n_parts=args.parts,
                 n_buckets=args.buckets,
                 neardup_link=not args.no_neardup,
-                jaccard_threshold=args.jaccard,
             )
             if args.explain:
                 # the extract stage's own operator, on every page

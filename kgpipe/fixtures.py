@@ -212,9 +212,34 @@ def gen_sameas_graph() -> tuple[list[tuple[str, str]], dict[str, str]]:
     return edges, golden
 
 
-def gen_neardup_uris() -> pd.DataFrame:
-    """F5 near-duplicate URI fixture: pairs differing by scheme,
-    trailing slash, www., %20-encoding; plus true negatives at edit
+def nt_pages(specs: list[list[str]], start: int = 0) -> pd.DataFrame:
+    """Hand-crafted `pages`: specs is a list of lists of raw N-Triples
+    lines, one page per inner list. URLs are unique per page (offset
+    by `start` so successive deltas mint NEW urls)."""
+    rows = {
+        "url": [f"https://crafted.example.org/p/{start + i}" for i in range(len(specs))],
+        "warc_ts": [
+            dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc) + dt.timedelta(seconds=i)
+            for i in range(len(specs))
+        ],
+        "html": [
+            (
+                "<html><body><pre class=\"nt\">"
+                + html_escape("\n".join(lines))
+                + "</pre></body></html>"
+            ).encode()
+            for lines in specs
+        ],
+        "text": ["" for _ in specs],
+        "lang": ["en" for _ in specs],
+    }
+    return pd.DataFrame(rows)
+
+
+def gen_uri_variants() -> pd.DataFrame:
+    """F5 URI-variant fixture: 40 URIs, each in five variants that
+    differ by scheme, www., a trailing slash or %20-encoding and so
+    share one normal form; plus a true negative per URI at edit
     distance 2 in the path. Columns (uri, group_id) — group_id is the
     golden duplicate-cluster label."""
     rows = []

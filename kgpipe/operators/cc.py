@@ -197,9 +197,9 @@ def connected_components(
     # symmetrization) would otherwise recompute the whole upstream
     # edge derivation (scans, distincts, normalization) per reference
     # — measured as the bulk of round-1 latency. persist rather than
-    # localCheckpoint: checkpointing a complex plan (windows + unions,
-    # e.g. the LSH linker's) trips a Spark attribute-resolution bug
-    # ("key not found: src#N"). MEMORY_AND_DISK → spills, not OOM.
+    # localCheckpoint: checkpointing a complex plan (windows + unions)
+    # trips a Spark attribute-resolution bug ("key not found: src#N").
+    # MEMORY_AND_DISK → spills, not OOM.
     e0 = filtered.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     e = e0
     if small_graph_max_edges:

@@ -28,8 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 # the materialize callers fall back to the sort-merge join the module
 # docstring promises — every executor holds a full broadcast copy, so
 # an unconditional broadcast of a corpus-sized map is a driver/executor
-# OOM at 10^12-page scale (same budget philosophy as capped_buckets'
-# broadcast_key_limit).
+# OOM at 10^12-page scale.
 CMAP_BROADCAST_LIMIT = 4_000_000
 
 

@@ -27,6 +27,8 @@ proof that lets a retry skip a finished extraction.
 from __future__ import annotations
 
 import dataclasses
+import hashlib
+import json
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -35,12 +37,7 @@ from kgpipe.checkpoints import CheckpointLog, with_part_id
 from kgpipe.io import TableIO
 from kgpipe.nt.rules import parse_rules
 from kgpipe.operators.fused import fused_extract_parse_abbrev
-from kgpipe.operators.link import (
-    LSH_MAX_BUCKET,
-    bucket_stats,
-    sameas_edges_from_triples,
-    verified_neardup_edges,
-)
+from kgpipe.operators.link import sameas_edges_from_triples
 from kgpipe.operators.materialize import (
     CMAP_BROADCAST_LIMIT,
     canonicalize_triples,
@@ -49,10 +46,6 @@ from kgpipe.operators.materialize import (
 
 
 RAW_DDL = "s string, p string, o string, url string, error string, part_id int"
-LSH_STATS_DDL = (
-    "n_buckets long, n_singleton long, n_dropped long, "
-    "ids_in_dropped long, max_bucket_size long"
-)
 # triples_raw is laid out by batch_fp: one layer per extracted batch
 # of urls (or one rebuild_<id> layer after a rebuild)
 RAW_LAYER_DDL = RAW_DDL + ", batch_fp string"
@@ -75,24 +68,19 @@ class PipelineConfig:
     sameas_pred: str = "http://www.w3.org/2002/07/owl#sameAs"
     # shortcut treated as the strip-prefix sentinel (ntto -n)
     null_shortcut: str = "<NULL>"
+    # link URIs that share a normal form (link.normalize_uri) through
+    # the norm_hubs index; off → explicit owl:sameAs links only
     neardup_link: bool = True
-    # 1.0 → exact-normalized linking only (precision-first default);
-    # < 1.0 → minhash-LSH + Jaccard near-dup linking
-    jaccard_threshold: float = 1.0
-    # LSH skew-guard bucket cap (both link modes); surfaced so tests
-    # and corpora with known bucket structure can tune the
-    # recall/blowup trade explicitly
-    lsh_max_bucket: int = LSH_MAX_BUCKET
     # materialize folds the batch-layered edge table back into ONE
     # b_fp=full layer whenever the layer count crosses this threshold —
     # without it, daily deltas accumulate layers without bound and the
     # read side degrades (r5 verdict wrong #2). Pure table maintenance:
     # query output is identical before and after a fold, so this field
-    # is deliberately NOT part of _config_key.
+    # is one of the NON_OUTPUT_FIELDS.
     edges_fold_layers: int = 16
     # selects nothing: every run takes the one delta path. Kept only so
     # existing callers that pass it (the --incremental-link flag,
-    # perfbench) keep working; not part of _config_key.
+    # perfbench) keep working; one of the NON_OUTPUT_FIELDS.
     incremental_link: bool = False
 
 
@@ -107,38 +95,26 @@ class PipelineResult:
 RUN_MANIFEST = "run_manifest.json"
 
 
+# PipelineConfig fields that do not change pipeline output: where the
+# warehouse lives, table maintenance, and a flag that selects nothing.
+# Every other field is part of _config_key.
+NON_OUTPUT_FIELDS = frozenset({"warehouse", "edges_fold_layers", "incremental_link"})
+
+
+def _digest(obj) -> str:
+    """sha256 hex digest of obj's JSON form (keys sorted)."""
+    return hashlib.sha256(json.dumps(obj, sort_keys=True).encode()).hexdigest()
+
+
 def _config_key(cfg: PipelineConfig) -> str:
     """Digest of every config field that changes pipeline OUTPUT — a
-    no-op skip must never survive a config change. The module-level
-    LSH banding family (num_hashes/bands/shingle_k/seed) is part of
-    the output identity too: a family retune (e.g. the r6 shingle-k
-    4→8 change) must invalidate the run-manifest skip exactly as
-    _link_config_key invalidates the persisted indexes — otherwise a
-    pre-retune warehouse rerun under identical cfg would silently
-    return old-family edges (ADVICE r6, medium)."""
-    import hashlib
-    import json
-
-    from kgpipe.operators.link import (
-        LSH_BANDS,
-        LSH_FAMILY_VERSION,
-        LSH_NUM_HASHES,
-        LSH_SEED,
-        LSH_SHINGLE_K,
-    )
-
-    blob = json.dumps(
-        {
-            "rules": cfg.rules_text, "mode": cfg.mode, "n_parts": cfg.n_parts,
-            "n_buckets": cfg.n_buckets, "sameas": cfg.sameas_pred,
-            "null": cfg.null_shortcut, "neardup": cfg.neardup_link,
-            "jt": cfg.jaccard_threshold, "cap": cfg.lsh_max_bucket,
-            "lsh_family": [LSH_NUM_HASHES, LSH_BANDS, LSH_SHINGLE_K, LSH_SEED,
-                           LSH_FAMILY_VERSION],
-        },
-        sort_keys=True,
-    )
-    return hashlib.sha256(blob.encode()).hexdigest()
+    no-op skip must never survive a config change. It covers every
+    field outside NON_OUTPUT_FIELDS, so a new field cannot slip past
+    the skip."""
+    values = dataclasses.asdict(cfg)
+    for name in NON_OUTPUT_FIELDS:
+        del values[name]
+    return _digest(values)
 
 
 def _source_manifest(pages: DataFrame) -> str | None:
@@ -151,8 +127,6 @@ def _source_manifest(pages: DataFrame) -> str | None:
     makes a no-op resume METADATA-ONLY: a rerun over unchanged files
     skips every stage without one job over table data (r4 verdict
     "wrong" #2)."""
-    import hashlib
-    import json
     import re
 
     files = pages.inputFiles()
@@ -188,25 +162,7 @@ def _source_manifest(pages: DataFrame) -> str | None:
         return None
     plan = re.sub(r"#\d+", "#", pages._jdf.queryExecution().logical().toString())
     ents.append(plan)
-    return hashlib.sha256(json.dumps(ents).encode()).hexdigest()
-
-
-def _collect_counters(io: TableIO, log: CheckpointLog) -> dict:
-    # driver-side sums over the (tiny) cached ledger rows: no Spark
-    # job for a <100-row relation
-    counters = log.counter_sums()
-    # the LSH recall budget (SURVEY.md §6 P/R ≥ 0.95): how many
-    # buckets the skew guard dropped and how many URIs sat inside
-    # them — persisted by the link stage, so it survives resume
-    fast = io.read_small_rows("link_bucket_stats")
-    if fast is not None:
-        if fast:
-            counters["lsh_bucket_stats"] = dict(fast[0])
-    elif io.exists("link_bucket_stats"):
-        row = io.read("link_bucket_stats", LSH_STATS_DDL).collect()
-        if row:
-            counters["lsh_bucket_stats"] = row[0].asDict()
-    return counters
+    return _digest(ents)
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> PipelineResult:
@@ -230,12 +186,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
             triples=io.read("triples_raw", RAW_DDL).where(F.col("error").isNull()),
             canonical_map=io.read("canonical_map", CMAP_DDL),
             edges=io.read("edges", EDGES_DDL),
-            counters=_collect_counters(io, log),
+            counters=log.counter_sums(),
         )
 
     delta = _stage_extract_parse_abbrev(spark, pages, cfg, io, log, parse_rules(cfg.rules_text))
     link = _stage_link_incremental(spark, delta, cfg, io, log)
-    # read after link: its LSH-cap rebuild may relayer triples_raw
     triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
     cmap = io.read("canonical_map", CMAP_DDL)
     _stage_materialize_incremental(spark, triples, cmap, cfg, io, log, link)
@@ -243,7 +198,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
         io.write_json_atomic(RUN_MANIFEST, {"manifest": manifest, "config": ckey})
     return PipelineResult(
         triples=triples, canonical_map=cmap, edges=io.read("edges", EDGES_DDL),
-        counters=_collect_counters(io, log),
+        counters=log.counter_sums(),
     )
 
 
@@ -257,38 +212,14 @@ LINK_CONFIG = "link_config.json"
 
 def _link_config_key(cfg: PipelineConfig) -> str:
     """Digest of the link-config fields the persisted indexes
-    (linked_urls, norm_hubs, lsh_index, canonical_map) were built
-    under. Merges cannot retract, so a delta run over indexes built
-    with a DIFFERENT threshold/cap/predicate would silently keep
-    components merged under the old config — the run must detect the
-    mismatch and route to a full rebuild instead (ADVICE r5). Written
-    alongside linked_urls (last, so a crash before it re-detects the
-    mismatch and rebuilds again — idempotent)."""
-    import hashlib
-    import json
-
-    from kgpipe.operators.link import (
-        LSH_BANDS,
-        LSH_FAMILY_VERSION,
-        LSH_NUM_HASHES,
-        LSH_SEED,
-        LSH_SHINGLE_K,
-    )
-
-    blob = json.dumps(
-        {
-            "jt": cfg.jaccard_threshold, "cap": cfg.lsh_max_bucket,
-            "neardup": cfg.neardup_link, "sameas": cfg.sameas_pred,
-            # the banding FAMILY is part of the persisted lsh_index's
-            # identity: a code upgrade that changes any of these (e.g.
-            # the r6 shingle-k retune) must invalidate old indexes —
-            # signatures built under a different family never match
-            "lsh": [LSH_NUM_HASHES, LSH_BANDS, LSH_SHINGLE_K, LSH_SEED,
-                    LSH_FAMILY_VERSION],
-        },
-        sort_keys=True,
-    )
-    return hashlib.sha256(blob.encode()).hexdigest()
+    (linked_urls, norm_hubs, canonical_map) were built under. Merges
+    cannot retract, so a delta run over indexes built under a
+    DIFFERENT linker or predicate would silently keep components
+    merged under the old config — the run must detect the mismatch
+    and route to a full rebuild instead (ADVICE r5). Written alongside
+    linked_urls (last, so a crash before it re-detects the mismatch
+    and rebuilds again — idempotent)."""
+    return _digest({"neardup": cfg.neardup_link, "sameas": cfg.sameas_pred})
 
 
 def _extract_config_key(cfg: PipelineConfig) -> str:
@@ -296,14 +227,7 @@ def _extract_config_key(cfg: PipelineConfig) -> str:
     delta run extracts only new urls, so the old pages' triples keep
     the rules they were extracted under; recorded beside the link key,
     a mismatch (or a warehouse without it) re-extracts every page."""
-    import hashlib
-    import json
-
-    blob = json.dumps(
-        {"rules": cfg.rules_text, "mode": cfg.mode, "null": cfg.null_shortcut},
-        sort_keys=True,
-    )
-    return hashlib.sha256(blob.encode()).hexdigest()
+    return _digest({"rules": cfg.rules_text, "mode": cfg.mode, "null": cfg.null_shortcut})
 
 
 def _url_fingerprints(triples) -> DataFrame:
@@ -549,10 +473,7 @@ def _stage_extract_parse_abbrev(spark, pages, cfg, io: TableIO, log: CheckpointL
         trigger = "removed"
     elif any(b not in linked_batches and b != batch for b in layers):
         trigger = "stale_layer"
-    elif linked and cfg.neardup_link and (
-        not io.exists("norm_hubs")
-        or (cfg.jaccard_threshold < 1.0 and not io.exists("lsh_index"))
-    ):
+    elif linked and cfg.neardup_link and not io.exists("norm_hubs"):
         trigger = "index_gap"
     elif linked and conf.get("key") != _link_config_key(cfg):
         trigger = "cfg_gap"
@@ -626,109 +547,6 @@ def _rebuild_triples(
     log.mark_done_rows("extract_parse_abbrev", [(0, _signed(rebuild_id), n_in, *counts)])
 
 
-LSH_INDEX_DDL = "uri string, band int, bh long, batch_fp string"
-
-
-def _incremental_lsh_delta(spark, base, cfg, io: TableIO):
-    """Delta-only LSH near-dup linking against the persisted signature
-    index (r4 verdict missing #2, closed): band ONLY the delta's
-    previously-unseen URIs (base: the batch's distinct (uri, norm)),
-    join their (band, bh) keys against the `lsh_index` table, and emit
-    verified pairs with at least one new member — old×old pairs were
-    emitted when their members arrived. Signature work is delta-sized;
-    the only touch of old data is a broadcast semi-join of the index
-    against the delta's bucket keys.
-
-    Cap semantics match the full linker's capped_buckets exactly:
-    a bucket whose COMBINED size exceeds cfg.lsh_max_bucket emits
-    nothing. The one case merge-only incrementality cannot honor is a
-    bucket that already emitted pairs (2 ≤ old_n ≤ cap) crossing the
-    cap — a full recompute would drop the whole bucket, i.e. retract
-    pairs already merged — so that returns None and the caller falls
-    back to a full rebuild. Buckets with old_n ∈ {0, 1} crossing the
-    cap emitted nothing before, so dropping them now is exactly what
-    a full recompute does.
-
-    Returns (verified_edges, banded_new) — banded_new is appended to
-    the index (per-batch partition) by the caller — or None for the
-    rebuild fallback. Pinned equal to the full LSH linker across
-    batches, including buckets that span batches (test_pipeline)."""
-    from kgpipe.operators.link import (
-        LSH_BANDS,
-        LSH_NUM_HASHES,
-        LSH_SEED,
-        LSH_SHINGLE_K,
-        _pairs_from_sorted_array,
-        _uri_banded,
-        char_shingles,
-        normalize_uri,
-    )
-
-    cap = cfg.lsh_max_bucket
-    if io.exists("lsh_index"):
-        index = io.read("lsh_index", LSH_INDEX_DDL).select("uri", "band", "bh")
-    else:
-        index = spark.createDataFrame([], "uri string, band int, bh long")
-    new_uris = base.join(index.select("uri").distinct(), "uri", "left_anti")
-    banded_new = _uri_banded(
-        new_uris, "uri", "norm", LSH_NUM_HASHES, LSH_BANDS, LSH_SHINGLE_K, LSH_SEED
-    ).localCheckpoint(eager=True)
-    keys = banded_new.select("band", "bh").distinct()
-    # delta-sized key set → broadcast semi-join: the index is filtered
-    # map-side, never shuffled
-    old_touched = index.join(F.broadcast(keys), ["band", "bh"], "left_semi").localCheckpoint(
-        eager=True
-    )
-    old_sz = old_touched.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("old_n"))
-    new_sz = banded_new.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("new_n"))
-    sz = (
-        new_sz.join(old_sz, ["band", "bh"], "left")
-        .withColumn("old_n", F.coalesce("old_n", F.lit(0)))
-        .localCheckpoint(eager=True)
-    )
-    crossing = (
-        sz.where(
-            (F.col("old_n") >= 2)
-            & (F.col("old_n") <= cap)
-            & (F.col("old_n") + F.col("new_n") > cap)
-        ).limit(1).count()
-        > 0
-    )
-    if crossing:
-        return None
-    ok_keys = sz.where(F.col("old_n") + F.col("new_n") <= cap).select("band", "bh")
-    combined = old_touched.withColumn("is_new", F.lit(False)).unionByName(
-        banded_new.select("uri", "band", "bh").withColumn("is_new", F.lit(True))
-    )
-    buckets = (
-        combined.join(F.broadcast(ok_keys), ["band", "bh"])
-        .groupBy("band", "bh")
-        .agg(
-            F.array_sort(F.array_distinct(F.collect_list("uri"))).alias("ids"),
-            F.collect_set(F.when(F.col("is_new"), F.col("uri"))).alias("new_ids"),
-        )
-        .where(F.size("ids") > 1)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(_pairs_from_sorted_array(F.col("ids"))).alias("pr"), "new_ids"
-        )
-        .where(
-            F.array_contains("new_ids", F.col("pr.a"))
-            | F.array_contains("new_ids", F.col("pr.b"))
-        )
-        .select(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-        .distinct()
-    )
-    sh_a = char_shingles(normalize_uri(F.col("a")), LSH_SHINGLE_K)
-    sh_b = char_shingles(normalize_uri(F.col("b")), LSH_SHINGLE_K)
-    jac = F.size(F.array_intersect(sh_a, sh_b)) / F.size(F.array_union(sh_a, sh_b))
-    verified = pairs.where(jac >= F.lit(cfg.jaccard_threshold)).select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    )
-    return verified, banded_new
-
-
 def _commit_url_index(
     rows: DataFrame, batch: str, cfg, io: TableIO, replace: bool = False
 ) -> None:
@@ -780,9 +598,7 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     batch saw gets one edge to that form's hub (edge choice only
     affects connectivity, and canon labels come from CC's component
     min, so hub staleness is label-irrelevant); unseen normal forms
-    elect the batch's min URI as hub. With jaccard_threshold < 1.0
-    the delta's new URIs are also banded against the persisted LSH
-    signature index (_incremental_lsh_delta). Components merge via
+    elect the batch's min URI as hub. Components merge via
     incremental_merge, so CC work scales with the delta's
     neighborhood, not the corpus. Only the NUMBER of canon labels the
     merge changed is kept: materialize appends the batch's edges when
@@ -797,16 +613,15 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
 
     Rebuild path: the extract stage already named a trigger (a
     re-crawl that changed clean triples, a removed url, a config or
-    layout gap), or an LSH bucket that already emitted pairs crosses
-    the size cap — merges cannot retract links, so the map and the
+    layout gap) — merges cannot retract links, so the map and the
     indexes are rebuilt from all current triples
     (_incremental_full_rebuild). Either way the result is pinned EQUAL
     to a fresh build and to a pure-Python graph oracle (test_pipeline).
 
     Crash safety: canonical_map goes through TableIO.replace (it
     derives from its own previous version), stamped with the batch
-    and its change count in the same swap; the hub and LSH deltas land
-    in per-batch `batch_fp=` partitions under dynamic overwrite, so a
+    and its change count in the same swap; the new hubs land in the
+    batch's own `batch_fp=` partition under dynamic overwrite, so a
     retry replaces its own rows; the url index is written LAST, so a
     crashed attempt re-detects its delta and re-runs idempotently. A
     retry after the map swap merges into the already-merged map and
@@ -839,7 +654,7 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
         .select(F.col("s").alias("src"), F.col("o").alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    forms = lsh_new_banded = None
+    forms = None
     if cfg.neardup_link:
         # the batch's URIs grouped by normal form: one shuffle, and the
         # join with the hub index needs none more on this side
@@ -862,19 +677,6 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
             forms.select(F.explode("uris").alias("src"), F.col("hub").alias("dst"))
             .where(F.col("src") != F.col("dst"))
         )
-        if cfg.jaccard_threshold < 1.0:
-            lsh_res = _incremental_lsh_delta(
-                spark, forms.select(F.explode("uris").alias("uri"), "norm"), cfg, io
-            )
-            if lsh_res is None:
-                # a bucket that already emitted pairs crossed the cap:
-                # a full recompute would retract them — rebuild
-                forms.unpersist()
-                return _incremental_full_rebuild(
-                    spark, dataclasses.replace(delta, rebuild="lsh_cap"), cfg, io, log
-                )
-            lsh_edges, lsh_new_banded = lsh_res
-            delta_edges = delta_edges.union(lsh_edges)
     # with the near-dup linker off only explicit sameAs edges link:
     # no norm→hub edges, and no norm_hubs index
 
@@ -909,23 +711,6 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
             "norm_hubs", mode="overwrite", partition_by=["batch_fp"],
         )
         forms.unpersist()
-    if lsh_new_banded is not None:
-        io.write(
-            lsh_new_banded.withColumn("batch_fp", F.lit(b)),
-            "lsh_index", mode="overwrite", partition_by=["batch_fp"],
-        )
-        # recall budget over the WHOLE index (old + this delta): an
-        # index scan and one count aggregation — no signature recompute
-        io.write_small(
-            bucket_stats(
-                io.read("lsh_index", LSH_INDEX_DDL).select("uri", "band", "bh"),
-                cfg.lsh_max_bucket,
-            ),
-            "link_bucket_stats",
-        )
-    else:
-        io.write_small_rows([(0, 0, 0, 0, 0)], LSH_STATS_DDL,
-                            "link_bucket_stats")
     # url index LAST: content fingerprints over the batch layer only
     index_rows = delta.new_urls.join(_url_fingerprints(layer), "url", "left").select(
         "url", _ufp_or_empty(), "pfp"
@@ -977,13 +762,13 @@ def _observed(obs: Observation) -> dict[str, int]:
 
 def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
     """Rebuild fallback of the link stage: merges cannot retract
-    links, so rebuild the canonical map, the norm→hub index, the LSH
-    index and the url index from ALL current triples (retractions
-    included). Subsequent append-only deltas resume incrementally.
-    Hubs cover EVERY normal form (singletons too) so future deltas can
-    link against them. triples_raw is one layer named delta.rebuild_id
-    here (the extract stage rebuilt it, or the LSH-cap case folds the
-    layers first), and the url index names that one batch. Its change
+    links, so rebuild the canonical map, the norm→hub index and the
+    url index from ALL current triples (retractions included).
+    Subsequent append-only deltas resume incrementally. Hubs cover
+    EVERY normal form (singletons too) so future deltas can link
+    against them. triples_raw is one layer named delta.rebuild_id here
+    (the extract stage rebuilt it), and the url index names that one
+    batch. Its change
     count is unknown (None, also in the map's stamp), so materialize
     rewrites the edges.
 
@@ -997,14 +782,8 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     from kgpipe.operators.link import normalize_uri
 
     batch_fp = delta.rebuild_id
-    if set(_partition_values(io, "triples_raw", "batch_fp")) != {batch_fp}:
-        io.replace(
-            io.read("triples_raw", RAW_LAYER_DDL).withColumn("batch_fp", F.lit(batch_fp)),
-            "triples_raw", partition_by=["batch_fp"],
-        )
     triples = io.read("triples_raw", RAW_LAYER_DDL).where(F.col("error").isNull())
     explicit = sameas_edges_from_triples(triples, cfg.sameas_pred)
-    lsh_mode = cfg.neardup_link and cfg.jaccard_threshold < 1.0
     if cfg.neardup_link:
         base = (
             _uris(triples)
@@ -1020,13 +799,6 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
             .select(F.col("uri").alias("src"), F.col("hub").alias("dst"))
         )
         edges = explicit.union(star)
-        if lsh_mode:
-            edges = edges.union(
-                verified_neardup_edges(
-                    base.select("uri"), "uri", cfg.jaccard_threshold,
-                    max_bucket=cfg.lsh_max_bucket,
-                )
-            )
     else:
         hubs_all = None
         edges = explicit
@@ -1044,36 +816,8 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     # coverage markers already list — without edges materialize
     # rewrites them. delta_triples and term_maps are handoff tables
     # that warehouses written before the triples_raw layers still carry.
-    for name in ("edges", "lsh_index", "delta_triples", "term_maps"):
+    for name in ("edges", "delta_triples", "term_maps"):
         io.drop(name)
-    if lsh_mode:
-        from kgpipe.operators.link import (
-            LSH_BANDS,
-            LSH_NUM_HASHES,
-            LSH_SEED,
-            LSH_SHINGLE_K,
-            _uri_banded,
-        )
-
-        banded_all = _uri_banded(
-            base, "uri", "norm", LSH_NUM_HASHES, LSH_BANDS, LSH_SHINGLE_K, LSH_SEED
-        )
-        io.write(
-            banded_all.withColumn("batch_fp", F.lit(batch_fp)),
-            "lsh_index", mode="overwrite", partition_by=["batch_fp"],
-        )
-        # recall budget from the index just written, as the delta path
-        # computes it — no second banding of the URIs
-        io.write_small(
-            bucket_stats(
-                io.read("lsh_index", LSH_INDEX_DDL).select("uri", "band", "bh"),
-                cfg.lsh_max_bucket,
-            ),
-            "link_bucket_stats",
-        )
-    else:
-        io.write_small_rows([(0, 0, 0, 0, 0)], LSH_STATS_DDL,
-                            "link_bucket_stats")
     # every page is indexed — pages without clean triples too, or the
     # next delta would see them as new again
     cur_urls = delta.page_fps.join(_url_fingerprints(triples), "url", "left").select(

@@ -1,7 +1,7 @@
 """Driver-gate hardening (VERDICT r1 #10): the driver owns the
 SparkSession, so every queries() entry must be correct under a PLAIN
-Spark 4 session — ANSI on, no kgpipe conf. Round 1's
-minhash_lsh_pairs crash (long overflow, ANSI-on only) is exactly the
+Spark 4 session — ANSI on, no kgpipe conf. A query whose arithmetic
+overflows a long only under ANSI (one did in round 1) is exactly the
 class of failure this file surfaces locally.
 
 Runs in a subprocess: the kgpipe conftest session is process-global,

@@ -4,13 +4,14 @@ vs a pure-Python graph oracle, determinism across parallelism, and
 idempotent resume from a partial checkpoint table."""
 
 import collections
+import dataclasses
 import re
 import subprocess
 
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe.fixtures import RULES_16_TEXT, gen_pages
+from kgpipe.fixtures import RULES_16_TEXT, gen_pages, nt_pages
 from kgpipe.nt.parser import NTParseError, parse_ntriple
 from kgpipe.nt.rules import PrefixRewriter, parse_rules
 from kgpipe.operators.extract import extract_text
@@ -244,50 +245,6 @@ def test_fused_equals_chained(spark):
         )
 
 
-def test_lsh_bucket_stats_in_counters(spark, tmp_path):
-    """The LSH recall budget is surfaced per run: with the near-dup
-    linker active, PipelineResult.counters carries the bucket-stats
-    row from the exact banding the linker used, and it must equal an
-    independent neardup_bucket_stats computation over the same URI
-    universe. On this fixture the cap DOES fire (the synthetic URIs
-    are structurally near-identical, so their minhash bands collide
-    into oversized buckets) — which is precisely why the budget has
-    to be visible: entity identity still holds at P/R=1.0 because
-    exact-normalized linking never rides on bucket luck
-    (test_triples_match_reference_exactly / test_link golden
-    clusters), and the counter makes the LSH tax auditable instead
-    of silent."""
-    from kgpipe.operators.link import neardup_bucket_stats
-
-    pages = spark.createDataFrame(gen_pages(60)).repartition(4)
-    cfg = PipelineConfig(
-        warehouse=str(tmp_path / "wh_lsh"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=4, jaccard_threshold=0.85,
-    )
-    res = run_pipeline(spark, pages, cfg)
-    stats = res.counters["lsh_bucket_stats"]
-    assert stats["n_buckets"] > 0  # the LSH path really ran
-
-    uris = (
-        res.triples.select(F.col("s").alias("uri"))
-        .union(res.triples.select(F.col("o").alias("uri")))
-        .distinct()
-    )
-    expected = neardup_bucket_stats(uris, "uri").collect()[0].asDict()
-    assert stats == expected
-    assert stats["ids_in_dropped"] == expected["ids_in_dropped"]
-
-
-def test_exact_link_mode_reports_zero_lsh_budget(spark, result):
-    """Default (exact-normalized) linking reports an explicit zero
-    LSH budget rather than omitting the key."""
-    stats = result.counters["lsh_bucket_stats"]
-    assert stats == {
-        "n_buckets": 0, "n_singleton": 0, "n_dropped": 0,
-        "ids_in_dropped": 0, "max_bucket_size": 0,
-    }
-
-
 def test_incremental_link_matches_full(spark, tmp_path):
     """Daily delta: batch 1, then batches 1+2 — the link stage only
     processes the new urls, merging via incremental_merge and the
@@ -337,89 +294,6 @@ def test_incremental_link_rerun_is_noop(spark, tmp_path):
     second = run_pipeline(spark, pages, cfg)
     after = {(r.uri, r.canon_id) for r in second.canonical_map.collect()}
     assert before == after
-
-
-def test_incremental_lsh_matches_full(spark, tmp_path):
-    """Incremental LSH linking (persisted signature index): two-batch
-    run pinned equal to a full LSH run over everything — including
-    buckets that span batches (the fixture's URIs are structurally
-    near-identical, so delta URIs land in old buckets). The cap is
-    raised so no bucket drops and the DELTA path (not the rebuild
-    fallback) is what gets exercised."""
-    all_pages = gen_pages(120)
-    kw = dict(
-        rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        jaccard_threshold=0.85, lsh_max_bucket=4096,
-    )
-    cfg_inc = PipelineConfig(
-        warehouse=str(tmp_path / "wh_ilsh"), **kw
-    )
-    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:80]).repartition(5), cfg_inc)
-    res_inc = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_inc)
-
-    # the delta path ran — no rebuild batch in the url index
-    batches = {
-        r.batch_fp
-        for r in spark.read.parquet(str(tmp_path / "wh_ilsh" / "linked_urls"))
-        .select("batch_fp").distinct().collect()
-    }
-    assert len(batches) == 2 and not any(b.startswith("rebuild") for b in batches)
-
-    cfg_full = PipelineConfig(warehouse=str(tmp_path / "wh_ilsh_full"), **kw)
-    res_full = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_full)
-
-    cmap_inc = {(r.uri, r.canon_id) for r in res_inc.canonical_map.collect()}
-    cmap_full = {(r.uri, r.canon_id) for r in res_full.canonical_map.collect()}
-    assert cmap_inc == cmap_full
-    e_inc = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res_inc.edges.collect()
-    )
-    e_full = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res_full.edges.collect()
-    )
-    assert e_inc == e_full
-    # recall budget persisted from the index, not zeros
-    assert res_inc.counters["lsh_bucket_stats"]["n_buckets"] > 0
-
-
-def test_incremental_lsh_with_tight_cap_matches_full(spark, tmp_path):
-    """Same pin under the default-small cap: buckets genuinely drop
-    and some cross the cap between batches — the stage must fall back
-    to a rebuild where required and still equal the full run."""
-    all_pages = gen_pages(90)
-    kw = dict(
-        rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        jaccard_threshold=0.85, lsh_max_bucket=8,
-    )
-    cfg_inc = PipelineConfig(
-        warehouse=str(tmp_path / "wh_tlsh"), **kw
-    )
-    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:60]).repartition(4), cfg_inc)
-    res_inc = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg_inc)
-
-    cfg_full = PipelineConfig(warehouse=str(tmp_path / "wh_tlsh_full"), **kw)
-    res_full = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg_full)
-    cmap_inc = {(r.uri, r.canon_id) for r in res_inc.canonical_map.collect()}
-    cmap_full = {(r.uri, r.canon_id) for r in res_full.canonical_map.collect()}
-    assert cmap_inc == cmap_full
-
-    # the second run rebuilt, and the rebuild's recall budget (read off
-    # its lsh_index) equals an independent banding of the same URIs
-    from kgpipe.operators.link import neardup_bucket_stats
-
-    batches = {
-        r.batch_fp
-        for r in spark.read.parquet(str(tmp_path / "wh_tlsh" / "linked_urls"))
-        .select("batch_fp").distinct().collect()
-    }
-    assert all(b.startswith("rebuild") for b in batches)
-    uris = (
-        res_inc.triples.select(F.col("s").alias("uri"))
-        .union(res_inc.triples.select(F.col("o").alias("uri")))
-        .distinct()
-    )
-    expected = neardup_bucket_stats(uris, "uri", max_bucket=8).collect()[0].asDict()
-    assert res_inc.counters["lsh_bucket_stats"] == expected
 
 
 def test_incremental_link_recrawl_triggers_rebuild(spark, tmp_path):
@@ -721,17 +595,28 @@ def test_manifest_skip_defeated_by_config_or_file_change(spark, tmp_path):
     assert m_all is not None and m_filtered is not None and m_all != m_filtered
 
 
-def test_config_key_covers_lsh_cap(tmp_path):
-    """ADVICE r5: lsh_max_bucket changes which LSH buckets emit pairs,
-    so it must defeat the run-manifest short-circuit."""
-    import dataclasses
+def _changed(value):
+    """Another value of the same type."""
+    if isinstance(value, bool):
+        return not value
+    if isinstance(value, int):
+        return value + 1
+    return value + "x"
 
+
+@pytest.mark.parametrize(
+    "name", [f.name for f in dataclasses.fields(PipelineConfig)]
+)
+def test_config_key_covers_output_fields(tmp_path, name):
+    """Every PipelineConfig field but the three non-output ones defeats
+    the run-manifest short-circuit when it changes; a change of a
+    non-output field keeps it."""
     import kgpipe.pipeline as pl
 
     cfg = PipelineConfig(warehouse=str(tmp_path), rules_text=RULES_16_TEXT)
-    assert pl._config_key(cfg) != pl._config_key(
-        dataclasses.replace(cfg, lsh_max_bucket=7)
-    )
+    other = dataclasses.replace(cfg, **{name: _changed(getattr(cfg, name))})
+    changes_key = pl._config_key(cfg) != pl._config_key(other)
+    assert changes_key == (name not in {"warehouse", "edges_fold_layers", "incremental_link"})
 
 
 def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
@@ -739,25 +624,30 @@ def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
     link config must not keep merges made under the old one (merges
     cannot retract) — the persisted link-config digest routes the run
     to a full rebuild, and the result equals a from-scratch run under
-    the new config."""
-    import dataclasses
+    the new config. Two variants of one URI in the base batch make
+    the old map hold a normal-form merge the new config does not."""
+    import pandas as pd
 
     from kgpipe.io import TableIO
     from kgpipe.pipeline import LINKED_URLS_DDL
 
-    all_pages = gen_pages(100)
+    variants = nt_pages([
+        ["<https://www.cfg.example/a> <http://cfg.example/p> \"a1\" ."],
+        ["<http://cfg.example/a/> <http://cfg.example/p> \"a2\" ."],
+    ])
+    base_pages = pd.concat([gen_pages(60), variants], ignore_index=True)
+    all_pages = pd.concat([gen_pages(100), variants], ignore_index=True)
     wh = str(tmp_path / "wh_cfgchg")
-    cfg_lsh = PipelineConfig(
+    cfg_neardup = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        jaccard_threshold=0.85, lsh_max_bucket=4096,
     )
     run_pipeline(
-        spark, spark.createDataFrame(all_pages.iloc[:60]).repartition(5), cfg_lsh
+        spark, spark.createDataFrame(base_pages).repartition(5), cfg_neardup
     )
-    # same warehouse, exact-normalized linking now (jt=1.0): the
-    # persisted indexes were built under jt=0.85 → must rebuild
-    cfg_exact = dataclasses.replace(cfg_lsh, jaccard_threshold=1.0)
-    res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_exact)
+    # same warehouse, sameAs-only linking now: the persisted map holds
+    # normal-form merges the new config does not make → must rebuild
+    cfg_sameas = dataclasses.replace(cfg_neardup, neardup_link=False)
+    res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_sameas)
 
     io = TableIO(spark, wh)
     batches = {
@@ -771,7 +661,7 @@ def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
 
     cfg_scratch = PipelineConfig(
         warehouse=str(tmp_path / "wh_cfgchg_full"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=8, jaccard_threshold=1.0, lsh_max_bucket=4096,
+        mode="compat", n_parts=8, neardup_link=False,
     )
     res_full = run_pipeline(
         spark, spark.createDataFrame(all_pages).repartition(5), cfg_scratch
@@ -779,7 +669,8 @@ def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
     assert {(r.uri, r.canon_id) for r in res.canonical_map.collect()} == {
         (r.uri, r.canon_id) for r in res_full.canonical_map.collect()
     }
-    assert _graph(res) == _oracle(res)
+    assert _graph(res) == _oracle(res, neardup=False)
+    assert _oracle(res) != _oracle(res, neardup=False)
 
 
 def test_incremental_materialize_folds_layers(spark, tmp_path):
@@ -858,41 +749,12 @@ def test_rerun_with_other_n_buckets_rebuckets_edges(spark, tmp_path):
     assert _graph(res) == _oracle(res)
 
 
-def _nt_pages(specs, start=0):
-    """Hand-crafted pages: specs is a list of lists of raw N-Triples
-    lines, one page per inner list. URLs are unique per page (offset
-    by `start` so successive deltas mint NEW urls)."""
-    import datetime as dt
-    from html import escape
-
-    import pandas as pd
-
-    rows = {
-        "url": [f"https://crafted.example.org/p/{start + i}" for i in range(len(specs))],
-        "warc_ts": [
-            dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc) + dt.timedelta(seconds=i)
-            for i in range(len(specs))
-        ],
-        "html": [
-            (
-                "<html><body><pre class=\"nt\">"
-                + escape("\n".join(lines))
-                + "</pre></body></html>"
-            ).encode()
-            for lines in specs
-        ],
-        "text": ["" for _ in specs],
-        "lang": ["en" for _ in specs],
-    }
-    return pd.DataFrame(rows)
-
-
 def _label_free_pages(n, start=900):
     """n pages whose one triple each links nothing: a fresh singleton
     subject URI and literal, no sameAs, no normal form shared with
     each other or the gen_pages corpus — a delta of them changes no
     canon label, so materialize appends it."""
-    return _nt_pages(
+    return nt_pages(
         [
             [f"<http://lf{start + i}.label-free.example/e> "
              f"<http://label-free.example/p> \"lf-{start + i}\" ."]
@@ -936,9 +798,9 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
     cfg = PipelineConfig(
         warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
     )
-    p_base = _nt_pages(base)
-    p_d1 = _nt_pages(d1, start=100)
-    p_d2 = _nt_pages(d2, start=200)
+    p_base = nt_pages(base)
+    p_d1 = nt_pages(d1, start=100)
+    p_d2 = nt_pages(d2, start=200)
     import pandas as pd
 
     run_pipeline(spark, spark.createDataFrame(p_base).repartition(4), cfg)
@@ -1011,9 +873,9 @@ def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
     )
     import pandas as pd
 
-    p_base = _nt_pages(base)
+    p_base = nt_pages(base)
     run_pipeline(spark, spark.createDataFrame(p_base).repartition(4), cfg)
-    all_pages = pd.concat([p_base, _nt_pages(storm, start=500)], ignore_index=True)
+    all_pages = pd.concat([p_base, nt_pages(storm, start=500)], ignore_index=True)
     res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg)
 
     io = TableIO(spark, wh)
@@ -1147,7 +1009,7 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     # relabels a component the old edges hold
     s0 = nt_block(0).split()[0]
     all_pages = pd.concat(
-        [gen_pages(36), _nt_pages([[f"{s0} {SAMEAS} <0-twin.example/e> ."]])],
+        [gen_pages(36), nt_pages([[f"{s0} {SAMEAS} <0-twin.example/e> ."]])],
         ignore_index=True,
     )
     base_df = spark.createDataFrame(all_pages.iloc[:30]).repartition(2)
@@ -1366,8 +1228,8 @@ def test_normal_form_variants_link_across_batches(spark, tmp_path):
         ["<https://nv.example/b%20c/> <http://kx-p.example/t> \"b2\" ."],
         [f"<http://nv.example/a> {SAMEAS} <http://nv.example/z> ."],
     ]
-    p_base = _nt_pages(base)
-    p_all = pd.concat([p_base, _nt_pages(delta, start=10)], ignore_index=True)
+    p_base = nt_pages(base)
+    p_all = pd.concat([p_base, nt_pages(delta, start=10)], ignore_index=True)
     run_pipeline(spark, spark.createDataFrame(p_base), _cfg(tmp_path / "wh_nv"))
     res = run_pipeline(spark, spark.createDataFrame(p_all), _cfg(tmp_path / "wh_nv"))
     ref = run_pipeline(spark, spark.createDataFrame(p_all), _cfg(tmp_path / "wh_nv_ref"))
@@ -1544,3 +1406,39 @@ def test_run_explain_shows_the_fused_extract_plan(spark, tmp_path, capsys):
     assert "MapInPandas" in plan
     assert "ArrowEvalPython" not in plan
     assert not wh.exists()
+
+
+def test_run_cli_builds_the_oracle_graph(spark, tmp_path, capsys):
+    """`kgpipe run` on the same 5 pages, with and without --no-neardup,
+    exits 0, prints the ledger counters of its three stages, and leaves
+    a warehouse whose graph equals the graph oracle under that linker.
+    --no-neardup is the only link option `run` takes."""
+    import ast
+
+    from kgpipe.cli import main
+    from kgpipe.io import TableIO
+    from kgpipe.pipeline import CMAP_DDL, EDGES_DDL, RAW_DDL
+
+    pages = tmp_path / "pages"
+    spark.createDataFrame(gen_pages(5)).write.parquet(str(pages))
+    for flags, neardup in (([], True), (["--no-neardup"], False)):
+        wh = tmp_path / f"wh_cli_{neardup}"
+        argv = ["run", "--pages", str(pages), "--warehouse", str(wh),
+                "--parts", "4", "--buckets", "4", *flags]
+        assert main(argv) == 0
+        counters = ast.literal_eval(capsys.readouterr().out.strip())["counters"]
+        assert set(counters) == {"extract_parse_abbrev", "link_urls", "materialize"}
+        io = TableIO(spark, str(wh))
+        res = PipelineResult(
+            triples=io.read("triples_raw", RAW_DDL).where(F.col("error").isNull()),
+            canonical_map=io.read("canonical_map", CMAP_DDL),
+            edges=io.read("edges", EDGES_DDL),
+        )
+        assert _graph(res) == _oracle(res, neardup=neardup)
+    with pytest.raises(SystemExit) as help_exit:
+        main(["run", "--help"])
+    assert help_exit.value.code == 0
+    assert set(re.findall(r"--[a-z-]+", capsys.readouterr().out)) == {
+        "--help", "--pages", "--warehouse", "--rules", "--mode", "--null", "--parts",
+        "--buckets", "--no-neardup", "--incremental-link", "--explain",
+    }

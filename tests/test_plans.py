@@ -59,60 +59,6 @@ def test_extract_chain_no_shuffle(spark):
     assert "ArrowEvalPython" in plan and "MapInPandas" in plan
 
 
-def test_minhash_signature_is_jvm_side(spark, sf_dir):
-    """The minhash signature must be pure Catalyst expressions — no
-    Python evaluation nodes at all."""
-    from kgpipe.operators.link import char_shingles, minhash_signature
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sig = df.select(minhash_signature(char_shingles(F.col("text"), 4), 32).alias("sig"))
-    plan = _plan(sig)
-    assert "Python" not in plan and "MapInPandas" not in plan
-
-
-def test_capped_buckets_skew_guard_plan(spark):
-    """Two-phase cap: (1) a count-only aggregation (map-side partial)
-    finds oversized bucket keys, materialized eagerly; (2) a BROADCAST
-    anti-join drops their rows before the bucket aggregation's
-    exchange — so no reduce task ever streams a degenerate bucket.
-    collect_list state is bounded by the cap."""
-    from kgpipe.operators.link import capped_buckets
-
-    banded = spark.createDataFrame(
-        [(i, i % 3, i % 5) for i in range(100)], "id long, band int, bh long"
-    )
-    plan = _plan(capped_buckets(banded, 16, F.collect_list("id").alias("ids")))
-    # phase 1 ran eagerly (localCheckpoint) — the returned plan holds
-    # only the anti-join + final aggregation: oversize keys broadcast
-    # into a LeftAnti below the final agg's exchange
-    assert "LeftAnti" in plan and "Broadcast" in plan
-    # the final bucket agg is the ONLY exchange of banded data rows
-    assert plan.count("Exchange hashpartitioning") <= 1
-
-
-def test_capped_buckets_broadcast_fallback(spark):
-    """Adversarial guard: when the oversize key set exceeds the
-    broadcast limit, the anti-join falls back to a shuffled sort-merge
-    join instead of force-broadcasting an unbounded key set into the
-    driver."""
-    from kgpipe.operators.link import capped_buckets
-
-    banded = spark.createDataFrame(
-        [(i, i % 3, i % 5) for i in range(100)], "id long, band int, bh long"
-    )
-    out = capped_buckets(
-        banded, 2, F.collect_list("id").alias("ids"), broadcast_key_limit=0
-    )
-    plan = _plan(out)
-    assert "LeftAnti" in plan
-    assert "BroadcastHashJoin" not in plan
-    # results identical through either join strategy
-    ref = capped_buckets(banded, 2, F.collect_list("id").alias("ids"))
-    got = {(r.band, r.bh, tuple(sorted(r.ids))) for r in out.collect()}
-    exp = {(r.band, r.bh, tuple(sorted(r.ids))) for r in ref.collect()}
-    assert got == exp
-
-
 def test_canonicalize_broadcasts_map(spark):
     from kgpipe.operators.materialize import canonicalize_triples
 
