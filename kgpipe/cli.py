@@ -83,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
                     "link only unseen urls (a fresh warehouse is the first delta)")
     run.add_argument("--pages", required=True, help="parquet dir of pages")
     run.add_argument("--warehouse", required=True)
-    run.add_argument("--rules", default=None, help="rules file (default: embedded 16)")
+    run.add_argument("--rules", default=None, help="rules file (default: built-in 223)")
     run.add_argument("--mode", choices=["lpm", "compat"], default="lpm")
     run.add_argument("--null", default="<NULL>",
                      help="null-sentinel shortcut that strips its prefix (ntto -n)")

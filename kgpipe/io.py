@@ -1,7 +1,6 @@
 """Warehouse tables as Parquet directories under one root, with the
 crash-safe swaps the pipeline builds on: `replace` (a whole table,
-staged beside the live one and renamed in, optionally with marker
-files that land atomically with the data), `compact` (small-file
+staged beside the live one and renamed in), `compact` (small-file
 compaction by the same directory swap) and atomic JSON side files.
 Every existence check and rename goes through the Hadoop FileSystem
 API, so resume works on any cluster filesystem (HDFS, local); object
@@ -362,25 +361,18 @@ class TableIO:
         df: DataFrame,
         name: str,
         partition_by: list[str] | None = None,
-        side_files: dict[str, object] | None = None,
     ) -> None:
         """Crash-safe FULL replace for tables whose next version is
         DERIVED FROM the current one (e.g. the incrementally merged
-        canonical_map, or a layer-fold of the batch-layered edge
-        table): a plain overwrite deletes the live data before
-        writing, so a crash mid-write destroys the very input its
-        retry needs. Here the new version lands in <name>__next
+        canonical_map, or a triples_raw rebuild that keeps the rows of
+        unchanged urls): a plain overwrite deletes the live data
+        before writing, so a crash mid-write destroys the very input
+        its retry needs. Here the new version lands in <name>__next
         while the live table stays intact, then swaps in via renames
         (live→aside, next→live, delete aside) — at no instant is the
         only copy deleted, and recover_replace() heals the one
         crash window between the renames. Refused on object stores
-        (rename is copy+delete there).
-
-        side_files maps table-relative paths to small JSON objects
-        written into the staged dir AFTER the data write and BEFORE
-        the swap — so ledger/marker files land atomically WITH the
-        data they describe (a layer-fold's coverage marker must never
-        be observable without its folded rows, or vice versa)."""
+        (rename is copy+delete there)."""
         scheme = self._scheme()
         if scheme in self._NON_ATOMIC_RENAME_SCHEMES:
             raise ValueError(
@@ -391,14 +383,6 @@ class TableIO:
         self.recover_replace(name)
         nxt = f"{name}__next"
         self.write(df, nxt, mode="overwrite", partition_by=partition_by)
-        if side_files:
-            import json
-
-            for rel, obj in side_files.items():
-                fs2, p2 = self._fs(f"{self.path(nxt)}/{rel}")
-                out = fs2.create(p2, True)
-                out.writeBytes(json.dumps(obj, ensure_ascii=True))
-                out.close()
         fs, live = self._fs(self.path(name))
         _, nxt_p = self._fs(self.path(nxt))
         _, aside = self._fs(self.path(f"{name}__replaced"))
@@ -412,9 +396,9 @@ class TableIO:
         if had_live:
             fs.delete(aside, True)
 
-    # -- small json side-files (markers, applied-batch ledgers) --------
+    # -- small json side-files (markers, manifests) --------------------
     def write_json_atomic(self, name: str, obj) -> None:
-        """Write a small root-level json file via temp+rename, so a
+        """Write a small json file under the root via temp+rename, so a
         reader never observes a half-written marker. Rename within one
         directory is atomic on HDFS/local (object stores are already
         refused for every swap-based protocol here)."""

@@ -303,14 +303,10 @@ def incremental_canonical_map(
 
 @dataclass
 class Merge:
-    """incremental_merge's result. cmap: the merged map. changes:
-    (old_c, new_c) for every label that was an EFFECTIVE canon id
-    before the merge (a fixed point of prev — an explicit
-    uri==canon_id row, or a uri absent from prev entirely) and now
-    maps to a different label. n_edges: distinct new edges merged."""
+    """incremental_merge's result. cmap: the merged map. n_edges:
+    distinct new edges merged."""
 
     cmap: DataFrame
-    changes: DataFrame
     n_edges: int
 
 
@@ -320,24 +316,16 @@ def incremental_merge(
     small_graph_max_edges: int | None = SMALL_GRAPH_MAX_EDGES,
     **kw,
 ) -> Merge:
-    """incremental_canonical_map, plus the LABEL CHANGES the merge
-    caused (see Merge).
-
-    The changes tell downstream MATERIALIZED artifacts keyed by canon
-    labels (the edge table) whether their old rows still hold current
-    labels — the pipeline appends a batch's edges only when there are
-    none. They come from the delta's neighborhood alone (the affected
-    components' prev rows), so their cost scales with the delta, not
-    the corpus, and no copy of the previous map is kept to diff.
+    """incremental_canonical_map, plus the number of distinct new
+    edges merged (see Merge).
 
     Same tiers as connected_components: while the new edges plus the
     affected components' rows fit small_graph_max_edges, both are
     collected (two queries; the map is filtered map-side against
-    broadcast driver-built key sets) and the merge, the changes and
-    the edge count are computed on the driver; past it the
-    neighborhood is pinned and merged in Spark. Pass
-    small_graph_max_edges=None/0 to force the distributed tier (tests
-    pin both tiers equal)."""
+    broadcast driver-built key sets) and the merge and the edge count
+    are computed on the driver; past it the neighborhood is pinned and
+    merged in Spark. Pass small_graph_max_edges=None/0 to force the
+    distributed tier (tests pin both tiers equal)."""
     prev = prev_cmap.select("uri", "canon_id")
     ne = new_edges.select("src", "dst").where(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
@@ -365,26 +353,19 @@ def _merge_on_driver(prev: DataFrame, ne: DataFrame, cap: int) -> Merge | None:
         return None
     old = dict(zip(aff["uri"], aff["canon_id"]))
     canon = _components([*old.items(), *zip(edges["src"], edges["dst"])])
-    changes = [(u, c) for u, c in canon.items() if c != u and old.get(u, u) == u]
     untouched = prev.join(
         F.broadcast(_local_frame(spark, {"canon_id": set(old.values())})), "canon_id", "left_anti"
     ).select("uri", "canon_id")
     sub_map = _local_frame(spark, {"uri": canon.keys(), "canon_id": canon.values()})
-    return Merge(
-        cmap=untouched.union(sub_map),
-        changes=_local_frame(
-            spark, {"old_c": [u for u, _ in changes], "new_c": [c for _, c in changes]}
-        ),
-        n_edges=len(edges),
-    )
+    return Merge(cmap=untouched.union(sub_map), n_edges=len(edges))
 
 
 def _merge_distributed(prev: DataFrame, ne: DataFrame, **kw) -> Merge:
     """The Spark tier of incremental_merge."""
     from pyspark.sql import Observation
 
-    # pinned once: the merge reads the new edges three times (the
-    # touched components, the CC edge set, the label changes)
+    # pinned once, by the job that counts them: the merge reads the new
+    # edges twice (the touched components and the CC edge set)
     eobs = Observation()
     ne = ne.distinct().observe(eobs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     touched = (
@@ -393,10 +374,10 @@ def _merge_distributed(prev: DataFrame, ne: DataFrame, **kw) -> Merge:
         .distinct()
     )
     affected = prev.join(touched, "uri", "left_semi").select("canon_id").distinct()
-    # the affected components' prev rows, pinned once: the CC edge set,
-    # the untouched remainder and the label changes all read them, and
-    # each reference would otherwise re-derive them from the map and
-    # the delta — several shuffles per consumer
+    # the affected components' prev rows, pinned once: the CC edge set
+    # and the untouched remainder both read them, and each reference
+    # would otherwise re-derive them from the map and the delta —
+    # several shuffles per consumer
     aff_rows = (
         prev.join(affected, "canon_id", "left_semi")
         .select("uri", "canon_id")
@@ -417,16 +398,4 @@ def _merge_distributed(prev: DataFrame, ne: DataFrame, **kw) -> Merge:
     # the positional union or untouched rows come out (canon_id, uri)
     untouched = prev.join(affected, "canon_id", "left_anti").select("uri", "canon_id")
     merged = untouched.union(sub_map.select("uri", "canon_id"))
-
-    # prev lookups for the sub-universe need only the AFFECTED rows
-    # (any sub-universe node present in prev has its component
-    # affected by construction) — never a scan of the full prev map
-    old = aff_rows.select("uri", F.col("canon_id").alias("__old"))
-    changes = (
-        sub_map.select("uri", "canon_id")
-        .join(old, "uri", "left")
-        .where(F.coalesce(F.col("__old"), F.col("uri")) == F.col("uri"))
-        .where(F.col("canon_id") != F.col("uri"))
-        .select(F.col("uri").alias("old_c"), F.col("canon_id").alias("new_c"))
-    )
-    return Merge(cmap=merged, changes=changes, n_edges=int(eobs.get["n"]))
+    return Merge(cmap=merged, n_edges=int(eobs.get["n"]))

@@ -36,11 +36,10 @@ def canonicalize_triples(
     triples: DataFrame,
     canonical_map: DataFrame,
     broadcast_map: bool = True,
-    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """triples(s, p, o, ...) × canonical_map(uri, canon_id) →
-    (canon_s, p, canon_o[, keep_cols…]). Non-identity map rows only;
-    identity via coalesce."""
+    (canon_s, p, canon_o). Non-identity map rows only; identity via
+    coalesce."""
     nontrivial = canonical_map.where(F.col("uri") != F.col("canon_id"))
     m = F.broadcast(nontrivial) if broadcast_map else nontrivial
 
@@ -53,7 +52,6 @@ def canonicalize_triples(
             F.coalesce("canon_s_m", "s").alias("canon_s"),
             F.col("p"),
             F.coalesce("canon_o_m", "o").alias("canon_o"),
-            *[F.col(c) for c in (keep_cols or [])],
         )
     )
 

@@ -53,13 +53,13 @@ def parse_pages_to_triples(pages_df, text_col: str = "text", url_col: str = "url
     return src.mapInPandas(_parse, schema=TRIPLES_SCHEMA)
 
 
-def parse_text_column(df, line_col: str, keep_cols: list[str], with_frames: bool = False):
+def parse_text_column(df, line_col: str, carry_cols: list[str], with_frames: bool = False):
     """Parse one NT line per row from `line_col`, carrying through
-    `keep_cols` unchanged. → keep_cols + (s, p, o, error)
+    `carry_cols` unchanged. → carry_cols + (s, p, o, error)
     [+ FRAME_COLS with with_frames=True — see parse_lines_to_triples]."""
     from kgpipe.nt.parser import FRAME_COLS
 
-    kept = df.select(*keep_cols, line_col)
+    kept = df.select(*carry_cols, line_col)
     kept_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in kept.schema.fields if f.name != line_col
     )
@@ -69,7 +69,7 @@ def parse_text_column(df, line_col: str, keep_cols: list[str], with_frames: bool
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             parsed = parse_nt_frame(pdf[line_col], with_frames=with_frames)
-            out = pdf[keep_cols].reset_index(drop=True)
+            out = pdf[carry_cols].reset_index(drop=True)
             for c in new_cols:
                 out[c] = parsed[c].reset_index(drop=True)
             yield out

@@ -4,7 +4,7 @@ Stages (SURVEY.md §3.4):
 
   pages ──delta──▶ new urls ──extract/parse/abbrev──▶ triples_raw layer
   layer ──link──▶ sameAs + norm-hub edges ──cc──▶ canonical_map
-  layer × canonical_map ──materialize──▶ edges layer (b_fp, part_id)
+  triples_raw × canonical_map ──materialize──▶ edges (part_id)
 
 A run first finds its delta: one JVM-only pass joins the pages' (url,
 page fingerprint) with the persisted url index. Only never-seen urls
@@ -17,11 +17,12 @@ changed, a removed url, another link or extract config, an old
 warehouse layout) rebuilds every table once instead.
 
 Crash safety comes from the write order: each stage writes only its
-own batch's layer (dynamic overwrite) or swaps a whole table via
-TableIO.replace, and the url index is written last, so a killed run
-re-detects the same delta and re-runs idempotently. The checkpoint
-ledger keeps one row per stage and layer: the run's counters, and the
-proof that lets a retry skip a finished extraction.
+own batch's layer (dynamic overwrite), swaps a whole table via
+TableIO.replace, or rewrites the edges and then their coverage marker;
+the link stage writes the url index last, so a killed run re-detects
+the same delta and re-runs idempotently. The checkpoint ledger keeps
+one row per stage and layer: the run's counters, and the proof that
+lets a retry skip a finished extraction.
 """
 
 from __future__ import annotations
@@ -62,7 +63,7 @@ class PipelineConfig:
     # part_id = pmod(xxhash64(url), n_parts), carried on every
     # triples_raw row
     n_parts: int = 32
-    n_buckets: int = 32  # edge part_id dirs within each layer
+    n_buckets: int = 32  # edge part_id dirs
     # predicate as it appears AFTER abbreviation (the fixture RULES
     # have no owl rule, so the full IRI survives)
     sameas_pred: str = "http://www.w3.org/2002/07/owl#sameAs"
@@ -71,13 +72,6 @@ class PipelineConfig:
     # link URIs that share a normal form (link.normalize_uri) through
     # the norm_hubs index; off → explicit owl:sameAs links only
     neardup_link: bool = True
-    # materialize folds the batch-layered edge table back into ONE
-    # b_fp=full layer whenever the layer count crosses this threshold —
-    # without it, daily deltas accumulate layers without bound and the
-    # read side degrades (r5 verdict wrong #2). Pure table maintenance:
-    # query output is identical before and after a fold, so this field
-    # is one of the NON_OUTPUT_FIELDS.
-    edges_fold_layers: int = 16
     # selects nothing: every run takes the one delta path. Kept only so
     # existing callers that pass it (the --incremental-link flag,
     # perfbench) keep working; one of the NON_OUTPUT_FIELDS.
@@ -96,9 +90,9 @@ RUN_MANIFEST = "run_manifest.json"
 
 
 # PipelineConfig fields that do not change pipeline output: where the
-# warehouse lives, table maintenance, and a flag that selects nothing.
-# Every other field is part of _config_key.
-NON_OUTPUT_FIELDS = frozenset({"warehouse", "edges_fold_layers", "incremental_link"})
+# warehouse lives and a flag that selects nothing. Every other field
+# is part of _config_key.
+NON_OUTPUT_FIELDS = frozenset({"warehouse", "incremental_link"})
 
 
 def _digest(obj) -> str:
@@ -190,10 +184,10 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> 
         )
 
     delta = _stage_extract_parse_abbrev(spark, pages, cfg, io, log, parse_rules(cfg.rules_text))
-    link = _stage_link_incremental(spark, delta, cfg, io, log)
+    n_cmap = _stage_link_incremental(spark, delta, cfg, io, log)
     triples = io.read("triples_raw", RAW_DDL).where(F.col("error").isNull())
     cmap = io.read("canonical_map", CMAP_DDL)
-    _stage_materialize_incremental(spark, triples, cmap, cfg, io, log, link)
+    _stage_materialize_incremental(spark, triples, cmap, cfg, io, log, n_cmap)
     if manifest is not None:
         io.write_json_atomic(RUN_MANIFEST, {"manifest": manifest, "config": ckey})
     return PipelineResult(
@@ -294,7 +288,7 @@ class _Delta:
 def _recover_swaps(io: TableIO) -> None:
     """Heal a crashed swap of every table a run replaces — filesystem
     metadata only, and a no-op when nothing crashed."""
-    for name in ("canonical_map", "triples_raw", "linked_urls", "edges"):
+    for name in ("canonical_map", "triples_raw", "linked_urls"):
         io.recover_replace(name)
 
 
@@ -574,42 +568,23 @@ def _uris(triples: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class _Link:
-    """What the link stage observed while it wrote, for materialize —
-    so materialize's path decisions need no probe of their own.
-    n_changes: canon labels the batch's merge changed; None when
-    unknown (a rebuild, or a retry whose map swap an earlier attempt
-    already made), which materialize treats as a change. n_cmap:
-    non-identity rows of the map it wrote (None: materialize counts)."""
-
-    batch: str
-    n_changes: int | None = None
-    n_cmap: int | None = None
-
-
 def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: CheckpointLog):
     """Delta-only link + canonicalize over the batch layer the extract
     stage wrote (delta.batch) — no scan of the other triples_raw
-    layers, no corpus-wide url fingerprints.
+    layers, no corpus-wide url fingerprints. Returns the non-identity
+    row count of the map it wrote, observed during the write (the size
+    materialize's broadcast gate needs), or None when it wrote no map.
 
-    Append path (the daily-delta case): new URIs link against the
-    persisted norm→hub index — a URI whose normal form any earlier
-    batch saw gets one edge to that form's hub (edge choice only
-    affects connectivity, and canon labels come from CC's component
-    min, so hub staleness is label-irrelevant); unseen normal forms
-    elect the batch's min URI as hub. Components merge via
-    incremental_merge, so CC work scales with the delta's
-    neighborhood, not the corpus. Only the NUMBER of canon labels the
-    merge changed is kept: materialize appends the batch's edges when
-    it is 0 and rewrites the edge table otherwise. The first batch of
-    a fresh warehouse merges into an empty map and counts nothing:
-    there is no edge table yet to keep.
-
-    The batch's normal forms with their URIs and hubs are derived
-    once: the delta edges and the new hubs both read them (cached by
-    the first). The map write observes the map's non-identity row
-    count; it and the change count go to materialize (_Link).
+    Delta path (the daily case): new URIs link against the persisted
+    norm→hub index — a URI whose normal form any earlier batch saw
+    gets one edge to that form's hub (edge choice only affects
+    connectivity, and canon labels come from CC's component min, so
+    hub staleness is label-irrelevant); unseen normal forms elect the
+    batch's min URI as hub. Components merge via incremental_merge, so
+    CC work scales with the delta's neighborhood, not the corpus. The
+    batch's normal forms with their URIs and hubs are derived once:
+    the delta edges and the new hubs both read them (cached by the
+    first).
 
     Rebuild path: the extract stage already named a trigger (a
     re-crawl that changed clean triples, a removed url, a config or
@@ -619,15 +594,13 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     to a fresh build and to a pure-Python graph oracle (test_pipeline).
 
     Crash safety: canonical_map goes through TableIO.replace (it
-    derives from its own previous version), stamped with the batch
-    and its change count in the same swap; the new hubs land in the
+    derives from its own previous version); the new hubs land in the
     batch's own `batch_fp=` partition under dynamic overwrite, so a
     retry replaces its own rows; the url index is written LAST, so a
-    crashed attempt re-detects its delta and re-runs idempotently. A
-    retry after the map swap merges into the already-merged map and
-    counts 0 changes; the stamp naming its own batch turns that into
-    "unknown", so the edges are rewritten (test_pipeline kills a delta
-    run after every write).
+    crashed attempt re-detects its delta and re-runs idempotently — a
+    retry after the map swap merges into the already-merged map, which
+    changes nothing (test_pipeline kills a delta run after every
+    write).
     """
     from kgpipe.operators.cc import _local_frame, incremental_merge
     from kgpipe.operators.link import normalize_uri
@@ -639,9 +612,9 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     if b is None:
         return None
     if delta.new_urls is None:
-        # cosmetic re-crawls only: no triples to link, no label changes
+        # cosmetic re-crawls only: no triples to link
         _commit_url_index(delta.cosmetic, b, cfg, io)
-        return _Link(batch=b, n_changes=0)
+        return None
     layer = (
         io.read("triples_raw", RAW_LAYER_DDL)
         .where(F.col("batch_fp") == b)
@@ -680,27 +653,15 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
     # with the near-dup linker off only explicit sameAs edges link:
     # no norm→hub edges, and no norm_hubs index
 
-    had_map = io.exists("canonical_map")
     prev = (
-        io.read("canonical_map", CMAP_DDL) if had_map
+        io.read("canonical_map", CMAP_DDL) if io.exists("canonical_map")
         else _local_frame(spark, {"uri": [], "canon_id": []})
     )
     merge = incremental_merge(prev, delta_edges)
-    n_changes = 0
-    if had_map:
-        # the union-find tier's changes are rows on the driver already:
-        # a collect of them starts no job (a count would start two)
-        n_changes = (
-            len(merge.changes.collect()) if merge.changes.isLocal()
-            else merge.changes.count()
-        )
-        if n_changes == 0 and _merged_batch(io) == b:
-            n_changes = None  # this batch's map is already swapped in
     # crash-safe: the merged map derives from the live table, so it
     # must never be overwritten in place (delete-then-write would
     # destroy the retry's input) — replace() swaps via renames
-    link = _Link(batch=b, n_changes=n_changes)
-    link.n_cmap = _replace_map(merge.cmap, io, b, n_changes)
+    n_cmap = _replace_map(merge.cmap, io)
 
     if forms is not None:
         # a batch's new hubs are delta-sized: one file, like its layer
@@ -719,28 +680,20 @@ def _stage_link_incremental(spark, delta: _Delta, cfg, io: TableIO, log: Checkpo
         index_rows = index_rows.unionByName(delta.cosmetic)
     _commit_url_index(index_rows, b, cfg, io)
     log.mark_done_rows(stage, [(0, _signed(b), delta.n_new, merge.n_edges, 0)])
-    return link
+    return n_cmap
 
 
-def _replace_map(cmap: DataFrame, io: TableIO, batch: str, n_changes: int | None) -> int:
-    """Swap in a new canonical_map (TableIO.replace), stamped with the
-    batch it merged and that merge's change count, and return its
-    non-identity row count, observed during the write — the size
-    materialize's broadcast gate needs."""
+def _replace_map(cmap: DataFrame, io: TableIO) -> int:
+    """Swap in a new canonical_map (TableIO.replace) and return its
+    non-identity row count, observed during the write."""
     obs = Observation()
     io.replace(
         cmap.observe(
             obs, F.sum(F.when(F.col("uri") != F.col("canon_id"), 1).otherwise(0)).alias("n")
         ),
         "canonical_map",
-        side_files={"_kgpipe_merge.json": {"batch": batch, "n_changes": n_changes}},
     )
     return _observed(obs)["n"]
-
-
-def _merged_batch(io: TableIO) -> str | None:
-    """The batch whose merge the live canonical_map holds (its stamp)."""
-    return (io.read_json("canonical_map/_kgpipe_merge.json") or {}).get("batch")
 
 
 def _observed(obs: Observation) -> dict[str, int]:
@@ -764,13 +717,10 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     """Rebuild fallback of the link stage: merges cannot retract
     links, so rebuild the canonical map, the norm→hub index and the
     url index from ALL current triples (retractions included).
-    Subsequent append-only deltas resume incrementally. Hubs cover
-    EVERY normal form (singletons too) so future deltas can link
-    against them. triples_raw is one layer named delta.rebuild_id here
-    (the extract stage rebuilt it), and the url index names that one
-    batch. Its change
-    count is unknown (None, also in the map's stamp), so materialize
-    rewrites the edges.
+    Subsequent deltas resume incrementally. Hubs cover EVERY normal
+    form (singletons too) so future deltas can link against them.
+    triples_raw is one layer named delta.rebuild_id here (the extract
+    stage rebuilt it), and the url index names that one batch.
 
     Write order is load-bearing: canonical_map first (replace —
     crash-safe), then hubs, then the url index LAST (replace too). A
@@ -804,7 +754,7 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
         edges = explicit
     # a merge into an empty map: one map row per edge endpoint
     merge = incremental_merge(_local_frame(spark, {"uri": [], "canon_id": []}), edges)
-    n_cmap = _replace_map(merge.cmap, io, batch_fp, None)
+    n_cmap = _replace_map(merge.cmap, io)
     io.drop("norm_hubs")
     if hubs_all is not None:
         io.write(
@@ -813,9 +763,10 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
         )
     # a rebuild invalidates the edges: a rebuild over a page set an
     # earlier rebuild covered gets that rebuild's id, which the edge
-    # coverage markers already list — without edges materialize
-    # rewrites them. delta_triples and term_maps are handoff tables
-    # that warehouses written before the triples_raw layers still carry.
+    # coverage marker may already list — the marker goes with the edge
+    # dir, so materialize rewrites them. delta_triples and term_maps
+    # are handoff tables that warehouses written before the
+    # triples_raw layers still carry.
     for name in ("edges", "delta_triples", "term_maps"):
         io.drop(name)
     # every page is indexed — pages without clean triples too, or the
@@ -831,12 +782,15 @@ def _incremental_full_rebuild(spark, delta: _Delta, cfg, io: TableIO, log: Check
     log.mark_done_rows(
         "link_urls", [(0, _signed(batch_fp), _observed(uobs)["n"], merge.n_edges, 0)]
     )
-    return _Link(batch=batch_fp, n_cmap=n_cmap)
+    return n_cmap
 
 
-EDGES_INC_DDL = "canon_s string, p string, canon_o string, b_fp string, part_id int"
-MAT_STATE = "edges_mat_state.json"
-MAT_LAYOUT_VERSION = 3  # b_fp-layered hive layout + per-layer coverage markers
+# the edge table's coverage marker: the triples_raw layers, bucket
+# count and layout the edges were written from. It lives INSIDE the
+# edge dir (leading underscore: invisible to parquet listings), so every
+# drop of the edges drops it too.
+MAT_STATE = "edges/_kgpipe_coverage.json"
+MAT_LAYOUT_VERSION = 4  # part_id dirs + one coverage marker
 
 
 def _one_wave(spark, n_dirs: int) -> int:
@@ -848,220 +802,53 @@ def _one_wave(spark, n_dirs: int) -> int:
     return max(1, min(n_dirs, spark.sparkContext.defaultParallelism))
 
 
-def _layer_marker(b_fp: str) -> str:
-    # leading underscore: invisible to parquet file listings, like
-    # _SUCCESS — lives INSIDE the layer dir, so a layer and its marker
-    # go together
-    return f"edges/b_fp={b_fp}/_kgpipe_layer.json"
-
-
-def _applied_batches(io: TableIO) -> set[str]:
-    """Batches the edge table PROVABLY contains: the union of each
-    layer's completion marker, written only after the layer's data
-    write finished. This is the applied-batch ledger — derived from
-    the layout itself rather than a side file, so a crash between a
-    layer write and anything else can never mark unwritten (or
-    clobber written) data as applied:
-      - a delta layer without its marker is a half-written append →
-        unapplied → the retry's dynamic overwrite replaces it;
-      - a full-rebuild layer without its marker is indistinguishable
-        from covering nothing → its absence from every marker keeps
-        all batches pending and the rebuild re-runs."""
-    fs, root = io._fs(io.path("edges"))
-    out: set[str] = set()
-    if not fs.exists(root):
-        return out
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("b_fp="):
-            m = io.read_json(_layer_marker(name[len("b_fp="):]))
-            if m:
-                out.update(m.get("batches", []))
-    return out
-
-
-def _full_layer_uncommitted(io: TableIO) -> bool:
-    fs, d = io._fs(io.path("edges/b_fp=full"))
-    return bool(fs.exists(d)) and io.read_json(_layer_marker("full")) is None
-
-
-def _edges_layer_names(io: TableIO) -> list[str]:
-    """b_fp layer values of the layered edge table — pure filesystem
-    metadata, no data read."""
-    return _partition_values(io, "edges", "b_fp")
-
-
-def _maybe_fold_layers(spark, cfg, io: TableIO) -> bool:
-    """Automatic layer compaction for the batch-layered edge table:
-    when the b_fp layer count crosses cfg.edges_fold_layers, fold
-    every layer into ONE b_fp=full layer whose coverage marker lists
-    every applied batch. Without this, N daily deltas leave N+1
-    layers and read cost grows with delta COUNT instead of data size
-    (r5 verdict wrong #2) — after a fold it is flat again.
-
-    Crash-safe by construction: the folded table lands via
-    TableIO.replace (staged dir + rename swap — the live table stays
-    readable and intact until the instant of the swap), and the
-    b_fp=full coverage marker is written INSIDE the staged dir before
-    the swap, so the fold's rows and the ledger entry that says "these
-    batches are applied" become visible together. A crash mid-swap is
-    healed by recover_replace (called at stage entry); a crash before
-    the swap leaves the live layers untouched and the fold re-triggers
-    on the next delta. Query output is pinned identical across the
-    fold (test_pipeline)."""
-    layers = _edges_layer_names(io)
-    if len(layers) <= cfg.edges_fold_layers:
-        return False
-    applied = sorted(_applied_batches(io))
-    folded = (
-        io.read("edges", EDGES_INC_DDL)
-        .withColumn("b_fp", F.lit("full"))
-        .repartition(_one_wave(spark, cfg.n_buckets), F.col("part_id"))
-    )
-    io.replace(
-        folded, "edges", partition_by=["b_fp", "part_id"],
-        side_files={"b_fp=full/_kgpipe_layer.json": {"batches": applied}},
-    )
-    return True
-
-
 def _stage_materialize_incremental(
-    spark, triples, cmap, cfg, io: TableIO, log: CheckpointLog, link: _Link | None = None
+    spark, triples, cmap, cfg, io: TableIO, log: CheckpointLog, n_cmap: int | None = None
 ):
-    """Batch-layered edge materialization by two rules: APPEND the
-    pending batch's own layer, or REWRITE the edge table from
-    triples_raw ⋈ canonical_map.
+    """Edge materialization by one rule: the edge table is current when
+    its coverage marker lists exactly the current triples_raw layers
+    under this n_buckets and layout; in every other case it is
+    rewritten from triples_raw ⋈ canonical_map into part_id dirs,
+    part_id = pmod(xxhash64(canon_s), n_buckets).
 
-    Layout: edges partitioned by (b_fp, part_id) — an outer hive
-    layer per applied batch, inner dirs by part_id = pmod(
-    xxhash64(canon_s), n_buckets). A delta's new edges land under
-    their own b_fp=X as a dynamic partition overwrite, which touches
-    ZERO old files and is retry-idempotent by construction (a re-run
-    replaces exactly b_fp=X's partitions). The cost shifted to reads
-    (a bucket's rows span layers) is the standard date-partitioned
-    trade; _maybe_fold_layers folds the layers back into one when they
-    pile up.
-
-    Append needs all of: exactly one pending batch, the one the link
-    stage linked in this run, whose merge it observed changing no
-    canon label (link.n_changes == 0) — the old edges then hold
-    exactly their current labels, and only the batch's rows are new.
-    Every other case rewrites: label changes (old edges hold stale
-    labels), a resumed run (link is None), several pending batches, a
-    rebuild (its n_changes is None), a missing edge table, another
-    n_buckets or layout, or a full layer whose coverage marker never
-    landed (a rewrite that crashed before committing). The rewrite
-    writes ONE b_fp=full layer whose marker lists every batch; it
-    broadcasts the map only while it fits CMAP_BROADCAST_LIMIT, sized
-    by the count the link stage observed as it wrote the map (else an
-    early-stopping probe). Every edge-table write runs one wave of
-    tasks: a dir's rows hash to one task, so each dir is still one
-    file."""
-    stage = "materialize"
-    io.recover_replace("edges")  # heal a layer fold that crashed mid-swap
-    state = io.read_json(MAT_STATE) or {}
-    applied = _applied_batches(io)
-    # the url index's batch partitions ARE the batch list — a listing,
-    # not a job
-    all_batches = sorted(_partition_values(io, "linked_urls", "batch_fp"))
-    pending = [b for b in all_batches if b not in applied]
-    # a rerun under another n_buckets has no pending batch but must
-    # still re-bucket every edge
-    same_layout = (
-        state.get("n_buckets") == cfg.n_buckets
-        and state.get("layout") == MAT_LAYOUT_VERSION
-    )
-    if not pending and io.exists("edges") and same_layout:
+    A new layer, a rebuild (which drops the edges, marker included), a
+    crashed earlier rewrite (no marker), another n_buckets or an older
+    layout all rewrite; a run that adds no layer (a no-op rerun, a
+    cosmetic re-crawl) writes nothing. The rewrite broadcasts the map
+    only while it fits CMAP_BROADCAST_LIMIT, sized by the count the
+    link stage observed as it wrote the map (n_cmap), else by an
+    early-stopping probe. It runs one wave of tasks: a dir's rows hash
+    to one task, so each dir is still one file. The marker is written
+    LAST, so a crash before it leaves the edges to be rewritten."""
+    layers = sorted(_partition_values(io, "triples_raw", "batch_fp"))
+    cover = {"layers": layers, "n_buckets": cfg.n_buckets, "layout": MAT_LAYOUT_VERSION}
+    if io.read_json(MAT_STATE) == cover:
         return
-
-    rewrite = (
-        link is None
-        or link.n_changes != 0
-        or pending != [link.batch]
-        or not io.exists("edges")
-        or not same_layout
-        or _full_layer_uncommitted(io)
-    )
-
+    if n_cmap is None:
+        n_cmap = (
+            cmap.where(F.col("uri") != F.col("canon_id"))
+            .limit(CMAP_BROADCAST_LIMIT + 1)
+            .count()
+        )
     obs = Observation()
-    if rewrite:
-        # the full layer's tag is a DEDICATED namespace — never a
-        # batch id: a rebuild tagged with a pending batch id would be
-        # "re-applied" by a later retry's dynamic overwrite, replacing
-        # the whole corpus's rows with delta-only rows.
-        # Broadcast only while the map fits the budget (module
-        # contract): the map size the link stage observed as it wrote
-        # the map, else an early-stopping probe of the non-identity rows.
-        n_cmap = link.n_cmap if link is not None else None
-        if n_cmap is None:
-            n_cmap = (
-                cmap.where(F.col("uri") != F.col("canon_id"))
-                .limit(CMAP_BROADCAST_LIMIT + 1)
-                .count()
-            )
-        out = edges_with_buckets(
-            canonicalize_triples(
-                triples, cmap, broadcast_map=n_cmap <= CMAP_BROADCAST_LIMIT
-            ),
-            cfg.n_buckets,
-        ).withColumn("b_fp", F.lit("full"))
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        # stale layers must not outlive a rewrite, nor what warehouses
-        # of the retired dir-level relabel left: its label-change table
-        # and a half-swapped partition patch
-        for name in ("edges", "edges__patch.json", "edges__patchstage", "canon_changes"):
-            io.drop(name)
-        io.write(
-            out.repartition(_one_wave(spark, cfg.n_buckets), F.col("part_id")),
-            "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
-        )
-        # coverage marker LAST: a crash before it leaves every batch
-        # pending and the rebuild simply re-runs
-        io.write_json_atomic(_layer_marker("full"), {"batches": all_batches})
-        n_out = _observed(obs)["n"]
-    else:
-        # the delta itself: its own b_fp layer, dynamic partition
-        # overwrite — zero old files touched, retry replaces itself.
-        # Inputs are the batch's triples_raw layer (partition-pruned —
-        # no scan of the other layers) and the map rows its terms
-        # resolve through.
-        b = link.batch
-        delta_triples = (
-            io.read("triples_raw", RAW_LAYER_DDL)
-            .where((F.col("batch_fp") == b) & F.col("error").isNull())
-            .select("s", "p", "o", "batch_fp")
-        )
-        m_eff = cmap.where(F.col("uri") != F.col("canon_id")).join(
-            F.broadcast(_uris(delta_triples)), "uri", "left_semi"
-        )
-        # broadcast stays unconditional HERE: m_eff holds only the
-        # layer's terms — delta-sized by construction
-        delta_new = edges_with_buckets(
-            canonicalize_triples(
-                delta_triples, m_eff, broadcast_map=True, keep_cols=["batch_fp"],
-            ),
-            cfg.n_buckets,
-        ).withColumnRenamed("batch_fp", "b_fp")
-        n_out = 0
-        # a batch of cosmetic re-crawls only has no layer: nothing to
-        # write (and a scan of no files would never report its count)
-        if b in _partition_values(io, "triples_raw", "batch_fp"):
-            io.write(
-                delta_new.observe(obs, F.count(F.lit(1)).alias("n"))
-                .repartition(_one_wave(spark, cfg.n_buckets), "b_fp", "part_id"),
-                "edges", mode="overwrite", partition_by=["b_fp", "part_id"],
-            )
-            n_out = _observed(obs)["n"]
-        # completion marker LAST — a half-written layer stays pending
-        io.write_json_atomic(_layer_marker(b), {"batches": [b]})
-        # table maintenance, AFTER this delta committed: fold the
-        # accumulated layers back into one when they pile up
-        _maybe_fold_layers(spark, cfg, io)
-
-    io.write_json_atomic(
-        MAT_STATE, {"n_buckets": cfg.n_buckets, "layout": MAT_LAYOUT_VERSION}
+    out = edges_with_buckets(
+        canonicalize_triples(triples, cmap, broadcast_map=n_cmap <= CMAP_BROADCAST_LIMIT),
+        cfg.n_buckets,
+    ).observe(obs, F.count(F.lit(1)).alias("n"))
+    # nothing of an older layout may outlive a rewrite: its layers and
+    # state file, nor what the retired dir-level relabel left (its
+    # label-change table and a half-swapped partition patch)
+    for name in (
+        "edges", "edges_mat_state.json", "edges__patch.json", "edges__patchstage",
+        "canon_changes",
+    ):
+        io.drop(name)
+    io.write(
+        out.repartition(_one_wave(spark, cfg.n_buckets), F.col("part_id")),
+        "edges", mode="overwrite", partition_by=["part_id"],
     )
-    log.mark_done_rows(stage, [(0, 0, len(pending), n_out, 0)])
+    io.write_json_atomic(MAT_STATE, cover)
+    log.mark_done_rows("materialize", [(0, 0, len(layers), _observed(obs)["n"], 0)])
 
 
 # perfbench span hooks: its tracer wraps stages by module attribute,

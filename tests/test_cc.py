@@ -159,14 +159,16 @@ def test_incremental_untouched_components_unchanged(spark):
     assert {("a", "a"), ("b", "a"), ("x", "x"), ("y", "x"), ("p", "p"), ("q", "p")} == inc
 
 
-def test_incremental_merge_tiers_equal(spark):
+def test_incremental_merge_tiers_equal(spark, monkeypatch):
     """incremental_merge's union-find tier (the neighborhood fits
     small_graph_max_edges) and its Spark tier return the same merged
-    map, label changes and edge count — on both sides of the boundary:
-    the new edges plus the affected components' rows exactly at the
-    cap take the driver, one over it the distributed path."""
+    map and edge count — on both sides of the boundary: the new edges
+    plus the affected components' rows exactly at the cap take the
+    driver, one over it the distributed path (a spy on it proves
+    which tier ran)."""
     import random
 
+    import kgpipe.operators.cc as cc
     from kgpipe.operators.cc import connected_components, incremental_merge
 
     rng = random.Random(7)
@@ -181,14 +183,16 @@ def test_incremental_merge_tiers_equal(spark):
     prev = connected_components(spark.createDataFrame(batch1, "src string, dst string"))
     e2 = spark.createDataFrame(batch2, "src string, dst string")
 
+    spark_tier_ran = []
+    real = cc._merge_distributed
+    monkeypatch.setattr(
+        cc, "_merge_distributed", lambda *a, **k: spark_tier_ran.append(1) or real(*a, **k)
+    )
+
     def run(cap):
+        spark_tier_ran.clear()
         m = incremental_merge(prev, e2, small_graph_max_edges=cap)
-        return (
-            {(r.uri, r.canon_id) for r in m.cmap.collect()},
-            sorted((r.old_c, r.new_c) for r in m.changes.collect()),
-            m.n_edges,
-            m.changes.isLocal(),
-        )
+        return {(r.uri, r.canon_id) for r in m.cmap.collect()}, m.n_edges, bool(spark_tier_ran)
 
     touched = {x for e in batch2 for x in e}
     old = {r.uri: r.canon_id for r in prev.collect()}
@@ -197,6 +201,8 @@ def test_incremental_merge_tiers_equal(spark):
     on_driver = run(at_cap)
     over = run(at_cap - 1)
     spark_tier = run(0)
-    assert on_driver[3] and not over[3] and not spark_tier[3]
-    assert on_driver[:3] == over[:3] == spark_tier[:3]
-    assert on_driver[1] and on_driver[2] == len(set(batch2))
+    assert not on_driver[2] and over[2] and spark_tier[2]
+    assert on_driver[:2] == over[:2] == spark_tier[:2]
+    assert on_driver[1] == len(set(batch2))
+    # the merge relabels rows of the old map
+    assert any(old.get(u, c) != c for u, c in on_driver[0])

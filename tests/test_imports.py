@@ -1,8 +1,8 @@
 """Import guard: every `import kgpipe…` / `from kgpipe… import name` in
-the package, the tools, perfbench, the verify skill and the entry
-module must resolve, and every `PipelineConfig(...)` built there must
-name only fields of the dataclass. Tools and probes are scripts no
-other test loads, so a deleted module, renamed helper or dropped
+the package, perfbench, the verify skill and the entry module must
+resolve, and every `PipelineConfig(...)` built there must name only
+fields of the dataclass. perfbench and the verify drive are scripts
+no other test loads, so a deleted module, renamed helper or dropped
 config field would otherwise only show when someone next runs them."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import importlib.util
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
-SCANNED_DIRS = ("kgpipe", "tools", "perfbench", ".claude/skills/verify")
+SCANNED_DIRS = ("kgpipe", "perfbench", ".claude/skills/verify")
 
 
 def _scanned_files() -> list[Path]:
@@ -115,6 +115,6 @@ def test_pipeline_config_keywords_are_fields():
     for f in _scanned_files():
         n, b = _config_keywords(f.read_text(), str(f.relative_to(ROOT)), fields)
         n_calls, bad = n_calls + n, bad + b
-    # cli, perfbench/child.py, tools/layer_read_probe.py, the verify drive
-    assert n_calls >= 4
+    # cli, perfbench/child.py, the verify drive
+    assert n_calls >= 3
     assert not bad, "PipelineConfig keywords that name no field:\n" + "\n".join(bad)

@@ -407,109 +407,6 @@ def test_incremental_link_respects_neardup_false(spark, tmp_path):
     assert not os.path.exists(os.path.join(wh, "norm_hubs"))
 
 
-def test_incremental_materialize_patches_only_affected_partitions(spark, tmp_path):
-    """The r4 verdict's #1 gap, closed: a delta run that changes no
-    canon label must NOT rewrite the edge table. Pin it physically —
-    every old partition dir keeps its exact files (same names, same
-    mtimes) and the delta lands as its own layer."""
-    import os
-
-    import pandas as pd
-
-    base = gen_pages(118)
-    all_pages = pd.concat([base, _label_free_pages(2)], ignore_index=True)
-    wh = str(tmp_path / "wh_patch")
-    cfg = PipelineConfig(
-        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        n_buckets=64,
-    )
-    run_pipeline(spark, spark.createDataFrame(base).repartition(5), cfg)
-
-    edir = os.path.join(wh, "edges")
-    def snapshot():
-        snap = {}
-        for layer in os.listdir(edir):
-            ldir = os.path.join(edir, layer)
-            if not (layer.startswith("b_fp=") and os.path.isdir(ldir)):
-                continue
-            for d in os.listdir(ldir):
-                pdir = os.path.join(ldir, d)
-                if d.startswith("part_id=") and os.path.isdir(pdir):
-                    snap[f"{layer}/{d}"] = {
-                        f: os.path.getmtime(os.path.join(pdir, f))
-                        for f in os.listdir(pdir)
-                    }
-        return snap
-
-    before = snapshot()
-    run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg)
-    after = snapshot()
-
-    assert before and all(after.get(d) == before[d] for d in before), (
-        "the label-free delta rewrote old edge dirs"
-    )
-    # the delta landed as its OWN layer: new b_fp dirs exist
-    assert len({k.split("/")[0] for k in after}) > len(
-        {k.split("/")[0] for k in before}
-    ), "delta did not append a new batch layer"
-
-
-def test_incremental_materialize_retry_after_marker_crash(spark, tmp_path):
-    """Crash window: the appended delta layer landed but its
-    completion marker (the applied-batch ledger) did not. The rerun
-    finds the batch pending again with nothing left to link — a
-    resumed run, so it rewrites the edge table — and must not
-    duplicate the delta's rows: the final edges equal a full
-    recompute."""
-    import os
-    import shutil
-
-    import pandas as pd
-
-    base = gen_pages(95)
-    all_pages = pd.concat([base, _label_free_pages(5)], ignore_index=True)
-    wh = str(tmp_path / "wh_crash2")
-    cfg = PipelineConfig(
-        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-    )
-    # a delta that changes no canon label: the append path (not the
-    # rewrite) is the crash window under test
-    run_pipeline(spark, spark.createDataFrame(base).repartition(4), cfg)
-    layers_before = set(os.listdir(os.path.join(wh, "edges")))
-
-    run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg)
-    # rewind ONLY the completion markers — as if the process died
-    # after the delta layer's data write (and any merge repair) but
-    # before the layer was marked applied: the batch becomes pending
-    # again and the rerun must converge, not duplicate
-    new_layers = {
-        d for d in os.listdir(os.path.join(wh, "edges"))
-        if d.startswith("b_fp=") and d not in layers_before
-    }
-    assert new_layers, "delta did not append a layer"
-    for d in new_layers:
-        for f in ("_kgpipe_layer.json", "._kgpipe_layer.json.crc"):
-            fp = os.path.join(wh, "edges", d, f)
-            if os.path.exists(fp):
-                os.remove(fp)
-
-    res_retry = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg)
-
-    cfg_full = PipelineConfig(
-        warehouse=str(tmp_path / "wh_crash2_full"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=8,
-    )
-    res_full = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg_full)
-    e_retry = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res_retry.edges.collect()
-    )
-    e_full = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res_full.edges.collect()
-    )
-    assert e_retry == e_full
-    assert _graph(res_retry) == _oracle(res_retry)
-
-
 def test_noop_resume_is_metadata_only(spark, tmp_path, monkeypatch):
     """r4 verdict "wrong" #2, closed: a rerun over unchanged source
     files must execute ZERO jobs over table data. Pinned structurally:
@@ -608,7 +505,7 @@ def _changed(value):
     "name", [f.name for f in dataclasses.fields(PipelineConfig)]
 )
 def test_config_key_covers_output_fields(tmp_path, name):
-    """Every PipelineConfig field but the three non-output ones defeats
+    """Every PipelineConfig field but the two non-output ones defeats
     the run-manifest short-circuit when it changes; a change of a
     non-output field keeps it."""
     import kgpipe.pipeline as pl
@@ -616,7 +513,7 @@ def test_config_key_covers_output_fields(tmp_path, name):
     cfg = PipelineConfig(warehouse=str(tmp_path), rules_text=RULES_16_TEXT)
     other = dataclasses.replace(cfg, **{name: _changed(getattr(cfg, name))})
     changes_key = pl._config_key(cfg) != pl._config_key(other)
-    assert changes_key == (name not in {"warehouse", "edges_fold_layers", "incremental_link"})
+    assert changes_key == (name not in {"warehouse", "incremental_link"})
 
 
 def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
@@ -673,55 +570,6 @@ def test_incremental_link_config_change_triggers_rebuild(spark, tmp_path):
     assert _oracle(res) != _oracle(res, neardup=False)
 
 
-def test_incremental_materialize_folds_layers(spark, tmp_path):
-    """r5 verdict wrong #2: delta layers accumulated without bound.
-    With edges_fold_layers set low, accumulated b_fp layers fold back
-    into ONE b_fp=full layer (crash-safe replace, coverage marker
-    staged WITH the data); queries are identical across the fold, the
-    applied-batch ledger survives (a rerun stays a no-op), and the
-    layer count stays bounded by the threshold."""
-    import kgpipe.pipeline as pl
-    from kgpipe.io import TableIO
-
-    all_pages = gen_pages(140)
-    wh = str(tmp_path / "wh_fold")
-    cfg = PipelineConfig(
-        warehouse=wh, rules_text=RULES_16_TEXT, mode="compat", n_parts=8,
-        edges_fold_layers=3,
-    )
-    res = None
-    for n in (40, 60, 80, 100, 120, 140):
-        res = run_pipeline(
-            spark, spark.createDataFrame(all_pages.iloc[:n]).repartition(5), cfg
-        )
-    io = TableIO(spark, wh)
-    layers = pl._edges_layer_names(io)
-    assert len(layers) <= cfg.edges_fold_layers + 1, f"unbounded layers: {layers}"
-    assert "full" in layers, "a fold must have happened at this cadence"
-
-    cfg_ref = PipelineConfig(
-        warehouse=str(tmp_path / "wh_fold_ref"), rules_text=RULES_16_TEXT,
-        mode="compat", n_parts=8,
-    )
-    ref = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg_ref)
-    exp = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in ref.edges.collect()
-    )
-    got = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res.edges.collect()
-    )
-    assert got == exp
-
-    # the fold's coverage marker preserved the applied-batch ledger:
-    # a rerun with no new pages is a no-op and reads the same rows
-    res2 = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(5), cfg)
-    got2 = collections.Counter(
-        (r.canon_s, r.p, r.canon_o) for r in res2.edges.collect()
-    )
-    assert got2 == exp
-    assert _graph(res2) == _oracle(res2)
-
-
 def test_rerun_with_other_n_buckets_rebuckets_edges(spark, tmp_path):
     """A rerun under another n_buckets brings no new pages, so no batch
     is pending — materialize must still rewrite the edges: every
@@ -749,34 +597,44 @@ def test_rerun_with_other_n_buckets_rebuckets_edges(spark, tmp_path):
     assert _graph(res) == _oracle(res)
 
 
-def _label_free_pages(n, start=900):
-    """n pages whose one triple each links nothing: a fresh singleton
-    subject URI and literal, no sameAs, no normal form shared with
-    each other or the gen_pages corpus — a delta of them changes no
-    canon label, so materialize appends it."""
-    return nt_pages(
-        [
-            [f"<http://lf{start + i}.label-free.example/e> "
-             f"<http://label-free.example/p> \"lf-{start + i}\" ."]
-            for i in range(n)
-        ],
-        start=start,
-    )
-
 
 SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
 
 
+def _uncovered(io) -> set:
+    """triples_raw layers the edge table's coverage marker does not
+    list — every layer when the edges have no marker."""
+    import kgpipe.pipeline as pl
+
+    cover = io.read_json(pl.MAT_STATE) or {"layers": []}
+    return set(pl._partition_values(io, "triples_raw", "batch_fp")) - set(cover["layers"])
+
+
+def _edges_rewritten(io) -> bool:
+    """The edge dir holds part_id= dirs only, and its coverage marker
+    lists every triples_raw layer."""
+    import os
+
+    root = io.path("edges")
+    dirs = [d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))]
+    return bool(dirs) and all(d.startswith("part_id=") for d in dirs) and not _uncovered(io)
+
+
+def _edge_files(wh) -> dict:
+    """{path under the edge dir: mtime in ns} of every file in it."""
+    root = wh / "edges"
+    return {str(f.relative_to(root)): f.stat().st_mtime_ns for f in root.rglob("*") if f.is_file()}
+
+
 def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypatch):
-    """Several UNAPPLIED pending batches whose label changes CHAIN
-    (batch 1: kx-c→kx-b, batch 2: kx-b→kx-a — canon is the
-    lexicographic component min): the edge table still holds
-    pre-batch-1 labels, so appending either batch alone would leave
-    stale labels. The materialize that finally meets them — a resumed
-    run with several pending batches — rewrites the edge table into
-    one full layer. Batches are left pending by suppressing the
-    materialize stage during the delta runs — exactly the crash shape
-    (link committed, materialize not reached)."""
+    """Several triples_raw layers the edges do not cover, whose label
+    changes CHAIN (batch 1: kx-c→kx-b, batch 2: kx-b→kx-a — canon is
+    the lexicographic component min): the edge table still holds
+    pre-batch-1 labels. The materialize that finally meets them — a
+    resumed run with two uncovered layers — rewrites the edge table.
+    Layers are left uncovered by suppressing the materialize stage
+    during the delta runs — exactly the crash shape (link committed,
+    materialize not reached)."""
     import kgpipe.pipeline as pl
     from kgpipe.io import TableIO
 
@@ -824,14 +682,11 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
     run_pipeline(spark, spark.createDataFrame(all_d2).repartition(4), cfg)
     assert canon_of("http://kx-d.example/e") == "http://kx-a.example/e"
     monkeypatch.setattr(pl, "_stage_materialize_incremental", real_mat)
-    assert len(
-        [b for b in pl._partition_values(io, "linked_urls", "batch_fp")
-         if b not in pl._applied_batches(io)]
-    ) == 2
+    assert len(_uncovered(io)) == 2
 
-    # one run meets BOTH pending batches: it rewrites the edge table
+    # one run meets BOTH uncovered layers: it rewrites the edge table
     res = run_pipeline(spark, spark.createDataFrame(all_d2).repartition(4), cfg)
-    assert pl._edges_layer_names(io) == ["full"]
+    assert _edges_rewritten(io)
     cfg_ref = PipelineConfig(
         warehouse=str(tmp_path / "wh_pend_ref"), rules_text=RULES_16_TEXT,
         mode="compat", n_parts=8,
@@ -846,11 +701,10 @@ def test_multi_pending_batches_compose_chained_changes(spark, tmp_path, monkeypa
 
 
 def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
-    """A delta whose merges relabel nearly every component changes
-    canon labels, so materialize rewrites the edge table into ONE
-    full layer whose coverage marker lists every batch, and the
-    result must still equal a scratch recompute."""
-    import kgpipe.pipeline as pl
+    """A delta whose merges relabel nearly every component: materialize
+    rewrites the edge table into part_id dirs whose coverage marker
+    lists every triples_raw layer, and the result must still equal a
+    scratch recompute."""
     from kgpipe.io import TableIO
 
     k = 24
@@ -878,17 +732,7 @@ def test_merge_storm_triggers_full_rebuild(spark, tmp_path):
     all_pages = pd.concat([p_base, nt_pages(storm, start=500)], ignore_index=True)
     res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(4), cfg)
 
-    io = TableIO(spark, wh)
-    layers = pl._edges_layer_names(io)
-    assert layers == ["full"], f"merge storm must rebuild into one layer: {layers}"
-    # the rebuild's coverage marker lists every batch — nothing pending
-    assert not [
-        b for b in {
-            r.batch_fp for r in io.read(
-                "linked_urls", pl.LINKED_URLS_DDL
-            ).select("batch_fp").distinct().collect()
-        } if b not in pl._applied_batches(io)
-    ]
+    assert _edges_rewritten(TableIO(spark, wh))
     cfg_ref = PipelineConfig(
         warehouse=str(tmp_path / "wh_storm_ref"), rules_text=RULES_16_TEXT,
         mode="compat", n_parts=8,
@@ -994,8 +838,9 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     nested inside another counted write (replace's staged write)
     belong to the outer one. The delta changes canon labels the old
     edges hold, so a kill right after the map swap leaves a retry
-    whose merge counts 0 changes over the already-merged map: only the
-    map's stamp stops it from appending beside stale old edges."""
+    whose merge changes nothing over the already-merged map: the
+    coverage marker, which does not list the new layer yet, still
+    makes it rewrite the stale old edges."""
     import shutil
 
     import pandas as pd
@@ -1065,10 +910,8 @@ def test_delta_run_killed_at_each_write_resumes(spark, tmp_path, monkeypatch):
     uninterrupted = _graph(delta_run(tmp_path / "clean"))
     n_writes = state["n"]
     assert uninterrupted == full
-    stamp = TableIO(spark, str(tmp_path / "clean")).read_json("canonical_map/_kgpipe_merge.json")
-    assert stamp["n_changes"] >= 1, stamp
     assert not any(old_label in (cs, co) for cs, _p, co in uninterrupted[1])
-    assert n_writes >= 6  # layer, hubs, map, url index, edges, markers
+    assert n_writes >= 6  # layer, hubs, map, url index, edges, coverage marker
     for k in range(1, n_writes + 1):
         assert _graph(delta_run(tmp_path / f"kill{k}", kill_at=k)) == full, f"killed at write {k}"
 
@@ -1077,7 +920,8 @@ def test_old_layout_warehouse_migrates_once(spark, tmp_path):
     """A warehouse written before the delta-first layout — triples_raw
     partitioned by part_id only, a url index without page
     fingerprints — migrates through ONE rebuild that re-extracts every
-    page; the next delta then takes the append path."""
+    page; the next delta is a plain delta again, not a second
+    rebuild."""
     import time
 
     import kgpipe.pipeline as pl
@@ -1185,6 +1029,35 @@ def test_readded_then_removed_url_matches_full(spark, tmp_path):
     assert _graph(res) == _graph(ref) == _oracle(res)
 
 
+def test_rebuild_back_to_the_covered_layers_rewrites_the_edges(spark, tmp_path, monkeypatch):
+    """A delta whose materialize never ran leaves the coverage marker
+    listing the earlier rebuild's layer alone; a removal then rebuilds
+    to that same rebuild id. The rebuild dropped the edges, and the
+    marker with them, so materialize still writes the edges: equal to
+    a fresh build and the graph oracle."""
+    import kgpipe.pipeline as pl
+
+    pages = gen_pages(42)
+    base = pages.iloc[:40]
+    wh = tmp_path / "wh_recover"
+    cfg = _cfg(wh)
+    run_pipeline(spark, spark.createDataFrame(pages.iloc[:41]).repartition(3), cfg)
+    run_pipeline(spark, spark.createDataFrame(base).repartition(3), cfg)
+    covered = pl._partition_values(pl.TableIO(spark, str(wh)), "triples_raw", "batch_fp")
+    monkeypatch.setattr(pl, "_stage_materialize_incremental", lambda *a, **k: None)
+    run_pipeline(spark, spark.createDataFrame(pages.iloc[[*range(40), 41]]).repartition(3), cfg)
+    monkeypatch.undo()
+    res = run_pipeline(spark, spark.createDataFrame(base).repartition(3), cfg)
+    io = pl.TableIO(spark, str(wh))
+    assert pl._partition_values(io, "triples_raw", "batch_fp") == covered
+
+    ref = run_pipeline(
+        spark, spark.createDataFrame(base).repartition(3), _cfg(tmp_path / "wh_recover_ref")
+    )
+    assert _edges_rewritten(io)
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+
 def test_extract_config_change_reextracts_every_page(spark, tmp_path):
     """A rerun of the same pages under another extract config must not
     keep the old triples: the recorded extract digest no longer
@@ -1270,7 +1143,7 @@ def test_delta_job_budget(spark, tmp_path):
     run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
     pages = spark.createDataFrame(all_pages).repartition(3)
     sc = spark.sparkContext
-    sc.setJobGroup("kgpipe-delta-budget", "one append delta")
+    sc.setJobGroup("kgpipe-delta-budget", "one delta")
     try:
         run_pipeline(spark, pages, cfg)
     finally:
@@ -1283,9 +1156,9 @@ def test_delta_job_budget(spark, tmp_path):
 def test_old_bucketed_edge_table_migrates(spark, tmp_path):
     """A warehouse whose edge table still has the layout the old full
     path wrote — Spark's bucketBy(canon_s) with the bucket-spec marker
-    beside it, no b_fp= layers — and whose link config predates the
+    beside it, no part_id dirs — and whose link config predates the
     extract digest takes the layout rebuild on its next delta, which
-    rewrites the edges as batch layers equal to a fresh build."""
+    rewrites the edges into part_id dirs equal to a fresh build."""
     import json
 
     import kgpipe.pipeline as pl
@@ -1312,14 +1185,13 @@ def test_old_bucketed_edge_table_migrates(spark, tmp_path):
     (wh / "edges" / "_kgpipe_bucket_spec.json").write_text(json.dumps(
         {"bucket_by": ["canon_s"], "n_buckets": cfg.n_buckets, "sort_by": ["canon_s"]}
     ))
-    assert not pl._partition_values(io, "edges", "b_fp")
+    assert not pl._partition_values(io, "edges", "part_id")
     conf = io.read_json(pl.LINK_CONFIG)
     del conf["extract"]
     io.write_json_atomic(pl.LINK_CONFIG, conf)
 
     res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
-    layers = pl._partition_values(io, "edges", "b_fp")
-    assert layers == ["full"]
+    assert _edges_rewritten(io)
     assert not [f for f in (wh / "edges").iterdir() if f.suffix == ".parquet"]
     ref = run_pipeline(
         spark, spark.createDataFrame(all_pages).repartition(3), _cfg(tmp_path / "ref_bucketed")
@@ -1329,12 +1201,12 @@ def test_old_bucketed_edge_table_migrates(spark, tmp_path):
 
 def test_warehouse_of_the_dir_level_relabel_migrates(spark, tmp_path, monkeypatch):
     """A warehouse the retired dir-level relabel left behind — its
-    per-batch canon_changes table, a linked batch still pending, and a
-    partition patch that died mid-swap (the edges__patch.json marker,
-    an edges__patchstage dir holding staged rows, one live dir already
-    deleted) — resumes with a rewrite of the edge table that equals a
-    fresh build and the graph oracle, and leaves none of those paths
-    behind."""
+    per-batch canon_changes table, a linked layer the edges do not
+    cover yet, and a partition patch that died mid-swap (the
+    edges__patch.json marker, an edges__patchstage dir holding staged
+    rows, one live dir already deleted) — resumes with a rewrite of the
+    edge table that equals a fresh build and the graph oracle, and
+    leaves none of those paths behind."""
     import json
     import shutil
 
@@ -1349,10 +1221,7 @@ def test_warehouse_of_the_dir_level_relabel_migrates(spark, tmp_path, monkeypatc
     run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
     monkeypatch.undo()
     io = pl.TableIO(spark, str(wh))
-    pending = [
-        b for b in pl._partition_values(io, "linked_urls", "batch_fp")
-        if b not in pl._applied_batches(io)
-    ]
+    pending = sorted(_uncovered(io))
     assert len(pending) == 1
 
     io.write(
@@ -1365,22 +1234,18 @@ def test_warehouse_of_the_dir_level_relabel_migrates(spark, tmp_path, monkeypatc
     # the patch died between "delete live dir" and "rename staged dir"
     # for part_id=0, after swapping part_id=1: its staged rows carry a
     # label no build produces
-    layer = pl._edges_layer_names(io)[0]
     staged = spark.createDataFrame(
-        [("http://stale.example/x", "http://stale.example/p", "http://stale.example/y",
-          layer, 0)],
-        pl.EDGES_INC_DDL,
+        [("http://stale.example/x", "http://stale.example/p", "http://stale.example/y", 0)],
+        pl.EDGES_DDL,
     )
-    staged.write.partitionBy("b_fp", "part_id").parquet(io.path("edges__patchstage"))
-    shutil.rmtree(wh / "edges" / f"b_fp={layer}" / "part_id=0", ignore_errors=True)
-    parts = [{"val": [layer, 0], "has_data": True}, {"val": [layer, 1], "has_data": True}]
-    io.write_json_atomic(
-        "edges__patch.json", {"part_cols": ["b_fp", "part_id"], "parts": parts}
-    )
+    staged.write.partitionBy("part_id").parquet(io.path("edges__patchstage"))
+    shutil.rmtree(wh / "edges" / "part_id=0", ignore_errors=True)
+    parts = [{"val": [0], "has_data": True}, {"val": [1], "has_data": True}]
+    io.write_json_atomic("edges__patch.json", {"part_cols": ["part_id"], "parts": parts})
     assert json.loads((wh / "edges__patch.json").read_text())["parts"] == parts
 
     res = run_pipeline(spark, spark.createDataFrame(all_pages).repartition(3), cfg)
-    assert pl._edges_layer_names(io) == ["full"]
+    assert _edges_rewritten(io)
     left = sorted(
         f.name for f in wh.iterdir() if "canon_changes" in f.name or "__patch" in f.name
     )
@@ -1389,6 +1254,70 @@ def test_warehouse_of_the_dir_level_relabel_migrates(spark, tmp_path, monkeypatc
         spark, spark.createDataFrame(all_pages).repartition(3), _cfg(tmp_path / "ref_relabel")
     )
     assert _graph(res) == _graph(ref) == _oracle(res)
+
+
+def test_layered_edge_warehouse_rewrites_once(spark, tmp_path):
+    """A warehouse whose edge table still has the batch-layered layout
+    — b_fp= layers with their _kgpipe_layer.json markers, a merge
+    stamp in canonical_map, edges_mat_state.json at layout 3 — has no
+    coverage marker, so its next run rewrites the edges, even without
+    new pages: part_id dirs only, equal to a fresh build and the graph
+    oracle. The run after that rewrites nothing."""
+    import kgpipe.pipeline as pl
+
+    all_pages = gen_pages(60)
+    wh = tmp_path / "wh_layered"
+    cfg = _cfg(wh)
+    run_pipeline(spark, spark.createDataFrame(all_pages.iloc[:50]).repartition(3), cfg)
+    pages = spark.createDataFrame(all_pages).repartition(3)
+    run_pipeline(spark, pages, cfg)
+
+    # rewrite the edges the way the layered materialize left them: a
+    # b_fp=full layer covering the first batch, and the second batch's
+    # own layer, each row in one of them
+    io = pl.TableIO(spark, str(wh))
+    batches = sorted(pl._partition_values(io, "triples_raw", "batch_fp"))
+    assert len(batches) == 2
+    edges = io.read("edges", pl.EDGES_DDL).localCheckpoint()
+    io.drop("edges")
+    layer = F.when(F.col("part_id") % 2 == 0, "full").otherwise(batches[1])
+    edges.withColumn("b_fp", layer).write.partitionBy("b_fp", "part_id").parquet(io.path("edges"))
+    for name, covered in (("full", batches[0]), (batches[1], batches[1])):
+        io.write_json_atomic(f"edges/b_fp={name}/_kgpipe_layer.json", {"batches": [covered]})
+    io.write_json_atomic("canonical_map/_kgpipe_merge.json", {"batch": batches[1], "n_changes": 0})
+    io.write_json_atomic("edges_mat_state.json", {"n_buckets": cfg.n_buckets, "layout": 3})
+    assert len(pl._partition_values(io, "edges", "b_fp")) == 2
+
+    res = run_pipeline(spark, pages, cfg)
+    assert _edges_rewritten(io)
+    assert not (wh / "edges_mat_state.json").exists()
+    ref = run_pipeline(spark, pages, _cfg(tmp_path / "ref_layered"))
+    assert _graph(res) == _graph(ref) == _oracle(res)
+
+    files = _edge_files(wh)
+    again = run_pipeline(spark, pages, cfg)
+    assert _edge_files(wh) == files
+    assert _graph(again) == _graph(ref)
+
+
+def test_cosmetic_recrawl_rewrites_no_edge_file(spark, tmp_path):
+    """A re-crawl that changed only a page's markup joins the url index
+    but adds no triples_raw layer, so materialize writes nothing:
+    every file under the edge dir keeps its name and mtime."""
+    import kgpipe.pipeline as pl
+
+    pages = gen_pages(40)
+    wh = tmp_path / "wh_cosmetic_pin"
+    run_pipeline(spark, spark.createDataFrame(pages).repartition(3), _cfg(wh))
+    recrawled = pages.copy()
+    recrawled.at[5, "html"] = recrawled.at[5, "html"].replace(b"<html>", b'<html lang="en">', 1)
+    assert (recrawled["html"] != pages["html"]).sum() == 1
+
+    files = _edge_files(wh)
+    res = run_pipeline(spark, spark.createDataFrame(recrawled).repartition(3), _cfg(wh))
+    assert len(pl._partition_values(pl.TableIO(spark, str(wh)), "linked_urls", "batch_fp")) == 2
+    assert files and _edge_files(wh) == files
+    assert _graph(res) == _oracle(res)
 
 
 def test_run_explain_shows_the_fused_extract_plan(spark, tmp_path, capsys):
@@ -1438,7 +1367,10 @@ def test_run_cli_builds_the_oracle_graph(spark, tmp_path, capsys):
     with pytest.raises(SystemExit) as help_exit:
         main(["run", "--help"])
     assert help_exit.value.code == 0
-    assert set(re.findall(r"--[a-z-]+", capsys.readouterr().out)) == {
+    usage = capsys.readouterr().out
+    # with no --rules, run uses the 223-rule built-in table
+    assert "built-in 223" in " ".join(usage.split())
+    assert set(re.findall(r"--[a-z-]+", usage)) == {
         "--help", "--pages", "--warehouse", "--rules", "--mode", "--null", "--parts",
         "--buckets", "--no-neardup", "--incremental-link", "--explain",
     }
