@@ -1,10 +1,13 @@
 """Driver contract for the kgpipe PySpark engine.
 
 `entry(spark)` runs the flagship mini KG pipeline on sf0.001.
-`queries()` exposes every SURVEY.md §2 operator as a (spark, sf_dir)
-callable; `oracle_sql()` gives the DuckDB-equivalent SQL the driver
-compares against at sf0.01 (row count + schema + order-insensitive
-value hash). Every query has an oracle.
+`queries()` holds the KG queries (NT parse and aggregates over it,
+abbreviate, framed roundtrip, CURIE expand, k-hop, PageRank,
+connected components, HTML extract) as (spark, sf_dir) callables over
+the `documents` table;
+`oracle_sql()` gives the DuckDB-equivalent SQL the driver compares
+against at sf0.01 (row count + schema + order-insensitive value
+hash). Every query has an oracle.
 
 Column names are aliased identically on both sides (driver sorts
 columns by name before hashing).
@@ -16,21 +19,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-RULES_DDL_PATH = None  # rules are embedded (kgpipe.fixtures.RULES_16_TEXT)
-
 # ---------------------------------------------------------------------------
 # shared builders
 # ---------------------------------------------------------------------------
 
-_TITLE_P = "http://purl.org/dc/elements/1.1/title"
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _nt_uri_lines(docs: DataFrame) -> DataFrame:
@@ -259,93 +253,6 @@ def q_sameas_canonical(spark, sf_dir):
     return canonical_map_for_nodes(nodes, edges).select("uri", "canon_id")
 
 
-# --- document-text queries: plain column expressions over `documents` --
-
-def _doc_fingerprint(text):
-    """md5 of the whitespace-normalized, lowercased text."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
-
-
-def _n_matches(text, pattern: str):
-    return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("long")
-
-
-def _n_ws_tokens(text):
-    return F.size(F.split(F.trim(text), r"\s+")).cast("long")
-
-
-def q_exact_dedup_docs(spark, sf_dir):
-    """One document per distinct fingerprint: the min doc_id."""
-    docs = _docs(spark, sf_dir)
-    keep = docs.groupBy(_doc_fingerprint(F.col("text"))).agg(F.min("doc_id").alias("doc_id"))
-    return docs.join(keep, "doc_id", "left_semi").select("doc_id")
-
-
-def q_doc_fingerprints(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", _doc_fingerprint(F.col("text")).alias("fingerprint")
-    )
-
-
-def q_winnowing_fps(spark, sf_dir, k=8, w=4):
-    """Winnowing fingerprints: md5-hex of every char k-gram of the
-    normalized text, minimum of each w-window of them, distinct per
-    doc. The hash array sits in its own select under the explode, so
-    it is evaluated once per row, not once per window."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))),
-        lambda i: F.md5(norm.substr(i, F.lit(k))),
-    )
-    hashed = _docs(spark, sf_dir).select("doc_id", hashes.alias("h"))
-    mins = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("h") - (w - 1), F.lit(1))),
-        lambda j: F.array_min(F.slice(F.col("h"), j, w)),
-    ))
-    return hashed.select("doc_id", F.explode(mins).alias("fp"))
-
-
-def q_token_counts(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        _n_matches(F.col("text"), r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]").alias("n_bpe_tokens"),
-        _n_ws_tokens(F.col("text")).alias("n_ws_tokens"),
-    )
-
-
-def q_quality_scores(spark, sf_dir):
-    """Heuristic quality in [0, 1]: stopword ratio, punctuation
-    penalty and length, rounded to 4dp."""
-    text = F.col("text")
-    n_tok = _n_ws_tokens(text)
-    stop = _n_matches(F.lower(text), r"\b(the|and|of|to|a|in|is|it|that|for)\b")
-    punct = _n_matches(text, r"[.,;:!?]")
-    n_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
-    stop_ratio = F.least(stop / F.greatest(n_tok, F.lit(1)).cast("double"), F.lit(0.5)) / 0.5
-    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - (punct / n_chars) * 5.0)
-    len_part = F.least(n_tok, F.lit(100)).cast("double") / 100.0
-    quality = F.round(0.4 * stop_ratio + 0.3 * punct_pen + 0.3 * len_part, 4)
-    return _docs(spark, sf_dir).select("doc_id", quality.alias("quality"))
-
-
-def q_lang_id(spark, sf_dir):
-    """Marker-word language id over {en, de, es, fr}; 'und' when no
-    marker hits; ties go to the first language in that order."""
-    lower = F.lower(F.col("text"))
-    c = {
-        lang: _n_matches(lower, rf"\b({words})\b")
-        for lang, words in [
-            ("en", "the|and|of|to|is|in"), ("de", "der|die|das|und|ist|nicht"),
-            ("es", "el|la|los|de|que|es"), ("fr", "le|la|les|et|est|une"),
-        ]
-    }
-    mx = F.greatest(*c.values())
-    pred = F.when(mx == 0, F.lit("und"))
-    for lang in ("en", "de", "es"):
-        pred = pred.when(c[lang] == mx, F.lit(lang))
-    return _docs(spark, sf_dir).select("doc_id", pred.otherwise(F.lit("fr")).alias("lang_pred"))
-
-
 def q_extract_html(spark, sf_dir):
     """Real HTML extractor over synthesized pages; oracle constructs
     the expected text directly from the template."""
@@ -359,233 +266,6 @@ def q_extract_html(spark, sf_dir):
     ).cast("binary")
     pages = docs.select(F.col("doc_id"), html.alias("html"))
     return with_extracted_text(pages).select("doc_id", "text")
-
-
-# --- generic operator coverage over the TPC-H-ish tables ---------------
-
-def q_lineitem_agg(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-             F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("n_name")
-    )
-
-
-def q_topk_orders_per_customer(spark, sf_dir):
-    from pyspark.sql import Window
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-    return (
-        o.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("o_custkey", "o_orderkey", "rk")
-    )
-
-
-def q_events_agg(spark, sf_dir):
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def q_rollup_orders(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (
-        o.rollup("o_orderpriority", "o_orderstatus")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-             F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_pivot_order_status(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    statuses = ["O", "F", "P"]
-    aggs = [
-        F.round(F.sum(F.when(F.col("o_orderstatus") == s, F.col("o_totalprice")).otherwise(F.lit(0.0))), 2).alias(f"rev_{s}")
-        for s in statuses
-    ]
-    return o.groupBy("o_orderpriority").agg(*aggs).orderBy("o_orderpriority")
-
-
-def q_price_quantiles(spark, sf_dir):
-    """Exact interpolated percentiles per group (Spark `percentile`
-    ≡ DuckDB `quantile_cont`)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.percentile("l_extendedprice", F.lit(0.25)), 4).alias("p25"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("p50"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.75)), 4).alias("p75"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def q_cube_orders(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-def q_string_funcs(spark, sf_dir):
-    """String-function surface over a real table, oracle-gated:
-    case, length, substring, concat, padding, reverse, split."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return c.select(
-        "c_custkey",
-        F.upper("c_mktsegment").alias("seg_upper"),
-        F.lower("c_name").alias("name_lower"),
-        F.length("c_name").alias("name_len"),
-        F.substring("c_name", 1, 8).alias("name_prefix"),
-        F.concat_ws("|", "c_mktsegment", F.col("c_custkey").cast("string")).alias("seg_key"),
-        F.lpad(F.col("c_custkey").cast("string"), 10, "0").alias("key_pad"),
-        F.reverse("c_mktsegment").alias("seg_rev"),
-        F.split("c_name", "#").getItem(1).alias("name_num"),
-        F.replace(F.col("c_name"), F.lit("Customer"), F.lit("Cust")).alias("name_short"),
-    )
-
-
-def q_date_funcs(spark, sf_dir):
-    """Calendar-function surface over the orders timestamps."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.quarter("o_orderdate").alias("qtr"),
-        F.month("o_orderdate").alias("mon"),
-        F.dayofmonth("o_orderdate").alias("dom"),
-        F.trunc("o_orderdate", "month").alias("month_start"),
-        F.last_day("o_orderdate").alias("month_end"),
-        F.datediff(F.col("o_orderdate"), F.lit("1995-01-01")).alias("days_since"),
-    )
-
-
-def q_array_funcs(spark, sf_dir):
-    """Array-function surface over the embedding column (the shape
-    every vector pipeline manipulates): size, extrema, slicing,
-    ordered folds."""
-    e = _emb(spark, sf_dir)
-    vec = F.col("embedding").cast("array<double>")
-    return e.select(
-        "vec_id",
-        F.size("embedding").alias("dim"),
-        F.round(F.array_max(vec), 4).alias("vmax"),
-        F.round(F.array_min(vec), 4).alias("vmin"),
-        F.round(F.element_at(vec, 1), 4).alias("first"),
-        F.round(
-            F.aggregate(F.slice(vec, 1, 4), F.lit(0.0), lambda a, x: a + x), 4
-        ).alias("head_sum"),
-        F.round(F.element_at(F.array_sort(vec), 3), 4).alias("third_smallest"),
-    )
-
-
-def q_json_funcs(spark, sf_dir):
-    """JSON-function surface over the events props column (real JSON
-    strings): path extraction and typed parse."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return e.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("k_extracted"),
-        F.from_json("props", "k long").getField("k").alias("k_parsed"),
-        (F.get_json_object("props", "$.k").cast("long") % 10).alias("k_mod"),
-    )
-
-
-def q_window_funcs(spark, sf_dir):
-    """Window-function surface beyond row_number: lag/lead, rank with
-    ties, dense_rank, cumulative aggregates, ntile."""
-    from pyspark.sql import Window
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wv = Window.partitionBy("user_id").orderBy(F.col("value").desc(), F.col("event_id"))
-    return e.select(
-        "user_id",
-        "event_id",
-        F.round(F.lag("value").over(w), 4).alias("prev_value"),
-        F.round(F.lead("value").over(w), 4).alias("next_value"),
-        F.rank().over(wv).alias("value_rank"),
-        F.dense_rank().over(wv).alias("value_dense_rank"),
-        F.round(F.sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 4).alias("cum_value"),
-        F.ntile(4).over(w).alias("quartile"),
-    )
-
-
-def q_orders_set_algebra(spark, sf_dir):
-    """Distinct set algebra (INTERSECT / EXCEPT) on top of the
-    semi/anti joins covered by customer_set_ops."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    a = o.where(F.col("o_orderstatus") == "O").select("o_custkey")
-    b = o.where(F.col("o_orderstatus") == "F").select("o_custkey")
-    return (
-        a.intersect(b).withColumn("bucket", F.lit("both"))
-        .union(a.subtract(b).withColumn("bucket", F.lit("open_only")))
-        .union(b.subtract(a).withColumn("bucket", F.lit("filled_only")))
-    )
-
-
-def q_grouping_sets_orders(spark, sf_dir):
-    """Explicit GROUPING SETS + grouping_id — the generalization
-    rollup/cube are sugar for; completes the multi-dimensional agg
-    surface."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (
-        o.groupingSets(
-            [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
-            "o_orderstatus", "o_orderpriority",
-        )
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().alias("gid"),
-        )
-    )
-
-
-def q_customer_set_ops(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    with_orders = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey")
-    no_orders = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey")
-    return (
-        with_orders.withColumn("has_orders", F.lit(True))
-        .union(no_orders.withColumn("has_orders", F.lit(False)))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -617,29 +297,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_predicates": q_top_predicates,
         "triples_distinct": q_triples_distinct,
         "sameas_canonical": q_sameas_canonical,
-        "exact_dedup_docs": q_exact_dedup_docs,
-        "doc_fingerprints": q_doc_fingerprints,
-        "winnowing_fps": q_winnowing_fps,
-        "token_counts": q_token_counts,
-        "quality_scores": q_quality_scores,
-        "lang_id": q_lang_id,
         "extract_html": q_extract_html,
-        "lineitem_agg": q_lineitem_agg,
-        "revenue_by_nation": q_revenue_by_nation,
-        "topk_orders_per_customer": q_topk_orders_per_customer,
-        "events_agg": q_events_agg,
-        "customer_set_ops": q_customer_set_ops,
-        "string_funcs": q_string_funcs,
-        "date_funcs": q_date_funcs,
-        "array_funcs": q_array_funcs,
-        "json_funcs": q_json_funcs,
-        "window_funcs": q_window_funcs,
-        "orders_set_algebra": q_orders_set_algebra,
-        "grouping_sets_orders": q_grouping_sets_orders,
-        "rollup_orders": q_rollup_orders,
-        "price_quantiles": q_price_quantiles,
-        "cube_orders": q_cube_orders,
-        "pivot_order_status": q_pivot_order_status,
     }
 
 
@@ -761,216 +419,8 @@ def oracle_sql() -> dict[str, str]:
                    'http://ex.org/e/' || lpad(cast(doc_id % 100 as varchar), 6, '0') as canon_id
             from documents
         """,
-        "exact_dedup_docs": """
-            select doc_id from documents d
-            join (
-              select md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fp,
-                     min(doc_id) as keep
-              from documents group by 1
-            ) g
-            on md5(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))) = g.fp
-               and d.doc_id = g.keep
-        """,
-        "doc_fingerprints": """
-            select doc_id,
-                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) as fingerprint
-            from documents
-        """,
-        "winnowing_fps": r"""
-            with t as (
-              select doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) as norm
-              from documents
-            ), h as (
-              select doc_id,
-                     list_transform(range(1, greatest(length(norm) - 7, 1) + 1),
-                                    i -> md5(substr(norm, i, 8))) as hs
-              from t
-            )
-            select distinct doc_id, fp from (
-              select doc_id,
-                     unnest(list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
-                                           j -> list_min(hs[j:j+3]))) as fp
-              from h
-            )
-        """,
-        "token_counts": """
-            select doc_id,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) as n_bpe_tokens,
-                   len(regexp_split_to_array(trim(text), '\\s+')) as n_ws_tokens
-            from documents
-        """,
-        "quality_scores": """
-            with m as (
-              select doc_id,
-                     len(regexp_split_to_array(trim(text), '\\s+')) as n_tok,
-                     len(regexp_extract_all(lower(text), '\\b(the|and|of|to|a|in|is|it|that|for)\\b')) as stop,
-                     len(regexp_extract_all(text, '[.,;:!?]')) as punct,
-                     greatest(length(text), 1)::DOUBLE as n_chars
-              from documents
-            )
-            select doc_id,
-                   round(
-                     0.4 * (least(stop::DOUBLE / greatest(n_tok, 1), 0.5) / 0.5)
-                   + 0.3 * greatest(0.0, 1.0 - (punct / n_chars) * 5.0)
-                   + 0.3 * (least(n_tok, 100)::DOUBLE / 100.0), 4) as quality
-            from m
-        """,
-        "lang_id": """
-            with c as (
-              select doc_id,
-                len(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|in)\\b')) as c_en,
-                len(regexp_extract_all(lower(text), '\\b(der|die|das|und|ist|nicht)\\b')) as c_de,
-                len(regexp_extract_all(lower(text), '\\b(el|la|los|de|que|es)\\b')) as c_es,
-                len(regexp_extract_all(lower(text), '\\b(le|la|les|et|est|une)\\b')) as c_fr
-              from documents
-            )
-            select doc_id,
-              case when greatest(c_en, c_de, c_es, c_fr) = 0 then 'und'
-                   when c_en = greatest(c_en, c_de, c_es, c_fr) then 'en'
-                   when c_de = greatest(c_en, c_de, c_es, c_fr) then 'de'
-                   when c_es = greatest(c_en, c_de, c_es, c_fr) then 'es'
-                   else 'fr' end as lang_pred
-            from c
-        """,
         "extract_html": """
             select doc_id, 'Doc ' || cast(doc_id as varchar) || chr(10) || trim(text) as text
             from documents where length(trim(text)) > 0
-        """,
-        "lineitem_agg": """
-            select l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) as sum_qty,
-                   round(sum(l_extendedprice), 2) as sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) as sum_disc_price,
-                   round(avg(l_quantity), 4) as avg_qty,
-                   count(*) as count_order
-            from lineitem
-            where l_shipdate <= timestamp '1998-09-02 00:00:00'
-            group by l_returnflag, l_linestatus
-            order by l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            select n_name, round(sum(o_totalprice), 2) as revenue, count(*) as n_orders
-            from orders join customer on o_custkey = c_custkey
-            join nation on c_nationkey = n_nationkey
-            group by n_name order by n_name
-        """,
-        "topk_orders_per_customer": """
-            select o_custkey, o_orderkey, rk from (
-              select o_custkey, o_orderkey,
-                     row_number() over (partition by o_custkey
-                                        order by o_totalprice desc, o_orderkey asc) as rk
-              from orders
-            ) where rk <= 3
-        """,
-        "events_agg": """
-            select event_type, count(*) as n, round(sum(value), 2) as total_value,
-                   count(distinct user_id) as n_users
-            from events group by event_type order by event_type
-        """,
-        "customer_set_ops": """
-            select c_custkey, true as has_orders from customer
-            where c_custkey in (select o_custkey from orders)
-            union all
-            select c_custkey, false as has_orders from customer
-            where c_custkey not in (select o_custkey from orders)
-        """,
-        "string_funcs": """
-            select c_custkey,
-                   upper(c_mktsegment) as seg_upper,
-                   lower(c_name) as name_lower,
-                   length(c_name) as name_len,
-                   substr(c_name, 1, 8) as name_prefix,
-                   concat_ws('|', c_mktsegment, cast(c_custkey as varchar)) as seg_key,
-                   lpad(cast(c_custkey as varchar), 10, '0') as key_pad,
-                   reverse(c_mktsegment) as seg_rev,
-                   string_split(c_name, '#')[2] as name_num,
-                   replace(c_name, 'Customer', 'Cust') as name_short
-            from customer
-        """,
-        "date_funcs": """
-            select o_orderkey,
-                   year(o_orderdate) as yr,
-                   quarter(o_orderdate) as qtr,
-                   month(o_orderdate) as mon,
-                   day(o_orderdate) as dom,
-                   date_trunc('month', o_orderdate) as month_start,
-                   last_day(o_orderdate::date) as month_end,
-                   datediff('day', date '1995-01-01', o_orderdate::date) as days_since
-            from orders
-        """,
-        "array_funcs": """
-            with v as (
-              select vec_id, embedding::DOUBLE[] as e from embeddings
-            )
-            select vec_id,
-                   len(e) as dim,
-                   round(list_max(e), 4) as vmax,
-                   round(list_min(e), 4) as vmin,
-                   round(e[1], 4) as first,
-                   round(e[1] + e[2] + e[3] + e[4], 4) as head_sum,
-                   round(list_sort(e)[3], 4) as third_smallest
-            from v
-        """,
-        "json_funcs": """
-            select event_id,
-                   json_extract(props, '$.k')::BIGINT as k_extracted,
-                   json_extract(props, '$.k')::BIGINT as k_parsed,
-                   json_extract(props, '$.k')::BIGINT % 10 as k_mod
-            from events
-        """,
-        "window_funcs": """
-            select user_id, event_id,
-                   round(lag(value) over w, 4) as prev_value,
-                   round(lead(value) over w, 4) as next_value,
-                   rank() over wv as value_rank,
-                   dense_rank() over wv as value_dense_rank,
-                   round(sum(value) over (partition by user_id order by ts, event_id
-                                          rows between unbounded preceding and current row), 4) as cum_value,
-                   ntile(4) over w as quartile
-            from events
-            window w as (partition by user_id order by ts, event_id),
-                   wv as (partition by user_id order by value desc, event_id)
-        """,
-        "orders_set_algebra": """
-            with a as (select o_custkey from orders where o_orderstatus = 'O'),
-                 b as (select o_custkey from orders where o_orderstatus = 'F')
-            select o_custkey, 'both' as bucket from (select * from a intersect select * from b)
-            union all
-            select o_custkey, 'open_only' as bucket from (select * from a except select * from b)
-            union all
-            select o_custkey, 'filled_only' as bucket from (select * from b except select * from a)
-        """,
-        "grouping_sets_orders": """
-            select o_orderstatus, o_orderpriority,
-                   round(sum(o_totalprice), 2) as revenue,
-                   count(*) as n,
-                   grouping(o_orderstatus, o_orderpriority) as gid
-            from orders
-            group by grouping sets ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        """,
-        "rollup_orders": """
-            select o_orderpriority, o_orderstatus,
-                   round(sum(o_totalprice), 2) as revenue, count(*) as n
-            from orders
-            group by rollup (o_orderpriority, o_orderstatus)
-        """,
-        "price_quantiles": """
-            select l_returnflag,
-                   round(quantile_cont(l_extendedprice, 0.25), 4) as p25,
-                   round(quantile_cont(l_extendedprice, 0.5), 4) as p50,
-                   round(quantile_cont(l_extendedprice, 0.75), 4) as p75,
-                   count(*) as n
-            from lineitem group by l_returnflag order by l_returnflag
-        """,
-        "cube_orders": """
-            select o_orderstatus, o_orderpriority, count(*) as n
-            from orders group by cube (o_orderstatus, o_orderpriority)
-        """,
-        "pivot_order_status": """
-            select o_orderpriority,
-                   round(sum(case when o_orderstatus = 'O' then o_totalprice else 0 end), 2) as rev_O,
-                   round(sum(case when o_orderstatus = 'F' then o_totalprice else 0 end), 2) as rev_F,
-                   round(sum(case when o_orderstatus = 'P' then o_totalprice else 0 end), 2) as rev_P
-            from orders group by o_orderpriority order by o_orderpriority
         """,
     }

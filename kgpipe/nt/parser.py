@@ -246,16 +246,9 @@ def parse_nt_frame(lines: pd.Series, with_frames: bool = False) -> pd.DataFrame:
     return out
 
 
-_PARSE_CHECKED = False
-
-
 def self_check() -> None:
     """Cross-check the vectorized parser against the scalar one on the
-    pinned fixture cases. Cheap; used by tests and once at import of
-    the Spark operators."""
-    global _PARSE_CHECKED
-    if _PARSE_CHECKED:
-        return
+    pinned fixture cases. Cheap; run by tests/test_parser.py."""
     cases = [
         "<a> <b> <c> .",
         "a b c .",
@@ -302,4 +295,3 @@ def self_check() -> None:
         except NTParseError as e:
             assert frame.loc[i, "error"] == str(e), (line, frame.loc[i, "error"], str(e))
             assert framed.loc[i, "error"] == str(e)
-    _PARSE_CHECKED = True

@@ -313,7 +313,7 @@ class PrefixRewriter:
             re.compile("(?m)^(?:" + _trie_regex(lpm_pats) + ")") if lpm_pats else None
         )
 
-    # -- scalar (ground truth, used in property tests) ------------------
+    # -- scalar (ground truth; _sub_singlepass's suspect-row path) ------
     def rewrite_term(self, term: str) -> str:
         if self.mode == "compat":
             for repl, prefix in self._repl:
@@ -361,7 +361,7 @@ class PrefixRewriter:
         rx, suspect = self._compat_rx
         lookup = self._lookup
         fn = lambda m: lookup[m.group(0)]  # noqa: E731
-        seq = self._rewrite_sequential_scalar
+        seq = self.rewrite_term
         out = col.copy()
         mask = col.notna()
         if not mask.any():
@@ -385,11 +385,6 @@ class PrefixRewriter:
             seq(x) if suspect.search(x) else rx.sub(fn, x) for x in vals
         ]
         return out
-
-    def _rewrite_sequential_scalar(self, term: str) -> str:
-        for repl, prefix in self._repl:
-            term = term.replace(prefix, repl)
-        return term
 
     def _sub_lpm(self, col: pd.Series) -> pd.Series:
         rx, lookup = self._lpm_rx, self._lookup

@@ -48,52 +48,11 @@ def abbreviate_columns(
     return out
 
 
-def compat_replace_expr(col, rules: list[Rule], null: str | None = None):
-    """JVM-side compat rewrite: sequential literal global substring
-    replacement in rule order — the exact semantics of the reference's
-    perl/replace pipeline (/root/reference/common.go:104-143) and of
-    PrefixRewriter(mode='compat'), evaluated inside the JVM with no
-    Python crossing at all.
-
-    Plan shape: ONE `aggregate` fold over a plan-literal
-    array<struct<f,t>> of (prefix, replacement) pairs, whose lambda
-    body is a single `replace` call. Inlining 223 nested replace
-    expressions instead would blow up codegen/JIT (the 64-hash JIT
-    stall all over again); the fold keeps the expression tree O(1) in
-    rule count while still applying rules strictly in order.
-
-    MEASURED: ~5k lines/s/core on the 223-rule DefaultRules —
-    UTF8String.replace runs a naive byte search per rule and the HOF
-    pays per-element lambda machinery, so this is ~30× SLOWER than
-    the Arrow-batched compiled rewriter (abbreviate_lines). Kept for
-    rule tables of a few entries and for plans that must stay free of
-    Python workers; every hot path uses abbreviate_lines."""
-    from pyspark.sql import functions as F
-
-    from kgpipe.nt.rules import NULL_SENTINEL
-
-    if null is None:
-        null = NULL_SENTINEL
-    if not rules:
-        return col
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(r.prefix).alias("f"),
-                F.lit("" if r.shortcut == null else r.shortcut + ":").alias("t"),
-            )
-            for r in rules
-        ]
-    )
-    return F.aggregate(pairs, col, lambda acc, p: F.replace(acc, p["f"], p["t"]))
-
-
 def abbreviate_lines(
     df,
     rules: list[Rule],
     null: str | None = None,
     line_col: str = "value",
-    engine: str = "pandas",
 ):
     """Raw-line abbreviation: the Spark analogue of `ntto -a` WITHOUT
     `-j` (cmd/ntto/ntto.go:144-166 — the perl pipeline's stdout IS the
@@ -101,24 +60,16 @@ def abbreviate_lines(
     literal quotes) survives byte-for-byte because only substring
     substitution happens. Narrow transform, no shuffle.
 
-    engine='pandas' (default): broadcast PrefixRewriter applied as an
-    Arrow-batched scalar pandas UDF — the rewriter compiles the rule
-    table to one priority-ordered trie-regex pass when provably
-    equivalent to the sequential reference semantics (~160k lines/s
-    per core on the 223-rule DefaultRules; the provably-unsafe rows
-    and rule tables transparently take the per-rule sequential path).
-    engine='jvm': pure expression fold, no Python workers — ~30×
-    slower (see compat_replace_expr), but the plan stays JVM-only."""
+    The broadcast PrefixRewriter runs as an Arrow-batched scalar
+    pandas UDF — the rewriter compiles the rule table to one
+    priority-ordered trie-regex pass when provably equivalent to the
+    sequential reference semantics (~160k lines/s per core on the
+    223-rule DefaultRules; the provably-unsafe rows and rule tables
+    transparently take the per-rule sequential path)."""
     from pyspark.sql import functions as F, types as T
 
     from kgpipe.nt.rules import NULL_SENTINEL
 
-    if engine == "jvm":
-        return df.withColumn(
-            line_col, compat_replace_expr(F.col(line_col), rules, null)
-        )
-    if engine != "pandas":
-        raise ValueError(f"unknown abbrev engine: {engine}")
     # the frame's own session, not getActiveSession() (thread-local —
     # None from non-driver threads)
     spark = df.sparkSession

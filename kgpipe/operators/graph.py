@@ -3,9 +3,10 @@ connected components (operators/cc.py builds canonical_map; these
 operators ANSWER questions over the materialized edges).
 
 Scale shape: one join + distinct per hop, shuffling on the join key.
-The pipeline's edges are laid out in batch layers (kgpipe.pipeline
-materialize stage), so a traversal over them shuffles the edge side
-once per hop.
+The pipeline's edges are laid out in `part_id` dirs hashed on
+`canon_s` (kgpipe.pipeline materialize stage). Spark does not read
+partition dirs as a bucketing, so a traversal over them shuffles the
+edge side once per hop.
 The frontier is localCheckpoint-ed per hop, so the iterative plan
 stays shallow (the CC lesson: iterative self-joins without lineage
 truncation grow exponentially — SURVEY.md §7 hard part 1).

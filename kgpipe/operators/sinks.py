@@ -1,4 +1,4 @@
-"""Output sinks beyond the parquet/Iceberg tables.
+"""Output sinks beyond the parquet tables.
 
 LDJ (line-delimited JSON) is the reference's `-j` output: one
 ``{"s":...,"p":...,"o":...}`` object per line

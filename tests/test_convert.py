@@ -179,34 +179,30 @@ FRAMING_LINES = NT_LINES + [
 ]
 
 
-def test_abbreviate_lines_byte_identical_to_perl(spark):
+@pytest.mark.parametrize(
+    "rules",
+    [
+        RULES,
+        parse_rules("dbp http://dbpedia.org/resource/\ngnd http://d-nb.info/gnd/"),
+    ],
+    ids=["default_rules", "two_rules"],
+)
+def test_abbreviate_lines_byte_identical_to_perl(spark, rules):
     """The `ntto -a` surface: abbreviate_lines output is BYTE-identical
-    (as a line multiset, Q10) to the live perl pipeline on the shipped
-    223-rule DefaultRules — angle brackets, literal quotes, datatype
-    framing, broken lines and blanks all survive verbatim."""
+    (as a line multiset, Q10) to the live perl pipeline, on the shipped
+    223-rule DefaultRules and on a two-rule table — angle brackets,
+    literal quotes, datatype framing, broken lines and blanks all
+    survive verbatim."""
     from kgpipe.operators.abbrev import abbreviate_lines
 
     df = spark.createDataFrame([(l,) for l in FRAMING_LINES], "value string").repartition(3)
     got = collections.Counter(
-        r.value for r in abbreviate_lines(df, RULES).collect()
+        r.value for r in abbreviate_lines(df, rules).collect()
     )
-    assert got == perl_lines(FRAMING_LINES, RULES)
+    assert got == perl_lines(FRAMING_LINES, rules)
     # and the multi-stage perl pipeline (reference default -w 4)
     # produces the same bytes — partition order is Q12-irrelevant
-    assert got == perl_lines(FRAMING_LINES, RULES, parts=4)
-
-
-def test_abbreviate_lines_jvm_engine_matches_pandas(spark):
-    from kgpipe.operators.abbrev import abbreviate_lines
-
-    # small table: the JVM fold is only for few-rule cases
-    rules = parse_rules(
-        "dbp http://dbpedia.org/resource/\ngnd http://d-nb.info/gnd/"
-    )
-    df = spark.createDataFrame([(l,) for l in FRAMING_LINES], "value string")
-    a = sorted(r.value for r in abbreviate_lines(df, rules, engine="pandas").collect())
-    b = sorted(r.value for r in abbreviate_lines(df, rules, engine="jvm").collect())
-    assert a == b
+    assert got == perl_lines(FRAMING_LINES, rules, parts=4)
 
 
 def test_convert_cli_nt_compat_byte_identical_to_perl(spark, tmp_path):

@@ -2,7 +2,7 @@
 asserted so they can't regress.
 
 - scans prune columns and push filters
-- the small dimension join goes broadcast
+- the canonical-map join goes broadcast
 - the narrow extract→parse→abbrev chain has NO shuffle
 - Python stages are Arrow-vectorized (ArrowEvalPython/MapInPandas),
   never row-at-a-time BatchEvalPython
@@ -31,13 +31,6 @@ def test_scan_pushdown_and_pruning(spark, sf_dir):
     rs = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "l_orderkey" in rs and "l_extendedprice" in rs and "l_shipdate" in rs
     assert "l_comment" not in rs and "l_quantity" not in rs
-
-
-def test_broadcast_join_for_small_dim(spark, sf_dir):
-    import __spark_entry__ as em
-
-    plan = _plan(em.q_revenue_by_nation(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
 
 
 def test_extract_chain_no_shuffle(spark):
