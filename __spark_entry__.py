@@ -40,6 +40,17 @@ def _nt_uri_lines(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", line.alias("line"))
 
 
+def _doc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic doc-id edge set of the graph queries:
+    i→i+7 ∪ i→3i, as (src, dst)."""
+    d = _docs(spark, sf_dir).select(F.col("doc_id"))
+    return d.select(
+        F.col("doc_id").alias("src"), (F.col("doc_id") + 7).alias("dst")
+    ).union(
+        d.select(F.col("doc_id").alias("src"), (F.col("doc_id") * 3).alias("dst"))
+    )
+
+
 def _parse_docs_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parse each document's text as one NT line (ntto semantics:
     any whitespace-tokenized line is parseable). Rows with <3 tokens
@@ -69,6 +80,16 @@ select doc_id,
             else array_to_string(w[3:n], ' ') end, '<>"') as o
 from p where n >= 3
 """
+
+
+# SQL twin of _doc_edges as (s, t), opening a `with` list
+_DOC_EDGES_CTE = """
+with d as (select doc_id from documents),
+e as (
+  select doc_id as s, doc_id + 7 as t from d
+  union all
+  select doc_id as s, doc_id * 3 as t from d
+),"""
 
 
 # ---------------------------------------------------------------------------
@@ -144,13 +165,8 @@ def q_khop_2(spark, sf_dir):
     from kgpipe.operators.graph import khop_frontier
 
     d = _docs(spark, sf_dir).select(F.col("doc_id"))
-    edges = d.select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") + 7).alias("dst")
-    ).union(
-        d.select(F.col("doc_id").alias("src"), (F.col("doc_id") * 3).alias("dst"))
-    )
     seeds = d.where(F.col("doc_id") % 100 == 0).select(F.col("doc_id").alias("node"))
-    return khop_frontier(edges, seeds, k=2)
+    return khop_frontier(_doc_edges(spark, sf_dir), seeds, k=2)
 
 
 def q_pagerank_3(spark, sf_dir):
@@ -161,13 +177,7 @@ def q_pagerank_3(spark, sf_dir):
     oracle hash-matches; final ranks rounded to 6dp."""
     from kgpipe.operators.graph import pagerank
 
-    d = _docs(spark, sf_dir).select(F.col("doc_id"))
-    edges = d.select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") + 7).alias("dst")
-    ).union(
-        d.select(F.col("doc_id").alias("src"), (F.col("doc_id") * 3).alias("dst"))
-    )
-    pr = pagerank(edges, n_iter=3)
+    pr = pagerank(_doc_edges(spark, sf_dir), n_iter=3)
     return pr.select("node", F.round(F.col("pr"), 6).alias("pr"))
 
 
@@ -319,13 +329,7 @@ def oracle_sql() -> dict[str, str]:
                    'http://dbpedia.org/resource/Entity' || cast(doc_id as varchar) as o
             from documents
         """,
-        "khop_2": """
-            with d as (select doc_id from documents),
-            e as (
-              select doc_id as s, doc_id + 7 as t from d
-              union all
-              select doc_id as s, doc_id * 3 as t from d
-            ),
+        "khop_2": _DOC_EDGES_CTE + """
             h0 as (select distinct doc_id as node from d where doc_id % 100 = 0),
             h1 as (
               select distinct e.t as node from e join h0 on e.s = h0.node
@@ -340,13 +344,7 @@ def oracle_sql() -> dict[str, str]:
             union all select node, 1 as hops from h1
             union all select node, 2 as hops from h2
         """,
-        "pagerank_3": """
-            with d as (select doc_id from documents),
-            e as (
-              select doc_id as s, doc_id + 7 as t from d
-              union all
-              select doc_id as s, doc_id * 3 as t from d
-            ),
+        "pagerank_3": _DOC_EDGES_CTE + """
             nodes as (
               select distinct node from (
                 select s as node from e union all select t as node from e

@@ -125,30 +125,17 @@ class TableIO:
             pairs.append((parts[0], parts[1]))
         return pairs
 
-    def write_small(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
-        """Write a SMALL DataFrame (collected to the driver) as one
-        parquet file. Semantics match write(): overwrite replaces the
-        table, append adds rows. Falls back to the Spark writer off
-        the local filesystem."""
-        pairs = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-        if self._local_dir(name) is None or any(
-            self._pa_type(t) is None for _, t in pairs
-        ):
-            self.write(df, name, mode=mode)
-            return
-        self._write_small_local(df.collect(), pairs, name, mode)
-
     def write_small_rows(
         self, rows: list[tuple], ddl: str, name: str, mode: str = "overwrite"
     ) -> None:
-        """write_small for DRIVER-LOCAL rows: no Spark DataFrame is
-        built on the fast path at all. A createDataFrame(rows) +
+        """Write SMALL driver-local rows as one parquet file: no Spark
+        DataFrame is built on the fast path at all. A createDataFrame(rows) +
         collect() round-trip on tiny local data costs a full job's
         fixed latency (~0.3-0.7s measured on local[32]); the ledger
         and stats tables pay that several times per pipeline run for
-        kilobytes of data. Same on-disk bytes as write_small (same
-        schema mapping, same atomic rename). Falls back to the Spark
-        writer off the local filesystem, for types outside the
+        kilobytes of data. Semantics match write(): overwrite replaces
+        the table, append adds rows, by one atomic rename. Falls back
+        to the Spark writer off the local filesystem, for types outside the
         fast-path map, or for DDL the simple parser cannot read
         (parameterized or nested types such as decimal(10,2) or
         struct<a:int,b:int>) — semantics preserved everywhere."""

@@ -60,29 +60,9 @@ def abbreviate_lines(
     literal quotes) survives byte-for-byte because only substring
     substitution happens. Narrow transform, no shuffle.
 
-    The broadcast PrefixRewriter runs as an Arrow-batched scalar
-    pandas UDF — the rewriter compiles the rule table to one
-    priority-ordered trie-regex pass when provably equivalent to the
-    sequential reference semantics (~160k lines/s per core on the
-    223-rule DefaultRules; the provably-unsafe rows and rule tables
-    transparently take the per-rule sequential path)."""
-    from pyspark.sql import functions as F, types as T
-
-    from kgpipe.nt.rules import NULL_SENTINEL
-
-    # the frame's own session, not getActiveSession() (thread-local —
-    # None from non-driver threads)
-    spark = df.sparkSession
-    rewriter = PrefixRewriter(
-        rules, mode="compat", null=null if null is not None else NULL_SENTINEL
-    )
-    bc = spark.sparkContext.broadcast(rewriter)
-
-    @F.pandas_udf(T.StringType())
-    def _rewrite(col: pd.Series) -> pd.Series:
-        return bc.value.rewrite_series(col)
-
-    return df.withColumn(line_col, _rewrite(F.col(line_col)))
+    The compat-mode abbreviate_columns over the one line column: the
+    broadcast PrefixRewriter as an Arrow-batched scalar pandas UDF."""
+    return abbreviate_columns(df, [line_col], rules, mode="compat", null=null)
 
 
 def expand_curie_expr(col, rules, null: str | None = None):

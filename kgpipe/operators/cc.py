@@ -271,9 +271,21 @@ def canonical_map_for_nodes(nodes: DataFrame, edges: DataFrame, **kw) -> DataFra
     return cmap.union(singles)
 
 
-def incremental_canonical_map(
-    prev_cmap: DataFrame, new_edges: DataFrame, **kw
-) -> DataFrame:
+@dataclass
+class Merge:
+    """incremental_merge's result. cmap: the merged map. n_edges:
+    distinct new edges merged."""
+
+    cmap: DataFrame
+    n_edges: int
+
+
+def incremental_merge(
+    prev_cmap: DataFrame,
+    new_edges: DataFrame,
+    small_graph_max_edges: int | None = SMALL_GRAPH_MAX_EDGES,
+    **kw,
+) -> Merge:
     """Merge a NEW batch of sameAs edges into an existing canonical
     map WITHOUT re-running CC over the whole graph — the daily-delta
     operation at 10^12 nodes, where a delta touches a vanishing
@@ -297,27 +309,9 @@ def incremental_canonical_map(
 
     prev_cmap may be empty (first run degenerates to a plain CC over
     new_edges). Nodes supported: any uri appearing in either input.
-    """
-    return incremental_merge(prev_cmap, new_edges, **kw).cmap
 
-
-@dataclass
-class Merge:
-    """incremental_merge's result. cmap: the merged map. n_edges:
-    distinct new edges merged."""
-
-    cmap: DataFrame
-    n_edges: int
-
-
-def incremental_merge(
-    prev_cmap: DataFrame,
-    new_edges: DataFrame,
-    small_graph_max_edges: int | None = SMALL_GRAPH_MAX_EDGES,
-    **kw,
-) -> Merge:
-    """incremental_canonical_map, plus the number of distinct new
-    edges merged (see Merge).
+    Returns the merged map and the number of distinct new edges
+    merged (see Merge).
 
     Same tiers as connected_components: while the new edges plus the
     affected components' rows fit small_graph_max_edges, both are

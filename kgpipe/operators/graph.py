@@ -133,20 +133,3 @@ def pagerank(
         )
     return ranks
 
-
-def degree_stats(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node (out_degree, in_degree) in one pass: union-tag the
-    two endpoints, ONE groupBy with conditional sums (map-side
-    partial) — not two aggregations + a join. → (node, out_degree,
-    in_degree). The hot-key audit for edge tables: Zipfian hubs
-    (rdf:type objects, popular entities) surface here before they
-    surface as straggler tasks."""
-    tagged = edges.select(F.col(src).alias("node"), F.lit(1).alias("is_out")).union(
-        edges.select(F.col(dst).alias("node"), F.lit(0).alias("is_out"))
-    )
-    return tagged.groupBy("node").agg(
-        F.sum(F.col("is_out")).alias("out_degree"),
-        F.sum(1 - F.col("is_out")).alias("in_degree"),
-    )

@@ -79,7 +79,7 @@ def write_nt(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
 
     BYTE-compatible with `ntto -a` from the PARSED path when the
     frame columns are present (parse with
-    `parse_lines_to_triples(..., with_frames=True)` — see
+    `parse_text_column(df, "line", [], with_frames=True)` — see
     kgpipe.nt.parser.FRAME_COLS): each term is re-wrapped in exactly
     the bracket/quote runs the parse stripped, and the dropped
     trailing token (usually the ` .`) is re-appended verbatim, so for

@@ -96,7 +96,7 @@ def test_cc_small_graph_shortcut_equals_distributed(spark):
 
 
 def test_incremental_matches_full_recompute(spark):
-    """incremental_canonical_map(cc(batch1), batch2) must equal a full
+    """incremental_merge(cc(batch1), batch2).cmap must equal a full
     CC over batch1 ∪ batch2 — including components merged ACROSS
     batches, brand-new nodes, and untouched old components."""
     import random
@@ -104,7 +104,7 @@ def test_incremental_matches_full_recompute(spark):
     from kgpipe.operators.cc import (
         canonical_map_for_nodes,
         connected_components,
-        incremental_canonical_map,
+        incremental_merge,
     )
 
     rng = random.Random(23)
@@ -121,7 +121,7 @@ def test_incremental_matches_full_recompute(spark):
 
     inc = {
         (r.uri, r.canon_id)
-        for r in incremental_canonical_map(prev, e2).collect()
+        for r in incremental_merge(prev, e2).cmap.collect()
     }
     all_nodes = spark.createDataFrame(
         [(u,) for u in sorted({x for e in batch1 + batch2 for x in e})], "uri string"
@@ -136,11 +136,11 @@ def test_incremental_matches_full_recompute(spark):
 
 
 def test_incremental_from_empty_prev(spark):
-    from kgpipe.operators.cc import connected_components, incremental_canonical_map
+    from kgpipe.operators.cc import connected_components, incremental_merge
 
     e = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
     empty = spark.createDataFrame([], "uri string, canon_id string")
-    inc = {(r.uri, r.canon_id) for r in incremental_canonical_map(empty, e).collect()}
+    inc = {(r.uri, r.canon_id) for r in incremental_merge(empty, e).cmap.collect()}
     full = {(r.uri, r.canon_id) for r in connected_components(e).collect()}
     assert inc == full
 
@@ -148,14 +148,14 @@ def test_incremental_from_empty_prev(spark):
 def test_incremental_untouched_components_unchanged(spark):
     """A delta that never touches a component must leave its rows
     byte-identical (no recompute, no relabeling)."""
-    from kgpipe.operators.cc import connected_components, incremental_canonical_map
+    from kgpipe.operators.cc import connected_components, incremental_merge
 
     e1 = spark.createDataFrame(
         [("a", "b"), ("x", "y")], "src string, dst string"
     )
     prev = connected_components(e1)
     e2 = spark.createDataFrame([("p", "q")], "src string, dst string")
-    inc = {(r.uri, r.canon_id) for r in incremental_canonical_map(prev, e2).collect()}
+    inc = {(r.uri, r.canon_id) for r in incremental_merge(prev, e2).cmap.collect()}
     assert {("a", "a"), ("b", "a"), ("x", "x"), ("y", "x"), ("p", "p"), ("q", "p")} == inc
 
 

@@ -146,6 +146,60 @@ def test_convert_empty_input_zero_rows(spark):
     assert convert_nt_lines(df, RULES).count() == 0
 
 
+_FRAME_LINE = "<http://ex.org/a> <http://ex.org/p> <http://ex.org/b> ."
+
+
+@pytest.mark.parametrize(
+    "line, decision",
+    [
+        ("http://stripme.example.org/", "quarantine"),  # blank only after the <NULL> strip
+        (" \t\u3000 ", "drop"),
+        ("\x1c", "quarantine"),
+        ("<http://dbpedia.org/resource/X> <http://xmlns.com/foaf/0.1/name> \"x\" .", "clean"),
+    ],
+    ids=["null_emptied", "whitespace", "separator", "triple"],
+)
+def test_convert_and_extract_decide_each_line_alike(spark, line, decision):
+    """convert (one line per row) and the pipeline's extract stage (one
+    page text per row) drop, quarantine or parse each line alike in
+    compat mode: the blank-line rule looks at the input line, before
+    the rewrite, and a line the rewrite empties is quarantined."""
+    from html import escape
+
+    from kgpipe.checkpoints import with_part_id
+    from kgpipe.fixtures import RULES_OVERLAP_TEXT
+    from kgpipe.operators.fused import fused_extract_parse_abbrev
+
+    rules = parse_rules(RULES_OVERLAP_TEXT)
+    # framed by two triples, so the extractor's strip of the text node
+    # cannot touch the line under test
+    lines = [_FRAME_LINE, line, _FRAME_LINE]
+    conv = convert_nt_lines(
+        spark.createDataFrame([(l,) for l in lines], "value string"), rules, mode="compat"
+    )
+    html = f"<html><body><pre>{escape(chr(10).join(lines))}</pre></body></html>"
+    pages = with_part_id(
+        spark.createDataFrame([("http://ex.org/page", html.encode())], "url string, html binary"),
+        "url", 1,
+    )
+    ext = fused_extract_parse_abbrev(pages, rules, mode="compat")
+
+    def decisions(df):
+        return collections.Counter(
+            ("quarantine", r.error) if r.error is not None else ("clean", (r.s, r.p, r.o))
+            for r in df.collect()
+        )
+
+    framing = collections.Counter(
+        {("clean", ("http://ex.org/a", "http://ex.org/p", "http://ex.org/b")): 2}
+    )
+    got = decisions(conv)
+    assert got == decisions(ext)
+    assert [kind for kind, _ in (got - framing)] == {
+        "drop": [], "quarantine": ["quarantine"], "clean": ["clean"]
+    }[decision]
+
+
 def test_convert_cli_single_file(spark, tmp_path):
     from kgpipe.cli import main
 

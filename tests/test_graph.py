@@ -5,7 +5,7 @@ import collections
 
 import pytest
 
-from kgpipe.operators.graph import degree_stats, khop_frontier
+from kgpipe.operators.graph import khop_frontier
 
 
 @pytest.fixture(scope="module")
@@ -67,13 +67,6 @@ def test_khop_random_graph_matches_oracle(spark):
         df, spark.createDataFrame([(s,) for s in seeds], "node long"), k=3
     ).collect()}
     assert got == _bfs_oracle(edges, seeds, 3)
-
-
-def test_degree_stats(spark, toy):
-    got = {r.node: (r.out_degree, r.in_degree) for r in degree_stats(toy).collect()}
-    assert got[0] == (2, 0)
-    assert got[3] == (1, 2)
-    assert got[10] == (0, 1)
 
 
 def _pagerank_oracle(edges, n_iter=3, damping=0.85, dp=12):

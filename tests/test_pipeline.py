@@ -211,38 +211,25 @@ def test_resume_after_partial_failure(spark, tmp_path):
 
 
 def test_fused_equals_chained(spark):
-    """The fused single-stage operator must produce exactly the
-    chained extract→parse→abbrev output (both modes)."""
+    """The pipeline's fused extract stage equals the pure-Python
+    reference_triples page by page, in both modes: clean (s, p, o, url)
+    rows as a multiset, and the quarantine count."""
     from kgpipe.checkpoints import with_part_id
-    from kgpipe.nt.rules import parse_rules
-    from kgpipe.operators.abbrev import abbreviate_columns
-    from kgpipe.operators.extract import with_extracted_text
     from kgpipe.operators.fused import fused_extract_parse_abbrev
-    from kgpipe.operators.parse import parse_pages_to_triples
-    from kgpipe.fixtures import RULES_16_TEXT, gen_pages
 
-    pages = with_part_id(
-        spark.createDataFrame(gen_pages(80)).select("url", "html"), "url", 8
-    )
+    pdf = gen_pages(80)
+    pages = with_part_id(spark.createDataFrame(pdf).select("url", "html"), "url", 8)
     rules = parse_rules(RULES_16_TEXT)
     for mode in ("compat", "lpm"):
-        fused = fused_extract_parse_abbrev(pages, rules, mode=mode)
-        chained = abbreviate_columns(
-            parse_pages_to_triples(with_extracted_text(pages)),
-            ["s", "p", "o"], rules, mode=mode,
-        )
-        got = collections.Counter(
-            (r.s, r.p, r.o, r.url) for r in fused.where(F.col("error").isNull()).collect()
-        )
-        exp = collections.Counter(
-            (r.s, r.p, r.o, r.url) for r in chained.where(F.col("error").isNull()).collect()
-        )
+        exp, exp_err = collections.Counter(), 0
+        for i in range(len(pdf)):
+            triples, n_err = reference_triples(pdf.iloc[i : i + 1], mode=mode)
+            exp.update({t + (pdf["url"][i],): n for t, n in triples.items()})
+            exp_err += n_err
+        rows = fused_extract_parse_abbrev(pages, rules, mode=mode).collect()
+        got = collections.Counter((r.s, r.p, r.o, r.url) for r in rows if r.error is None)
         assert got == exp, f"mode {mode} diverged"
-        # quarantine parity too
-        assert (
-            fused.where(F.col("error").isNotNull()).count()
-            == chained.where(F.col("error").isNotNull()).count()
-        )
+        assert sum(r.error is not None for r in rows) == exp_err
 
 
 def test_incremental_link_matches_full(spark, tmp_path):

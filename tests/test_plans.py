@@ -3,7 +3,7 @@ asserted so they can't regress.
 
 - scans prune columns and push filters
 - the canonical-map join goes broadcast
-- the narrow extract→parse→abbrev chain has NO shuffle
+- the fused extract→parse→abbrev stage has NO shuffle
 - Python stages are Arrow-vectorized (ArrowEvalPython/MapInPandas),
   never row-at-a-time BatchEvalPython
 """
@@ -34,22 +34,16 @@ def test_scan_pushdown_and_pruning(spark, sf_dir):
 
 
 def test_extract_chain_no_shuffle(spark):
+    from kgpipe.checkpoints import with_part_id
     from kgpipe.fixtures import RULES_16_TEXT, gen_pages
     from kgpipe.nt.rules import parse_rules
-    from kgpipe.operators.abbrev import abbreviate_columns
-    from kgpipe.operators.extract import with_extracted_text
-    from kgpipe.operators.parse import parse_pages_to_triples
+    from kgpipe.operators.fused import fused_extract_parse_abbrev
 
-    pages = spark.createDataFrame(gen_pages(5))
-    chain = abbreviate_columns(
-        parse_pages_to_triples(with_extracted_text(pages.select("url", "html"))),
-        ["s", "p", "o"],
-        parse_rules(RULES_16_TEXT),
-    )
-    plan = _plan(chain)
-    assert "Exchange" not in plan, "narrow chain must not shuffle"
+    pages = with_part_id(spark.createDataFrame(gen_pages(5)).select("url", "html"), "url", 8)
+    plan = _plan(fused_extract_parse_abbrev(pages, parse_rules(RULES_16_TEXT)))
+    assert "Exchange" not in plan, "narrow extract stage must not shuffle"
     assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF in hot path"
-    assert "ArrowEvalPython" in plan and "MapInPandas" in plan
+    assert "MapInPandas" in plan
 
 
 def test_canonicalize_broadcasts_map(spark):

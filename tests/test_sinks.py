@@ -45,7 +45,7 @@ def test_write_nt_shape(spark, tmp_path):
 def test_nt_roundtrips_through_parser(spark, tmp_path):
     """NT written by the sink parses back to the same triples via the
     compat parser (for bare single-token terms)."""
-    from kgpipe.operators.parse import parse_lines_to_triples
+    from kgpipe.operators.parse import parse_text_column
 
     triples = spark.createDataFrame(
         [("http://ex.org/a", "http://ex.org/p", "http://ex.org/b"), ("s1", "p1", "o1")],
@@ -53,8 +53,8 @@ def test_nt_roundtrips_through_parser(spark, tmp_path):
     )
     out = str(tmp_path / "nt2")
     write_nt(triples, out)
-    back = parse_lines_to_triples(
-        spark.read.text(out).withColumnRenamed("value", "line")
+    back = parse_text_column(
+        spark.read.text(out).withColumnRenamed("value", "line"), "line", []
     )
     got = {(r.s, r.p, r.o) for r in back.where(F.col("s").isNotNull()).collect()}
     assert got == {(r.s, r.p, r.o) for r in triples.collect()}
@@ -75,7 +75,7 @@ def test_write_nt_framed_reconstructs_bytes(spark, tmp_path):
     reproduce the input lines byte-for-byte (multiset, Q10) for
     canonically-spaced input — brackets, literal quotes, typed/lang
     framing, glued dots, dropped 4th tokens all round-trip."""
-    from kgpipe.operators.parse import parse_lines_to_triples
+    from kgpipe.operators.parse import parse_text_column
 
     lines = _parseable(FRAMING_LINES) + [
         "<http://ex.org/a> <http://ex.org/p> <http://ex.org/c>.",
@@ -83,7 +83,7 @@ def test_write_nt_framed_reconstructs_bytes(spark, tmp_path):
         "<a> <b> .",
     ]
     df = spark.createDataFrame([(l,) for l in lines], "line string").repartition(3)
-    parsed = parse_lines_to_triples(df, with_frames=True).where(F.col("error").isNull())
+    parsed = parse_text_column(df, "line", [], with_frames=True).where(F.col("error").isNull())
     out = str(tmp_path / "roundtrip_nt")
     write_nt(parsed, out)
     got = collections.Counter(_read_lines(out))
@@ -97,11 +97,11 @@ def test_write_nt_framed_byte_identical_to_perl_defaultrules(spark, tmp_path):
     the shipped 223-rule DefaultRules (ref cmd/ntto/ntto.go:144-158).
     This is the framing-parity gap write_nt carried since round 1."""
     from kgpipe.operators.abbrev import abbreviate_columns
-    from kgpipe.operators.parse import parse_lines_to_triples
+    from kgpipe.operators.parse import parse_text_column
 
     lines = _parseable(FRAMING_LINES)
     df = spark.createDataFrame([(l,) for l in lines], "line string").repartition(3)
-    parsed = parse_lines_to_triples(df, with_frames=True).where(F.col("error").isNull())
+    parsed = parse_text_column(df, "line", [], with_frames=True).where(F.col("error").isNull())
     abbr = abbreviate_columns(parsed, ["s", "p", "o"], RULES, mode="compat")
     out = str(tmp_path / "framed_nt")
     write_nt(abbr, out)
@@ -115,12 +115,12 @@ def test_write_nt_framed_byte_identical_to_perl_rules16(spark, tmp_path):
     from kgpipe.fixtures import RULES_16_TEXT
     from kgpipe.nt.rules import parse_rules
     from kgpipe.operators.abbrev import abbreviate_columns
-    from kgpipe.operators.parse import parse_lines_to_triples
+    from kgpipe.operators.parse import parse_text_column
 
     rules16 = parse_rules(RULES_16_TEXT)
     lines = _parseable(FRAMING_LINES)
     df = spark.createDataFrame([(l,) for l in lines], "line string").repartition(2)
-    parsed = parse_lines_to_triples(df, with_frames=True).where(F.col("error").isNull())
+    parsed = parse_text_column(df, "line", [], with_frames=True).where(F.col("error").isNull())
     abbr = abbreviate_columns(parsed, ["s", "p", "o"], rules16, mode="compat")
     out = str(tmp_path / "framed_nt16")
     write_nt(abbr, out)
@@ -131,11 +131,11 @@ def test_write_nt_framed_byte_identical_to_perl_rules16(spark, tmp_path):
 def test_write_nt_framed_excludes_broken_rows(spark, tmp_path):
     """Quarantined rows (null terms) must not leak blank lines into
     the framed byte stream when the caller forgets the error filter."""
-    from kgpipe.operators.parse import parse_lines_to_triples
+    from kgpipe.operators.parse import parse_text_column
 
     lines = ["<a> <b> <c> .", "broken", ""]
     df = spark.createDataFrame([(l,) for l in lines], "line string")
-    parsed = parse_lines_to_triples(df, with_frames=True)  # NO error filter
+    parsed = parse_text_column(df, "line", [], with_frames=True)  # NO error filter
     out = str(tmp_path / "noblank_nt")
     write_nt(parsed, out)
     got = []
